@@ -309,7 +309,7 @@ def main() -> None:
     # Key ORDER and ENCODING matter downstream (VERDICT r12 #3): the
     # driver's recorder keeps only the last 2,000 chars of this line,
     # which truncated the per-query normalized map to ~47 of 70
-    # entries in BENCH_r12.  ``queries_norm`` — the map cross-round
+    # entries in the r12 bench run.  ``queries_norm`` — the map cross-round
     # comparison actually reads — is therefore emitted LAST, and the
     # line uses compact separators (the 70-entry map is ~2,010 chars
     # with default separators, ~1,870 compact — the difference is

@@ -17,8 +17,8 @@ For each audited query this runs the registered plan at
   hot-path discipline: none expected outside the Arrow-batched
   kernels).
 
-Output: ONE JSON line (the driver-artifact convention), also written to
-``PLAN_AUDIT_r{N}.json`` by the caller.  Streaming-replay queries are
+Output: ONE JSON line (the driver-artifact convention); redirect it to
+a file to compare two runs.  Streaming-replay queries are
 excluded (their cost is trigger plumbing, audited in
 SCALE_STRESS/SCALE.md instead).
 """

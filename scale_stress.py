@@ -18,8 +18,8 @@ single-batch regime?  It:
 3. runs the full curation pipeline stage by stage with persists between
    stages, timing each increment honestly, plus the standalone
    ``neardup_components`` aggregate;
-4. prints ONE JSON object (also written to ``SCALE_STRESS_r{N}.json``
-   by the caller) with per-stage rows/seconds.
+4. prints ONE JSON object with per-stage rows/seconds (redirect it to a
+   file to compare two runs).
 
 Usage:  python scale_stress.py [--inflate 10] [--sf-dir /root/testdata/sf0.1]
 """
@@ -1454,10 +1454,9 @@ def main() -> None:
 
         # -- facade search serving on a 10×-capped corpus ---------------
         # The full e2e stack (ingest → chunk → embed → index → search)
-        # with the Arrow-batched hash encoder; LSH path recall measured
-        # against the exact path on the same index.
+        # with the Arrow-batched hash encoder.
         def facade_stages():
-            from sortify_spark.facade import SearchConfig, SortifyEngine
+            from sortify_spark.facade import SortifyEngine
 
             FE = min(args.inflate, 10)
             fdir = os.path.join(derived, "facade")
@@ -1510,24 +1509,6 @@ def main() -> None:
 
             stage("facade_hybrid_cold", hybrid("cold"))
             stage("facade_hybrid_warm", hybrid("warm"))
-
-            def lsh_vs_exact():
-                exact = eng.semantic_search(
-                    qtext, "summary_only", SearchConfig(top_k=10)
-                ).collect()
-                lsh = eng.semantic_search(
-                    qtext,
-                    "summary_only",
-                    SearchConfig(top_k=10, ann="lsh"),
-                ).collect()
-                eids = {r["id"] for r in exact}
-                lids = {r["id"] for r in lsh}
-                return {
-                    "rows": len(lids),
-                    "recall_at_10": round(len(eids & lids) / 10, 3),
-                }
-
-            stage("facade_lsh_vs_exact_summary", lsh_vs_exact)
 
             # -- batched lexical + hybrid serving from the persisted
             # BM25 artifact (round 8, VERDICT r7 item 5): mirror of the
@@ -1621,71 +1602,6 @@ def main() -> None:
                 }
 
             stage(f"lex_serving_batched_{FE}x", lex_serving)
-
-            # -- batched LSH serving (round 10, VERDICT r9 #3): the
-            # portable-LSH leg of the batched matrix — 64 queries
-            # through ONE union-of-buckets probe of the cached keyed
-            # frame vs the per-query loop, with per-query parity
-            # asserted on a sample.
-            def lsh_batched_serving():
-                from sortify_spark.facade import SearchConfig
-
-                cfg = SearchConfig(ann="lsh", lsh_nbits=4)
-                pool = (
-                    "data quality spark merge dup pipeline training "
-                    "analytics model corpus document search index "
-                    "stream batch vector"
-                ).split()
-                texts = {
-                    f"q{i}": " ".join(
-                        (
-                            pool[i % 16],
-                            pool[(i * 3 + 1) % 16],
-                            pool[(i * 7 + 2) % 16],
-                        )
-                    )
-                    for i in range(64)
-                }
-                # warm the keyed index frame (write-once, cached)
-                eng.semantic_search(texts["q0"], "summary_only", cfg)
-                t0 = time.time()
-                many = eng.semantic_search_many(
-                    texts, "summary_only", cfg
-                )
-                rows = many.collect()
-                many_sec = time.time() - t0
-                t0 = time.time()
-                s_rows = 0
-                sample = list(texts.items())[:8]
-                singles = {}
-                for qid, text in sample:
-                    got = eng.semantic_search(
-                        text, "summary_only", cfg
-                    ).collect()
-                    singles[qid] = {
-                        (r["id"], r["score"]) for r in got
-                    }
-                    s_rows += len(got)
-                single_sec = time.time() - t0
-                mismatch = sum(
-                    1
-                    for qid, _ in sample
-                    if {
-                        (r["id"], r["score"])
-                        for r in rows
-                        if r["query_id"] == qid
-                    }
-                    != singles[qid]
-                )
-                return {
-                    "rows": len(rows),
-                    "batched_queries": 64,
-                    "batched_qps": round(64 / many_sec, 1),
-                    "single_qps": round(8 / single_sec, 2),
-                    "parity_mismatches_of_8": mismatch,
-                }
-
-            stage("ann_batched_64_queries_lsh", lsh_batched_serving)
 
             # -- streaming admission: indexed vs recomputed corpus ----
             # The per-batch cost claim of use_index=True (band +

@@ -985,6 +985,14 @@ def simhash_oracle_sql(max_hamming: int = 16) -> str:
 # Embedding near-dup
 # ---------------------------------------------------------------------------
 
+#: Document-level semantic dedup (SemDeDup over raw text): the batch
+#: ``semdedup_docs`` row, the streaming admission screen and their
+#: oracles share these, so the expression-encoder embeddings, the
+#: hyperplane-sign blocks and the drop threshold agree on every path.
+DOCSEM_TAU = 0.995  #: near-identical cosine threshold over unit vectors
+DOCSEM_BITS = 6  #: hyperplane-sign bits → 64 semantic blocks
+DOCSEM_DIM = 8  #: encoder dim for this op (md5 fold cost ∝ dim)
+
 
 def embedding_neardup_topk(
     df: DataFrame,

@@ -42,19 +42,11 @@ class SearchConfig:
     w_summary: float = fusion.RRF_WEIGHT_SUMMARY
     w_chunks: float = fusion.RRF_WEIGHT_CHUNKS
     #: ``"exact"`` = brute-force cosine (the reference's behavior at its
-    #: scale); ``"lsh"`` = portable hyperplane-LSH bucket probe + exact
-    #: rerank inside the bucket — the ANN path that replaces Chroma's
-    #: HNSW at 100 TB (probe = one bucket partition, not the corpus);
-    #: ``"ivf"`` = the PERSISTED IVF index artifact (``search/index``):
-    #: probes read only nprobe bucket partitions of a committed,
-    #: versioned on-disk index — the durable analog of Chroma's
-    #: persistent collection (``vector_db_service.py:18-20,73-76``).
+    #: scale); ``"ivf"`` = the PERSISTED IVF index artifact
+    #: (``search/index``): probes read only nprobe bucket partitions of
+    #: a committed, versioned on-disk index — the durable analog of
+    #: Chroma's persistent collection (``vector_db_service.py:18-20,73-76``).
     ann: str = "exact"
-    lsh_nbits: int = 4
-    #: Multi-probe radius: 1 probes the query bucket plus every
-    #: one-bit-flip neighbor (the recall lever; cost (nbits+1)/2^nbits
-    #: of the scan).
-    lsh_probe_hamming: int = 1
     #: IVF probe width and optional snapshot pin: ``ivf_version=N``
     #: serves from the pinned index version even while a rebuild
     #: commits (readers never observe a half-built index).
@@ -66,7 +58,7 @@ class SearchConfig:
     #: fill k from its top few buckets while its true top-k lives in
     #: the next dozen — measured at 1000x: composed stopped at 8
     #: buckets / recall 0.7 where occupancy-only@16 reached 0.9
-    #: (SCALE_STRESS_r12).  Owner-scoped probes therefore read at
+    #: (r12 scale stress).  Owner-scoped probes therefore read at
     #: least ``min(ivf_min_recall_buckets, tenant's occupied bucket
     #: count)`` occupied buckets — a superset of occupancy-only@16's
     #: reads, so recall ≥ that mitigation's by construction, clamped
@@ -82,16 +74,18 @@ class SearchConfig:
     #: warning (ranking then covers a prefix of the query); raise the
     #: knob if long queries must rank on every term (ADVICE r7).
     max_terms: int = 8
-    #: Lexical serving path: ``"index"`` (default) probes the PERSISTED
-    #: BM25 inverted-index artifact (``search/lexical``) — reads only
-    #: the query terms' posting buckets, never the corpus; ``"scan"``
-    #: recomputes stats + scores with two corpus scans per query (the
-    #: pre-r8 behavior, kept as the index-free fallback).  Scores are
-    #: bit-identical either way (``bm25_index_probe`` proves it).
-    lexical: str = "index"
-    #: Pin the lexical probe to a committed anchor version (time
-    #: travel / serve-during-rebuild), like ``ivf_version``.
+    #: Keyword/hybrid_lexical legs always probe the PERSISTED BM25
+    #: inverted-index artifact (``search/lexical``), reading only the
+    #: query terms' posting buckets; ``lex_version`` pins the probe to a
+    #: committed anchor version (time travel / serve-during-rebuild),
+    #: like ``ivf_version``.
     lex_version: int | None = None
+
+    def __post_init__(self) -> None:
+        if self.ann not in ("exact", "ivf"):
+            raise ValueError(
+                f"SearchConfig.ann must be 'exact' or 'ivf', got {self.ann!r}"
+            )
 
 
 #: Engines keyed by (applicationId, sf_dir, dim, embed, doc_limit) — the
@@ -195,10 +189,6 @@ class SortifyEngine:
         #: Result cache for repeated searches (reference caches AI search
         #: responses keyed by question hash, ``ai_cache_manager.py:244-257``).
         self.result_cache = QueryResultCache()
-        #: Per-(vtype, nbits) LSH index: (center, keyed vectors) built
-        #: once and persisted — a query probe must not pay the
-        #: center/key build again (write-once index, like self.vectors).
-        self._lsh_cache: dict[tuple[str, int], tuple[DataFrame, DataFrame]] = {}
         #: Root dir for PERSISTED index artifacts (the durable IVF
         #: index); defaults to a per-engine temp dir — production
         #: deployments pass a real path so the artifact outlives the
@@ -308,14 +298,8 @@ class SortifyEngine:
         dedupes + re-ranks in ``enhanced_search_service.py:404-419``).
         The groupBy-max runs over a k-bounded list — trivial shuffle.
 
-        ``cfg.ann == "lsh"`` swaps the scan for the portable-LSH bucket
-        probe (``knn.lsh_portable_topk``): only the query's bucket is
-        scored, exact cosine rerank inside — recall < 1 by construction,
-        cost 1/2^nbits of the scan.
-
-        ``owner_id`` scopes every path to one tenant BEFORE ranking:
-        exact via the scan pre-filter, LSH by filtering the keyed index
-        frame inside the probed bucket, IVF via the assign table's
+        ``owner_id`` scopes both paths to one tenant BEFORE ranking:
+        exact via the scan pre-filter, IVF via the assign table's
         carried ``owner_id`` (``probe pre_filter``).  Owner-scoped IVF
         probes compose BOTH filtered-IVF mitigations by default
         (VERDICT r11 #1): OCCUPANCY-AWARE BUCKET CHOICE
@@ -330,8 +314,6 @@ class SortifyEngine:
         ``min(cfg.ivf_min_recall_buckets, |occupied|)`` buckets
         (VERDICT r12 #1 — candidate-count escalation alone can stop
         before the tenant's true top-k is covered)."""
-        from sortify_spark.search.knn import lsh_portable_topk
-
         pred = self._owner_pred(owner_id)
         q = self._query_df(query_text)
         if cfg is not None and cfg.ann == "ivf":
@@ -383,20 +365,6 @@ class SortifyEngine:
                 F.split(F.col("vec_id"), "#")[0].alias("document_id"),
                 "score",
             )
-        elif cfg is not None and cfg.ann == "lsh":
-            center, keyed = self._lsh_index(vtype, cfg.lsh_nbits)
-            if pred is not None:
-                keyed = keyed.filter(pred)
-            topk = lsh_portable_topk(
-                keyed,
-                q,
-                id_col="document_id",
-                k=k,
-                nbits=cfg.lsh_nbits,
-                center=center,
-                probe_hamming=cfg.lsh_probe_hamming,
-                pre_keyed=True,
-            )
         else:
             base = self.vectors.filter(F.col("vtype") == vtype)
             topk = brute_force_topk(
@@ -408,60 +376,16 @@ class SortifyEngine:
             .agg(F.max("score").alias("score"))
         )
 
-    def _lsh_index(
-        self, vtype: str, nbits: int
-    ) -> tuple[DataFrame, DataFrame]:
-        """Build-once (center, keyed-vectors) LSH index per vtype.
-
-        Centered hyperplanes: same-vocabulary corpora embed into a
-        narrow cone, so origin hyperplanes degenerate to one hot bucket
-        (measured: 165/300 docs in bucket 0, query alone in an empty
-        one).  The deterministic rounded mean keeps the key
-        oracle-reproducible.  Both halves persist — a probe pays only
-        the query keying + bucket join, never the index build."""
-        from sortify_spark.search.knn import (
-            embedding_mean,
-            lsh_portable_key_centered,
-        )
-
-        key = (vtype, nbits)
-        if key not in self._lsh_cache:
-            base = self.vectors.filter(F.col("vtype") == vtype)
-            center = embedding_mean(base).persist()
-            keyed = (
-                base.crossJoin(F.broadcast(center))
-                .withColumn(
-                    "__lsh",
-                    lsh_portable_key_centered("embedding", "c", nbits),
-                )
-                .drop("c")
-                .persist()
-            )
-            self._lsh_cache[key] = (center, keyed)
-        return self._lsh_cache[key]
-
     def release(self) -> None:
         """Serving shutdown hook: unpersist EVERY cached frame this
-        engine holds — the vectors table, the LSH index cache, and the
-        persisted result-cache entries.  After release (plus GC of any
+        engine holds — the vectors table and the persisted result-cache
+        entries.  After release (plus GC of any
         localCheckpoint references) executor storage returns to its
         pre-engine state; the mutation battery asserts this
         (``test_facade_mutation_storage_clean``), so a long-lived
         serving process cycling engines cannot accrete storage blocks."""
-        self._drop_lsh_cache()
         self.vectors.unpersist()
         self.result_cache.clear()
-
-    def _drop_lsh_cache(self) -> None:
-        """Release the persisted LSH frames BEFORE dropping the dict
-        references: Spark's CacheManager holds cached blocks until an
-        explicit unpersist (they are not GC-reclaimed), so a bare
-        ``clear()`` on every mutation would leak one corpus-sized cache
-        per add/delete cycle on a long-lived engine."""
-        for center, keyed in self._lsh_cache.values():
-            center.unpersist()
-            keyed.unpersist()
-        self._lsh_cache.clear()
 
     # -- persisted IVF index -----------------------------------------------
 
@@ -590,7 +514,7 @@ class SortifyEngine:
             # the assign rows' own width (VERDICT r12 #2): below the
             # crossover the footer-read/task overhead of extra files
             # costs 2-3x more wall than their stat pruning saves
-            # (SCALE_STRESS_r12 layout A/B), so small buckets write
+            # (r12 scale stress layout A/B), so small buckets write
             # one file and the split resumes as buckets outgrow a row
             # group.  The floor is pinned in the manifest for the
             # artifact's whole lifecycle (upserts, compact re-pins).
@@ -638,10 +562,6 @@ class SortifyEngine:
         self.vectors = self.vectors.unionByName(new_vecs).persist()
         self.vectors.count()
         old_vectors.unpersist()
-        # LSH caches key against a center derived from the OLD corpus;
-        # release + drop them so the next probe rebuilds over the
-        # grown corpus without leaking the old cached blocks
-        self._drop_lsh_cache()
         out: dict = {}
         if not self._lex_built:
             self._lex_dirty = True  # adoption must not trust n_docs alone
@@ -841,9 +761,11 @@ class SortifyEngine:
         """POST /semantic-search: strategy dispatch V7 over V1-V5 plans.
 
         Beyond the reference's dense-only strategies: ``"keyword"``
-        runs rational-idf BM25 over the document corpus for the query's
-        whitespace terms (``queries_bm25.bm25_scored`` — one scan, no
-        explode), and ``"hybrid_lexical"`` RRF-fuses that lexical list
+        ranks the query's whitespace terms by rational-idf BM25, probed
+        from the persisted inverted-index artifact
+        (``search.lexical.probe_lexical_index`` — only the query terms'
+        posting buckets are read, never the corpus), and
+        ``"hybrid_lexical"`` RRF-fuses that lexical list
         with the dense summary list (the published lexical x dense
         hybrid; weights 1/1, ``fusion.rrf_fuse`` so the contribution
         columns read summary=dense / chunks=lexical).
@@ -851,25 +773,16 @@ class SortifyEngine:
         ``owner_id`` scopes EVERY leg to one tenant (P9, the
         reference's mandatory ``where={owner_id}`` on every index scan,
         ``vector_db_service.py:199-221``): dense legs filter before
-        ranking (exact scan / LSH bucket / IVF carried metadata), the
-        lexical-index leg pre-filters the carried ``owner_id`` inside
-        the probed posting buckets, and the scan fallback semi-joins
-        the owner's doc ids.  BM25 statistics stay corpus-global —
+        ranking (exact scan / IVF carried metadata) and the lexical leg
+        pre-filters the carried ``owner_id`` inside the probed posting
+        buckets.  BM25 statistics stay corpus-global —
         filter-then-rank, the reference's semantics — and requires an
         engine built with ``owner_col``.
         """
         cfg = cfg or SearchConfig()
         pred = self._owner_pred(owner_id)
         if search_type in ("keyword", "hybrid_lexical"):
-            from sortify_spark.queries_bm25 import bm25_scored
-
-            if cfg.lexical not in ("index", "scan"):
-                # a typo ("indexed") must not silently fall back to the
-                # two-corpus-scan path (ADVICE r8)
-                raise ValueError(
-                    f"SearchConfig.lexical must be 'index' or 'scan', "
-                    f"got {cfg.lexical!r}"
-                )
+            from sortify_spark.search.lexical import probe_lexical_index
 
             # bounded term set: BM25 cost is one tf column per term —
             # cap documented on SearchConfig.max_terms, truncation loud
@@ -882,52 +795,20 @@ class SortifyEngine:
             lex_k = (
                 cfg.top_k if search_type == "keyword" else cfg.top_k * 2
             )
-            if cfg.lexical == "index":
-                # serve from the PERSISTED inverted-index artifact:
-                # |terms| posting buckets read, corpus never scanned
-                # (probe == scan bit-identical; bm25_index_probe)
-                from sortify_spark.search.lexical import (
-                    probe_lexical_index,
-                )
-
-                lex = probe_lexical_index(
-                    self.spark,
-                    self._lexical_index(),
-                    terms,
-                    k=lex_k,
-                    version=cfg.lex_version,
-                    pre_filter=pred,
-                ).select(
-                    F.col("doc_id").cast("string").alias("id"),
-                    F.col("bm25").alias("score"),
-                )
-            else:
-                # tie-break on NUMERIC doc_id before the string cast —
-                # the probe path orders numerically before its limit,
-                # so both serving modes share one total order at tied
-                # scores (ADVICE r8: string order '10' < '9' made the
-                # idx==scan equality corpus-dependent)
-                scored = bm25_scored(self.documents, terms)
-                if owner_id is not None:
-                    # scan fallback: restrict to the owner's docs BEFORE
-                    # the top-k (scores stay global-corpus, same as the
-                    # index path's pre_filter)
-                    owner_ids = self.documents.filter(
-                        F.col(self.owner_col).cast("string")
-                        == F.lit(str(owner_id))
-                    ).select("doc_id")
-                    scored = scored.join(
-                        F.broadcast(owner_ids), "doc_id", "left_semi"
-                    )
-                lex = (
-                    scored
-                    .orderBy(F.desc("bm25"), F.asc("doc_id"))
-                    .limit(lex_k)
-                    .select(
-                        F.col("doc_id").cast("string").alias("id"),
-                        F.col("bm25").alias("score"),
-                    )
-                )
+            # serve from the PERSISTED inverted-index artifact: |terms|
+            # posting buckets read, corpus never scanned (the probe
+            # equals a fresh bm25_scored ranking; bm25_index_probe)
+            lex = probe_lexical_index(
+                self.spark,
+                self._lexical_index(),
+                terms,
+                k=lex_k,
+                version=cfg.lex_version,
+                pre_filter=pred,
+            ).select(
+                F.col("doc_id").cast("string").alias("id"),
+                F.col("bm25").alias("score"),
+            )
             if search_type == "keyword":
                 return lex
             dense = self._scored(
@@ -1039,33 +920,9 @@ class SortifyEngine:
         operations as the single path, so per-query results
         parity-match the loop.  ``cfg.ann == "ivf"`` probes the
         persisted index once for the whole batch
-        (``probe_ivf_index_many`` — union-of-buckets scan);
-        ``cfg.ann == "lsh"`` probes the cached keyed frame once for
-        the union of every query's buckets
-        (``lsh_portable_topk_many``, VERDICT r9 #3); anything else is
-        the exact path's one corpus scan for ALL queries."""
+        (``probe_ivf_index_many`` — union-of-buckets scan); otherwise
+        the exact path scans the corpus once for ALL queries."""
         pred = self._owner_pred(owner_id)
-        if cfg is not None and cfg.ann == "lsh":
-            from sortify_spark.search.knn import lsh_portable_topk_many
-
-            center, keyed = self._lsh_index(vtype, cfg.lsh_nbits)
-            if pred is not None:
-                keyed = keyed.filter(pred)
-            topk = lsh_portable_topk_many(
-                keyed,
-                self._query_df_many(queries),
-                id_col="document_id",
-                k=k,
-                nbits=cfg.lsh_nbits,
-                center=center,
-                probe_hamming=cfg.lsh_probe_hamming,
-                pre_keyed=True,
-            ).select(
-                "query_id", F.col("document_id").alias("id"), "score"
-            )
-            return topk.groupBy("query_id", "id").agg(
-                F.max("score").alias("score")
-            )
         if cfg is not None and cfg.ann == "ivf":
             from sortify_spark.search.index import probe_ivf_index_many
 
@@ -1133,7 +990,7 @@ class SortifyEngine:
         (parity-tested), at batch throughput: the corpus/posting scans
         and the fusion shuffle amortize across the whole batch instead
         of paying 2-3 driver jobs per query (measured 0.5-0.7 q/s
-        per-query vs 17-18 q/s batched lexical, SCALE_STRESS_r08).
+        per-query vs 17-18 q/s batched lexical, r8 scale stress).
 
         Strategies: ``keyword`` (one bucket-pruned probe over the union
         of every query's term buckets — ``probe_lexical_index_many``),
@@ -1145,24 +1002,14 @@ class SortifyEngine:
         candidates gathered into ONE (query, id) pair frame; stage 2
         is one semi-joined chunk scan scored per pair —
         ``fusion.two_stage_hybrid_many``).  Dense legs serve the EXACT
-        path by default, the persisted IVF index under
-        ``cfg.ann='ivf'``, and the cached portable-LSH keyed frame
-        under ``cfg.ann='lsh'`` (one union-of-buckets probe for the
-        whole batch, per-query rows identical to the single-query
-        probe).  Batched keyword serves from the persisted artifact
-        only (``cfg.lexical='scan'`` would re-scan the corpus per
-        batch — use the per-query API for the index-free fallback)."""
+        path by default and the persisted IVF index under
+        ``cfg.ann='ivf'``; keyword legs probe the persisted BM25
+        artifact, as in the per-query API."""
         cfg = cfg or SearchConfig()
         pred = self._owner_pred(owner_id)
         if not queries:
             raise ValueError("semantic_search_many requires ≥1 query")
         if search_type in ("keyword", "hybrid_lexical"):
-            if cfg.lexical != "index":
-                raise ValueError(
-                    "batched keyword serving reads the persisted lexical "
-                    "artifact; per-query semantic_search supports "
-                    "lexical='scan'"
-                )
             from sortify_spark.search.lexical import probe_lexical_index_many
 
             terms = {q: self._split_terms(t, cfg) for q, t in queries.items()}
@@ -1299,24 +1146,16 @@ class SortifyEngine:
                     .drop("__r")
                 )
 
-            import os as _os
-
             return fusion.two_stage_hybrid_many(
                 summary,
                 chunk_scored_fn,
                 stage1_k=STAGE1_K,
                 top_k=STAGE2_K,
-                # Same rationale as the single-query path's knob (the
-                # stage-1 scorer is the interpreted cosine fold over the
-                # persisted vectors table, consumed by two legs) — r14
-                # same-session A/B on e2e_search_batched measured the
-                # checkpoint a win here too, so the batched path defaults
-                # ON; the env knob preserves the measured-per-deployment
-                # contract.
-                materialize_stage1=_os.environ.get(
-                    "SORTIFY_FACADE_MANY_MAT_S1", "1"
-                )
-                == "1",
+                # same rationale as the single-query path (the stage-1
+                # scorer is the interpreted cosine fold over the
+                # persisted vectors table, consumed by two legs); the
+                # r14 A/B on e2e_search_batched measured it a win here
+                materialize_stage1=True,
             ).select("query_id", "id", "score", "tier", "rnk")
         raise ValueError(
             f"semantic_search_many does not support {search_type!r}"
@@ -1459,9 +1298,6 @@ class SortifyEngine:
             "doc_id",
             "left_anti",
         )
-        # LSH centers derive from the pre-delete corpus — release the
-        # persisted frames, not just the references
-        self._drop_lsh_cache()
         return self.vectors
 
     def delete_vectors_batched(
@@ -1549,7 +1385,7 @@ class SortifyEngine:
         ``compact`` consolidates any partition fragmented past one file
         — a structural no-op under the keyed-upsert discipline (every
         upsert merge-rewrites touched partitions into one file;
-        measured across 20-trigger streams, SCALE_STRESS_r10) but kept
+        measured across 20-trigger streams, r10 scale stress) but kept
         here so artifacts written by OTHER writers heal too.
         Compaction is layout-only (manifest extras carry forward), but
         it BUMPS the compacted table's version — so before vacuuming,

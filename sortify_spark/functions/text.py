@@ -209,3 +209,77 @@ def pii_counts(col: Column | str) -> Column:
         F.array(*[F.size(F.regexp_extract_all(c, F.lit(pat), F.lit(0)))
                   for _, pat, _ in PII_PATTERNS]),
     )
+
+
+# ---------------------------------------------------------------------------
+# Pseudo-paragraphs (Dolma-style paragraph dedup, batch and streaming)
+# ---------------------------------------------------------------------------
+
+PARA_W = 8  #: words per pseudo-paragraph (non-overlapping, tail kept short)
+#: composite (doc_id, pidx) -> bigint for the map-side-combinable MIN:
+#: pidx < 2^20 (a doc would need > 8M words to overflow) and
+#: doc_id < 2^43 — both documented bounds, asserted nowhere because a
+#: violation overflows into a WRONG winner, not a crash: the unit test
+#: pins the contract instead.
+PARA_POS_BASE = 1 << 20
+
+
+def paragraphs_of(docs: DataFrame, para_w: int = PARA_W) -> DataFrame:
+    """Pseudo-paragraph rows (doc_id, source, pidx, ptext, pos_key):
+    non-overlapping ``para_w``-word windows (trailing partial kept, so
+    a doc is exactly the concatenation of its paragraphs in pidx
+    order); ``pos_key = doc_id * 2^20 + pidx`` is the composite bigint
+    the keep-first winner MIN aggregates over.  Shared by the batch
+    paragraph-dedup operator and the streaming variant
+    (``streaming.pipeline.paradedup_stream``)."""
+    from sortify_spark.operators.partitioning import fan_out
+
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    words = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    return (
+        fan_out(docs)
+        .select("doc_id", "source", words.alias("w"))
+        # Exchange = projection-collapse barrier (dedup.py:170-192):
+        # without it the split re-evaluates inside every slice()
+        .repartition(par, "doc_id")
+        .select(
+            "doc_id",
+            "source",
+            F.posexplode(
+                F.when(F.size("w") <= 0, F.array().cast("array<string>"))
+                .otherwise(
+                    F.expr(
+                        f"transform(sequence(0, (size(w) + {para_w - 1}) "
+                        f"DIV {para_w} - 1), "
+                        f"s -> array_join(slice(w, s * {para_w} + 1, "
+                        f"{para_w}), ' '))"
+                    )
+                )
+            ).alias("pidx", "ptext"),
+        )
+        .withColumn(
+            "pos_key",
+            F.col("doc_id") * F.lit(PARA_POS_BASE) + F.col("pidx"),
+        )
+    )
+
+
+def rebuild_expr() -> Column:
+    """Aggregate expression reassembling a doc's text from its
+    surviving (pidx, ptext) rows — shared by the batch and streaming
+    paradedup twins, whose oracle hash-match depends on this staying
+    byte-identical on both paths."""
+    return F.expr(
+        "array_join(transform(array_sort(collect_list("
+        "struct(pidx, ptext))), x -> x.ptext), ' ')"
+    )
+
+
+def md5_prefix_bigint(col: Column | str) -> Column:
+    """The repo's hash-bucket idiom as a value hash: first 7 md5 hex
+    chars of a string column as bigint (DuckDB:
+    ``('0x' || substring(md5(c), 1, 7))::BIGINT``)."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.conv(
+        F.substring(F.md5(c.cast("binary")), 1, 7), 16, 10
+    ).cast("bigint")

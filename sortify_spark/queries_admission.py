@@ -37,14 +37,10 @@ from pyspark.sql import functions as F
 
 from sortify_spark import dedup
 from sortify_spark import textstats as ts
+from sortify_spark.dedup import DOCSEM_BITS, DOCSEM_DIM, DOCSEM_TAU
 from sortify_spark.functions import sql_embed as SE
 from sortify_spark.functions.numeric import oracle_davg
 from sortify_spark.queries import register, _t
-from sortify_spark.queries_curation2 import (
-    DOCSEM_BITS,
-    DOCSEM_DIM,
-    DOCSEM_TAU,
-)
 from sortify_spark.search.knn import lsh_key_sql
 from sortify_spark.streaming import await_or_raise
 
@@ -548,7 +544,7 @@ def q_trigger_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _paradedup_oracle_sql(n_batches: int = N_BATCHES) -> str:
-    from sortify_spark.queries_curation2 import PARA_POS_BASE, PARA_W
+    from sortify_spark.functions.text import PARA_POS_BASE, PARA_W
 
     pw = PARA_W
     batch_base = 1 << 50  # doc_id * 2^20 + pidx < 2^50 at any test SF

@@ -30,6 +30,10 @@ corpus scan; (N, avgdl, df_t) is one broadcast-size aggregate row
 joined back; top-k is TakeOrdered.  The corpus is read twice (stats +
 score) and never shuffled.  The fusion adds the dense scan (dim-8 md5
 fold) and two 20-row rank lists — join cost is nil.
+
+The scorer itself (``bm25_scored``, ``BM25_K1``/``BM25_B`` and the
+score expressions) lives in :mod:`sortify_spark.search.lexical`; this
+module holds the registry rows and their DuckDB replays.
 """
 
 from __future__ import annotations
@@ -39,10 +43,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sortify_spark.queries import register, _t
+from sortify_spark.search.lexical import (
+    BM25_B,
+    BM25_K1,
+    _bm25_sum_expr,
+    _score_expr,
+    bm25_scored,
+)
 
 QUERY_TERMS = ("dup", "spark", "merge")  #: rare + common + common
-BM25_K1 = 1.2
-BM25_B = 0.75
 BM25_TOPK = 10
 FUSE_K = 20  #: per-list depth feeding the fusion
 RRF_K = 60
@@ -50,105 +59,8 @@ SEM_DIM = 8  #: expression-encoder dim for the dense side
 _DEC = "DECIMAL(38,12)"
 
 
-def _score_expr(i: int) -> str:  # noqa: D103 — see module docstring
-    """Per-term BM25 score as an engine-portable SQL expression over
-    columns n/df{i}/tf{i}/dl/avgdl — identical text on both engines so
-    the IEEE op sequence is identical.  tf = 0 scores exactly 0.0."""
-    k1p1 = BM25_K1 + 1.0
-    one_b = 1.0 - BM25_B
-    return (
-        f"ROUND(ROUND((CAST(n - df{i} AS DOUBLE) + 0.5)"
-        f" / (CAST(df{i} AS DOUBLE) + 0.5), 12)"
-        f" * ((CAST(tf{i} AS DOUBLE) * {k1p1})"
-        f" / (CAST(tf{i} AS DOUBLE) + {BM25_K1} * ({one_b}"
-        f" + {BM25_B} * (CAST(dl AS DOUBLE) / avgdl)))), 9)"
-    )
-
-
-def _bm25_sum_expr(n_terms: int = len(QUERY_TERMS)) -> str:
-    terms = [f"__s{i}" for i in range(n_terms)]
-    acc = terms[0]
-    for t in terms[1:]:
-        acc = f"({acc} + {t})"
-    return f"ROUND({acc}, 9)"
-
-
-def bm25_scored(
-    docs: DataFrame, terms: tuple[str, ...] = QUERY_TERMS
-) -> DataFrame:
-    """All matching docs scored: (doc_id, source, matched_terms, bm25).
-    One corpus scan computes per-term tf + dl as array expressions (no
-    explode); the (N, avgdl, df) stats row broadcasts back.  ``terms``
-    parameterizes the facade's keyword strategy; the registered query
-    uses the fixed default set."""
-    if not terms:
-        # F.expr("") on the zero-term CASE sum would raise an opaque
-        # ParseException mid-plan; fail loudly at the boundary instead
-        # (a whitespace-only facade query reaches here).
-        raise ValueError(
-            "bm25_scored requires at least one query term"
-        )
-    w = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-
-    def _tf(term: str):
-        # single-arg lambda per term (a default-arg lambda would be
-        # arity-2 and get the element INDEX as its second argument)
-        return F.size(F.filter(w, lambda x: x == F.lit(term)))
-
-    # Higher-order tokenize/filter folds are interpreted per-row; fan a
-    # small single-file scan out to every core before them (measured
-    # 3.4 s -> 0.9 s at sf0.1; cluster no-op).
-    from sortify_spark.operators.partitioning import fan_out
-
-    docs = fan_out(docs)
-    # The compact (doc_id, source, dl, tf*) frame feeds BOTH the stats
-    # aggregate and the scored projection; without a materialization
-    # barrier each consumer re-runs the interpreted tokenize pass, and
-    # Catalyst additionally pushes the matched_terms > 0 filter below
-    # the fan-out exchange onto the raw scan with the FULL tokenize
-    # chain inlined per term — O(terms) re-splits per row serialized on
-    # the scan's 1-3 input partitions (the §4.4-shaped duplication the
-    # round-13 shingle-kernel fix removed elsewhere).  One checkpoint
-    # of ~5 small columns per doc removes both; BM25 stats are
-    # corpus-global by contract, so no caller-side predicate ever needs
-    # to push below this barrier.
-    base = docs.select(
-        "doc_id",
-        "source",
-        F.size(w).alias("dl"),
-        *[_tf(t).alias(f"tf{i}") for i, t in enumerate(terms)],
-    ).localCheckpoint(eager=False)
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(
-            F.sum(F.col("dl").cast(_DEC)).cast("double")
-            / F.count(F.lit(1)),
-            12,
-        ).alias("avgdl"),
-        *[
-            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)).alias(
-                f"df{i}"
-            )
-            for i in range(len(terms))
-        ],
-    )
-    scored = base.crossJoin(F.broadcast(stats))
-    for i in range(len(terms)):
-        scored = scored.withColumn(f"__s{i}", F.expr(_score_expr(i)))
-    matched = " + ".join(
-        f"CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END"
-        for i in range(len(terms))
-    )
-    return scored.select(
-        "doc_id",
-        "source",
-        F.expr(matched).alias("matched_terms"),
-        F.expr(_bm25_sum_expr(len(terms))).alias("bm25"),
-    ).filter(F.col("matched_terms") > 0)
-
-
 def bm25_topk(docs: DataFrame) -> DataFrame:
-    return bm25_scored(docs).orderBy(
+    return bm25_scored(docs, QUERY_TERMS).orderBy(
         F.desc("bm25"), F.asc("doc_id")
     ).limit(BM25_TOPK)
 
@@ -251,7 +163,7 @@ def hybrid_lexical_semantic(docs: DataFrame) -> DataFrame:
     # doc_id) order is total, so the top-k set — and hence the ranks —
     # are identical (ADVICE r7).
     lex = (
-        bm25_scored(docs)
+        bm25_scored(docs, QUERY_TERMS)
         .orderBy(F.desc("bm25"), F.asc("doc_id"))
         .limit(FUSE_K)
         .withColumn(

@@ -40,6 +40,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sortify_spark.dedup import DOCSEM_BITS, DOCSEM_DIM, DOCSEM_TAU
+from sortify_spark.functions.text import (
+    PARA_POS_BASE,
+    PARA_W,
+    md5_prefix_bigint,
+    paragraphs_of,
+    rebuild_expr,
+)
 from sortify_spark.functions.vectors import cosine_given_norms, l2_norm
 from sortify_spark.queries import register, _t
 
@@ -215,7 +223,7 @@ def freq_bucket_stats(docs: DataFrame) -> DataFrame:
     exchanged.  The r4 shape left the join strategy to AQE — which
     statically planned a SortMergeJoin whose occurrence-side Exchange
     was materialized (250 M shuffled rows at the 5 M-doc stress scale,
-    the 41.9 s hotspot in SCALE_STRESS_r04) before the runtime
+    the 41.9 s hotspot in r4 scale stress) before the runtime
     broadcast conversion could skip it.  Measured at 1000×: explicit
     broadcast 39.3 s vs AQE-converted 45.4 s vs a forced shuffled-hash
     join 61.2 s vs the "pre-aggregate per (doc, word) first" rewrite
@@ -574,11 +582,6 @@ def q_semdedup_prune_np(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SemDeDup over raw documents (no embedding table): expression encoder
 # + portable-LSH blocking, fully oracle-replayable
 # ---------------------------------------------------------------------------
-
-DOCSEM_TAU = 0.995  #: near-identical cosine threshold over unit vectors
-DOCSEM_BITS = 6  #: hyperplane-sign bits → 64 semantic blocks
-DOCSEM_DIM = 8  #: encoder dim for this op (md5 fold cost ∝ dim)
-
 
 def _docsem_oracle_sql() -> str:
     from sortify_spark.functions import sql_embed as SE
@@ -1116,75 +1119,6 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Dolma-style paragraph-level exact dedup with document reassembly
 # ---------------------------------------------------------------------------
-
-PARA_W = 8  #: words per pseudo-paragraph (non-overlapping, tail kept short)
-#: composite (doc_id, pidx) -> bigint for the map-side-combinable MIN:
-#: pidx < 2^20 (a doc would need > 8M words to overflow) and
-#: doc_id < 2^43 — both documented bounds, asserted nowhere because a
-#: violation overflows into a WRONG winner, not a crash: the unit test
-#: pins the contract instead.
-PARA_POS_BASE = 1 << 20
-
-
-def paragraphs_of(docs: DataFrame, para_w: int = PARA_W) -> DataFrame:
-    """Pseudo-paragraph rows (doc_id, source, pidx, ptext, pos_key):
-    non-overlapping ``para_w``-word windows (trailing partial kept, so
-    a doc is exactly the concatenation of its paragraphs in pidx
-    order); ``pos_key = doc_id * 2^20 + pidx`` is the composite bigint
-    the keep-first winner MIN aggregates over.  Shared by the batch
-    operator (:func:`paragraph_dedup_stats`) and the streaming variant
-    (``streaming.pipeline.paradedup_stream``)."""
-    from sortify_spark.operators.partitioning import fan_out
-
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        fan_out(docs)
-        .select("doc_id", "source", _words().alias("w"))
-        # Exchange = projection-collapse barrier (dedup.py:170-192):
-        # without it the split re-evaluates inside every slice()
-        .repartition(par, "doc_id")
-        .select(
-            "doc_id",
-            "source",
-            F.posexplode(
-                F.when(F.size("w") <= 0, F.array().cast("array<string>"))
-                .otherwise(
-                    F.expr(
-                        f"transform(sequence(0, (size(w) + {para_w - 1}) "
-                        f"DIV {para_w} - 1), "
-                        f"s -> array_join(slice(w, s * {para_w} + 1, "
-                        f"{para_w}), ' '))"
-                    )
-                )
-            ).alias("pidx", "ptext"),
-        )
-        .withColumn(
-            "pos_key",
-            F.col("doc_id") * F.lit(PARA_POS_BASE) + F.col("pidx"),
-        )
-    )
-
-
-def rebuild_expr():
-    """Aggregate expression reassembling a doc's text from its
-    surviving (pidx, ptext) rows — shared by the batch and streaming
-    paradedup twins, whose oracle hash-match depends on this staying
-    byte-identical on both paths."""
-    return F.expr(
-        "array_join(transform(array_sort(collect_list("
-        "struct(pidx, ptext))), x -> x.ptext), ' ')"
-    )
-
-
-def md5_prefix_bigint(col):
-    """The repo's hash-bucket idiom as a value hash: first 7 md5 hex
-    chars of a string column as bigint (DuckDB:
-    ``('0x' || substring(md5(c), 1, 7))::BIGINT``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(
-        F.substring(F.md5(c.cast("binary")), 1, 7), 16, 10
-    ).cast("bigint")
-
 
 def paragraph_dedup_stats(docs: DataFrame) -> DataFrame:
     """Per-source paragraph-dedup audit with full text reassembly:

@@ -600,7 +600,7 @@ def jaccard_prefix_join(
       corpora keep hash order's one-less-global-stage plan, boilerplate
       corpora get freq order's structurally cool prefixes (measured
       dominant on floods: max stage wall 0.76-1.91 s vs guarded-hash
-      0.96-1.14 s, SCALE_STRESS_r08) with the runtime guard still
+      0.96-1.14 s, r8 scale stress) with the runtime guard still
       covering adversarial leftovers.
 
     ``hot_cap``: 0 (default) = the guard's default cap; positive =

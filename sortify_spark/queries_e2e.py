@@ -492,195 +492,3 @@ def q_e2e_search_owner_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out.orderBy("owner", "strategy", F.desc("score"), F.asc("id"))
-
-
-def _lsh_oracle() -> str:
-    from sortify_spark.search.knn import embedding_mean_sql, lsh_key_sql
-
-    cos = SE.cosine_sql("k.e", "qz.qe", "k.vn", "qz.qn", E2E_DIM)
-    mean = embedding_mean_sql(
-        "(SELECT e FROM vec WHERE vtype = 'summary') __sv", E2E_DIM
-    )
-    return f"""
-    WITH {_base_ctes()},
-    ctr AS ({mean}),
-    kz AS (SELECT document_id, e, vn,
-                  {lsh_key_sql('e', 4, 'ctr.c')} AS bkt
-           FROM vec, ctr WHERE vtype = 'summary'),
-    qz0 AS (SELECT qe, qn, {lsh_key_sql('qe', 4, 'ctr.c')} AS bkt
-           FROM q, ctr),
-    qz AS (SELECT qe, qn, xor(bkt, f.v) AS bkt
-           FROM qz0, (SELECT unnest([0, 1, 2, 4, 8]) AS v) f),
-    cz AS (SELECT k.document_id, ROUND({cos}, 6) AS score
-           FROM kz k JOIN qz ON k.bkt = qz.bkt),
-    tz AS (SELECT document_id, score FROM cz
-           ORDER BY score DESC, document_id ASC LIMIT 10)
-    SELECT document_id AS id, MAX(score) AS score FROM tz
-    GROUP BY document_id ORDER BY score DESC, id ASC
-    """
-
-
-@register(
-    "e2e_search_lsh",
-    _lsh_oracle(),
-    note="E2E ANN through the facade: portable hyperplane-LSH bucket "
-    "probe (SearchConfig(ann='lsh')) with CENTERED hyperplanes — "
-    "bag-of-token embeddings cluster in a cone, so planes through the "
-    "deterministic rounded data centroid restore balanced buckets. "
-    "Only the query's bucket is scored, exact cosine rerank inside "
-    "(the HNSW replacement shape at scale: the probe reads 1/2^nbits "
-    "of the index, a partition prune when the table is stored bucketed "
-    "by key). Oracle replays ingest, embedding, the centered LCG "
-    "bucket keys, and the probe from raw text.",
-)
-def q_e2e_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sortify_spark.facade import SearchConfig
-
-    return _engine(spark, sf_dir).semantic_search(
-        E2E_QUERY, "summary_only", SearchConfig(ann="lsh", lsh_nbits=4)
-    )
-
-
-def _lsh_batched_oracle() -> str:
-    """Oracle for ``e2e_search_lsh_batched``: the single-query LSH
-    replay (`_lsh_oracle`'s shape) instantiated once per batch member
-    over ONE shared ingest + center + keyed-corpus replay — exactly
-    what ``lsh_portable_topk_many`` amortizes on the Spark side (the
-    keyed frame and its buckets are scanned once for the union of
-    every query's probes)."""
-    from sortify_spark.search.knn import embedding_mean_sql, lsh_key_sql
-
-    mean = embedding_mean_sql(
-        "(SELECT e FROM vec WHERE vtype = 'summary') __sv", E2E_DIM
-    )
-    ctes = [
-        _ingest_ctes(),
-        f"ctr AS ({mean})",
-        f"""kz AS (SELECT document_id, e, vn,
-                  {lsh_key_sql('e', 4, 'ctr.c')} AS bkt
-           FROM vec, ctr WHERE vtype = 'summary')""",
-    ]
-    selects = []
-    for q, text in E2E_BATCH_QUERIES.items():
-        qr = f"{q}l"
-        cos = SE.cosine_sql("k.e", f"{qr}z.qe", "k.vn", f"{qr}z.qn", E2E_DIM)
-        ctes.append(_query_ctes(text, qref=qr))
-        ctes.append(
-            f"""
-    {qr}z0 AS (SELECT qe, qn, {lsh_key_sql('qe', 4, 'ctr.c')} AS bkt
-           FROM {qr}, ctr),
-    {qr}z AS (SELECT qe, qn, xor(bkt, f.v) AS bkt
-           FROM {qr}z0, (SELECT unnest([0, 1, 2, 4, 8]) AS v) f),
-    {qr}c AS (SELECT k.document_id, ROUND({cos}, 6) AS score
-           FROM kz k JOIN {qr}z ON k.bkt = {qr}z.bkt),
-    {qr}tk AS (SELECT document_id, score FROM {qr}c
-           ORDER BY score DESC, document_id ASC LIMIT 10),
-    {qr}s AS (SELECT document_id AS id, MAX(score) AS score FROM {qr}tk
-           GROUP BY document_id)
-    """
-        )
-        selects.append(
-            f"""SELECT '{q}' AS query_id, id, score,
-       ROW_NUMBER() OVER (ORDER BY score DESC, id ASC) AS rnk
-FROM {qr}s"""
-        )
-    body = "\nUNION ALL\n".join(selects)
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"\nSELECT * FROM (\n{body}\n) __u ORDER BY query_id, rnk"
-    )
-
-
-@register(
-    "e2e_search_lsh_batched",
-    _lsh_batched_oracle(),
-    note="E2E BATCHED ANN serving through the portable LSH (round 10, "
-    "completes the batched matrix with an oracle-backed row): three "
-    "queries through facade.semantic_search_many(ann='lsh') — ONE "
-    "union-of-buckets probe of the cached centered-LSH keyed frame, "
-    "per-query multi-probe flips, exact cosine rerank inside, "
-    "per-query rank windows.  The oracle replays ingest, the "
-    "deterministic center, the LCG bucket keys, and each query's probe "
-    "from raw text — per-query rows must be bit-identical to the "
-    "single-query LSH pipeline.",
-)
-def q_e2e_search_lsh_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sortify_spark.facade import SearchConfig
-
-    return (
-        _engine(spark, sf_dir)
-        .semantic_search_many(
-            dict(E2E_BATCH_QUERIES),
-            "summary_only",
-            SearchConfig(ann="lsh", lsh_nbits=4),
-        )
-        .orderBy("query_id", "rnk")
-    )
-
-
-def _lsh_recall_oracle() -> str:
-    from sortify_spark.search.knn import embedding_mean_sql, lsh_key_sql
-
-    cos = SE.cosine_sql("k.e", "qz.qe", "k.vn", "qz.qn", E2E_DIM)
-    mean = embedding_mean_sql(
-        "(SELECT e FROM vec WHERE vtype = 'summary') __sv", E2E_DIM
-    )
-    return f"""
-    WITH {_base_ctes()},
-    {_scored_ctes("summary", 10, "ex")},
-    ctr AS ({mean}),
-    kz AS (SELECT document_id, e, vn,
-                  {lsh_key_sql('e', 4, 'ctr.c')} AS bkt
-           FROM vec, ctr WHERE vtype = 'summary'),
-    qz0 AS (SELECT qe, qn, {lsh_key_sql('qe', 4, 'ctr.c')} AS bkt
-           FROM q, ctr),
-    qz AS (SELECT qe, qn, xor(bkt, f.v) AS bkt
-           FROM qz0, (SELECT unnest([0, 1, 2, 4, 8]) AS v) f),
-    cz AS (SELECT k.document_id, ROUND({cos}, 6) AS score
-           FROM kz k JOIN qz ON k.bkt = qz.bkt),
-    tz AS (SELECT document_id, score FROM cz
-           ORDER BY score DESC, document_id ASC LIMIT 10),
-    lz AS (SELECT document_id AS id FROM tz GROUP BY document_id)
-    SELECT (SELECT COUNT(*) FROM exs) AS n_exact,
-           (SELECT COUNT(*) FROM lz) AS n_lsh,
-           (SELECT COUNT(*) FROM exs JOIN lz ON exs.id = lz.id)
-               AS n_overlap,
-           ROUND((SELECT COUNT(*) FROM exs JOIN lz ON exs.id = lz.id)
-                 / CAST((SELECT COUNT(*) FROM exs) AS DOUBLE), 4)
-               AS recall_at_10
-    """
-
-
-@register(
-    "facade_lsh_recall",
-    _lsh_recall_oracle(),
-    note="ANN quality contract for the facade LSH probe (the "
-    "ivf_recall_at_10 pattern): recall@10 of the centered-LSH bucket "
-    "probe against the exact brute-force top-10 — BOTH sides replayed "
-    "from raw text by the oracle, so the recall number itself is "
-    "hash-checked, not just reported. Recall < 1 is the designed "
-    "trade (probe cost 1/2^nbits of the scan).",
-)
-def q_facade_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sortify_spark.facade import SearchConfig
-
-    eng = _engine(spark, sf_dir)
-    exact = eng.semantic_search(E2E_QUERY, "summary_only").select("id")
-    approx = eng.semantic_search(
-        E2E_QUERY, "summary_only", SearchConfig(ann="lsh", lsh_nbits=4)
-    ).select("id")
-    overlap = exact.join(approx, "id", "inner")
-    return (
-        exact.agg(F.count(F.lit(1)).alias("n_exact"))
-        .crossJoin(approx.agg(F.count(F.lit(1)).alias("n_lsh")))
-        .crossJoin(overlap.agg(F.count(F.lit(1)).alias("n_overlap")))
-        .select(
-            "n_exact",
-            "n_lsh",
-            "n_overlap",
-            F.round(
-                F.col("n_overlap") / F.col("n_exact").cast("double"), 4
-            ).alias("recall_at_10"),
-        )
-    )

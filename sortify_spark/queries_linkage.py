@@ -282,30 +282,6 @@ def pagerank_suppliers(
     nn = nodes.agg(F.count(F.lit(1)).alias("n")).localCheckpoint(
         eager=True
     )
-    # OPT-IN rank-vector broadcast (r13 A/B, guide §3.1): with
-    # SORTIFY_PR_BROADCAST_MAX_NODES=N > 0 and ≤ N nodes, every
-    # iteration's contrib join broadcasts the (two-bigints-per-node)
-    # rank vector — the edge table is never shuffled per iteration (the
-    # sort-merge plan re-shuffles it 5×) and the rank-update join
-    # broadcasts the node-sized contrib frame; the only exchange left
-    # per iteration is the map-side-combined groupBy(dst).  The RESULT
-    # is identical either way (exact bigint arithmetic, order-
-    # independent sums) — measured 20 SMJ → 20 BHJ in the plan.  Default
-    # OFF: at bench scale (≈16k nodes / 0.5M edges) the per-iteration
-    # broadcast's driver round-trips cost as much as the tiny shuffles
-    # they replace (same-session A/B: medians 3.5 s both ways, old plan
-    # min 2.5 s) — the win needs edge bytes that dwarf the node vector
-    # (e.g. ≥100× at ≤2M nodes ≈ 32 MB broadcast), which a cluster
-    # deployment opts into via the env knob.  When off, no extra count
-    # job runs.
-    import os
-
-    bc_max = int(os.environ.get("SORTIFY_PR_BROADCAST_MAX_NODES", "0"))
-    bc_rank = bc_max > 0 and nodes.count() <= bc_max
-
-    def _rank_side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if bc_rank else df
-
     base = F.expr(
         f"DIV({PR_DAMP_DEN - PR_DAMP_NUM} * DIV({PR_SCALE}, n), {PR_DAMP_DEN})"
     )
@@ -316,7 +292,7 @@ def pagerank_suppliers(
         pr = pr.localCheckpoint(eager=True)
     for it in range(1, iters + 1):
         contrib = (
-            edeg.join(_rank_side(pr), edeg.src == pr.id)
+            edeg.join(pr, edeg.src == pr.id)
             .select("dst", F.expr("DIV(pr, deg)").alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
@@ -340,7 +316,7 @@ def pagerank_suppliers(
             )
             new_pr = new_pr.crossJoin(F.broadcast(dm))
         new_pr = new_pr.join(
-            _rank_side(contrib), nodes.id == contrib.dst, "left"
+            contrib, nodes.id == contrib.dst, "left"
         ).select(
             "id",
             (base + F.expr(damped)).cast("long").alias("pr"),

@@ -423,13 +423,11 @@ def q_token_counts_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def knn_lsh_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MLlib BucketedRandomProjectionLSH demonstration (retired from the
-    registry surface, VERDICT r4 item 8: the portable-LSH contract rows
-    — ``knn_lsh_portable``, ``e2e_search_lsh``, ``facade_lsh_recall`` —
-    cover the ANN-bucket capability WITH hash checks, where MLlib's
-    seed-internal hashing is rows-only by construction).  Kept as a
-    library path + recall property test (tests/test_scale_queries.py):
-    it is the off-the-shelf alternative a deployment might prefer over
-    the portable implementation."""
+    registry surface, VERDICT r4 item 8: MLlib's seed-internal hashing
+    is rows-only by construction, never hash-checkable; the persisted
+    IVF index is the engine's served ANN).  Kept as a library path +
+    recall property test (tests/test_scale_queries.py): it is the
+    off-the-shelf alternative a deployment might prefer."""
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
     from pyspark.ml.linalg import Vectors

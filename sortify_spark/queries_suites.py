@@ -568,8 +568,7 @@ _suite(
 # --- corpus-curation extras: repetition signals, stratified sampling,
 # sliding windows, incremental dedup + the exact-dedup/sample/distinct
 # trio whose individual window slots the round-2 flagships took over.
-# --- ANN + streaming contracts: portable-LSH index, int8 quantization
-# audit, stateful streaming sessionization, quality scores, streamed
+# --- ANN + streaming contracts: int8 quantization audit, stateful streaming sessionization, quality scores, streamed
 # daily trend — the round-2 post-window queries folded into one row
 # (VERDICT r2 item 5) plus the two singles whose window slots this suite
 # and pii_scrub_audit take over.
@@ -582,10 +581,6 @@ _suite(
         # member's ANN path is measured against.
         (
             "knn_bruteforce",
-            dict(key1="CAST(id AS STRING)", key2="label", val="score"),
-        ),
-        (
-            "knn_lsh_portable",
             dict(key1="CAST(id AS STRING)", key2="label", val="score"),
         ),
         (
@@ -641,14 +636,6 @@ _suite(
             "e2e_qa_document_search",
             dict(key1="id", val="score"),
         ),
-        ("e2e_search_lsh", dict(key1="id", val="score")),
-        # round 10: the batched-LSH leg oracle-verified (one
-        # union-of-buckets probe for the whole batch, per-query rows
-        # bit-identical to the single-query LSH pipeline).
-        (
-            "e2e_search_lsh_batched",
-            dict(key1="query_id", key2="id", cnt="rnk", val="score"),
-        ),
         # round 9: the batched facade serving row — three queries'
         # two-stage hybrid in one plan per stage vs per-query replays.
         (
@@ -659,15 +646,6 @@ _suite(
                 cnt="rnk",
                 val="score",
                 val2="CAST(tier AS DOUBLE)",
-            ),
-        ),
-        (
-            "facade_lsh_recall",
-            dict(
-                key1="CAST(n_exact AS STRING)",
-                key2="CAST(n_lsh AS STRING)",
-                cnt="n_overlap",
-                val="recall_at_10",
             ),
         ),
         # round 10: tenant isolation (P9 / VERDICT r9 #1) — two owners
@@ -707,8 +685,7 @@ _suite(
         ),
     ],
     note="Suite: DENSE retrieval — exact brute-force cosine (the "
-    "baseline contract), portable hyperplane-LSH ANN (value-hash-"
-    "checked index), int8 quantization error audit, per-doc quality "
+    "baseline contract), int8 quantization error audit, per-doc quality "
     "scores, batched multi-query top-k (whole query batch in one "
     "scan), the e2e facade rows (ingest audit + summary_only/hybrid/"
     "RRF/traditional search) whose oracles replay the full pipeline "

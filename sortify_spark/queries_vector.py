@@ -537,49 +537,6 @@ def q_embedding_quantize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_key_sql() -> str:
-    """Shared renderer (search/knn.lsh_key_sql): left-to-right fold per
-    plane, so the sign decision is bit-identical to Spark's aggregate —
-    a near-zero dot cannot flip a bucket bit between engines."""
-    from sortify_spark.search.knn import lsh_key_sql
-
-    return lsh_key_sql("e", 4)
-
-
-@register(
-    "knn_lsh_portable",
-    f"""
-    WITH keyed AS (
-      SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e,
-             {_lsh_key_sql()} AS key
-      FROM embeddings
-    ),
-    q AS (SELECT e AS qe, key AS qkey FROM keyed WHERE vec_id = 0)
-    SELECT k.vec_id AS id, k.label,
-           ROUND(list_cosine_similarity(k.e, q.qe), 6) AS score
-    FROM keyed k, q
-    WHERE k.key = q.qkey AND k.vec_id <> 0
-    ORDER BY score DESC, id ASC LIMIT 10
-    """,
-    note="ANN via PORTABLE hyperplane LSH: bucket key from LCG-derived "
-    "hyperplane signs (pure integer arithmetic both engines reproduce), "
-    "probe = equi-join on the query's bucket, exact cosine rerank "
-    "inside. Unlike the MLlib BucketedRandomProjectionLSH variant "
-    "(queries_scale.knn_lsh_mllib, seed-internal so rows-only by "
-    "construction — retired to a library path + recall test), the "
-    "whole approximate index is value-hash-checked against the oracle.",
-)
-def q_knn_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    return knn.lsh_portable_topk(
-        emb.filter(F.col("vec_id") != 0),
-        emb.filter(F.col("vec_id") == 0),
-        k=10,
-        nbits=4,
-        carry_cols=("label",),
-    ).select(F.col("vec_id").alias("id"), "label", "score")
-
-
 @register(
     "knn_batch_queries",
     """
@@ -1403,7 +1360,7 @@ def _ivf_floored_oracle_sql(k: int = 10, floor: int = 16, dim: int = 64) -> str:
 
     The floored leg's probe width (16 of ~40 occupied) is where the
     grid showed composed-without-floor losing recall to
-    occupancy-only@16 (SCALE_STRESS_r12); hash-matching both legs
+    occupancy-only@16 (r12 scale stress); hash-matching both legs
     against the replay pins the floor's exact semantics."""
     return f"""
     WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe

@@ -531,7 +531,7 @@ def probe_ivf_index(
     stop.  ``min_candidates`` guarantees CANDIDATES (never silence),
     not top-k QUALITY: a dense tenant can fill k from its single top
     bucket while its true top-k lives in the next fifteen
-    (SCALE_STRESS_r12: composed-at-nprobe0=1 stopped at 8 buckets /
+    (r12 scale stress: composed-at-nprobe0=1 stopped at 8 buckets /
     recall 0.7 where occupancy-only@16 reached 0.9).  With
     ``filter_buckets`` the floor counts OCCUPIED buckets, so a probe
     floored at F reads a superset of occupancy-only@F's buckets —

@@ -360,7 +360,7 @@ def brute_force_topk_np(
 
 
 # ---------------------------------------------------------------------------
-# Portable hyperplane LSH (oracle-checkable ANN)
+# Portable hyperplane LSH keys (oracle-checkable bucket keys)
 # ---------------------------------------------------------------------------
 
 #: LCG constants for hyperplane components: pure integer arithmetic that
@@ -394,8 +394,8 @@ def lsh_key_sql(
     """DuckDB rendering of :func:`lsh_portable_key` /
     :func:`lsh_portable_key_centered` over an arbitrary DOUBLE[]
     expression — same LCG constants, so the bucket key is bit-identical
-    across engines (the property `knn_lsh_portable` hash-checks; the
-    e2e facade ANN oracle reuses this).
+    across engines (the DOCSEM admission and curation oracles reuse
+    this).
 
     The per-plane dot folds LEFT-TO-RIGHT (``list_reduce``, matching
     Spark's ``aggregate``) — a ``list_sum`` would be
@@ -485,181 +485,3 @@ def lsh_portable_key_centered(
         )
         key = key + F.when(dot >= 0, F.lit(2**j)).otherwise(F.lit(0))
     return key
-
-
-def lsh_portable_topk(
-    vectors: DataFrame,
-    query: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = DEFAULT_TOP_K,
-    nbits: int = 4,
-    carry_cols: tuple[str, ...] = (),
-    center: DataFrame | None = None,
-    probe_hamming: int = 0,
-    pre_keyed: bool = False,
-) -> DataFrame:
-    """ANN top-k through the portable LSH: score ONLY the query's
-    bucket (expected n/2^nbits candidates), exact cosine rerank inside.
-    The probe is an equi-join on the bucket key — at 100 TB the table
-    is stored partitioned by key, so a probe reads one partition
-    (same shape as `ivf_topk`'s nprobe pruning).
-
-    ``center`` (a 1-row ``(c array<double>)`` DataFrame, see
-    :func:`embedding_mean`) switches to centered hyperplanes — required
-    for cone-clustered embeddings where origin hyperplanes degenerate
-    to one hot bucket.
-
-    ``probe_hamming=1`` additionally probes every bucket whose key is
-    one bit-flip from the query's (nbits+1 probes of 2^nbits buckets) —
-    the standard multi-probe recall lever: each flipped plane admits
-    the neighbors that fell just on the other side of it, for
-    (nbits+1)/2^nbits of the scan instead of 1/2^nbits.
-
-    ``pre_keyed=True`` means ``vectors`` already carries the ``__lsh``
-    key column (a persisted, write-once index — the shape repeated
-    queries should use; the facade caches it per engine) and only the
-    query side is keyed here."""
-    scored = _lsh_scored_candidates(
-        vectors,
-        query.select(F.col(vec_col).alias("__qvec")),
-        lead_cols=(),
-        id_col=id_col,
-        vec_col=vec_col,
-        nbits=nbits,
-        carry_cols=carry_cols,
-        center=center,
-        probe_hamming=probe_hamming,
-        pre_keyed=pre_keyed,
-    )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
-
-
-def _lsh_scored_candidates(
-    vectors: DataFrame,
-    qsel: DataFrame,
-    lead_cols: tuple,
-    id_col: str,
-    vec_col: str,
-    nbits: int,
-    carry_cols: tuple[str, ...],
-    center: DataFrame | None,
-    probe_hamming: int,
-    pre_keyed: bool,
-) -> DataFrame:
-    """Shared core of the single and batched portable-LSH probes: key
-    the index side (unless ``pre_keyed``), key the query side ``qsel``
-    (which must expose ``__qvec`` plus any pass-through id columns),
-    fan out one-bit-flip probes, bucket-equi-join, exact cosine score
-    at the probe's fold/rounding.  ``lead_cols`` are query-side columns
-    selected (aliased) ahead of ``id_col`` in the output — the batched
-    probe threads ``query_id`` through here, keeping the two public
-    probes bit-identical by construction instead of by copy."""
-    if center is not None:
-        c = F.broadcast(center)
-        keyed = (
-            vectors
-            if pre_keyed
-            else vectors.crossJoin(c)
-            .withColumn(
-                "__lsh", lsh_portable_key_centered(vec_col, "c", nbits)
-            )
-            .drop("c")
-        )
-        q0 = (
-            qsel.crossJoin(c)
-            .withColumn(
-                "__lsh", lsh_portable_key_centered("__qvec", "c", nbits)
-            )
-            .drop("c")
-            .withColumn("__qn", l2_norm("__qvec"))
-        )
-    else:
-        keyed = (
-            vectors
-            if pre_keyed
-            else vectors.withColumn("__lsh", lsh_portable_key(vec_col, nbits))
-        )
-        q0 = (
-            qsel.withColumn("__lsh", lsh_portable_key("__qvec", nbits))
-            .withColumn("__qn", l2_norm("__qvec"))
-        )
-    if probe_hamming >= 1:
-        flips = [F.col("__lsh")] + [
-            F.col("__lsh").bitwiseXOR(F.lit(1 << b)) for b in range(nbits)
-        ]
-        q0 = q0.withColumn("__lsh", F.explode(F.array(*flips)))
-    q = F.broadcast(q0)
-    cand = keyed.join(q, "__lsh").withColumn("__vn", l2_norm(vec_col))
-    return cand.select(
-        *lead_cols,
-        F.col(id_col),
-        *[F.col(c) for c in carry_cols],
-        F.round(
-            cosine_given_norms(
-                F.col(vec_col), F.col("__qvec"), F.col("__vn"), F.col("__qn")
-            ),
-            6,
-        ).alias("score"),
-    )
-
-
-def lsh_portable_topk_many(
-    vectors: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = DEFAULT_TOP_K,
-    nbits: int = 4,
-    center: DataFrame | None = None,
-    probe_hamming: int = 0,
-    pre_keyed: bool = False,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "embedding",
-) -> DataFrame:
-    """BATCHED :func:`lsh_portable_topk`: ANN top-k for N queries in
-    ONE plan — (query_id, id, score, rnk) — the union-of-buckets shape
-    of ``index.probe_ivf_index_many`` applied to the portable-LSH
-    buckets (VERDICT r9 #3, completing the batched serving matrix).
-
-    Each query keys to its bucket (+ every one-bit-flip neighbor under
-    ``probe_hamming=1``) — the (query_id, __lsh) probe pairs broadcast
-    against the keyed index frame, so the index is scanned ONCE for
-    the union of every query's buckets and each candidate scores
-    against ITS probing query's embedding with the single-probe's
-    fold/rounding (bit-identical per query).  A candidate reachable
-    from the same query through several flipped buckets dedupes before
-    scoring.  The global TakeOrdered becomes a per-query rank window —
-    distributed across queries, never a single global sort.
-
-    ``pre_keyed=True`` means ``vectors`` already carries ``__lsh``
-    (the facade's cached write-once index frame)."""
-    from pyspark.sql.window import Window
-
-    # no (query, id) dedupe needed: a vector's key is fixed, and one
-    # query's probe buckets (base + single-bit flips) are all distinct,
-    # so each (query, candidate) pair joins at most once — same as the
-    # single-query probe
-    scored = _lsh_scored_candidates(
-        vectors,
-        queries.select(
-            F.col(query_id_col).alias("__qid"),
-            F.col(query_vec_col).alias("__qvec"),
-        ),
-        lead_cols=(F.col("__qid").alias(query_id_col),),
-        id_col=id_col,
-        vec_col=vec_col,
-        nbits=nbits,
-        carry_cols=(),
-        center=center,
-        probe_hamming=probe_hamming,
-        pre_keyed=pre_keyed,
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .orderBy(query_id_col, "rnk")
-    )

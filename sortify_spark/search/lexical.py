@@ -39,11 +39,17 @@ keyword half this engine added beyond the reference:
   query terms hash to their posting buckets (partition-pruned via the
   manifest), per-term df comes from the vocabulary table, (N, avgdl)
   from the anchor manifest's integers, and the score is the EXACT
-  rounded expression of ``queries_bm25`` (same ``_score_expr`` text,
-  same term-order addition sequence), so a probe is bit-identical to
-  the full-scan ``bm25_scored`` for the same corpus — the property the
-  driver row ``bm25_index_probe`` hash-checks against a pure-SQL
-  replay.
+  rounded expression of :func:`bm25_scored` (same ``_score_expr``
+  text, same term-order addition sequence), so a probe is
+  bit-identical to the full-scan ``bm25_scored`` for the same corpus —
+  the property the driver row ``bm25_index_probe`` hash-checks against
+  a pure-SQL replay.
+
+* :func:`bm25_scored` — the index-free reference ranking: stats and
+  scores recomputed from the corpus in two scans.  The BM25 formula
+  (``BM25_K1``/``BM25_B``, ``_score_expr``, ``_bm25_sum_expr``) lives
+  here once; the probes, the registry rows and the tests all read it
+  from this module.
 
 Crash consistency: commits run postings → doclen → terms(anchor).  A
 crash between them leaves the anchor pointing at the PREVIOUS paired
@@ -70,6 +76,108 @@ from pyspark.sql import functions as F
 DEFAULT_PT_BUCKETS = 32
 DEFAULT_PD_BUCKETS = 16
 
+#: Okapi BM25 saturation / length-normalization constants.  idf is the
+#: RATIO ``(N - df + 0.5) / (df + 0.5)`` rather than its log: ``log`` is
+#: a transcendental libm call — the one place engines legitimately
+#: differ in the last ulp — and the oracle gate is bit-exact value
+#: hashing (see ``queries_bm25``'s module docstring for the contract).
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
+def _score_expr(i: int) -> str:
+    """Per-term BM25 score as an engine-portable SQL expression over
+    columns n/df{i}/tf{i}/dl/avgdl — identical text on both engines so
+    the IEEE op sequence is identical.  tf = 0 scores exactly 0.0."""
+    k1p1 = BM25_K1 + 1.0
+    one_b = 1.0 - BM25_B
+    return (
+        f"ROUND(ROUND((CAST(n - df{i} AS DOUBLE) + 0.5)"
+        f" / (CAST(df{i} AS DOUBLE) + 0.5), 12)"
+        f" * ((CAST(tf{i} AS DOUBLE) * {k1p1})"
+        f" / (CAST(tf{i} AS DOUBLE) + {BM25_K1} * ({one_b}"
+        f" + {BM25_B} * (CAST(dl AS DOUBLE) / avgdl)))), 9)"
+    )
+
+
+def _bm25_sum_expr(n_terms: int) -> str:
+    """Term-order sum of the ``__s{i}`` per-term scores, rounded — the
+    fixed addition sequence both engines and both paths share."""
+    terms = [f"__s{i}" for i in range(n_terms)]
+    acc = terms[0]
+    for t in terms[1:]:
+        acc = f"({acc} + {t})"
+    return f"ROUND({acc}, 9)"
+
+
+def bm25_scored(docs: DataFrame, terms: tuple[str, ...]) -> DataFrame:
+    """All matching docs scored: (doc_id, source, matched_terms, bm25).
+    One corpus scan computes per-term tf + dl as array expressions (no
+    explode); the (N, avgdl, df) stats row broadcasts back.  The
+    reference ranking the index probes are checked against."""
+    if not terms:
+        # F.expr("") on the zero-term CASE sum would raise an opaque
+        # ParseException mid-plan; fail loudly at the boundary instead
+        raise ValueError(
+            "bm25_scored requires at least one query term"
+        )
+    w = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+
+    def _tf(term: str):
+        # single-arg lambda per term (a default-arg lambda would be
+        # arity-2 and get the element INDEX as its second argument)
+        return F.size(F.filter(w, lambda x: x == F.lit(term)))
+
+    # Higher-order tokenize/filter folds are interpreted per-row; fan a
+    # small single-file scan out to every core before them (measured
+    # 3.4 s -> 0.9 s at sf0.1; cluster no-op).
+    from sortify_spark.operators.partitioning import fan_out
+
+    docs = fan_out(docs)
+    # The compact (doc_id, source, dl, tf*) frame feeds BOTH the stats
+    # aggregate and the scored projection; without a materialization
+    # barrier each consumer re-runs the interpreted tokenize pass, and
+    # Catalyst additionally pushes the matched_terms > 0 filter below
+    # the fan-out exchange onto the raw scan with the FULL tokenize
+    # chain inlined per term — O(terms) re-splits per row serialized on
+    # the scan's 1-3 input partitions.  One checkpoint of ~5 small
+    # columns per doc removes both; BM25 stats are corpus-global by
+    # contract, so no caller-side predicate ever needs to push below
+    # this barrier.
+    base = docs.select(
+        "doc_id",
+        "source",
+        F.size(w).alias("dl"),
+        *[_tf(t).alias(f"tf{i}") for i, t in enumerate(terms)],
+    ).localCheckpoint(eager=False)
+    stats = base.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.round(
+            F.sum(F.col("dl").cast("decimal(38,12)")).cast("double")
+            / F.count(F.lit(1)),
+            12,
+        ).alias("avgdl"),
+        *[
+            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)).alias(
+                f"df{i}"
+            )
+            for i in range(len(terms))
+        ],
+    )
+    scored = base.crossJoin(F.broadcast(stats))
+    for i in range(len(terms)):
+        scored = scored.withColumn(f"__s{i}", F.expr(_score_expr(i)))
+    matched = " + ".join(
+        f"CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END"
+        for i in range(len(terms))
+    )
+    return scored.select(
+        "doc_id",
+        "source",
+        F.expr(matched).alias("matched_terms"),
+        F.expr(_bm25_sum_expr(len(terms))).alias("bm25"),
+    ).filter(F.col("matched_terms") > 0)
+
 
 def _pt(col, buckets: int):
     return F.pmod(F.abs(F.xxhash64(col)), F.lit(buckets))
@@ -85,7 +193,7 @@ def _tokenized(
     materialize_base: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """(postings, doclen) frames for one batch — the SAME whitespace
-    tokenizer as ``queries_bm25.bm25_scored`` (split on single spaces,
+    tokenizer as :func:`bm25_scored` (split on single spaces,
     drop empties), so index scores replay the scan exactly.
 
     ``carry_cols``: per-document metadata columns stored alongside each
@@ -504,7 +612,7 @@ def probe_lexical_index(
     pre_filter=None,
 ) -> DataFrame:
     """BM25 top-k through the stored index: (doc_id, matched_terms,
-    bm25) — bit-identical scores to ``queries_bm25.bm25_scored`` over
+    bm25) — bit-identical scores to :func:`bm25_scored` over
     the indexed corpus, reading only the query terms' posting buckets.
 
     ``version`` pins a historical ANCHOR snapshot (time travel); its
@@ -520,7 +628,6 @@ def probe_lexical_index(
     (N/avgdl/df from the anchor) — the filter restricts candidates,
     it does not re-statistic the sub-corpus, matching the reference's
     filter-then-rank semantics."""
-    from sortify_spark.queries_bm25 import _bm25_sum_expr, _score_expr
     from sortify_spark.sources.versioned import (
         _read_partition_dirs,
         read_manifest,
@@ -699,8 +806,6 @@ def probe_lexical_index_many(
         f"ROUND(CAST(CAST({sum_dl} AS DECIMAL(38,12)) AS DOUBLE)"
         f" / {n_docs}, 12)"
     )
-    from sortify_spark.queries_bm25 import BM25_B, BM25_K1
-
     k1p1, one_b = BM25_K1 + 1.0, 1.0 - BM25_B
     score = (
         f"ROUND(ROUND((CAST({n_docs} - df AS DOUBLE) + 0.5)"

@@ -507,7 +507,7 @@ def _apply_layout(
     rows) file-level stat pruning adds ~nothing over the row-group /
     page pruning the sort already enables INSIDE one file (measured:
     the decoded-records win narrows from 4.5x to 1.12x as per-file
-    rows shrink toward row-group size, SCALE_STRESS_r11), while every
+    rows shrink toward row-group size, r11 scale stress), while every
     extra file still costs a footer read + task on EVERY probe.  The
     computed roll is floored at ``min_file_rows``, so partitions too
     small to fill ``layout_files`` useful files write proportionally
@@ -606,7 +606,7 @@ def derive_layout_floor(spark: SparkSession, sample_row) -> int | None:
     file, file-level stat pruning adds ~nothing over the row-group /
     page pruning the layout sort already enables INSIDE a file, while
     every extra file costs a footer read + task on every probe
-    (measured: SCALE_STRESS_r12 ``ivf_layout_crossover_ab`` — the
+    (measured: r12 scale stress ``ivf_layout_crossover_ab`` — the
     8-file shape decodes 4.5x fewer rows yet walls 2.74 s vs 0.82 s
     single-file at 10x; the multi-file win only materializes once
     per-file rows reach row-group scale).  Pass the result as

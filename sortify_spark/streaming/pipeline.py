@@ -816,7 +816,7 @@ def admission_stream(
 
     def _emb_raw(df: DataFrame, idc: str) -> DataFrame:
         from sortify_spark.functions.sql_embed import expr_embed
-        from sortify_spark.queries_curation2 import DOCSEM_DIM
+        from sortify_spark.dedup import DOCSEM_DIM
 
         return df.select(
             F.col("doc_id").alias(idc),
@@ -824,7 +824,7 @@ def admission_stream(
         )
 
     def _key(emb: DataFrame, center: DataFrame | None) -> DataFrame:
-        from sortify_spark.queries_curation2 import DOCSEM_BITS
+        from sortify_spark.dedup import DOCSEM_BITS
         from sortify_spark.search.knn import (
             lsh_portable_key,
             lsh_portable_key_centered,
@@ -1539,7 +1539,7 @@ def paradedup_apply(
     """
     if batch_df.isEmpty():
         return
-    from sortify_spark.queries_curation2 import paragraphs_of
+    from sortify_spark.functions.text import paragraphs_of
     from sortify_spark.sources.versioned import (
         read_manifest,
         read_versioned,
@@ -1563,7 +1563,7 @@ def paradedup_apply(
     else:
         survivors = kept
     survivors = survivors.localCheckpoint(eager=False)
-    from sortify_spark.queries_curation2 import rebuild_expr
+    from sortify_spark.functions.text import rebuild_expr
 
     rebuilt = survivors.groupBy("doc_id").agg(
         rebuild_expr().alias("rebuilt"),
@@ -1602,7 +1602,7 @@ def paradedup_stream(
     re-emitted with every paragraph seen in any earlier micro-batch (or
     earlier in the same batch) removed — the streaming twin of
     ``paragraph_dedup_keep_first``, sharing its paragraph kernel
-    (:func:`queries_curation2.paragraphs_of`).  State is the versioned
+    (:func:`functions.text.paragraphs_of`).  State is the versioned
     ``__seen`` hash side table, not the streaming state store: bounded
     by novel-paragraph count, foldable with ``fold_partitions``, and
     exactly-once by partition keying rather than a marker file."""
@@ -1634,7 +1634,7 @@ def read_paradedup(spark: SparkSession, table_path: str) -> DataFrame:
     idiom so the replay row proves the reconstructed strings."""
     from sortify_spark.sources.versioned import read_versioned
 
-    from sortify_spark.queries_curation2 import md5_prefix_bigint
+    from sortify_spark.functions.text import md5_prefix_bigint
 
     return read_versioned(spark, table_path, "pb").select(
         "doc_id",

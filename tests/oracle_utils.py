@@ -34,3 +34,24 @@ def assert_parity(spark_df, duck_con, sql: str, name: str = "?") -> None:
             f"spark={g[bad].head(5).tolist()}\n"
             f"duck ={w[bad].head(5).tolist()}"
         )
+
+
+def bm25_keyword_reference(
+    docs, query: str, k: int, owner_id=None, owner_col: str | None = None
+) -> list[tuple[str, float]]:
+    """Index-free reference for the facade's ``keyword`` strategy:
+    ``bm25_scored`` over ``docs`` → optional owner semi-join (scores
+    stay corpus-global) → top-k by (bm25 desc, NUMERIC doc_id asc).
+    Returns the facade's (id, score) rows in rank order."""
+    from pyspark.sql import functions as F
+
+    from sortify_spark.search.lexical import bm25_scored
+
+    scored = bm25_scored(docs, tuple(dict.fromkeys(query.split())))
+    if owner_id is not None:
+        owner_ids = docs.filter(
+            F.col(owner_col).cast("string") == F.lit(str(owner_id))
+        ).select("doc_id")
+        scored = scored.join(F.broadcast(owner_ids), "doc_id", "left_semi")
+    top = scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
+    return [(str(r["doc_id"]), r["bm25"]) for r in top.collect()]

@@ -109,21 +109,6 @@ def test_pagerank_bit_identical_under_repartition(spark):
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
-def test_pagerank_bit_identical_under_broadcast_opt_in(spark, monkeypatch):
-    """SORTIFY_PR_BROADCAST_MAX_NODES flips every per-iteration join from
-    sort-merge to broadcast-hash; the exact-integer arithmetic is join-
-    strategy-independent, so the vector must be bit-identical."""
-    orders, lineitem = _graph(spark)
-    a = pagerank_suppliers(orders, lineitem, top=10).collect()
-    monkeypatch.setenv("SORTIFY_PR_BROADCAST_MAX_NODES", "1000000")
-    b = pagerank_suppliers(orders, lineitem, top=10).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    # below the cap the knob must be a no-op (falls back to the SMJ plan)
-    monkeypatch.setenv("SORTIFY_PR_BROADCAST_MAX_NODES", "1")
-    c = pagerank_suppliers(orders, lineitem, top=10).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in c]
-
-
 def test_pagerank_convergence_stop_matches_fixed_iters(spark):
     """tol_units stops the loop exactly when the fixed-point L1 delta
     is within the tolerance, and the early-stopped vector equals the

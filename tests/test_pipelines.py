@@ -15,6 +15,7 @@ from sortify_spark.pipelines import (
 )
 from sortify_spark.tables import load_table
 from tests.conftest import SF_DIR
+from tests.oracle_utils import bm25_keyword_reference
 
 
 @pytest.fixture(scope="module")
@@ -1619,8 +1620,9 @@ def test_facade_add_documents_incremental_index(spark, tmp_path):
 @pytest.mark.slow
 def test_facade_lexical_index_serving_and_pinning(spark, tmp_path):
     """keyword/hybrid_lexical serve from the PERSISTED BM25 artifact:
-    first search builds version 1, index and scan paths agree
-    value-for-value, add_documents incrementally upserts the index
+    first search builds version 1, the index probe agrees
+    value-for-value with the index-free BM25 reference,
+    add_documents incrementally upserts the index
     (new doc immediately ranked), and a probe PINNED to version 1
     keeps serving the pre-add snapshot — the serve-during-rebuild
     contract the IVF artifact already has (VERDICT r7 missing #1)."""
@@ -1637,12 +1639,7 @@ def test_facade_lexical_index_serving_and_pinning(spark, tmp_path):
     }
     path = eng.lexical_index_path()
     assert read_manifest(f"{path}/terms")["version"] == 1
-    scan = {
-        (r["id"], r["score"])
-        for r in eng.semantic_search(
-            q, "keyword", SearchConfig(lexical="scan")
-        ).collect()
-    }
+    scan = set(bm25_keyword_reference(eng.documents, q, k=10))
     assert idx == scan and idx
     hyb = eng.semantic_search(q, "hybrid_lexical").collect()
     assert len(hyb) > 0
@@ -1801,23 +1798,18 @@ def test_facade_delete_maintains_lexical_and_ivf(spark, tmp_path):
         ).collect()
     ]
     assert victim not in after_ivf
-    # the post-delete keyword list equals a FRESH engine over the
-    # shrunk corpus (scan path = ground truth, no artifact involved)
-    fresh = [
-        r["id"]
-        for r in eng.semantic_search(
-            q, "keyword", SearchConfig(lexical="scan")
-        ).collect()
-    ]
+    # the post-delete keyword list equals a FRESH ranking of the
+    # shrunk corpus (BM25 reference = ground truth, no artifact involved)
+    fresh = [i for i, _ in bm25_keyword_reference(eng.documents, q, k=10)]
     assert after_kw == fresh
 
 
 def test_facade_lexical_scan_index_share_tie_order(spark, tmp_path):
-    """At TIED BM25 scores straddling the top-k boundary the index and
-    scan paths must return the SAME doc set: both order by NUMERIC
-    doc_id (ADVICE r8 — the scan path previously tie-broke on the
-    string-cast id, where '10' < '9')."""
-    from sortify_spark.facade import SearchConfig, SortifyEngine
+    """At TIED BM25 scores straddling the top-k boundary the index
+    probe and the index-free BM25 reference must return the SAME doc
+    set: both order by NUMERIC doc_id (ADVICE r8 — string-cast ids
+    would tie-break with '10' < '9')."""
+    from sortify_spark.facade import SortifyEngine
 
     eng = SortifyEngine(
         spark, SF_DIR, dim=16, doc_limit=10, index_root=str(tmp_path)
@@ -1831,25 +1823,20 @@ def test_facade_lexical_scan_index_share_tie_order(spark, tmp_path):
         "n_chars long",
     )
     idx = [r["id"] for r in eng.semantic_search("alpha", "keyword").collect()]
-    scan = [
-        r["id"]
-        for r in eng.semantic_search(
-            "alpha", "keyword", SearchConfig(lexical="scan")
-        ).collect()
-    ]
+    scan = [i for i, _ in bm25_keyword_reference(eng.documents, "alpha", k=10)]
     assert idx == scan == [str(i) for i in range(1, 11)]
 
 
-def test_facade_lexical_config_validated(spark, tmp_path):
-    from sortify_spark.facade import SearchConfig, SortifyEngine
+def test_facade_lexical_config_validated():
+    """``SearchConfig.ann`` accepts only the two served dense paths: a
+    removed mode or a typo must fail loudly instead of silently serving
+    exact search."""
+    from sortify_spark.facade import SearchConfig
 
-    eng = SortifyEngine(
-        spark, SF_DIR, dim=16, doc_limit=20, index_root=str(tmp_path)
-    )
-    with pytest.raises(ValueError, match="lexical"):
-        eng.semantic_search(
-            "data", "keyword", SearchConfig(lexical="indexed")
-        )
+    for ann in ("lsh", "ivff"):
+        with pytest.raises(ValueError, match="ann"):
+            SearchConfig(ann=ann)
+    assert SearchConfig(ann="ivf").ann == "ivf"
 
 
 def test_facade_lexical_adoption_reconciles_drift(spark, tmp_path):
@@ -1923,7 +1910,7 @@ def test_facade_batched_serving_matches_per_query(spark, tmp_path):
     """semantic_search_many (ONE plan per leg for N queries) returns,
     per query, the SAME rows as the semantic_search loop — across the
     lexical, dense, and fused strategies (VERDICT r8 next #2)."""
-    from sortify_spark.facade import SearchConfig, SortifyEngine
+    from sortify_spark.facade import SortifyEngine
 
     eng = SortifyEngine(
         spark, SF_DIR, dim=16, doc_limit=200, index_root=str(tmp_path)
@@ -1995,10 +1982,6 @@ def test_facade_batched_serving_matches_per_query(spark, tmp_path):
     # contract errors
     with pytest.raises(ValueError, match="not support"):
         eng.semantic_search_many(qs, "no_such_strategy")
-    with pytest.raises(ValueError, match="scan"):
-        eng.semantic_search_many(
-            qs, "keyword", SearchConfig(lexical="scan")
-        )
     with pytest.raises(ValueError, match="no terms"):
         eng.semantic_search_many({"x": "   "}, "keyword")
 
@@ -2373,7 +2356,7 @@ def test_paradedup_apply_replay_idempotent(spark, tmp_path):
 
 @pytest.mark.slow
 def test_owner_scoped_search_every_strategy(spark, tmp_path):
-    """Every facade strategy (dense exact, LSH, IVF, keyword via the
+    """Every facade strategy (dense exact, IVF, keyword via the
     owner-carrying BM25 artifact, hybrid_lexical, two-stage hybrid,
     RRF, traditional) honors owner_id: results ⊆ the owner's docs, two
     owners' result sets are disjoint, and the dense path equals the
@@ -2407,7 +2390,6 @@ def test_owner_scoped_search_every_strategy(spark, tmp_path):
         ("hybrid", None),
         ("keyword", None),
         ("hybrid_lexical", None),
-        ("summary_only", SearchConfig(ann="lsh", lsh_nbits=4)),
         ("summary_only", SearchConfig(ann="ivf", ivf_nprobe=16)),
     ]
     for st, cfg in strategies:
@@ -2422,6 +2404,16 @@ def test_owner_scoped_search_every_strategy(spark, tmp_path):
             assert ids <= docs_of[o], (st, o, ids - docs_of[o])
             per_owner[o] = ids
         assert not (per_owner[owners[0]] & per_owner[owners[1]]), st
+    # keyword == the index-free BM25 reference: owner filter applied
+    # before the top-k, scores kept corpus-global
+    for o in owners:
+        got_kw = [
+            (r["id"], r["score"])
+            for r in eng.semantic_search(q, "keyword", owner_id=o).collect()
+        ]
+        assert got_kw == bm25_keyword_reference(
+            eng.documents, q, k=10, owner_id=o, owner_col="source"
+        ), o
     # dense exact == independent filter-then-topk composition
     o = owners[0]
     got = {
@@ -2588,69 +2580,6 @@ def test_owner_scoped_artifacts_survive_mutations(spark, tmp_path):
         .collect()
     }
     assert a and b and not (a & b)
-
-
-@pytest.mark.slow
-def test_lsh_batched_probe_matches_single(spark, tmp_path):
-    """lsh_portable_topk_many (VERDICT r9 #3): per-query rows through
-    semantic_search_many(ann='lsh') are IDENTICAL to the single-query
-    LSH probe loop — same buckets, same multi-probe flips, same
-    round-6 scores — and owner scoping composes with it."""
-    from sortify_spark.facade import SearchConfig, SortifyEngine
-
-    eng = SortifyEngine(
-        spark, SF_DIR, dim=16, embed="expr", doc_limit=150,
-        index_root=str(tmp_path), owner_col="source",
-    )
-    cfg = SearchConfig(ann="lsh", lsh_nbits=4)
-    queries = {
-        "q1": "data pipeline quality and join performance",
-        "q2": "vector index build and search serving",
-        "q3": "streaming admission and atomic commits",
-    }
-    many = (
-        eng.semantic_search_many(queries, "summary_only", cfg)
-        .orderBy("query_id", "rnk")
-        .collect()
-    )
-    assert many
-    for qid, text in queries.items():
-        single = [
-            (r["id"], r["score"])
-            for r in eng.semantic_search(text, "summary_only", cfg)
-            .orderBy(F.desc("score"), F.asc("id"))
-            .collect()
-        ]
-        got = [
-            (r["id"], r["score"]) for r in many if r["query_id"] == qid
-        ]
-        assert got == single, qid
-    # owner scoping composes with the batched LSH probe
-    owner = eng.documents.select("source").orderBy("source").first()[
-        "source"
-    ]
-    owner_docs = {
-        str(r["doc_id"])
-        for r in eng.documents.filter(F.col("source") == owner)
-        .select("doc_id").collect()
-    }
-    scoped = eng.semantic_search_many(
-        queries, "summary_only", cfg, owner_id=owner
-    ).collect()
-    ids = {r["id"] for r in scoped}
-    assert ids <= owner_docs
-    for qid, text in queries.items():
-        single = [
-            (r["id"], r["score"])
-            for r in eng.semantic_search(
-                text, "summary_only", cfg, owner_id=owner
-            ).orderBy(F.desc("score"), F.asc("id")).collect()
-        ]
-        got = sorted(
-            ((r["id"], r["score"]) for r in scoped if r["query_id"] == qid),
-            key=lambda t: (-t[1], t[0]),
-        )
-        assert got == single, qid
 
 
 @pytest.mark.slow
@@ -2995,7 +2924,7 @@ def test_facade_mutation_storage_clean(spark, tmp_path):
         eng.semantic_search("data pipeline", "hybrid", owner_id=owner)
         eng.semantic_search(
             "data pipeline", "summary_only",
-            SearchConfig(ann="lsh", lsh_nbits=4), owner_id=owner,
+            SearchConfig(ann="ivf"), owner_id=owner,
         )
         eng.delete_vectors([str(940_000 + i)])
         gc.collect()  # drop superseded checkpoint references promptly
@@ -3012,7 +2941,7 @@ def test_facade_mutation_storage_clean(spark, tmp_path):
                 break
         counts.append(len(rdd_ids() - pre))
     # steady state: later cycles must not accrete blocks beyond the
-    # engine's live caches (vectors + LSH index); tolerate one block of
+    # engine's live caches (vectors); tolerate one block of
     # cleaner jitter, not monotonic growth
     assert counts[-1] <= counts[1] + 1, counts
 

@@ -171,11 +171,12 @@ def test_bm25_idf_orders_rare_term_first(spark):
     """The rare query term ('dup', df=25/500 at sf0.001-scale ratios)
     must outrank docs matching only common terms: every doc matching
     the rare term scores above every doc matching only common ones."""
-    from sortify_spark.queries_bm25 import QUERY_TERMS, bm25_scored
+    from sortify_spark.queries_bm25 import QUERY_TERMS
+    from sortify_spark.search.lexical import bm25_scored
     from sortify_spark.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
-    scored = bm25_scored(docs).collect()
+    scored = bm25_scored(docs, QUERY_TERMS).collect()
     assert scored
     rare = QUERY_TERMS[0]
     texts = {r.doc_id: r.text for r in docs.select("doc_id", "text").collect()}

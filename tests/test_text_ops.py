@@ -333,10 +333,8 @@ def test_paragraph_dedup_keep_first_contract(spark):
     (doc_id, position) copy; within-doc repeats collapse too; the tail
     partial paragraph survives; a fully-duplicated doc is emptied; and
     the rebuilt text is the ordered concatenation of survivors."""
-    from sortify_spark.queries_curation2 import (
-        PARA_W,
-        paragraph_dedup_stats,
-    )
+    from sortify_spark.functions.text import PARA_W
+    from sortify_spark.queries_curation2 import paragraph_dedup_stats
 
     p1 = " ".join(f"a{i}" for i in range(PARA_W))  # paragraph A
     p2 = " ".join(f"b{i}" for i in range(PARA_W))  # paragraph B
@@ -373,10 +371,8 @@ def test_paragraph_dedup_arithmetic_totals_edges(spark):
     NO totals row (matching the explode/unnest, which emits zero
     paragraphs for them), and exact-multiple / remainder-1 word counts
     round like the explode's sequence bound."""
-    from sortify_spark.queries_curation2 import (
-        PARA_W,
-        paragraph_dedup_stats,
-    )
+    from sortify_spark.functions.text import PARA_W
+    from sortify_spark.queries_curation2 import paragraph_dedup_stats
 
     exact = " ".join(f"x{i}" for i in range(2 * PARA_W))  # 2 paragraphs
     plus1 = " ".join(f"y{i}" for i in range(PARA_W + 1))  # 1 + tail
