@@ -10,9 +10,12 @@ defaults, keeping the data plane hermetic (SURVEY.md §2.12).
 
 from __future__ import annotations
 
+import math
 import warnings
 from dataclasses import dataclass
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,7 +26,7 @@ from sortify_spark.operators.filters import DocumentFilter
 from sortify_spark.operators.pagination import page_with_total, validated_order
 from sortify_spark.pipelines import ingest_vectorize, ingest_vectorize_expr
 from sortify_spark.plans.query_spec import QuerySpec, compile_spec
-from sortify_spark.search import fusion
+from sortify_spark.search import fusion, serving
 from sortify_spark.search.knn import brute_force_topk
 from sortify_spark.tables import load_table
 
@@ -33,9 +36,71 @@ DEFAULT_THRESHOLD = 0.5
 STAGE1_K = 10
 STAGE2_K = 5
 
+#: ``semantic_search`` strategies: name -> (dense legs by vtype, BM25
+#: leg, fusion).  Both backends — the Spark plans and the driver-served
+#: snapshots — compose their legs from this one table
+#: (:func:`_compose`); any other name is the two-stage hybrid (V3).
+STRATEGIES = {
+    "keyword": ((), True, None),
+    "summary_only": (("summary",), False, None),
+    "chunks_only": (("chunk",), False, None),
+    "rrf_fusion": (("summary", "chunk"), False, "rrf_fuse"),
+    "traditional": (("summary", "chunk"), False, "traditional_merge"),
+    "hybrid_lexical": (("summary",), True, "rrf_fuse"),
+    "hybrid": (("summary",), False, "two_stage_hybrid"),
+}
+
+
+def _compose(strategy: tuple, cfg, fuse, dense, lexical, chunks):
+    """One search from its legs: ``dense(vtype, k)`` and ``lexical(k)``
+    return ``(id, score)`` lists (DataFrames or driver lists),
+    ``chunks(candidates)`` the two-stage hybrid's stage-2 chunk rows,
+    and ``fuse`` is the backend's fusion module (``search.fusion`` or
+    ``search.serving``)."""
+    vtypes, bm25, how = strategy
+    if how is None:
+        k = cfg.top_k
+    elif how == "two_stage_hybrid":
+        k = STAGE1_K
+    else:  # O5: bounded candidate over-fetch (k*2) before fusion
+        k = cfg.top_k * 2
+    legs = [dense(vtype, k) for vtype in vtypes]
+    if bm25:
+        legs.append(lexical(k))
+    if how is None:
+        return legs[0]
+    if how == "traditional_merge":
+        return fuse.traditional_merge(*legs, top_k=cfg.top_k)
+    if how == "two_stage_hybrid":
+        return fuse.two_stage_hybrid(
+            legs[0],
+            chunks,
+            stage1_k=STAGE1_K,
+            top_k=STAGE2_K,
+            # the facade's stage-1 scorer is the interpreted cosine fold
+            # over the persisted vectors table — expensive enough that
+            # evaluating it once (vs once per consumer) wins (measured;
+            # see fusion.two_stage_hybrid's docstring)
+            materialize_stage1=True,
+        )
+    # the lexical hybrid fuses dense x BM25 at fixed weights 1/1
+    w_summary, w_chunks = (1.0, 1.0) if bm25 else (cfg.w_summary, cfg.w_chunks)
+    return fuse.rrf_fuse(
+        *legs,
+        k=cfg.rrf_k,
+        w_summary=w_summary,
+        w_chunks=w_chunks,
+        top_k=cfg.top_k,
+    )
+
 
 @dataclass
 class SearchConfig:
+    """Per-request search settings.  Unpinned requests below the
+    snapshot gate (``search.serving.SNAPSHOT_MAX_BYTES``) are scored on
+    the driver from snapshots of the committed artifacts; a pinned
+    ``lex_version``/``ivf_version`` always plans the Spark probes."""
+
     top_k: int = DEFAULT_TOP_K
     threshold: float | None = None
     rrf_k: int = fusion.RRF_K
@@ -223,6 +288,18 @@ class SortifyEngine:
         #: mutation churn — ADVICE r12); plain driver-side data —
         #: nothing to unpersist.
         self._occ_cache: dict[tuple, tuple] = {}
+        #: Driver-resident serving snapshots (``search/serving``): one
+        #: slot per artifact (``"vectors"``, ``"lexical"``,
+        #: ``"ivf_<vtype>"``) holding ``(key, estimated_bytes,
+        #: snapshot)``.  The key is what a request already resolves —
+        #: the vectors generation, the lexical anchor version, the IVF
+        #: assign version — so no mutation maintains a snapshot and a
+        #: stale one can never serve; a new key replaces the slot whole.
+        self._snapshots: dict[str, tuple] = {}
+        #: Bumped wherever ``self.vectors`` is reassigned; its row
+        #: count is kept when a mutation materializes it anyway.
+        self._vectors_gen = 0
+        self._vectors_n: int | None = None
 
     # -- documents ---------------------------------------------------------
 
@@ -255,16 +332,16 @@ class SortifyEngine:
     # -- search ------------------------------------------------------------
 
     def _query_df(self, query_text: str) -> DataFrame:
-        if self.embed == "expr":
-            from sortify_spark.functions.sql_embed import expr_embed
+        return self._query_df_many({"q": query_text}).select("embedding")
 
-            return self.spark.createDataFrame(
-                [(query_text[:512],)], "t string"
-            ).select(expr_embed(F.col("t"), self.dim).alias("embedding"))
+    def _query_vec(self, query_text: str) -> np.ndarray:
+        """The query embedding as the Spark path scores it: the hash
+        encoder's doubles stored as ``array<float>``, then widened."""
+        if self.embed == "expr":
+            row = self._query_df(query_text).first()
+            return np.asarray(row["embedding"], dtype=np.float64)
         vec = hash_embed_text(query_text[:512], self.dim)
-        return self.spark.createDataFrame(
-            [(vec,)], "embedding array<float>"
-        )
+        return np.asarray(vec, dtype=np.float32).astype(np.float64)
 
     def _owner_pred(self, owner_id: str | None):
         """The tenant predicate every leg pushes down (P9; reference
@@ -386,6 +463,12 @@ class SortifyEngine:
         serving process cycling engines cannot accrete storage blocks."""
         self.vectors.unpersist()
         self.result_cache.clear()
+        self._snapshots.clear()
+        # Spark's ContextCleaner frees the checkpoint blocks of finished
+        # mutations only once a JVM GC finds them unreachable; an engine
+        # that serves from driver snapshots runs too few jobs to make
+        # that happen before the periodic GC (30 min by default)
+        self.spark._jvm.System.gc()
 
     # -- persisted IVF index -----------------------------------------------
 
@@ -445,6 +528,7 @@ class SortifyEngine:
             layout_min_file_rows="auto",
         )
         self._lex_built = True
+        self.result_cache.clear()
         return version
 
     def _lexical_index(self) -> str:
@@ -522,6 +606,7 @@ class SortifyEngine:
             layout_min_file_rows="auto",
         )
         self._ivf_built.add(vtype)
+        self.result_cache.clear()
         return version
 
     def add_documents(
@@ -560,7 +645,8 @@ class SortifyEngine:
         # mutations don't accumulate cached lineages in executor storage
         old_vectors = self.vectors
         self.vectors = self.vectors.unionByName(new_vecs).persist()
-        self.vectors.count()
+        self._vectors_n = self.vectors.count()
+        self._vectors_gen += 1
         old_vectors.unpersist()
         out: dict = {}
         if not self._lex_built:
@@ -610,6 +696,8 @@ class SortifyEngine:
         # the batch frame's cache served its consumers (the grown
         # vectors table is independently materialized above)
         new_vecs.unpersist()
+        # cached results predate the upload
+        self.result_cache.clear()
         return out
 
     def _ivf_index(self, vtype: str) -> str:
@@ -778,12 +866,22 @@ class SortifyEngine:
         buckets.  BM25 statistics stay corpus-global —
         filter-then-rank, the reference's semantics — and requires an
         engine built with ``owner_col``.
+
+        Serving: while every artifact a request reads has an estimated
+        resident snapshot size below
+        ``search.serving.SNAPSHOT_MAX_BYTES``, the request is scored on
+        the driver from snapshots of the committed vectors, BM25 and
+        IVF artifacts (loaded once per commit, see :meth:`_served_legs`)
+        and returned as one small DataFrame — the same rows, scores,
+        order and schema as the Spark plans, which serve pinned
+        versions and larger artifacts.  Both backends compose their
+        legs through the one :data:`STRATEGIES` table.
         """
         cfg = cfg or SearchConfig()
-        pred = self._owner_pred(owner_id)
-        if search_type in ("keyword", "hybrid_lexical"):
-            from sortify_spark.search.lexical import probe_lexical_index
-
+        self._owner_pred(owner_id)  # validates owner scoping up front
+        strategy = STRATEGIES.get(search_type, STRATEGIES["hybrid"])
+        terms: tuple = ()
+        if strategy[1]:
             # bounded term set: BM25 cost is one tf column per term —
             # cap documented on SearchConfig.max_terms, truncation loud
             terms = self._split_terms(query_text, cfg)
@@ -792,60 +890,51 @@ class SortifyEngine:
                     f"{search_type!r} search requires a query with at "
                     "least one term (got whitespace-only text)"
                 )
-            lex_k = (
-                cfg.top_k if search_type == "keyword" else cfg.top_k * 2
+        served = self._served_legs(query_text, strategy, cfg, owner_id, terms)
+        if served is not None:
+            rows = _compose(strategy, cfg, serving, *served)
+            return serving.to_frame(
+                self.spark, rows, serving.SCHEMAS[strategy[2]]
             )
+        return _compose(
+            strategy, cfg, fusion,
+            *self._spark_legs(query_text, cfg, owner_id, terms),
+        )
+
+    def _spark_legs(
+        self,
+        query_text: str,
+        cfg: SearchConfig,
+        owner_id: str | None,
+        terms: tuple,
+    ):
+        """The Spark plans of a search's legs for :func:`_compose`:
+        ``dense(vtype, k)``, ``lexical(k)`` and the two-stage hybrid's
+        ``chunks(candidates)``, each an ``(id, score)`` DataFrame."""
+        pred = self._owner_pred(owner_id)
+
+        def dense(vtype: str, k: int) -> DataFrame:
+            return self._scored(query_text, vtype, k, cfg, owner_id)
+
+        def lexical(k: int) -> DataFrame:
+            from sortify_spark.search.lexical import probe_lexical_index
+
             # serve from the PERSISTED inverted-index artifact: |terms|
             # posting buckets read, corpus never scanned (the probe
             # equals a fresh bm25_scored ranking; bm25_index_probe)
-            lex = probe_lexical_index(
+            return probe_lexical_index(
                 self.spark,
                 self._lexical_index(),
                 terms,
-                k=lex_k,
+                k=k,
                 version=cfg.lex_version,
                 pre_filter=pred,
             ).select(
                 F.col("doc_id").cast("string").alias("id"),
                 F.col("bm25").alias("score"),
             )
-            if search_type == "keyword":
-                return lex
-            dense = self._scored(
-                query_text, "summary", cfg.top_k * 2, cfg, owner_id
-            )
-            return fusion.rrf_fuse(
-                dense,
-                lex,
-                k=cfg.rrf_k,
-                w_summary=1.0,
-                w_chunks=1.0,
-                top_k=cfg.top_k,
-            )
-        if search_type == "summary_only":
-            return self._scored(query_text, "summary", cfg.top_k, cfg, owner_id)
-        if search_type == "chunks_only":
-            return self._scored(query_text, "chunk", cfg.top_k, cfg, owner_id)
-        if search_type == "rrf_fusion":
-            # O5: bounded candidate over-fetch (k*2) before fusion/rerank.
-            return fusion.rrf_fuse(
-                self._scored(query_text, "summary", cfg.top_k * 2, cfg, owner_id),
-                self._scored(query_text, "chunk", cfg.top_k * 2, cfg, owner_id),
-                k=cfg.rrf_k,
-                w_summary=cfg.w_summary,
-                w_chunks=cfg.w_chunks,
-                top_k=cfg.top_k,
-            )
-        if search_type == "traditional":
-            return fusion.traditional_merge(
-                self._scored(query_text, "summary", cfg.top_k * 2, cfg, owner_id),
-                self._scored(query_text, "chunk", cfg.top_k * 2, cfg, owner_id),
-                top_k=cfg.top_k,
-            )
-        # default: two-stage hybrid (V3)
-        summary = self._scored(query_text, "summary", STAGE1_K, cfg, owner_id)
 
-        def chunk_scored_fn(candidates: DataFrame) -> DataFrame:
+        def chunks(candidates: DataFrame) -> DataFrame:
             q = self._query_df(query_text)
             base = self.vectors.filter(F.col("vtype") == "chunk")
             if pred is not None:
@@ -862,17 +951,120 @@ class SortifyEngine:
                 restricted, q, id_col="document_id", k=2 * STAGE2_K
             ).select(F.col("document_id").alias("id"), "score")
 
-        return fusion.two_stage_hybrid(
-            summary,
-            chunk_scored_fn,
-            stage1_k=STAGE1_K,
-            top_k=STAGE2_K,
-            # the facade's stage-1 scorer is the interpreted cosine fold
-            # over the persisted vectors table — expensive enough that
-            # evaluating it once (vs once per consumer) wins (measured;
-            # see fusion.two_stage_hybrid's docstring)
-            materialize_stage1=True,
+        return dense, lexical, chunks
+
+    def _snapshot(self, name: str, key, nbytes, load):
+        """The driver-resident snapshot of one artifact at ``key``:
+        loaded on first use and replaced whole when the key moves.
+        None when its estimated resident size (``nbytes()``) is over
+        ``serving.SNAPSHOT_MAX_BYTES`` or ``load()`` finds rows it
+        cannot serve exactly — the request then stays on Spark."""
+        held = self._snapshots.get(name)
+        if held is None or held[0] != key:
+            held = self._snapshots[name] = (key, nbytes(), None)
+        if held[1] > serving.SNAPSHOT_MAX_BYTES:
+            return None
+        if held[2] is None:
+            snap = load()
+            held = self._snapshots[name] = (
+                key, held[1] if snap is not None else math.inf, snap
+            )
+        return held[2]
+
+    def _lexical_snapshot(self):
+        from sortify_spark.sources.versioned import read_manifest
+
+        path = self._lexical_index()
+        anchor = read_manifest(f"{path}/terms")
+        return self._snapshot(
+            "lexical",
+            (anchor["version"], anchor.get("postings_version")),
+            lambda: serving.lexical_bytes(path, anchor),
+            lambda: serving.load_lexical(path, anchor),
         )
+
+    def _ivf_snapshot(self, vtype: str):
+        from sortify_spark.sources.versioned import read_manifest
+
+        path = self._ivf_index(vtype)
+        m = read_manifest(f"{path}/assign")
+        return self._snapshot(
+            f"ivf_{vtype}",
+            (m["version"], m.get("centroid_version")),
+            lambda: serving.ivf_bytes(path, m, self.dim),
+            lambda: serving.load_ivf(path, m, self.dim),
+        )
+
+    def _vectors_snapshot(self):
+        def nbytes():
+            if self._vectors_n is None:
+                self._vectors_n = self.vectors.count()
+            return serving.vectors_bytes(self._vectors_n, self.dim)
+
+        return self._snapshot(
+            "vectors",
+            self._vectors_gen,
+            nbytes,
+            lambda: serving.load_vectors(self.vectors, self.dim),
+        )
+
+    def _served_legs(
+        self,
+        query_text: str,
+        strategy: tuple,
+        cfg: SearchConfig,
+        owner_id: str | None,
+        terms: tuple,
+    ):
+        """The driver-side legs of a search for :func:`_compose` —
+        ``dense``, ``lexical`` and ``chunks`` as in :meth:`_spark_legs`,
+        each an ``(id, score)`` list scored from the committed
+        artifacts' snapshots (``search/serving``).  None keeps the
+        request on Spark: a pinned ``lex_version``/``ivf_version``, a
+        non-positive ``top_k``/``ivf_nprobe``, or an artifact over the
+        gate."""
+        if (
+            cfg.lex_version is not None
+            or cfg.ivf_version is not None
+            or cfg.top_k < 1
+            or cfg.ivf_nprobe < 1
+        ):
+            return None
+        vtypes, bm25, how = strategy
+        snaps: dict = {}
+        if bm25:
+            snaps["lexical"] = self._lexical_snapshot()
+        for vtype in vtypes:
+            snaps[vtype] = (
+                self._ivf_snapshot(vtype)
+                if cfg.ann == "ivf"
+                else (self._vectors_snapshot() or {}).get(vtype)
+            )
+        if how == "two_stage_hybrid":
+            # stage 2 rescores chunks from the vectors table
+            snaps["stage2"] = (self._vectors_snapshot() or {}).get("chunk")
+        if any(s is None for s in snaps.values()):
+            return None
+        owner = None if owner_id is None else str(owner_id)
+        q = self._query_vec(query_text)
+
+        def dense(vtype: str, k: int) -> list:
+            if cfg.ann == "ivf":
+                return serving.ivf_topk(
+                    snaps[vtype], q, k, cfg.ivf_nprobe, owner,
+                    cfg.ivf_min_recall_buckets,
+                )
+            return serving.exact_topk(snaps[vtype], q, k, owner)
+
+        def lexical(k: int) -> list:
+            return serving.bm25_topk(snaps["lexical"], terms, k, owner)
+
+        def chunks(candidates: set) -> list:
+            return serving.chunk_rows(
+                snaps["stage2"], q, candidates, 2 * STAGE2_K, owner
+            )
+
+        return dense, lexical, chunks
 
     def _split_terms(self, query_text: str, cfg: SearchConfig) -> tuple:
         """max_terms-bounded unique whitespace terms (loud truncation)."""
@@ -892,19 +1084,35 @@ class SortifyEngine:
     def _query_df_many(self, queries: dict[str, str]) -> DataFrame:
         """(query_id, embedding) for a serving batch — N driver-side
         encodes (the reference encodes per request too); the frame
-        broadcasts into the batched scoring join."""
+        broadcasts into the batched scoring join.  Built from pandas
+        through Arrow: a row-list ``createDataFrame`` ships its rows
+        through a Python RDD, ~10x slower to create and collect."""
+        ids = list(queries)
         if self.embed == "expr":
             from sortify_spark.functions.sql_embed import expr_embed
 
+            texts = pd.DataFrame(
+                {"query_id": ids, "t": [queries[q][:512] for q in ids]}
+            )
             return self.spark.createDataFrame(
-                [(q, t[:512]) for q, t in queries.items()],
-                "query_id string, t string",
+                texts, "query_id string, t string"
             ).select(
                 "query_id", expr_embed(F.col("t"), self.dim).alias("embedding")
             )
+        vecs = pd.DataFrame(
+            {
+                "query_id": ids,
+                "embedding": [
+                    np.asarray(
+                        hash_embed_text(queries[q][:512], self.dim),
+                        dtype=np.float32,
+                    )
+                    for q in ids
+                ],
+            }
+        )
         return self.spark.createDataFrame(
-            [(q, hash_embed_text(t[:512], self.dim)) for q, t in queries.items()],
-            "query_id string, embedding array<float>",
+            vecs, "query_id string, embedding array<float>"
         )
 
     def _scored_many(
@@ -1289,7 +1497,8 @@ class SortifyEngine:
         self.vectors = self.vectors.join(
             F.broadcast(ids), "document_id", "left_anti"
         ).persist()
-        self.vectors.count()
+        self._vectors_n = self.vectors.count()
+        self._vectors_gen += 1
         old_vectors.unpersist()
         self.documents = self.documents.join(
             F.broadcast(
@@ -1298,6 +1507,8 @@ class SortifyEngine:
             "doc_id",
             "left_anti",
         )
+        # a cached result may hold a deleted document
+        self.result_cache.clear()
         return self.vectors
 
     def delete_vectors_batched(

@@ -1138,21 +1138,56 @@ def fold_partitions(
     return new_version
 
 
-def snapshot_files(path: str) -> list[str]:
-    """The parquet files the CURRENT snapshot's readers touch — one
-    entry per data file across the manifest's partition dirs.  A cheap
-    read-cost proxy for compaction decisions and tests (files touched
-    before vs after a fold)."""
-    manifest = read_manifest(path)
-    out: list[str] = []
-    for rel in manifest["partitions"].values():
+def _partition_files(path: str, manifest: dict):
+    """``(partition value, data file)`` for every file a reader of
+    ``manifest``'s snapshot touches, in a stable order.  Spark's
+    hidden-file rule picks the files: names starting with ``_`` or
+    ``.`` (``_SUCCESS``, checksum files) are not data."""
+    for value, rel in sorted(manifest["partitions"].items()):
         pdir = os.path.join(path, rel)
-        out.extend(
-            os.path.join(pdir, f)
-            for f in os.listdir(pdir)
-            if f.endswith(".parquet")
+        for f in sorted(os.listdir(pdir)):
+            if not f.startswith(("_", ".")):
+                yield value, os.path.join(pdir, f)
+
+
+def read_versioned_pandas(
+    path: str,
+    partition_col: str,
+    version: int | None = None,
+) -> "pandas.DataFrame":
+    """Driver-side snapshot read of a SMALL table: the data files of one
+    manifest's partition dirs read with pyarrow into a pandas frame — no
+    Spark job.  Same rows and columns as :func:`read_versioned`: schemas
+    merge across files (a column a file predates reads null), and the
+    partition value comes back from the manifest with its recorded
+    integral type."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    manifest = read_manifest(path, version)
+    integral = manifest.get("partition_dtype") in (
+        "tinyint", "smallint", "int", "bigint",
+    )
+    tables = []
+    for value, f in _partition_files(path, manifest):
+        t = pq.read_table(f)
+        tables.append(
+            t.append_column(
+                partition_col,
+                pa.array([int(value) if integral else value] * t.num_rows),
+            )
         )
-    return out
+    if not tables:
+        raise FileNotFoundError(f"versioned table at {path} is empty")
+    return pa.concat_tables(tables, promote_options="default").to_pandas()
+
+
+def snapshot_files(path: str, version: int | None = None) -> list[str]:
+    """The data files a snapshot's readers touch (the CURRENT one by
+    default) — one entry per file across the manifest's partition dirs.
+    A cheap read-cost proxy for compaction decisions and tests (files
+    touched before vs after a fold)."""
+    return [f for _, f in _partition_files(path, read_manifest(path, version))]
 
 
 def diff(

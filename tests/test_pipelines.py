@@ -138,30 +138,29 @@ def test_vectorize_stream_live_trigger_incremental(spark, docs):
         assert got.select("vector_id").distinct().count() == got.count()
 
 
-def test_daily_trend_stream_matches_batch(spark):
+def test_daily_trend_stream_matches_batch(spark, tmp_path):
     from sortify_spark.streaming.pipeline import run_daily_trend_stream
 
     events = load_table(spark, SF_DIR, "events")
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, ckpt = f"{tmp}/in", f"{tmp}/ckpt"
-        events.write.parquet(inp)
-        q = run_daily_trend_stream(spark, inp, ckpt, out_table="dts_test")
-        q.awaitTermination(120)
-        got = {
-            r["day"]: (r["cnt"], r["avg_value"])
-            for r in spark.sql("SELECT * FROM dts_test").collect()
-        }
-        from sortify_spark.operators.aggregates import daily_trend
+    inp, ckpt = f"{tmp_path}/in", f"{tmp_path}/ckpt"
+    events.write.parquet(inp)
+    q = run_daily_trend_stream(spark, inp, ckpt, out_table="dts_test")
+    q.awaitTermination(120)
+    got = {
+        r["day"]: (r["cnt"], r["avg_value"])
+        for r in spark.sql("SELECT * FROM dts_test").collect()
+    }
+    from sortify_spark.operators.aggregates import daily_trend
 
-        want = {
-            r["day"]: (r["cnt"], r["avg_value"])
-            for r in daily_trend(events, "ts", "value").collect()
-        }
-        assert got == want
+    want = {
+        r["day"]: (r["cnt"], r["avg_value"])
+        for r in daily_trend(events, "ts", "value").collect()
+    }
+    assert got == want
 
 
 @pytest.mark.slow
-def test_daily_trend_stream_drops_late_data(spark):
+def test_daily_trend_stream_drops_late_data(spark, tmp_path):
     """Watermark late-data semantics hash-style-checked against the
     batch oracle (VERDICT r3 item 6): a row planted BEHIND the watermark
     (its day-window already finalized) is dropped; every kept row's
@@ -201,57 +200,59 @@ def test_daily_trend_stream_drops_late_data(spark):
     b4 = [ev(5, 4, 6, 2.0)]  # advances watermark past day-2 window
     b5 = [ev(6, 5, 6, 4.0)]  # advances watermark past day-3 window
 
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, ckpt = f"{tmp}/in", f"{tmp}/ckpt"
+    inp, ckpt = f"{tmp_path}/in", f"{tmp_path}/ckpt"
 
-        def feed(rows):
-            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-                "append"
-            ).parquet(inp)
+    def feed(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(inp)
 
-        feed(b1)
-        q = run_daily_trend_stream(
-            spark,
-            inp,
-            ckpt,
-            out_table="dts_late_test",
-            output_mode="append",
-            max_files_per_trigger=1,
-            processing_time="500 milliseconds",
-            watermark="1 hour",
-        )
-        try:
+    feed(b1)
+    q = run_daily_trend_stream(
+        spark,
+        inp,
+        ckpt,
+        out_table="dts_late_test",
+        output_mode="append",
+        max_files_per_trigger=1,
+        processing_time="500 milliseconds",
+        watermark="1 hour",
+    )
+    try:
 
-            def emitted():
-                return {
-                    r["day"]: (r["cnt"], r["avg_value"])
-                    for r in spark.sql(
-                        "SELECT * FROM dts_late_test"
-                    ).collect()
-                }
+        def emitted():
+            return {
+                r["day"]: (r["cnt"], r["avg_value"])
+                for r in spark.sql(
+                    "SELECT * FROM dts_late_test"
+                ).collect()
+            }
 
-            def rows_consumed():
-                return sum(
-                    p["numInputRows"]
-                    for p in q.recentProgress
-                    if p is not None
-                )
+        def rows_consumed():
+            return sum(
+                p["numInputRows"]
+                for p in q.recentProgress
+                if p is not None
+            )
 
-            # serialize feeds on consumed-row progress so micro-batch
-            # order (which decides the watermark each batch sees) is
-            # deterministic even under file-mtime ties
-            assert _wait_until(lambda: rows_consumed() >= 2)
-            feed(b2)
-            assert _wait_until(lambda: rows_consumed() >= 3)
-            feed(b3)
-            assert _wait_until(lambda: "2026-03-01" in emitted())
-            feed(b4)
-            assert _wait_until(lambda: "2026-03-02" in emitted())
-            feed(b5)
-            assert _wait_until(lambda: "2026-03-03" in emitted())
-            got = emitted()
-        finally:
-            q.stop()
+        # serialize feeds on consumed-row progress so micro-batch
+        # order (which decides the watermark each batch sees) is
+        # deterministic even under file-mtime ties
+        assert _wait_until(lambda: rows_consumed() >= 2)
+        feed(b2)
+        assert _wait_until(lambda: rows_consumed() >= 3)
+        feed(b3)
+        assert _wait_until(lambda: "2026-03-01" in emitted())
+        feed(b4)
+        assert _wait_until(lambda: "2026-03-02" in emitted())
+        feed(b5)
+        assert _wait_until(lambda: "2026-03-03" in emitted())
+        got = emitted()
+    finally:
+        # a stopped query can still be finishing state-store writes;
+        # wait for it so nothing writes into the directory afterwards
+        q.stop()
+        q.awaitTermination()
 
     # batch oracle over the ON-TIME events only: the late row is absent
     on_time = [r for r in b1 + b2 + b3 + b4 + b5 if r[0] != 99]
@@ -3143,6 +3144,7 @@ def test_ivf_occupancy_cache_once_per_snapshot(spark, tmp_path, monkeypatch):
     it)."""
     from sortify_spark.facade import SearchConfig, SortifyEngine
     from sortify_spark.search import index as ix
+    from sortify_spark.search import serving
 
     calls = {"n": 0}
     orig = ix.ivf_tenant_occupancy
@@ -3152,6 +3154,9 @@ def test_ivf_occupancy_cache_once_per_snapshot(spark, tmp_path, monkeypatch):
         return orig(*a, **k)
 
     monkeypatch.setattr(ix, "ivf_tenant_occupancy", counting)
+    # the occupancy cache belongs to the Spark probe path; the
+    # driver-served path reads occupancy from its snapshot
+    monkeypatch.setattr(serving, "SNAPSHOT_MAX_BYTES", 0)
     eng = SortifyEngine(
         spark, SF_DIR, dim=16, embed="expr", doc_limit=80,
         index_root=str(tmp_path), owner_col="source",
@@ -3213,6 +3218,7 @@ def test_ivf_occupancy_cache_lru_under_churn(spark, tmp_path, monkeypatch):
     and versions are passed explicitly, so no artifact builds run."""
     from sortify_spark.facade import SortifyEngine
     from sortify_spark.search import index as ix
+    from sortify_spark.search import serving
 
     calls: list[tuple] = []
 
@@ -3225,6 +3231,8 @@ def test_ivf_occupancy_cache_lru_under_churn(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(ix, "ivf_tenant_occupancy", fake_occupancy)
     monkeypatch.setattr(SortifyEngine, "_OCC_CACHE_MAX", 4)
+    # the occupancy cache belongs to the Spark probe path
+    monkeypatch.setattr(serving, "SNAPSHOT_MAX_BYTES", 0)
     eng = SortifyEngine(
         spark, SF_DIR, dim=16, embed="expr", doc_limit=10,
         index_root=str(tmp_path), owner_col="source",
@@ -3412,6 +3420,7 @@ def test_warm_ivf_occupancy_one_scan_for_all_tenants(
     probe must hit the cache."""
     from sortify_spark.facade import SearchConfig, SortifyEngine
     from sortify_spark.search import index as ix
+    from sortify_spark.search import serving
     from sortify_spark.sources.versioned import read_manifest
 
     calls = {"n": 0}
@@ -3422,6 +3431,9 @@ def test_warm_ivf_occupancy_one_scan_for_all_tenants(
         return orig(*a, **k)
 
     monkeypatch.setattr(ix, "ivf_tenant_occupancy", counting)
+    # the occupancy cache belongs to the Spark probe path; the
+    # driver-served path reads occupancy from its snapshot
+    monkeypatch.setattr(serving, "SNAPSHOT_MAX_BYTES", 0)
     eng = SortifyEngine(
         spark, SF_DIR, dim=16, embed="expr", doc_limit=80,
         index_root=str(tmp_path), owner_col="source",
