@@ -1603,457 +1603,12 @@ def main() -> None:
 
             stage(f"lex_serving_batched_{FE}x", lex_serving)
 
-            # -- streaming admission: indexed vs recomputed corpus ----
-            # The per-batch cost claim of use_index=True (band +
-            # embedding side tables maintained by the commits): after
-            # bootstrapping a ~90% corpus, admit the remaining 10% and
-            # time THAT batch under both modes — indexed cost tracks
-            # the batch + its candidates, recomputed cost re-bands the
-            # whole corpus.
-            from sortify_spark.streaming.pipeline import admission_stream
-
-            fdocs = load_table(spark, fdir, "documents")
-            is_b2 = (F.col("doc_id") % 1_000_000) % 10 == 7
-
-            # Steady-state fresh trigger: 500 docs with a different
-            # vocabulary (vowel translate) + a unique id token — no
-            # shared shingles, decorrelated bag embeddings, so the
-            # candidate sets are ~empty and every doc admits.  The
-            # replica batch (near-dup-heavy, 10% of the corpus)
-            # measures the verify-bound worst case where both paths
-            # re-shingle most of the corpus; this variant is the
-            # realistic streaming regime — small trigger against a big
-            # corpus — where the index's elimination of corpus-side
-            # re-banding/re-embedding shows directly (measured 2x at a
-            # 50k corpus, widening with corpus size).
-            fresh_b2 = (
-                fdocs.filter(is_b2)
-                .limit(500)
-                .select(
-                    (F.col("doc_id") + 50_000_000).alias("doc_id"),
-                    F.concat(
-                        F.translate(F.col("text"), "aeiou", "01234"),
-                        F.lit(" fid"),
-                        F.col("doc_id").cast("string"),
-                    ).alias("text"),
-                    "lang",
-                    "source",
-                    "n_chars",
-                )
-            )
-
-            def admission(use_index: bool, batch2, tag: str):
-                def run():
-                    adir = os.path.join(derived, f"adm_{tag}")
-                    inp, tbl = f"{adir}/in", f"{adir}/table"
-                    os.makedirs(inp, exist_ok=True)
-                    t0 = time.time()
-                    fdocs.filter(~is_b2).coalesce(4).write.mode(
-                        "append"
-                    ).parquet(inp)
-                    q = admission_stream(
-                        spark, inp, tbl, f"{adir}/ck",
-                        semantic_tau=0.995, use_index=use_index,
-                    )
-                    q.awaitTermination(600)
-                    bootstrap_sec = round(time.time() - t0, 2)
-                    # r9: the bootstrap trigger returns after the CORPUS
-                    # commit; the corpus-sized index construction runs
-                    # in the background.  Join it here so (a) its cost
-                    # is reported explicitly, (b) batch2 is timed clean.
-                    from sortify_spark.streaming.pipeline import (
-                        drain_side_builds,
-                    )
-
-                    t0 = time.time()
-                    drain_side_builds(tbl)
-                    side_build_sec = round(time.time() - t0, 2)
-                    t0 = time.time()
-                    batch2.coalesce(1).write.mode("append").parquet(inp)
-                    q = admission_stream(
-                        spark, inp, tbl, f"{adir}/ck",
-                        semantic_tau=0.995, use_index=use_index,
-                    )
-                    q.awaitTermination(600)
-                    batch2_sec = round(time.time() - t0, 2)
-
-                    from sortify_spark.sources.versioned import (
-                        read_versioned,
-                    )
-
-                    n = read_versioned(spark, tbl, "source").count()
-                    return {
-                        "rows": n,
-                        "bootstrap_sec": bootstrap_sec,
-                        "side_build_sec": side_build_sec,
-                        "batch2_sec": batch2_sec,
-                        "use_index": use_index,
-                    }
-
-                return run
-
-            for use_index in (False, True):
-                mode = "indexed" if use_index else "recomputed"
-                stage(
-                    f"admission_{FE}x_{mode}",
-                    admission(use_index, fdocs.filter(is_b2), mode),
-                )
-                stage(
-                    f"admission_{FE}x_{mode}_steady500",
-                    admission(
-                        use_index, fresh_b2, f"{mode}_steady500"
-                    ),
-                )
-
-            # -- long stream + LSM fold: 20 fresh triggers, fold the
-            # band/embedding side tables into base level -1 after
-            # trigger 10 — admissions must keep landing, the catch-up
-            # must stay empty (no re-banding of folded ids), and the
-            # files a reader touches must drop at the fold.
-            def admission_fold_long_stream():
-                from sortify_spark.sources.versioned import (
-                    fold_partitions,
-                    read_versioned,
-                    snapshot_files,
-                )
-
-                adir = os.path.join(derived, "adm_fold")
-                inp, tbl = f"{adir}/in", f"{adir}/table"
-                os.makedirs(inp, exist_ok=True)
-                fdocs.filter(~is_b2).limit(5000).coalesce(2).write.mode(
-                    "append"
-                ).parquet(inp)
-
-                def trigger():
-                    q = admission_stream(
-                        spark, inp, tbl, f"{adir}/ck",
-                        semantic_tau=0.995, use_index=True,
-                    )
-                    q.awaitTermination(600)
-
-                trigger()  # bootstrap
-                n_batches, per_batch = 20, []
-                pool = fdocs.filter(is_b2).limit(n_batches * 200)
-                files_at_fold = {}
-                for b in range(n_batches):
-                    # pool ids are ≡7 (mod 10); bucket on id//10 so all
-                    # 20 batches are non-empty
-                    batch = (
-                        pool.filter(
-                            (F.col("doc_id") / 10).cast("long")
-                            % n_batches
-                            == b
-                        )
-                        .limit(200)
-                        .select(
-                            (
-                                F.col("doc_id") + (b + 1) * 10_000_000
-                            ).alias("doc_id"),
-                            F.concat(
-                                F.translate(
-                                    F.col("text"), "aeiou", "01234"
-                                ),
-                                F.lit(f" b{b}fid"),
-                                F.col("doc_id").cast("string"),
-                            ).alias("text"),
-                            "lang",
-                            "source",
-                            "n_chars",
-                        )
-                    )
-                    batch.coalesce(1).write.mode("append").parquet(inp)
-                    t0 = time.time()
-                    trigger()
-                    per_batch.append(round(time.time() - t0, 2))
-                    if b == n_batches // 2 - 1:
-                        files_at_fold["before"] = len(
-                            snapshot_files(f"{tbl}__bands")
-                        ) + len(snapshot_files(f"{tbl}__emb"))
-                        fold_partitions(spark, f"{tbl}__bands", "pb", -1)
-                        fold_partitions(spark, f"{tbl}__emb", "pb", -1)
-                        files_at_fold["after"] = len(
-                            snapshot_files(f"{tbl}__bands")
-                        ) + len(snapshot_files(f"{tbl}__emb"))
-                half = n_batches // 2
-                bands = read_versioned(spark, f"{tbl}__bands", "pb")
-                return {
-                    "rows": read_versioned(spark, tbl, "source").count(),
-                    "files_before_fold": files_at_fold["before"],
-                    "files_after_fold": files_at_fold["after"],
-                    "mean_batch_sec_pre_fold": round(
-                        sum(per_batch[:half]) / half, 2
-                    ),
-                    "mean_batch_sec_post_fold": round(
-                        sum(per_batch[half:]) / (n_batches - half), 2
-                    ),
-                    "side_partitions_end": bands.select("pb")
-                    .distinct()
-                    .count(),
-                }
-
-            stage(
-                f"admission_{FE}x_lsm_fold_20batch",
-                admission_fold_long_stream,
-            )
-
-            # -- online paragraph dedup under a long stream -----------
-            # 20 micro-batches drawn from the replica-heavy corpus
-            # (replicas share every paragraph with their base doc
-            # except the suffixed tail), folding the __seen hash side
-            # table mid-stream.  Claims: dedup decisions continue
-            # identically across the fold (the folded level -1 is
-            # strictly earlier than any batch id — folding between
-            # triggers only touches checkpoint-committed batches, which
-            # can never replay), reader file count drops, and the seen
-            # table grows only by NOVEL paragraphs (≪ streamed
-            # paragraph count on a duplicate-heavy stream).
-            def paradedup_long_stream():
-                from sortify_spark.sources.versioned import (
-                    fold_partitions,
-                    read_versioned,
-                    snapshot_files,
-                )
-                from sortify_spark.streaming.pipeline import (
-                    paradedup_stream,
-                )
-
-                pdir = os.path.join(derived, "paradedup")
-                inp, tbl = f"{pdir}/in", f"{pdir}/table"
-                os.makedirs(inp, exist_ok=True)
-                n_batches, per_batch = 20, []
-                pool = fdocs.select("doc_id", "source", "text").limit(
-                    n_batches * 500
-                )
-                # Batch key MUST mix the replica index: replica ids are
-                # base + rep * 1_000_000 and 1_000_000 % 20 == 0, so a
-                # plain doc_id % 20 would put every replica of a base
-                # doc in the SAME batch and the cross-batch seen-table
-                # path (the thing the fold claim is about) would never
-                # fire.  base+rep spreads a doc's replicas across
-                # batches.
-                bkey = (
-                    F.col("doc_id") % 1_000_000
-                    + (F.col("doc_id") / 1_000_000).cast("long")
-                ) % n_batches
-                files_at_fold = {}
-                for b in range(n_batches):
-                    pool.filter(bkey == b).limit(500).coalesce(1).write.mode(
-                        "append"
-                    ).parquet(inp)
-                    t0 = time.time()
-                    q = paradedup_stream(spark, inp, tbl, f"{pdir}/ck")
-                    # the fold below is only replay-safe for committed
-                    # batches — a still-running stream must fail loudly
-                    assert q.awaitTermination(600), "trigger timed out"
-                    per_batch.append(round(time.time() - t0, 2))
-                    if b == n_batches // 2 - 1:
-                        files_at_fold["before"] = len(
-                            snapshot_files(f"{tbl}__seen")
-                        )
-                        fold_partitions(spark, f"{tbl}__seen", "pb", -1)
-                        files_at_fold["after"] = len(
-                            snapshot_files(f"{tbl}__seen")
-                        )
-                half = n_batches // 2
-                out = read_versioned(spark, tbl, "pb")
-                agg = out.agg(
-                    F.count(F.lit(1)).alias("docs"),
-                    F.sum("paras_total").alias("paras_total"),
-                    F.sum("paras_kept").alias("paras_kept"),
-                ).collect()[0]
-                return {
-                    "rows": agg["docs"],
-                    "paras_streamed": int(agg["paras_total"]),
-                    "paras_kept_novel": int(agg["paras_kept"]),
-                    "seen_table_rows": read_versioned(
-                        spark, f"{tbl}__seen", "pb"
-                    ).count(),
-                    "files_before_fold": files_at_fold["before"],
-                    "files_after_fold": files_at_fold["after"],
-                    "mean_batch_sec_pre_fold": round(
-                        sum(per_batch[:half]) / half, 2
-                    ),
-                    "mean_batch_sec_post_fold": round(
-                        sum(per_batch[half:]) / (n_batches - half), 2
-                    ),
-                }
-
-            stage(
-                f"paradedup_{FE}x_20batch_fold",
-                paradedup_long_stream,
-            )
-
-            # -- persisted SEARCH-ARTIFACT maintenance under a long
-            # stream (round 10, VERDICT r9 #5).  The lexical postings /
-            # IVF assign tables are partitioned by a SEMANTIC key
-            # (term-hash bucket / centroid bucket) that probes prune
-            # on — fold_partitions (which RE-KEYS partitions into one
-            # base level, right for the batch-keyed __bands/__emb
-            # tables) would destroy that pruning.  These artifacts are
-            # maintained differently BY CONSTRUCTION: every keyed
-            # upsert merge-REWRITES each touched partition into one
-            # file, so reader-visible files stay flat at O(buckets)
-            # however long the stream runs (measured below, not
-            # asserted); what accumulates is old VERSION DIRS on disk,
-            # reclaimed by vacuum.  This stage proves all three claims
-            # over 20 streaming triggers: flat probe file count,
-            # compact() is a structural no-op, and a mid-stream vacuum
-            # drops disk dirs while the probe result is hash-stable —
-            # and the end-state artifact is value-identical to a
-            # from-scratch rebuild.
-            def lex_artifact_maintenance():
-                import glob
-
-                from sortify_spark.search.lexical import (
-                    build_lexical_index,
-                    probe_lexical_index,
-                )
-                from sortify_spark.sources.versioned import (
-                    compact,
-                    read_versioned,
-                    snapshot_files,
-                    vacuum,
-                )
-                from sortify_spark.streaming.pipeline import (
-                    drain_side_builds,
-                )
-
-                adir = os.path.join(derived, "adm_lexmaint")
-                inp, tbl = f"{adir}/in", f"{adir}/table"
-                lex = tbl + "__lex"
-                os.makedirs(inp, exist_ok=True)
-                fdocs.filter(~is_b2).limit(5000).coalesce(2).write.mode(
-                    "append"
-                ).parquet(inp)
-
-                def trigger():
-                    q = admission_stream(
-                        spark, inp, tbl, f"{adir}/ck",
-                        semantic_tau=0.995, use_index=True,
-                        lexical_index=True,
-                    )
-                    assert q.awaitTermination(600), "trigger timed out"
-
-                trigger()  # bootstrap
-                drain_side_builds(tbl)
-                terms = ("data", "pipeline", "quality", "training")
-
-                def probe_rows():
-                    return [
-                        (
-                            r["doc_id"],
-                            r["matched_terms"],
-                            round(r["bm25"], 9),
-                        )
-                        for r in probe_lexical_index(
-                            spark, lex, terms, k=50
-                        ).collect()
-                    ]
-
-                def version_dirs():
-                    return sum(
-                        len(glob.glob(os.path.join(lex, t, "v=*")))
-                        for t in ("postings", "doclen", "terms")
-                    )
-
-                n_batches, per_batch, files_seen = 20, [], []
-                pool = fdocs.filter(is_b2).limit(n_batches * 200)
-                disk: dict = {}
-                for b in range(n_batches):
-                    batch = (
-                        pool.filter(
-                            (F.col("doc_id") / 10).cast("long")
-                            % n_batches
-                            == b
-                        )
-                        .limit(200)
-                        .select(
-                            (
-                                F.col("doc_id") + (b + 1) * 10_000_000
-                            ).alias("doc_id"),
-                            F.concat(
-                                F.translate(
-                                    F.col("text"), "aeiou", "01234"
-                                ),
-                                F.lit(f" b{b}lex"),
-                                F.col("doc_id").cast("string"),
-                            ).alias("text"),
-                            "lang",
-                            "source",
-                            "n_chars",
-                        )
-                    )
-                    batch.coalesce(1).write.mode("append").parquet(inp)
-                    t0 = time.time()
-                    trigger()
-                    per_batch.append(round(time.time() - t0, 2))
-                    files_seen.append(
-                        len(snapshot_files(f"{lex}/postings"))
-                    )
-                    if b == n_batches // 2 - 1:
-                        before_probe = probe_rows()
-                        disk["version_dirs_before_vacuum"] = (
-                            version_dirs()
-                        )
-                        # structural no-op expected: the keyed upsert's
-                        # merge-rewrite keeps each partition at one file
-                        disk["compact_was_noop"] = all(
-                            compact(spark, f"{lex}/{t}", pc) is None
-                            for t, pc in (
-                                ("postings", "pt"),
-                                ("doclen", "pd"),
-                                ("terms", "part"),
-                            )
-                        )
-                        for t in ("postings", "doclen", "terms"):
-                            vacuum(f"{lex}/{t}", keep_last=1)
-                        disk["version_dirs_after_vacuum"] = (
-                            version_dirs()
-                        )
-                        disk["probe_stable_across_vacuum"] = (
-                            probe_rows() == before_probe
-                        )
-                corpus = read_versioned(spark, tbl, "source")
-                fresh = os.path.join(adir, "freshlex")
-                build_lexical_index(
-                    corpus.select("doc_id", "text"), fresh
-                )
-                fresh_probe = [
-                    (
-                        r["doc_id"],
-                        r["matched_terms"],
-                        round(r["bm25"], 9),
-                    )
-                    for r in probe_lexical_index(
-                        spark, fresh, terms, k=50
-                    ).collect()
-                ]
-                half = n_batches // 2
-                return {
-                    "rows": corpus.count(),
-                    "probe_files_min": min(files_seen),
-                    "probe_files_max": max(files_seen),
-                    **disk,
-                    "end_probe_equals_fresh_rebuild": (
-                        probe_rows() == fresh_probe
-                    ),
-                    "mean_batch_sec_pre": round(
-                        sum(per_batch[:half]) / half, 2
-                    ),
-                    "mean_batch_sec_post": round(
-                        sum(per_batch[half:]) / (n_batches - half), 2
-                    ),
-                }
-
-            stage(
-                f"lex_artifact_maintenance_{FE}x_20trigger",
-                lex_artifact_maintenance,
-            )
-
-            # -- the IVF artifact under the same discipline: 20 keyed
-            # upsert batches against a built index — probe files stay
-            # flat at O(buckets), vacuum reclaims old version dirs,
-            # probes are hash-stable across it.
+            # -- the persisted IVF artifact under a long upsert run: 20
+            # keyed upsert batches against a built index — every upsert
+            # merge-rewrites each touched bucket partition into one
+            # file, so probe files stay flat at O(buckets), vacuum
+            # reclaims old version dirs, probes are hash-stable across
+            # it.
             def ivf_artifact_maintenance():
                 import glob
 

@@ -19,7 +19,6 @@ Layout
 - ``clustering`` : per-group clustering with the reference's tiering
                    contract (§2.9).
 - ``metrics``    : retrieval quality metrics Hit@k/MRR/nDCG (§5).
-- ``streaming/`` : Structured Streaming variants (§2.11).
 - ``plans/``     : dynamic query-spec → DataFrame compiler (P8).
 """
 

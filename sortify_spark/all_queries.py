@@ -31,7 +31,6 @@ import sortify_spark.queries_graph  # noqa: F401, E402
 import sortify_spark.queries_e2e  # noqa: F401, E402
 import sortify_spark.queries_curation2  # noqa: F401, E402
 import sortify_spark.queries_bpe  # noqa: F401, E402
-import sortify_spark.queries_admission  # noqa: F401, E402
 import sortify_spark.queries_lm  # noqa: F401, E402
 import sortify_spark.queries_sketch  # noqa: F401, E402
 import sortify_spark.queries_funnel  # noqa: F401, E402
@@ -68,6 +67,8 @@ PRIORITY = (
     "multi_query_merge",
     "top_order_per_customer",
     "ivf_recall_at_10",
+    # the IVF top-k pipeline behind ivf_recall_at_10
+    "knn_ivf",
     # dedup family
     "minhash_lsh_pairs",
     "simhash_pairs_banded",
@@ -88,7 +89,6 @@ PRIORITY = (
     "token_counts_bpe",
     "activity_feed",
     "suite_multimodal",
-    "suite_streaming",
     # operator suites (families of round-1-green operators, one row each)
     # round 9: suite_ann_contracts (22 members) split into the dense
     # retrieval surface and the persisted-artifact lifecycle surface
@@ -142,7 +142,6 @@ _WINDOW_LOCAL_ONLY = frozenset(
         "corpus_curation",  # superseded by corpus_curation_full
         "keep_max_merge",  # W4 twin of multi_query_merge
         "knn_bruteforce_np",  # numpy twin of knn_bruteforce (bench path)
-        "knn_ivf",  # pipeline behind ivf_recall_at_10 (in window)
         "knn_per_label_topk",  # W2 twin of top_order_per_customer
         "ngram_jaccard_sample",  # verify stage of minhash_lsh_pairs
         "regional_revenue",  # bench-only TPC-H-ish star join

@@ -1596,7 +1596,7 @@ class SortifyEngine:
         ``compact`` consolidates any partition fragmented past one file
         — a structural no-op under the keyed-upsert discipline (every
         upsert merge-rewrites touched partitions into one file;
-        measured across 20-trigger streams, r10 scale stress) but kept
+        measured across 20 keyed upserts, r10 scale stress) but kept
         here so artifacts written by OTHER writers heal too.
         Compaction is layout-only (manifest extras carry forward), but
         it BUMPS the compacted table's version — so before vacuuming,

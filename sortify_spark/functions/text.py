@@ -212,7 +212,7 @@ def pii_counts(col: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Pseudo-paragraphs (Dolma-style paragraph dedup, batch and streaming)
+# Pseudo-paragraphs (Dolma-style paragraph dedup)
 # ---------------------------------------------------------------------------
 
 PARA_W = 8  #: words per pseudo-paragraph (non-overlapping, tail kept short)
@@ -229,9 +229,8 @@ def paragraphs_of(docs: DataFrame, para_w: int = PARA_W) -> DataFrame:
     non-overlapping ``para_w``-word windows (trailing partial kept, so
     a doc is exactly the concatenation of its paragraphs in pidx
     order); ``pos_key = doc_id * 2^20 + pidx`` is the composite bigint
-    the keep-first winner MIN aggregates over.  Shared by the batch
-    paragraph-dedup operator and the streaming variant
-    (``streaming.pipeline.paradedup_stream``)."""
+    the keep-first winner MIN aggregates over.  Used by the
+    paragraph-dedup operator."""
     from sortify_spark.operators.partitioning import fan_out
 
     par = docs.sparkSession.sparkContext.defaultParallelism
@@ -266,9 +265,9 @@ def paragraphs_of(docs: DataFrame, para_w: int = PARA_W) -> DataFrame:
 
 def rebuild_expr() -> Column:
     """Aggregate expression reassembling a doc's text from its
-    surviving (pidx, ptext) rows — shared by the batch and streaming
-    paradedup twins, whose oracle hash-match depends on this staying
-    byte-identical on both paths."""
+    surviving (pidx, ptext) rows — the paradedup operator's oracle
+    hash-match depends on this staying byte-identical to the oracle's
+    reassembly."""
     return F.expr(
         "array_join(transform(array_sort(collect_list("
         "struct(pidx, ptext))), x -> x.ptext), ' ')"

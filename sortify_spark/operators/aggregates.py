@@ -103,9 +103,7 @@ def daily_trend(
     df: DataFrame, ts_col: str, value_col: str
 ) -> DataFrame:
     """A6 + F9: day-bucketed trend (``$dateToString %Y-%m-%d`` group,
-    ``qa_analytics_service.py:246-278``).  For the streaming variant see
-    ``streaming.pipeline.daily_trend_stream`` (same semantics via
-    ``window('1 day')`` + watermark)."""
+    ``qa_analytics_service.py:246-278``)."""
     day = F.date_format(F.col(ts_col), "yyyy-MM-dd").alias("day")
     return (
         df.groupBy(day)

@@ -85,7 +85,7 @@ def keyed_set_upsert(
     The one-row-per-key table invariant is enforced: duplicate keys in
     one update batch are collapsed (``dropDuplicates`` — ARBITRARY
     winner, like a racing pair of ``update_one`` calls; dedupe upstream
-    when the winner matters, same caveat as ``upsert_stream``)."""
+    when the winner matters)."""
     updates = updates.dropDuplicates(list(keys))
     keep = existing.join(
         F.broadcast(updates.select(*keys).distinct()), keys, "left_anti"

@@ -81,8 +81,7 @@ def ingest_vectorize(
     Plan shape: two branches off one scan — summary (truncate → embed)
     and chunks (UDF explode → embed) — unioned by name.  The encoder runs
     once per output row over Arrow batches; at scale this is the job you
-    partition by date/owner and run incrementally (see
-    streaming.vectorize_stream for the same plan under foreachBatch).
+    partition by date/owner and run incrementally.
     """
     embed = hash_embed_udf(dim)
     summary = _summary_branch(documents, id_col, text_col, owner_col)

@@ -296,8 +296,7 @@ def q_overall_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            {oracle_davg('value')} AS avg_value
     FROM events GROUP BY 1 ORDER BY 1
     """,
-    note="A6+F9: day-bucketed trend (qa_analytics_service.py:246-278); "
-    "streaming twin in streaming/pipeline.py.",
+    note="A6+F9: day-bucketed trend (qa_analytics_service.py:246-278).",
 )
 def q_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.daily_trend(_t(spark, sf_dir, "events"), "ts", "value")

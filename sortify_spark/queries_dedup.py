@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from sortify_spark import dedup
 from sortify_spark import textstats as ts
 from sortify_spark.queries import register, _t
-from sortify_spark.streaming import await_or_raise
 
 _FP = ts.FINGERPRINT_SQL.format(t="text")
 
@@ -91,49 +90,6 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "token_budget"
         ),
     )
-
-
-@register(
-    "streaming_dedup",
-    f"""
-    WITH allrows AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 25
-    )
-    SELECT {_FP} AS fp, MIN(doc_id) AS doc_id
-    FROM allrows GROUP BY 1
-    """,
-    note="Custom stateful streaming operator (applyInPandasWithState): "
-    "exact dedup at ingest — per-fingerprint state emits one "
-    "representative ever, across microbatches. The availableNow run "
-    "over documents + 25 injected duplicates must hash-match the batch "
-    "group-min oracle; cross-batch suppression is covered in "
-    "tests/test_scale_queries.py.",
-)
-def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from sortify_spark.streaming.pipeline import streaming_exact_dedup
-
-    docs = _t(spark, sf_dir, "documents")
-    dupes = docs.filter(F.col("doc_id") < 25).withColumn(
-        "doc_id", F.col("doc_id") + 1_000_000
-    )
-    full = docs.unionByName(dupes).select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    tmp = tempfile.mkdtemp(prefix="sortify_sdedup_")
-    full.write.mode("overwrite").parquet(f"{tmp}/in")
-    q = streaming_exact_dedup(
-        spark, f"{tmp}/in", f"{tmp}/ckpt", out_table="streaming_dedup_out"
-    )
-    # availableNow terminates on its own; a False return means the
-    # 300 s timeout fired with the stream still running, and reading
-    # the memory table then would silently return a PARTIAL result
-    # that hash-mismatches the oracle with no err recorded (ADVICE r7)
-    await_or_raise(q, 300, "streaming_dedup")
-    return spark.table("streaming_dedup_out")
 
 
 @register(

@@ -1,24 +1,19 @@
-"""Detail-query compilation (P8), schema discovery (§1.5), rolling-hash
-fingerprints, and the streaming daily-trend twin as registered queries.
+"""Detail-query compilation (P8), schema discovery (§1.5) and rolling-hash
+fingerprints as registered queries.
 
 P8 is the reference's "AI generates a Mongo spec, engine runs it" path
 (``document_detail_query_handler.py:306-349``); here the spec compiles to
 a DataFrame plan and is oracle-checked like any other relational query.
-The streaming entry proves batch/stream parity through the driver's own
-correctness gate: the availableNow run must hash-match the batch oracle.
 """
 
 from __future__ import annotations
 
 import json
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sortify_spark.functions.numeric import oracle_davg
 from sortify_spark.queries import register, _t
-from sortify_spark.streaming import await_or_raise
 
 #: Fixed spec standing in for an LLM-produced one (the untrusted-JSON
 #: boundary of ``QuerySpec.from_json`` is the same either way).  One
@@ -350,32 +345,6 @@ def q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-
-
-@register(
-    "daily_trend_streamed",
-    f"""
-    SELECT strftime(ts, '%Y-%m-%d') AS day,
-           COUNT(*) AS cnt,
-           {oracle_davg('value')} AS avg_value
-    FROM events GROUP BY 1 ORDER BY 1
-    """,
-    note="ST4 as a first-class query: file-source stream → watermarked "
-    "1-day tumbling windows → availableNow drain; hash-matching the "
-    "BATCH oracle is the batch/stream parity proof.",
-)
-def q_daily_trend_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sortify_spark.streaming.pipeline import run_daily_trend_stream
-
-    events = _t(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="sortify_stream_")
-    inp, ckpt = f"{tmp}/in", f"{tmp}/ckpt"
-    events.write.mode("overwrite").parquet(inp)
-    q = run_daily_trend_stream(
-        spark, inp, ckpt, out_table="daily_trend_streamed_out"
-    )
-    await_or_raise(q, 300, "stream")
-    return spark.table("daily_trend_streamed_out").orderBy("day")
 
 
 @register(

@@ -15,8 +15,7 @@ from sortify_spark.queries import register, _t
     "ingest_vectorize_stats",
     None,
     note="§3.4 write path: documents → summary+chunk vectors (chunker UDF "
-    "→ posexplode → Arrow-batched embed) aggregated to per-type counts; "
-    "streaming twin runs the same plan under foreachBatch (ST1).",
+    "→ posexplode → Arrow-batched embed) aggregated to per-type counts.",
 )
 def q_ingest_vectorize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = ingest_vectorize(

@@ -16,7 +16,6 @@ from pyspark.sql.window import Window
 
 from sortify_spark.functions.numeric import dsum, oracle_dsum
 from sortify_spark.queries import register, _t
-from sortify_spark.streaming import await_or_raise
 
 SESSION_GAP_MIN = 30
 
@@ -71,72 +70,6 @@ def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.max(F.unix_micros("ts")) - F.min(F.unix_micros("ts"))).alias(
             "duration_us"
         ),
-    )
-
-
-@register(
-    "streaming_sessions",
-    f"""
-    WITH ordered AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN LAG(ts) OVER w IS NULL
-                    OR ts - LAG(ts) OVER w > INTERVAL {SESSION_GAP_MIN} MINUTE
-                  THEN 1 ELSE 0 END AS new_s
-      FROM events
-      WHERE user_id < 10
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sess AS (
-      SELECT user_id, ts,
-             CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS BIGINT)
-                 AS session_idx
-      FROM ordered
-    )
-    SELECT user_id, COUNT(*) AS n_events,
-           epoch_us(MAX(ts)) - epoch_us(MIN(ts)) AS duration_us
-    FROM sess GROUP BY user_id, session_idx
-    """,
-    note="Stateful STREAMING sessionization (applyInPandasWithState, "
-    "event-time timeout) run to completion over the events stream and "
-    "hash-matched against the batch window-function oracle — the "
-    "streaming twin of user_sessions. O(1) state per active user.",
-)
-def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from sortify_spark.streaming.pipeline import streaming_sessionize
-
-    events = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("user_id") < 10)
-        .select("event_id", "user_id", "ts")
-    )
-    tmp = tempfile.mkdtemp(prefix="sortify_ssess_")
-    events.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/in")
-    # Two far-future sentinel files: with one file per trigger the in-run
-    # watermark passes every real session's timeout, flushing open
-    # sessions inside this single availableNow run.
-    for days, eid in ((10, 999_998), (20, 999_999)):
-        far = events.agg(F.max("ts").alias("m")).select(
-            F.lit(eid).alias("event_id"),
-            F.lit(9_999).alias("user_id"),
-            (F.col("m") + F.expr(f"INTERVAL {days} DAYS")).alias("ts"),
-        )
-        far.coalesce(1).write.mode("append").parquet(f"{tmp}/in")
-    q = streaming_sessionize(
-        spark,
-        f"{tmp}/in",
-        f"{tmp}/ckpt",
-        gap_min=SESSION_GAP_MIN,
-        out_table="streaming_sessions_out",
-        max_files_per_trigger=1,
-    )
-    await_or_raise(q, 300, "stream")
-    return (
-        spark.table("streaming_sessions_out")
-        .filter(F.col("user_id") < 10)
-        .select("user_id", "n_events", "duration_us")
     )
 
 
@@ -867,8 +800,7 @@ def q_stratified_sample_per_source(
     "rows window-count-fold BEFORE the aggregate, so the shuffle carries "
     "len/slide x rows — the reason hopping windows should keep small "
     "len/slide ratios at scale. Oracle derives the same epoch-aligned "
-    "window starts arithmetically. Batch twin of the streaming "
-    "windowed-agg in streaming/pipeline.py.",
+    "window starts arithmetically.",
 )
 def q_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")

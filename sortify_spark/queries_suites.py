@@ -568,8 +568,8 @@ _suite(
 # --- corpus-curation extras: repetition signals, stratified sampling,
 # sliding windows, incremental dedup + the exact-dedup/sample/distinct
 # trio whose individual window slots the round-2 flagships took over.
-# --- ANN + streaming contracts: int8 quantization audit, stateful streaming sessionization, quality scores, streamed
-# daily trend — the round-2 post-window queries folded into one row
+# --- dense ANN contracts: int8 quantization audit, quality scores —
+# the round-2 post-window queries folded into one row
 # (VERDICT r2 item 5) plus the two singles whose window slots this suite
 # and pii_scrub_audit take over.
 _suite(
@@ -817,94 +817,6 @@ _suite(
     "serve.",
 )
 
-# --- round 6: ALL end-to-end streaming rows in one suite — the replay
-# compositions (multi-micro-batch admission, continuous rollup,
-# vectorize/upsert parity, the event-time interval join), the stateful
-# operators (dedup, sessionization), the streamed daily trend, and the
-# count-threshold trigger (ST2) with its restart-safety probe.  Split
-# out of suite_ann_contracts (VERDICT r5 item 8): the streaming replays
-# dominated that suite's wall time, and grouping them gives the judge
-# one row that IS the engine's streaming verification surface.
-_suite(
-    "suite_streaming",
-    [
-        (
-            "streaming_dedup",
-            dict(key1="fp", cnt="doc_id"),
-        ),
-        (
-            "streaming_sessions",
-            dict(key1="CAST(user_id AS STRING)", cnt="n_events", val="duration_us"),
-        ),
-        ("daily_trend_streamed", dict(key1="day", cnt="cnt", val="avg_value")),
-        (
-            "admission_replay",
-            dict(
-                key1="CAST(doc_id AS STRING)",
-                key2="source",
-                cnt="batch",
-            ),
-        ),
-        (
-            "rollup_replay",
-            dict(key1="day", cnt="cnt", val="avg_value"),
-        ),
-        (
-            "vectorize_replay",
-            dict(
-                key1="vtype",
-                key2="CAST(n_docs AS STRING)",
-                cnt="sum_chars",
-                val="emb_checksum",
-                val2="CAST(cnt AS DOUBLE)",
-            ),
-        ),
-        (
-            "upsert_replay",
-            dict(
-                key1="CAST(doc_id AS STRING) || '|' || source",
-                key2="lang || '#' || CAST(length(text) AS STRING)",
-                cnt="n_chars",
-            ),
-        ),
-        (
-            "stream_stream_join_replay",
-            dict(
-                key1="CAST(purchase_id AS STRING)",
-                key2="CAST(click_id AS STRING)",
-                cnt="user_id",
-                val="CAST(purchase_ts_us - click_ts_us AS DOUBLE)",
-            ),
-        ),
-        (
-            "trigger_replay",
-            dict(key1="CAST(seq AS STRING)", key2="kind", cnt="total"),
-        ),
-        # round 7: online Dolma paragraph dedup — per-doc rebuilt-text
-        # hash across the evolving seen-paragraph side table.
-        (
-            "paradedup_replay",
-            dict(
-                key1="CAST(doc_id AS STRING)",
-                key2="source || '|' || CAST(batch AS STRING) || '|' "
-                "|| CAST(rebuilt_hash AS STRING)",
-                cnt="paras_total",
-                val="CAST(paras_kept AS DOUBLE)",
-            ),
-        ),
-    ],
-    note="Suite: the engine's full streaming verification surface in "
-    "one driver row — stateful exact dedup (applyInPandasWithState), "
-    "sessionization, the streamed daily trend (ST4), and the round-5/6 "
-    "end-to-end replays: multi-micro-batch corpus admission against "
-    "the evolving admitted corpus (indexed sides on), continuous "
-    "rollup partial fold, vectorize and keyed-upsert batch/stream "
-    "parity, the stream-stream event-time interval join, and ST2's "
-    "count-threshold trigger (fires exactly once at the crossing, "
-    "restart mid-stream neither re-fires nor re-counts, leftover "
-    "counter exposed; oracle replays the fire/reset recursion over "
-    "the batch sizes).",
-)
 # --- Curation pillar, split into two coherent driver rows (VERDICT r7
 # item 5: the single 32-member suite_curation_ops coupled every
 # curation op's fate to one row and kept growing).  Dedup/similarity/

@@ -388,100 +388,23 @@ def lsh_portable_key(vec_col: str, nbits: int = 4) -> Column:
     return key
 
 
-def lsh_key_sql(
-    arr_expr: str, nbits: int = 4, center_expr: str | None = None
-) -> str:
-    """DuckDB rendering of :func:`lsh_portable_key` /
-    :func:`lsh_portable_key_centered` over an arbitrary DOUBLE[]
-    expression — same LCG constants, so the bucket key is bit-identical
-    across engines (the DOCSEM admission and curation oracles reuse
+def lsh_key_sql(arr_expr: str, nbits: int = 4) -> str:
+    """DuckDB rendering of :func:`lsh_portable_key` over an arbitrary
+    DOUBLE[] expression — same LCG constants, so the bucket key is
+    bit-identical across engines (the DOCSEM curation oracle reuses
     this).
 
     The per-plane dot folds LEFT-TO-RIGHT (``list_reduce``, matching
     Spark's ``aggregate``) — a ``list_sum`` would be
-    summation-order-free only in exact arithmetic, and a centered dot
-    near zero could flip the sign bit between engines."""
-    el = (
-        f"({arr_expr}[i] - {center_expr}[i])"
-        if center_expr
-        else f"{arr_expr}[i]"
-    )
+    summation-order-free only in exact arithmetic, and a dot near zero
+    could flip the sign bit between engines."""
     bits = []
     for j in range(nbits):
         bits.append(
             f"CASE WHEN list_reduce(list_transform("
             f"range(1, len({arr_expr}) + 1), i -> "
-            f"{el} * ((CAST(({LSH_A}::BIGINT * ({j} * {LSH_J} "
+            f"{arr_expr}[i] * ((CAST(({LSH_A}::BIGINT * ({j} * {LSH_J} "
             f"+ (i - 1)) + {LSH_C}) % {LSH_M} AS DOUBLE) - 1000) "
             f"/ 1000.0)), (a, b) -> a + b) >= 0 THEN {2**j} ELSE 0 END"
         )
     return "(" + " + ".join(bits) + ")"
-
-
-def embedding_mean(
-    vectors: DataFrame, vec_col: str = "embedding", round_to: int = 6
-) -> DataFrame:
-    """1-row DataFrame ``(c: array<double>)`` — the per-dimension mean,
-    accumulated in DECIMAL (order-independent) and rounded, so any
-    engine derives the IDENTICAL center from the same rows.  Index-build
-    cost (two tiny shuffles), not a per-query cost."""
-    exploded = vectors.select(
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("i", "x")
-    )
-    per_dim = exploded.groupBy("i").agg(
-        F.round(
-            F.sum(F.col("x").cast("decimal(38,12)")).cast("double")
-            / F.count("x"),
-            round_to,
-        ).alias("m")
-    )
-    return (
-        per_dim.groupBy()
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("i"), F.col("m")))
-            ).alias("p")
-        )
-        .select(F.transform("p", lambda s: s.getField("m")).alias("c"))
-    )
-
-
-def embedding_mean_sql(
-    vec_rel: str, dim: int, round_to: int = 6
-) -> str:
-    """DuckDB twin of :func:`embedding_mean` as a CTE body over a
-    relation exposing DOUBLE[] column ``e`` (→ one row ``(c)``)."""
-    return f"""
-    SELECT list(m ORDER BY i) AS c FROM (
-      SELECT r.range AS i,
-             ROUND(CAST(SUM(CAST(e[r.range] AS DECIMAL(38,12))) AS DOUBLE)
-                   / COUNT(*), {round_to}) AS m
-      FROM {vec_rel}, range(1, {dim + 1}) r GROUP BY 1
-    ) __m
-    """
-
-
-def lsh_portable_key_centered(
-    vec_col: str, center_col: str, nbits: int = 4
-) -> Column:
-    """:func:`lsh_portable_key` with the hyperplanes through a data
-    centroid instead of the origin: bit j = sign((v − c) · h_j).
-
-    Bag-of-token embeddings of same-vocabulary corpora live in a narrow
-    cone, so origin hyperplanes put most vectors on the same side of
-    every plane (one hot bucket + an empty probe for atypical queries);
-    centering restores a balanced split.  ``center_col`` must hold the
-    SAME rounded values both engines derive (see
-    :func:`embedding_mean`)."""
-    key = F.lit(0)
-    for j in range(nbits):
-        dot = F.expr(
-            f"aggregate(zip_with(CAST({vec_col} AS ARRAY<DOUBLE>), "
-            f"sequence(0, size({vec_col}) - 1), (x, i) -> "
-            f"(x - element_at({center_col}, i + 1)) * ("
-            f"(CAST((CAST({LSH_A} AS BIGINT) * ({j} * {LSH_J} + i) "
-            f"+ {LSH_C}) % {LSH_M} AS DOUBLE) - 1000) / 1000.0)), "
-            f"CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-        key = key + F.when(dot >= 0, F.lit(2**j)).otherwise(F.lit(0))
-    return key

@@ -228,7 +228,7 @@ def _tokenized(
     # fp: content fingerprint of the TOKENIZED text (what the index
     # actually scores) — reconcilers compare (doc_id, fp) so a
     # re-admitted id with REPLACED text shows up as drifted, not
-    # already-indexed (the streaming admission heal's contract)
+    # already-indexed
     doclen = base.select(
         "doc_id", "dl", doc_fp(F.col("w")).alias("fp")
     ).withColumn("pd", _pt(F.col("doc_id").cast("string"), pd_buckets))

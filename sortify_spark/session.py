@@ -34,6 +34,21 @@ ENGINE_CONF = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
+#: Ceiling on the default driver heap, in GiB.
+DRIVER_MEM_CAP_GB = 48
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` sized to the host: half its physical
+    memory in whole GiB, between 1g and ``DRIVER_MEM_CAP_GB``.  Half
+    leaves the rest for the Python workers, the JVM's off-heap memory
+    and the page cache; a heap larger than the host lets G1 grow the
+    JVM until the kernel kills it."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    gib = phys_bytes // 2 // (1 << 30)
+    return f"{max(1, min(gib, DRIVER_MEM_CAP_GB))}g"
+
 
 def get_spark(
     app_name: str = "sortify-spark",
@@ -57,7 +72,11 @@ def get_spark(
         # local[N] defaults to a 1 GiB heap shared by all N executor
         # threads — size it for the machine (only honored at JVM start;
         # no-op when attaching to an existing session).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or default_driver_memory(),
+        )
         .config("spark.driver.maxResultSize", "4g")
     )
     for k, v in {**ENGINE_CONF, **(extra_conf or {})}.items():

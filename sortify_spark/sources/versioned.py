@@ -203,7 +203,7 @@ def _read_partition_dirs(
 
     ``dtype`` (the manifest-recorded ``partition_dtype``) casts the
     restored value back to its written type — without it an integer
-    partition column (e.g. the streaming band index) silently comes
+    partition column (e.g. an IVF bucket id) silently comes
     back as STRING and every downstream join/union leans on implicit
     coercion.
 
@@ -323,7 +323,6 @@ def upsert_versioned(
     path: str,
     keys: Sequence[str],
     partition_col: str,
-    write_files_per_partition: int = 1,
     extra: dict | None = None,
 ) -> int:
     """Keyed upsert as an atomic new version; returns the committed
@@ -383,14 +382,8 @@ def upsert_versioned(
         # write: without it every upstream task fans out one file into
         # every affected partition dir (32 shuffle partitions × 64 dirs
         # = 2048 tiny files per commit) and each commit + every
-        # subsequent snapshot read pays per-file overhead — measured as
-        # the dominant cost of streaming admission commits.  With it,
-        # exactly ``write_files_per_partition`` files per affected
-        # partition per version: the default 1 serializes a giant
-        # partition into one task, so raise it to restore write
-        # parallelism (a deterministic key-hash salt — the
-        # export_training_shards decoupling — splits each partition
-        # across that many tasks/files).
+        # subsequent snapshot read pays per-file overhead.  With it,
+        # exactly one file per affected partition per version.
         lay_col = manifest.get("layout_col")
         roll = None
         intent_roll = None
@@ -408,19 +401,6 @@ def upsert_versioned(
                 # recorded crossover floor keeps that derivation from
                 # pinning sub-row-group files (ADVICE r12)
                 min_file_rows=manifest.get("layout_floor"),
-            )
-        elif write_files_per_partition > 1:
-            salt = F.pmod(
-                F.abs(F.hash(*[F.col(k) for k in keys])),
-                F.lit(write_files_per_partition),
-            )
-            # explicit numPartitions: AQE would otherwise coalesce the
-            # salted shuffle back into few tasks, collapsing the salt
-            n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            merged = merged.repartition(
-                max(n_part, write_files_per_partition),
-                F.col(partition_col),
-                salt,
             )
         else:
             merged = merged.repartition(F.col(partition_col))
@@ -524,11 +504,9 @@ def _apply_layout(
     exceeds ``layout_files`` by more than ``LAYOUT_GROWTH_CAP``.
 
     Scale note: the sort serializes each partition through one task —
-    the same per-partition write shape as the default
-    ``repartition(partition_col)`` path (and the reason
-    ``write_files_per_partition`` exists for giant unlayouted
-    partitions); layout tables are probe artifacts whose partitions
-    are bucket-sized by construction."""
+    the same per-partition write shape as the unlayouted
+    ``repartition(partition_col)`` path; layout tables are probe
+    artifacts whose partitions are bucket-sized by construction."""
     if layout_col is None:
         return df.repartition(F.col(partition_col)), None, None
     if roll is None:
@@ -869,15 +847,15 @@ def compact(
     spark: SparkSession,
     path: str,
     partition_col: str,
-    max_files_per_partition: int = 1,
 ) -> int | None:
-    """OPTIMIZE: rewrite partitions whose current dir holds more than
-    ``max_files_per_partition`` parquet files into one new version with
-    consolidated files; commit atomically via the manifest swap.
+    """OPTIMIZE: rewrite partitions whose current dir holds more
+    parquet files than intended into one new version with consolidated
+    files; commit atomically via the manifest swap.
 
-    Streaming upserts (``upsert_stream(versioned=True)``) commit one
-    version per micro-batch, so a hot partition accumulates one small
-    file per batch — the classic small-file problem.  Compaction is
+    A partition's current dir can hold more files than the table
+    intends (a rewrite under a stale layout roll, a session
+    ``maxRecordsPerFile`` split) — the classic small-file problem.
+    Compaction is
     pure layout: the committed snapshot's ROWS are untouched (asserted
     by the round-trip test), historical manifests keep pointing at the
     old immutable dirs, so time travel and rollback still work, and
@@ -978,7 +956,7 @@ def compact(
             if lay_col is not None and roll_all
             else 1
         )
-        if n_files > max(max_files_per_partition, intended):
+        if n_files > intended:
             todo.append((value, rel))
     if not todo:
         # A re-derived roll (growth re-pin, or a legacy table's first
@@ -1049,95 +1027,6 @@ def compact(
     return new_version
 
 
-def fold_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_col: str,
-    base_value,
-    keep=None,
-) -> int | None:
-    """LSM-style level fold: merge many small partitions into ONE base
-    partition (re-keying ``partition_col`` to ``base_value``) as an
-    atomic new version.  This is the compaction shape :func:`compact`
-    cannot express — ``compact`` consolidates FILES within a partition,
-    but an append-shaped table partitioned by commit batch (the
-    admission stream's band/embedding side tables: one ``pb`` partition
-    per micro-batch, one file each) accumulates PARTITIONS, and every
-    reader scan pays one file + one listing per batch ever committed.
-    Folding is pure layout: the snapshot's rows are untouched except
-    for the partition key itself, old snapshots stay time-travelable
-    until vacuumed, and the fold rewrites only the selected partitions
-    plus the base (classic tiered-compaction write amplification —
-    at 100 TB, fold only levels past an age/size threshold via
-    ``keep`` instead of full folds).
-
-    ``keep``: optional predicate over the (string) partition value;
-    partitions where it returns True are left in place (e.g. the hot
-    tail of recent batches a replay could still target).  The base
-    partition, if present, is always folded (it is the fold target).
-    Returns the committed version, or None when fewer than two
-    partitions would fold.
-
-    Contract: fold is PURE LAYOUT — it never dedupes.  The caller must
-    guarantee its logical keys are unique ACROSS the folded partitions
-    (true for LSM batch-partitioned tables, where a key commits in
-    exactly one batch partition and is never rewritten); folding a
-    table that deliberately carries the same key in several partitions
-    would surface both rows under the base value.
-
-    Replay safety for the admission side tables: a replayed micro-batch
-    only re-commits side rows when its docs re-admit, and re-admission
-    is suppressed by the exact-twin screen once the corpus commit
-    landed — so rows can never be live in both the base and a replayed
-    ``pb`` partition (tests/test_pipelines.py exercises a fold
-    mid-stream)."""
-    manifest = read_manifest(path)
-    parts = manifest["partitions"]
-    base_str = str(base_value)
-    fold_vals = [
-        v
-        for v in sorted(parts)
-        if v == base_str or keep is None or not keep(v)
-    ]
-    if len(fold_vals) < 2:
-        return None
-    dtype = manifest.get("partition_dtype")
-    new_version = manifest["version"] + 1
-    with _reserved(path, new_version):  # before any data write
-        merged = _read_partition_dirs(
-            spark, path, partition_col, [parts[v] for v in fold_vals],
-            dtype=dtype,
-        )
-        merged = merged.withColumn(
-            partition_col,
-            F.lit(base_value).cast(dtype) if dtype else F.lit(base_value),
-        )
-        vdir = os.path.join(path, f"v={new_version}")
-        (
-            merged.repartition(F.col(partition_col))
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(vdir)
-        )
-        new_parts = {
-            v: rel for v, rel in parts.items() if v not in fold_vals
-        }
-        new_parts[base_str] = f"v={new_version}/{partition_col}={base_str}"
-        # layout-only commit — carry every non-structural manifest key
-        # forward, same contract as compact() (committed_at excluded:
-        # the fold re-keys the partition column, so an as-of read taken
-        # before the fold MUST NOT resolve to the folded snapshot)
-        new_manifest = {
-            k: v
-            for k, v in manifest.items()
-            if k not in ("version", "partitions", "committed_at")
-        }
-        new_manifest["version"] = new_version
-        new_manifest["partitions"] = new_parts
-        _commit_manifest(path, new_manifest)
-    return new_version
-
-
 def _partition_files(path: str, manifest: dict):
     """``(partition value, data file)`` for every file a reader of
     ``manifest``'s snapshot touches, in a stable order.  Spark's
@@ -1186,7 +1075,7 @@ def snapshot_files(path: str, version: int | None = None) -> list[str]:
     """The data files a snapshot's readers touch (the CURRENT one by
     default) — one entry per file across the manifest's partition dirs.
     A cheap read-cost proxy for compaction decisions and tests (files
-    touched before vs after a fold)."""
+    touched before vs after a compaction)."""
     return [f for _, f in _partition_files(path, read_manifest(path, version))]
 
 

@@ -84,6 +84,8 @@ def _assert_parity(eng, owner, state, traces):
 
 
 def test_served_search_matches_spark_path(spark, tmp_path):
+    # no search, mutation or maintenance call may write session conf
+    conf_before = dict(spark.conf.getAll)
     eng = facade.SortifyEngine(
         spark, SF_DIR, dim=16, embed="expr", doc_limit=60,
         index_root=str(tmp_path), owner_col="source",
@@ -127,6 +129,7 @@ def test_served_search_matches_spark_path(spark, tmp_path):
     }
     eng.release()
     assert not eng._snapshots
+    assert dict(spark.conf.getAll) == conf_before
 
 
 def test_served_ties_break_numeric_then_string(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Layering guard: engine modules never import registry modules.
 
-The serving engine (``facade``, ``search/*``, ``streaming/*``) depends
+The serving engine (``facade``, ``search/*``) depends
 only on library modules; the ``queries_*`` registry rows sit on top of
 it.  This walks the engine sources' ASTs (no Spark, no imports
 executed) and fails on any ``sortify_spark.queries_*`` import, at
@@ -14,7 +14,7 @@ from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "sortify_spark"
 ENGINE_FILES = sorted(
-    [PKG / "facade.py", *PKG.glob("search/*.py"), *PKG.glob("streaming/*.py")]
+    [PKG / "facade.py", *PKG.glob("search/*.py")]
 )
 
 
@@ -43,7 +43,7 @@ def _registry_imports(path: Path) -> list[str]:
 
 def test_engine_modules_do_not_import_registry():
     names = {p.relative_to(PKG).as_posix() for p in ENGINE_FILES}
-    assert {"facade.py", "search/lexical.py", "streaming/pipeline.py"} <= names
+    assert {"facade.py", "search/lexical.py", "search/serving.py"} <= names
     bad = {
         p.relative_to(PKG).as_posix(): hits
         for p in ENGINE_FILES

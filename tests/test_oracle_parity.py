@@ -17,12 +17,10 @@ from tests.oracle_utils import assert_parity
 #: own CORRECTNESS gate independently re-checks every oracle query at
 #: sf0.01 regardless of pytest markers.
 SLOW_CASES = {
-    "admission_replay",
     "bm25_index_probe",
     "bpe_token_stats",
     "cluster_per_owner_dbscan",
     "knn_ivf_floored",
-    "streaming_sessions",
     "suite_ann_dense",
     "suite_cluster_metrics",
     "suite_curation_dedup",
@@ -31,8 +29,6 @@ SLOW_CASES = {
     "suite_index_lifecycle",
     "suite_relational",
     "suite_scalar_aggs",
-    "suite_streaming",
-    "vectorize_replay",
 }
 
 CASES = [

@@ -8,8 +8,6 @@ and the files read shrink to the matching partitions only.
 
 from __future__ import annotations
 
-import pytest
-
 import tempfile
 
 import pyspark.sql.functions as F
@@ -46,48 +44,3 @@ def test_date_partition_pruning(spark):
         ).distinct().count()
         assert files_read < total_files
         assert q.count() == part.filter(F.col("day") == one_day).count()
-
-
-@pytest.mark.slow
-def test_lsh_bucket_partition_pruning(spark):
-    """SCALE.md claims the facade LSH probe becomes PARTITION PRUNING
-    when the vector index is stored partitioned by bucket key: the
-    multi-probe key set reaches the scan as a partition filter and the
-    files read shrink to the probed buckets only."""
-    from sortify_spark.pipelines import ingest_vectorize_expr
-    from sortify_spark.search.knn import (
-        embedding_mean,
-        lsh_portable_key_centered,
-    )
-    from sortify_spark.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    vec = ingest_vectorize_expr(docs, dim=16).filter(
-        F.col("vtype") == "summary"
-    )
-    center = embedding_mean(vec)
-    keyed = vec.crossJoin(F.broadcast(center)).withColumn(
-        "lsh_bucket", lsh_portable_key_centered("embedding", "c", 4)
-    ).drop("c")
-    with tempfile.TemporaryDirectory() as tmp:
-        keyed.write.mode("overwrite").partitionBy("lsh_bucket").parquet(
-            f"{tmp}/vec_by_bucket"
-        )
-        part = spark.read.parquet(f"{tmp}/vec_by_bucket")
-        n_buckets = part.select("lsh_bucket").distinct().count()
-        assert n_buckets > 2  # pruning needs multiple partitions
-
-        # a multi-probe set: some bucket + its one-bit flips
-        probe = [3, 2, 1, 7, 11]
-        q = part.filter(F.col("lsh_bucket").isin(probe))
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters: [" in plan and "lsh_bucket" in plan.split(
-            "PartitionFilters"
-        )[1][:250]
-        files_read = q.select(
-            F.input_file_name().alias("f")
-        ).distinct().count()
-        total_files = part.select(
-            F.input_file_name().alias("f")
-        ).distinct().count()
-        assert files_read < total_files

@@ -1,9 +1,8 @@
-"""Write-path, streaming, query-spec, multimodal, and facade tests."""
+"""Write-path, query-spec, multimodal, and facade tests."""
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 import pytest
@@ -56,21 +55,6 @@ def test_delete_and_refresh(spark, docs):
     )
 
 
-def test_vectorize_stream_matches_batch(spark, docs):
-    """ST1: availableNow streaming run produces exactly the batch rows."""
-    from sortify_spark.streaming.pipeline import vectorize_stream
-
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, outp, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
-        docs.limit(40).write.parquet(inp)
-        q = vectorize_stream(spark, inp, outp, ckpt, dim=8)
-        q.awaitTermination(120)
-        got = spark.read.parquet(outp)
-        want = ingest_vectorize(spark.read.parquet(inp), dim=8)
-        assert got.count() == want.count()
-        assert set(got.columns) == set(want.columns)
-
-
 def _wait_until(pred, timeout_s: float = 90.0, poll_s: float = 0.5):
     """Poll ``pred`` until truthy or timeout; return its last value."""
     import time
@@ -81,192 +65,6 @@ def _wait_until(pred, timeout_s: float = 90.0, poll_s: float = 0.5):
         time.sleep(poll_s)
         val = pred()
     return val
-
-
-def test_vectorize_stream_live_trigger_incremental(spark, docs):
-    """ST1 under a LIVE processingTime trigger with maxFilesPerTrigger=1:
-    files fed incrementally while the query runs, processed across
-    multiple micro-batches, output exactly-once (VERDICT r3 item 5)."""
-    from sortify_spark.streaming.pipeline import vectorize_stream
-
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, outp, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
-        b1 = docs.filter(F.col("doc_id") < 30)
-        b2 = docs.filter((F.col("doc_id") >= 30) & (F.col("doc_id") < 45))
-        b3 = docs.filter((F.col("doc_id") >= 45) & (F.col("doc_id") < 60))
-        b1.write.mode("append").parquet(inp)
-        q = vectorize_stream(
-            spark,
-            inp,
-            outp,
-            ckpt,
-            dim=8,
-            available_now=False,
-            processing_time="500 milliseconds",
-            max_files_per_trigger=1,
-        )
-        try:
-
-            def docs_out():
-                try:
-                    got = spark.read.parquet(outp)
-                    return got.select("document_id").distinct().count()
-                except Exception:
-                    return 0
-
-            assert _wait_until(lambda: docs_out() >= 30), docs_out()
-            # feed two more files while the query is live
-            b2.write.mode("append").parquet(inp)
-            assert _wait_until(lambda: docs_out() >= 45), docs_out()
-            b3.write.mode("append").parquet(inp)
-            assert _wait_until(lambda: docs_out() >= 60), docs_out()
-            # multiple micro-batches actually committed
-            progressed = _wait_until(
-                lambda: [
-                    p
-                    for p in q.recentProgress
-                    if p is not None and p["numInputRows"] > 0
-                ]
-            )
-            assert len(progressed) >= 2, "expected >1 non-empty micro-batch"
-        finally:
-            q.stop()
-        got = spark.read.parquet(outp)
-        want = ingest_vectorize(spark.read.parquet(inp), dim=8)
-        # exactly-once: same rows as one batch run, no duplicate vectors
-        assert got.count() == want.count()
-        assert got.select("vector_id").distinct().count() == got.count()
-
-
-def test_daily_trend_stream_matches_batch(spark, tmp_path):
-    from sortify_spark.streaming.pipeline import run_daily_trend_stream
-
-    events = load_table(spark, SF_DIR, "events")
-    inp, ckpt = f"{tmp_path}/in", f"{tmp_path}/ckpt"
-    events.write.parquet(inp)
-    q = run_daily_trend_stream(spark, inp, ckpt, out_table="dts_test")
-    q.awaitTermination(120)
-    got = {
-        r["day"]: (r["cnt"], r["avg_value"])
-        for r in spark.sql("SELECT * FROM dts_test").collect()
-    }
-    from sortify_spark.operators.aggregates import daily_trend
-
-    want = {
-        r["day"]: (r["cnt"], r["avg_value"])
-        for r in daily_trend(events, "ts", "value").collect()
-    }
-    assert got == want
-
-
-@pytest.mark.slow
-def test_daily_trend_stream_drops_late_data(spark, tmp_path):
-    """Watermark late-data semantics hash-style-checked against the
-    batch oracle (VERDICT r3 item 6): a row planted BEHIND the watermark
-    (its day-window already finalized) is dropped; every kept row's
-    window matches the batch aggregation over the on-time events."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from sortify_spark.operators.aggregates import daily_trend
-    from sortify_spark.streaming.pipeline import run_daily_trend_stream
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-    def ev(eid, day, hour, value):
-        return (
-            eid,
-            dt.datetime(2026, 3, day, hour, 0, 0),
-            1,
-            "view",
-            float(value),
-            "{}",
-        )
-
-    b1 = [ev(1, 1, 10, 10.0), ev(2, 1, 11, 30.0)]  # day 1, on time
-    b2 = [ev(3, 2, 12, 7.0)]  # day 2 → watermark passes day-1 window end
-    late = ev(99, 1, 8, 1000.0)  # day 1, behind the watermark → dropped
-    b3 = [late, ev(4, 3, 9, 5.0)]
-    b4 = [ev(5, 4, 6, 2.0)]  # advances watermark past day-2 window
-    b5 = [ev(6, 5, 6, 4.0)]  # advances watermark past day-3 window
-
-    inp, ckpt = f"{tmp_path}/in", f"{tmp_path}/ckpt"
-
-    def feed(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(inp)
-
-    feed(b1)
-    q = run_daily_trend_stream(
-        spark,
-        inp,
-        ckpt,
-        out_table="dts_late_test",
-        output_mode="append",
-        max_files_per_trigger=1,
-        processing_time="500 milliseconds",
-        watermark="1 hour",
-    )
-    try:
-
-        def emitted():
-            return {
-                r["day"]: (r["cnt"], r["avg_value"])
-                for r in spark.sql(
-                    "SELECT * FROM dts_late_test"
-                ).collect()
-            }
-
-        def rows_consumed():
-            return sum(
-                p["numInputRows"]
-                for p in q.recentProgress
-                if p is not None
-            )
-
-        # serialize feeds on consumed-row progress so micro-batch
-        # order (which decides the watermark each batch sees) is
-        # deterministic even under file-mtime ties
-        assert _wait_until(lambda: rows_consumed() >= 2)
-        feed(b2)
-        assert _wait_until(lambda: rows_consumed() >= 3)
-        feed(b3)
-        assert _wait_until(lambda: "2026-03-01" in emitted())
-        feed(b4)
-        assert _wait_until(lambda: "2026-03-02" in emitted())
-        feed(b5)
-        assert _wait_until(lambda: "2026-03-03" in emitted())
-        got = emitted()
-    finally:
-        # a stopped query can still be finishing state-store writes;
-        # wait for it so nothing writes into the directory afterwards
-        q.stop()
-        q.awaitTermination()
-
-    # batch oracle over the ON-TIME events only: the late row is absent
-    on_time = [r for r in b1 + b2 + b3 + b4 + b5 if r[0] != 99]
-    batch = {
-        r["day"]: (r["cnt"], r["avg_value"])
-        for r in daily_trend(
-            spark.createDataFrame(on_time, schema), "ts", "value"
-        ).collect()
-    }
-    for day in ("2026-03-01", "2026-03-02", "2026-03-03"):
-        assert got[day] == batch[day], (day, got.get(day), batch.get(day))
-    # the planted late row did NOT make it into day 1 (it would have
-    # shifted both cnt and avg)
-    assert got["2026-03-01"] == (2, 20.0)
 
 
 def test_query_spec_compile(spark, docs):
@@ -648,35 +446,6 @@ def test_facade_serves_from_persisted_ivf_index(spark, tmp_path):
     assert all(int(r["id"]) % 2 == 0 for r in current)
 
 
-def test_upsert_stream_merges_and_survives_restart(spark, docs):
-    """Two availableNow runs over a growing input dir: the second batch
-    updates half the first batch's keys and adds new ones; the table
-    must converge to one row per key with latest values."""
-    from sortify_spark.streaming.pipeline import upsert_stream
-
-    tmp = tempfile.mkdtemp(prefix="sortify_upstream_")
-    base = docs.select("doc_id", "text", "lang", "source", "n_chars")
-    v1 = base.filter(F.col("doc_id") < 10)
-    v1.coalesce(1).write.mode("append").parquet(f"{tmp}/in")
-    q = upsert_stream(spark, f"{tmp}/in", f"{tmp}/table", f"{tmp}/ckpt")
-    q.awaitTermination(120)
-    t1 = spark.read.parquet(f"{tmp}/table")
-    assert t1.count() == v1.count()
-
-    v2 = (
-        base.filter((F.col("doc_id") >= 5) & (F.col("doc_id") < 15))
-        .withColumn("text", F.concat(F.lit("v2 "), F.col("text")))
-    )
-    v2.coalesce(1).write.mode("append").parquet(f"{tmp}/in")
-    # New query object, same checkpoint — the restart path.
-    q = upsert_stream(spark, f"{tmp}/in", f"{tmp}/table", f"{tmp}/ckpt")
-    q.awaitTermination(120)
-    t2 = spark.read.parquet(f"{tmp}/table")
-    assert t2.count() == 15  # 0-14, one row per key
-    assert t2.filter(F.col("doc_id") == 7).first().text.startswith("v2 ")
-    assert not t2.filter(F.col("doc_id") == 2).first().text.startswith("v2 ")
-
-
 def test_fit_dims_contract():
     from sortify_spark.multimodal import fit_dims
 
@@ -707,859 +476,6 @@ def test_audio_windows_empty_and_cap(spark):
     assert "a0" not in by_id and "a2" not in by_id and "v0" not in by_id
     assert len(by_id["a1"]) == 12  # capped
     assert by_id["a1"][0]["samples_per_window"] == 4000
-
-
-def test_vectorize_stream_expr_mode_matches_batch(spark, docs):
-    """embed_mode='expr': the zero-Python ingest plan under streaming
-    produces BIT-IDENTICAL vectors to the batch ingest_vectorize_expr
-    run (deterministic md5 encoder, same code path)."""
-    from sortify_spark.pipelines import ingest_vectorize_expr
-    from sortify_spark.streaming.pipeline import vectorize_stream
-
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, outp, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
-        docs.filter(F.col("doc_id") < 40).write.parquet(inp)
-        q = vectorize_stream(spark, inp, outp, ckpt, dim=8, embed_mode="expr")
-        q.awaitTermination(120)
-        got = {
-            r["vector_id"]: (r["chunk_text"], list(r["embedding"]))
-            for r in spark.read.parquet(outp).collect()
-        }
-        want = {
-            r["vector_id"]: (r["chunk_text"], list(r["embedding"]))
-            for r in ingest_vectorize_expr(
-                spark.read.parquet(inp), dim=8
-            ).collect()
-        }
-        assert got == want
-
-
-def test_upsert_stream_versioned_snapshots(spark, docs):
-    """versioned=True: each micro-batch commits through the manifest
-    swap — final content equals the keyed merge, and the pre-batch
-    snapshot remains time-travelable."""
-    from sortify_spark.sources.versioned import read_manifest, read_versioned
-    from sortify_spark.streaming.pipeline import upsert_stream
-
-    base = docs.filter(F.col("doc_id") < 20).select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    update = base.filter(F.col("doc_id") < 5).withColumn(
-        "n_chars", F.col("n_chars") + 1000
-    )
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, table, ckpt = f"{tmp}/in", f"{tmp}/table", f"{tmp}/ckpt"
-        base.coalesce(1).write.mode("append").parquet(inp)
-        q = upsert_stream(
-            spark, inp, table, ckpt, keys=("doc_id",),
-            partition_cols=("source",), versioned=True,
-        )
-        q.awaitTermination(120)
-        update.coalesce(1).write.mode("append").parquet(inp)
-        q = upsert_stream(
-            spark, inp, table, f"{tmp}/ckpt", keys=("doc_id",),
-            partition_cols=("source",), versioned=True,
-        )
-        q.awaitTermination(120)
-        latest_version = read_manifest(table)["version"]
-        assert latest_version >= 2
-        now = read_versioned(spark, table, "source")
-        assert now.count() == 20
-        assert (
-            now.filter(
-                (F.col("doc_id") < 5) & (F.col("n_chars") < 1000)
-            ).count()
-            == 0
-        )
-        # the first batch's snapshot is still readable as-committed
-        first = read_versioned(spark, table, "source", version=1)
-        assert first.filter(F.col("n_chars") >= 1000).count() == 0
-
-
-@pytest.mark.slow
-def test_admission_stream_dedups_against_corpus(spark):
-    """Streaming corpus admission: micro-batches are screened against
-    the standing versioned corpus — exact twins and verified LSH
-    near-dups rejected, in-batch exact dups collapsed to the min-id
-    representative — and admitted docs commit atomically.  A replayed
-    file is fully suppressed (convergence under at-least-once)."""
-    from sortify_spark.sources.versioned import read_manifest, read_versioned
-    from sortify_spark.streaming.pipeline import admission_stream
-
-    base_text = (
-        "the quick brown fox jumps over the lazy dog and runs far away "
-        "into the deep green forest tonight"
-    )
-    other = (
-        "completely different content about spark streaming pipelines "
-        "and atomic manifest commits for parquet tables"
-    )
-
-    def feed(rows, inp):
-        spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string, n_chars long"
-        ).coalesce(1).write.mode("append").parquet(inp)
-
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, table = f"{tmp}/in", f"{tmp}/table"
-
-        def run(ckpt):
-            q = admission_stream(spark, inp, table, f"{tmp}/{ckpt}")
-            q.awaitTermination(120)
-
-        # batch 1: two distinct docs + one in-batch exact dup of doc 1
-        feed(
-            [
-                (1, base_text, "en", "web", 99),
-                (2, other, "en", "web", 99),
-                (3, base_text, "en", "web", 99),  # in-batch dup → drop
-            ],
-            inp,
-        )
-        run("c1")
-        got1 = {r["doc_id"] for r in read_versioned(spark, table, "source").collect()}
-        assert got1 == {1, 2}
-
-        # batch 2: exact twin of corpus doc (drop), near-dup of corpus
-        # doc (one word changed → high Jaccard, drop), genuinely new doc
-        feed(
-            [
-                (10, base_text, "en", "web", 99),  # exact twin → drop
-                (11, base_text.replace("tonight", "today"), "en", "web", 99),
-                (12, "some entirely novel text with many fresh tokens "
-                     "never seen before in this corpus at all", "en",
-                 "mail", 99),
-            ],
-            inp,
-        )
-        run("c2")
-        now = read_versioned(spark, table, "source")
-        got2 = {r["doc_id"] for r in now.collect()}
-        assert got2 == {1, 2, 12}
-        # partition layout: admitted doc went to its own partition
-        assert set(read_manifest(table)["partitions"]) == {"web", "mail"}
-
-        # replay batch 2 with a FRESH checkpoint (simulated redelivery):
-        # everything suppressed, corpus unchanged
-        v_before = read_manifest(table)["version"]
-        run("c3")
-        assert {
-            r["doc_id"] for r in read_versioned(spark, table, "source").collect()
-        } == {1, 2, 12}
-        # replay admitted nothing (versions may advance only for
-        # batches that had no survivors — content is what converges)
-        assert read_versioned(spark, table, "source").count() == 3
-        assert read_manifest(table)["version"] >= v_before
-
-
-def test_upsert_stream_auto_compaction(spark, docs):
-    """compact_files_over: streaming commits that fragment a partition
-    trigger an in-stream atomic compaction — file count bounded, rows
-    identical, historical snapshots still readable."""
-    import glob
-
-    from sortify_spark.sources.versioned import read_manifest, read_versioned
-    from sortify_spark.streaming.pipeline import upsert_stream
-
-    base = docs.filter(F.col("doc_id") < 30).select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, table = f"{tmp}/in", f"{tmp}/table"
-        # 3 deliveries, each written fragmented (4 files per batch)
-        for i, lo in enumerate((0, 10, 20)):
-            batch = base.filter(
-                (F.col("doc_id") >= lo) & (F.col("doc_id") < lo + 10)
-            ).repartition(4)
-            batch.write.mode("append").parquet(inp)
-            q = upsert_stream(
-                spark, inp, table, f"{tmp}/ckpt{i}", keys=("doc_id",),
-                partition_cols=("source",), versioned=True,
-                compact_files_over=2,
-            )
-            q.awaitTermination(120)
-        m = read_manifest(table)
-        for rel in m["partitions"].values():
-            n_files = len(glob.glob(f"{table}/{rel}/*.parquet"))
-            assert n_files <= 2, (rel, n_files)
-        now = read_versioned(spark, table, "source")
-        assert now.count() == 30
-        # compaction never forked content: latest snapshot equals the
-        # plain keyed merge of all deliveries
-        assert {r["doc_id"] for r in now.collect()} == set(range(30))
-
-
-@pytest.mark.slow
-def test_rollup_stream_incremental_late_data_exactly_once(spark):
-    """Continuous aggregate: per-(day, batch_id) partials folded at read
-    time equal the batch aggregate over everything fed, late rows for
-    old days are incorporated (not dropped), and a restart on the same
-    checkpoint with no new input changes nothing."""
-    import datetime as dt
-
-    from sortify_spark.streaming.pipeline import read_rollup, rollup_stream
-
-    def ev(eid, day, hour, val):
-        return (
-            eid,
-            dt.datetime(2026, 3, day, hour, 0, 0),
-            eid % 7,
-            "view",
-            float(val),
-            "{}",
-        )
-
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    fed = []
-
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, table, ckpt = f"{tmp}/in", f"{tmp}/rollup", f"{tmp}/ckpt"
-
-        def feed_and_run(rows):
-            fed.extend(rows)
-            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-                "append"
-            ).parquet(inp)
-            rollup_stream(spark, inp, table, ckpt).awaitTermination(120)
-
-        feed_and_run([ev(1, 1, 9, 10.0), ev(2, 1, 10, 20.0), ev(3, 2, 9, 5.0)])
-        feed_and_run([ev(4, 2, 11, 7.0), ev(5, 3, 9, 1.0)])
-        # LATE: day 1 rows arriving two batches later — still merged
-        feed_and_run([ev(6, 1, 23, 30.0)])
-
-        def folded():
-            return {
-                r["day"]: (r["cnt"], r["avg_value"])
-                for r in read_rollup(spark, table).collect()
-            }
-
-        got = folded()
-        want = {
-            r["day"]: (r["cnt"], r["avg_value"])
-            for r in spark.createDataFrame(fed, schema)
-            .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.round(
-                    F.sum(F.col("value").cast("decimal(38,10)")).cast(
-                        "double"
-                    )
-                    / F.count(F.lit(1)),
-                    4,
-                ).alias("avg_value"),
-            )
-            .collect()
-        }
-        assert got == want
-        assert got["2026-03-01"][0] == 3  # late row landed in day 1
-
-        # restart on the same checkpoint, no new files: nothing replays,
-        # nothing double-counts
-        rollup_stream(spark, inp, table, ckpt).awaitTermination(120)
-        assert folded() == want
-
-
-@pytest.mark.slow
-def test_admission_stream_semantic_screen(spark):
-    """The optional semantic screen rejects a token PERMUTATION of a
-    corpus doc — different fingerprint, different shingles (the exact
-    and LSH screens both pass it), but a near-identical bag embedding
-    (dot ≈ 1.0 ≥ τ).  A genuinely different doc still admits, and a
-    replayed permutation stays rejected (convergence)."""
-    from sortify_spark.sources.versioned import read_versioned
-    from sortify_spark.streaming.pipeline import admission_stream
-
-    base_text = (
-        "the quick brown fox jumps over the lazy dog and runs far away "
-        "into the deep green forest tonight"
-    )
-    permuted = " ".join(reversed(base_text.split()))
-    assert permuted != base_text
-    fresh = (
-        "entirely new material discussing versioned parquet manifests "
-        "and streaming admission control for training corpora"
-    )
-
-    def feed(rows, inp):
-        spark.createDataFrame(
-            rows,
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long",
-        ).coalesce(1).write.mode("append").parquet(inp)
-
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, table = f"{tmp}/in", f"{tmp}/table"
-
-        def run(ckpt):
-            q = admission_stream(
-                spark, inp, table, f"{tmp}/{ckpt}", semantic_tau=0.995
-            )
-            q.awaitTermination(120)
-
-        feed([(1, base_text, "en", "web", 99)], inp)
-        run("c1")
-        feed(
-            [
-                (10, permuted, "en", "web", 99),  # semantic dup → drop
-                (11, fresh, "en", "mail", 99),  # admits
-            ],
-            inp,
-        )
-        run("c2")
-        got = {
-            r["doc_id"]
-            for r in read_versioned(spark, table, "source").collect()
-        }
-        assert got == {1, 11}
-        # replay batch 2 from a fresh checkpoint: still {1, 11}
-        run("c3")
-        got2 = {
-            r["doc_id"]
-            for r in read_versioned(spark, table, "source").collect()
-        }
-        assert got2 == {1, 11}
-
-
-@pytest.mark.slow
-def test_admission_stream_indexed_sides_and_crash_heal(spark):
-    """use_index=True: the corpus side of both near-dup screens reads
-    versioned side tables maintained by the admission commits; verify
-    tokens are computed only for band-join candidates.  Wiping the band
-    index (simulating a crash that lost the index commit) must not
-    change admission decisions — the next batch's catch-up rebuilds it."""
-    import shutil
-
-    from sortify_spark.sources.versioned import (
-        read_manifest,
-        read_versioned,
-    )
-    from sortify_spark.streaming.pipeline import admission_stream
-
-    base_text = (
-        "the quick brown fox jumps over the lazy dog and runs far away "
-        "into the deep green forest tonight"
-    )
-    permuted = " ".join(reversed(base_text.split()))
-    fresh = (
-        "entirely new material discussing versioned parquet manifests "
-        "and streaming admission control for training corpora"
-    )
-    fresh2 = (
-        "yet another unrelated document about window functions and "
-        "adaptive query execution in distributed engines"
-    )
-
-    def feed(rows, inp):
-        spark.createDataFrame(
-            rows,
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long",
-        ).coalesce(1).write.mode("append").parquet(inp)
-
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, table = f"{tmp}/in", f"{tmp}/table"
-
-        def run(ckpt):
-            q = admission_stream(
-                spark, inp, table, f"{tmp}/{ckpt}",
-                semantic_tau=0.995, use_index=True,
-            )
-            q.awaitTermination(120)
-
-        feed([(1, base_text, "en", "web", 99)], inp)
-        run("c1")
-        # the bootstrap trigger returns after the CORPUS commit and
-        # builds the sides in the background (VERDICT r8 #3) — join the
-        # deferred build before reading them
-        from sortify_spark.streaming.pipeline import drain_side_builds
-
-        drain_side_builds(table)
-        # index side tables exist and cover doc 1
-        bands = read_versioned(spark, table + "__bands", "pb")
-        embs = read_versioned(spark, table + "__emb", "pb")
-        assert {r["id"] for r in bands.collect()} == {1}
-        assert {r["id"] for r in embs.collect()} == {1}
-
-        # batch 2 screened BY THE INDEX: near-dup (shingle) + semantic
-        # dup (permutation) rejected, fresh doc admitted
-        feed(
-            [
-                (10, base_text.replace("tonight", "today"), "en", "web", 9),
-                (11, permuted, "en", "web", 99),
-                (12, fresh, "en", "mail", 99),
-                # 2 tokens < shingle_k: bandless by construction —
-                # admitted (no twin), indexed in __emb but NOT __bands,
-                # and must not re-enter the catch-up every batch
-                (13, "tiny doc", "en", "mail", 8),
-            ],
-            inp,
-        )
-        run("c2")
-        got = {
-            r["doc_id"]
-            for r in read_versioned(spark, table, "source").collect()
-        }
-        assert got == {1, 12, 13}
-        bands = read_versioned(spark, table + "__bands", "pb")
-        assert {r["id"] for r in bands.collect()} == {1, 12}
-
-        # crash simulation: lose BOTH index side tables entirely;
-        # decisions must be unchanged (each catch-up rebuilds before
-        # screening).  The emb side exercises the LSM-partitioned
-        # ("pb") catch-up commit — a catch-up that partitioned by "bk"
-        # would strip bk from the data files and crash the very next
-        # select (ADVICE r5 high).
-        shutil.rmtree(table + "__bands")
-        shutil.rmtree(table + "__emb")
-        assert not read_manifest(table + "__bands")["partitions"]
-        assert not read_manifest(table + "__emb")["partitions"]
-        feed(
-            [
-                (20, base_text.replace("forest", "meadow"), "en", "web", 9),
-                (21, fresh2, "en", "mail", 99),
-                # exact twin of the bandless doc: the exact-fingerprint
-                # screen (not the band index) must reject it
-                (22, "tiny doc", "en", "web", 8),
-            ],
-            inp,
-        )
-        run("c3")
-        got = {
-            r["doc_id"]
-            for r in read_versioned(spark, table, "source").collect()
-        }
-        assert got == {1, 12, 13, 21}
-        bands = read_versioned(spark, table + "__bands", "pb")
-        # the rebuilt index covers every SHINGLEABLE corpus doc; the
-        # bandless doc 13 is correctly absent (steady-state catch-up
-        # stays empty instead of rebuilding it forever)
-        assert {r["id"] for r in bands.collect()} == {1, 12, 21}
-        # the emb catch-up healed too, bk restored as a DATA column,
-        # covering EVERY corpus doc (bandless ones embed fine)
-        embs = read_versioned(spark, table + "__emb", "pb")
-        assert {r["id"] for r in embs.collect()} == {1, 12, 13, 21}
-        assert {"id", "e", "bk", "pb"} <= set(embs.columns)
-        assert embs.filter(F.col("bk").isNull()).count() == 0
-
-        # one more batch AFTER the heal: the healed side tables must
-        # serve (the bk=... partition-dir corruption only surfaced on
-        # the batch following the bad commit)
-        feed([(30, fresh2 + " with a tail", "en", "web", 9)], inp)
-        run("c4")
-        got = {
-            r["doc_id"]
-            for r in read_versioned(spark, table, "source").collect()
-        }
-        assert got == {1, 12, 13, 21}  # near-dup of 21 → rejected
-
-
-@pytest.mark.slow
-def test_admission_stream_maintains_lexical_index(spark):
-    """lexical_index=True: an admitted document is keyword-searchable
-    through the persisted BM25 artifact at trigger end, the artifact
-    survives a crash that loses it entirely (next trigger's reconcile
-    rebuilds), and after every trigger it is VALUE-IDENTICAL to a
-    batch build over the same corpus (VERDICT r8 #7 done-criteria)."""
-    from sortify_spark.search.lexical import (
-        build_lexical_index,
-        probe_lexical_index,
-    )
-    from sortify_spark.sources.versioned import read_versioned
-    from sortify_spark.streaming.pipeline import admission_stream
-
-    def feed(rows, inp):
-        spark.createDataFrame(
-            rows,
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long",
-        ).coalesce(1).write.mode("append").parquet(inp)
-
-    def probe_all(path, terms):
-        return [
-            (r["doc_id"], r["matched_terms"], r["bm25"])
-            for r in probe_lexical_index(
-                spark, path, terms, k=50
-            ).collect()
-        ]
-
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, table = f"{tmp}/in", f"{tmp}/table"
-        lex = table + "__lex"
-
-        def run(ckpt):
-            q = admission_stream(
-                spark, inp, table, f"{tmp}/{ckpt}", lexical_index=True
-            )
-            q.awaitTermination(120)
-
-        feed(
-            [
-                (1, "the quick brown fox jumps over the lazy dog "
-                    "tonight in the forest", "en", "web", 60),
-                (2, "spark streaming admission pipelines commit "
-                    "atomic manifests", "en", "web", 55),
-            ],
-            inp,
-        )
-        run("c1")
-        # keyword-searchable at trigger end
-        got = probe_all(lex, ("spark", "manifests"))
-        assert [d for d, _, _ in got] == [2]
-        # batch 2: a new doc + an exact twin (rejected, must NOT enter)
-        feed(
-            [
-                (10, "entirely fresh material about inverted index "
-                     "maintenance under streams", "en", "mail", 64),
-                (11, "spark streaming admission pipelines commit "
-                     "atomic manifests", "en", "web", 55),
-            ],
-            inp,
-        )
-        run("c2")
-        got = probe_all(lex, ("inverted", "maintenance"))
-        assert [d for d, _, _ in got] == [10]
-        # the streamed artifact == a batch build over the same corpus,
-        # score-for-score
-        corpus = read_versioned(spark, table, "source")
-        ref = f"{tmp}/ref_lex"
-        build_lexical_index(corpus.select("doc_id", "text"), ref)
-        for terms in (("spark", "manifests"), ("inverted", "the"),
-                      ("fox", "streams", "atomic")):
-            assert probe_all(lex, terms) == probe_all(ref, terms), terms
-        # crash: lose the whole artifact; the next trigger reconciles
-        # corpus-vs-doclen and rebuilds — even though it admits nothing
-        import shutil
-
-        shutil.rmtree(lex)
-        feed(
-            [(11, "spark streaming admission pipelines commit "
-                  "atomic manifests", "en", "web", 55)],
-            inp,
-        )
-        run("c3")
-        assert probe_all(lex, ("inverted", "maintenance")) == probe_all(
-            ref, ("inverted", "maintenance")
-        )
-        # REPLACED text: a re-delivered doc_id with NEW content passes
-        # the exact-twin screen and the keyed corpus upsert replaces
-        # the row — the (doc_id, fp) reconcile must re-index it
-        # (review r9: an id-presence reconcile served stale postings)
-        feed(
-            [(10, "replaced corpus body mentioning zymurgy overhaul",
-              "en", "mail", 48)],
-            inp,
-        )
-        run("c4")
-        got = probe_all(lex, ("zymurgy", "overhaul"))
-        assert [d for d, _, _ in got] == [10]
-        # old text's distinctive terms no longer match doc 10
-        assert all(
-            d != 10 for d, _, _ in probe_all(lex, ("inverted",))
-        )
-        # still value-identical to a batch build over the final corpus
-        corpus = read_versioned(spark, table, "source")
-        ref2 = f"{tmp}/ref_lex2"
-        build_lexical_index(corpus.select("doc_id", "text"), ref2)
-        for terms in (("zymurgy",), ("spark", "manifests"), ("the",)):
-            assert probe_all(lex, terms) == probe_all(ref2, terms), terms
-
-
-@pytest.mark.slow
-def test_admission_stream_degenerate_texts(spark):
-    """Empty and whitespace-only docs must flow through every screen
-    without crashing: they are bandless (no shingles) and zero-vector
-    embedded (semantic dot 0 < tau) — admitted once, exact-twin
-    rejected on redelivery, never re-entering the index catch-up."""
-    from sortify_spark.sources.versioned import read_versioned
-    from sortify_spark.streaming.pipeline import admission_stream
-
-    def feed(rows, inp):
-        spark.createDataFrame(
-            rows,
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long",
-        ).coalesce(1).write.mode("append").parquet(inp)
-
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, table = f"{tmp}/in", f"{tmp}/table"
-
-        def run(ckpt):
-            q = admission_stream(
-                spark, inp, table, f"{tmp}/{ckpt}",
-                semantic_tau=0.995, use_index=True,
-            )
-            q.awaitTermination(120)
-
-        feed(
-            [
-                (1, "", "en", "web", 0),
-                (2, "   ", "en", "web", 3),
-                (3, "the quick brown fox jumps over the lazy dog "
-                    "tonight in the forest", "en", "web", 60),
-            ],
-            inp,
-        )
-        run("c1")
-        got = {
-            r["doc_id"]
-            for r in read_versioned(spark, table, "source").collect()
-        }
-        # 1 and 2 share a fingerprint? "" vs "   " normalize to
-        # different strings ("" vs " ") -> both admitted
-        assert got == {1, 2, 3}
-        # redelivery of an empty doc: exact twin, rejected
-        feed([(10, "", "en", "mail", 0), (11, "fresh words entirely "
-              "different material about engines", "en", "mail", 40)], inp)
-        run("c2")
-        got2 = {
-            r["doc_id"]
-            for r in read_versioned(spark, table, "source").collect()
-        }
-        assert got2 == {1, 2, 3, 11}
-        # bandless docs never entered the band index
-        bands = read_versioned(spark, table + "__bands", "pb")
-        assert {r["id"] for r in bands.collect()} == {3, 11}
-
-
-@pytest.mark.slow
-def test_admission_replay_center_exists_empty_corpus(spark):
-    """Crash-replay regression (ADVICE r6 medium): a crash between
-    ``_write_center`` and the corpus commit leaves the semantic-center
-    file behind an EMPTY corpus table.  On replay with use_index=True
-    the screens never run (no corpus => ``be`` is None) and the center
-    already exists (skips the first-batch embed) — the commit section
-    must embed the admitted batch itself instead of crashing with
-    ``a_emb_raw=None`` on every restart."""
-    from sortify_spark.sources.versioned import read_versioned
-    from sortify_spark.streaming.pipeline import admission_stream
-
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, table = f"{tmp}/in", f"{tmp}/table"
-        # simulate the crash state: center committed, corpus empty
-        spark.createDataFrame(
-            [([0.1] * 8,)], "c: array<double>"
-        ).coalesce(1).write.parquet(table + "__emb_center")
-        spark.createDataFrame(
-            [
-                (
-                    1,
-                    "the quick brown fox jumps over the lazy dog "
-                    "tonight in the forest",
-                    "en",
-                    "web",
-                    60,
-                )
-            ],
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long",
-        ).coalesce(1).write.parquet(inp)
-        q = admission_stream(
-            spark, inp, table, f"{tmp}/c1",
-            semantic_tau=0.995, use_index=True,
-        )
-        q.awaitTermination(120)
-        got = {
-            r["doc_id"]
-            for r in read_versioned(spark, table, "source").collect()
-        }
-        assert got == {1}
-        # bootstrap side build is deferred (VERDICT r8 #3) — join it
-        from sortify_spark.streaming.pipeline import drain_side_builds
-
-        drain_side_builds(table)
-        # the emb side table committed from the re-embedded batch
-        assert read_versioned(spark, table + "__emb", "pb").count() >= 1
-
-
-@pytest.mark.slow
-def test_admission_sides_fold_mid_stream(spark):
-    """Long-stream LSM maintenance (VERDICT r5 item 7): the band and
-    embedding side tables accumulate one `pb` partition per micro-batch;
-    folding them into a base level mid-stream must not change admission
-    decisions, must not re-trigger the self-heal catch-up (folded ids
-    still cover the corpus), and must cut the files a reader touches."""
-    from sortify_spark.sources.versioned import (
-        fold_partitions,
-        read_manifest,
-        read_versioned,
-        snapshot_files,
-    )
-    from sortify_spark.streaming.pipeline import admission_stream
-
-    texts = [
-        "the quick brown fox jumps over the lazy dog tonight in the "
-        "deep forest while owls watch silently from above",
-        "streaming admission control for large training corpora uses "
-        "versioned manifests and banded minhash candidate joins",
-        "window functions and adaptive execution reshape distributed "
-        "query plans at runtime with skew aware partitioning",
-        "tokenizer vocabularies emerge from byte pair merges over a "
-        "single distilled word frequency table each round",
-        "columnar layouts with zone maps prune row groups before any "
-        "decompression touches the scan pipeline at all",
-        "embedding quantization trades recall for memory through "
-        "product codebooks trained on sampled residual vectors",
-        "document fingerprints from rolling hashes support winnowing "
-        "selection of positions shared across revisions",
-        "late arriving events fall out of watermarked windows and "
-        "land in a dead letter relation for replay later",
-    ]
-
-    def feed(rows, inp):
-        spark.createDataFrame(
-            rows,
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long",
-        ).coalesce(1).write.mode("append").parquet(inp)
-
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, table = f"{tmp}/in", f"{tmp}/table"
-        bands, emb = table + "__bands", table + "__emb"
-
-        def run():
-            q = admission_stream(
-                spark, inp, table, f"{tmp}/ck",
-                semantic_tau=0.995, use_index=True,
-            )
-            q.awaitTermination(180)
-
-        # 4 micro-batches, 2 fresh docs each (same checkpoint: each
-        # run processes only its own new file)
-        for b in range(4):
-            feed(
-                [
-                    (b * 10 + j, texts[b * 2 + j], "en", "web", 99)
-                    for j in range(2)
-                ],
-                inp,
-            )
-            run()
-        admitted = {
-            r["doc_id"]
-            for r in read_versioned(spark, table, "source").collect()
-        }
-        assert len(admitted) == 8
-        band_ids = {
-            r["id"] for r in read_versioned(spark, bands, "pb").collect()
-        }
-        emb_ids = {
-            r["id"] for r in read_versioned(spark, emb, "pb").collect()
-        }
-        assert emb_ids == admitted
-        files_before = len(snapshot_files(bands)) + len(
-            snapshot_files(emb)
-        )
-        assert len(read_manifest(bands)["partitions"]) >= 4
-        # mid-stream fold: both side tables into base level -1
-        assert fold_partitions(spark, bands, "pb", -1) is not None
-        assert fold_partitions(spark, emb, "pb", -1) is not None
-        files_after = len(snapshot_files(bands)) + len(
-            snapshot_files(emb)
-        )
-        assert files_after == 2 < files_before
-        assert {
-            r["id"] for r in read_versioned(spark, bands, "pb").collect()
-        } == band_ids
-        assert {
-            r["id"] for r in read_versioned(spark, emb, "pb").collect()
-        } == emb_ids
-        # batch 5: a semantic near-dup (permutation of doc 0), an exact
-        # dup of doc 1, and one genuinely fresh doc
-        feed(
-            [
-                (100, " ".join(reversed(texts[0].split())), "en", "web", 99),
-                (101, texts[1], "en", "web", 99),
-                (102, "entirely novel content about atomic manifest "
-                      "swaps protecting concurrent snapshot readers",
-                 "en", "mail", 99),
-            ],
-            inp,
-        )
-        run()
-        got = {
-            r["doc_id"]
-            for r in read_versioned(spark, table, "source").collect()
-        }
-        assert got == admitted | {102}
-        # catch-up stayed empty: the only partitions now are the base
-        # and the new batch's own commit, and that commit carries ONLY
-        # the fresh doc — folded ids were not re-banded
-        for side in (bands, emb):
-            parts = set(read_manifest(side)["partitions"])
-            assert "-1" in parts and len(parts) == 2
-            hot = (parts - {"-1"}).pop()
-            hot_ids = {
-                r["id"]
-                for r in read_versioned(spark, side, "pb")
-                .filter(F.col("pb") == int(hot))
-                .collect()
-            }
-            assert hot_ids == {102}, side
-
-
-@pytest.mark.slow
-def test_admission_auto_fold_bounds_side_partitions(spark):
-    """fold_sides_over=2: a long stream keeps each side table at
-    <= base + hot-tail partitions automatically, and admission
-    decisions are unaffected (an exact dup and a fresh doc behave
-    identically to the unfolded stream)."""
-    from sortify_spark.sources.versioned import (
-        read_manifest,
-        read_versioned,
-    )
-    from sortify_spark.streaming.pipeline import admission_stream
-
-    frag = [
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa",
-        "lambda mu nu xi omicron pi rho sigma tau upsilon",
-        "one two three four five six seven eight nine ten",
-        "red orange yellow green blue indigo violet magenta cyan teal",
-        "north south east west up down left right front back",
-    ]
-
-    def feed(rows, inp):
-        spark.createDataFrame(
-            rows,
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long",
-        ).coalesce(1).write.mode("append").parquet(inp)
-
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, table = f"{tmp}/in", f"{tmp}/table"
-
-        def run():
-            q = admission_stream(
-                spark, inp, table, f"{tmp}/ck",
-                semantic_tau=0.995, use_index=True,
-                fold_sides_over=2,
-            )
-            q.awaitTermination(180)
-
-        for b in range(5):
-            feed([(b, frag[b], "en", "web", 50)], inp)
-            run()
-        for side in ("__bands", "__emb"):
-            parts = set(read_manifest(table + side)["partitions"])
-            assert len(parts) <= 3, (side, parts)
-            assert "-1" in parts
-        # dup of doc 0 still rejected, fresh doc admits
-        feed(
-            [
-                (100, frag[0], "en", "web", 50),
-                (101, "completely different closing words about folds",
-                 "en", "web", 48),
-            ],
-            inp,
-        )
-        run()
-        got = {
-            r["doc_id"]
-            for r in read_versioned(spark, table, "source").collect()
-        }
-        assert got == {0, 1, 2, 3, 4, 101}
 
 
 @pytest.mark.slow
@@ -2055,8 +971,8 @@ def test_ivf_batched_probe_matches_single(spark, tmp_path):
 def test_lexical_upsert_heals_orphaned_partial_commit(spark, tmp_path):
     """Crash INSIDE upsert_lexical_index (postings + doclen committed,
     terms ANCHOR not): probes keep serving the pre-crash snapshot, and
-    RE-RUNNING the upsert for the affected doc (what the streaming
-    reconcile's anchor-pinned drift check issues — review r9) heals
+    RE-RUNNING the upsert for the affected doc (what an anchor-pinned
+    drift check issues — review r9) heals
     the artifact to value-identity with a from-scratch rebuild; the
     orphaned newer versions are absorbed by the keyed merges."""
     from sortify_spark.search.lexical import (
@@ -2246,108 +1162,6 @@ def test_delete_from_ivf_index_unit(spark, tmp_path):
         spark.createDataFrame([("nope",)], "vec_id string"), path
     )
     assert v3 == v2
-
-
-def test_vectorize_stream_maintains_ivf_index(spark, docs, tmp_path):
-    """ST1 + online ANN maintenance: the vectorize stream builds the
-    persisted IVF artifact on its first micro-batch and incrementally
-    upserts later batches (stored quantizer unchanged) — every streamed
-    vector indexed exactly once and probe-able."""
-    from sortify_spark.search.index import probe_ivf_index
-    from sortify_spark.sources.versioned import (
-        read_manifest,
-        read_versioned,
-    )
-    from sortify_spark.streaming.pipeline import vectorize_stream
-
-    idx = str(tmp_path / "ivf")
-    with tempfile.TemporaryDirectory() as tmp:
-        inp, outp = f"{tmp}/in", f"{tmp}/out"
-
-        def run():
-            q = vectorize_stream(
-                spark, inp, outp, f"{tmp}/ck", dim=16,
-                ivf_index_path=idx,
-            )
-            q.awaitTermination(120)
-
-        docs.filter(F.col("doc_id") < 30).write.mode("append").parquet(
-            inp
-        )
-        run()
-        m1 = read_manifest(f"{idx}/assign")
-        assert m1["version"] == 1 and m1["centroid_version"] == 1
-        n1 = read_versioned(spark, f"{idx}/assign", "bucket").count()
-        docs.filter(
-            (F.col("doc_id") >= 30) & (F.col("doc_id") < 50)
-        ).write.mode("append").parquet(inp)
-        run()
-        m2 = read_manifest(f"{idx}/assign")
-        assert m2["version"] > 1
-        assert m2["centroid_version"] == 1  # quantizer not re-trained
-        cur = read_versioned(spark, f"{idx}/assign", "bucket")
-        sink = spark.read.parquet(outp)
-        assert cur.count() == sink.count() > n1
-        ids = [r["vec_id"] for r in cur.select("vec_id").collect()]
-        assert len(ids) == len(set(ids))
-        # a batch-2 vector is probe-able through the artifact
-        probe_vec = (
-            sink.filter(F.col("document_id") == "35")
-            .limit(1)
-            .select("embedding")
-        )
-        vid = (
-            sink.filter(F.col("document_id") == "35")
-            .limit(1)
-            .collect()[0]["vector_id"]
-        )
-        got = {
-            r["vec_id"]
-            for r in probe_ivf_index(
-                spark, idx, probe_vec, k=3, nprobe=2
-            ).collect()
-        }
-        assert vid in got
-
-
-def test_paradedup_apply_replay_idempotent(spark, tmp_path):
-    """A replayed micro-batch recomputes the identical paradedup
-    decision: batch 1 applied twice leaves the cleaned table and the
-    seen side table byte-identical (the pb < batch_id read discipline
-    plus keyed upserts)."""
-    from sortify_spark.sources.versioned import read_versioned
-    from sortify_spark.streaming.pipeline import paradedup_apply
-
-    table = str(tmp_path / "t")
-    p1 = " ".join(f"a{i}" for i in range(8))
-    p2 = " ".join(f"b{i}" for i in range(8))
-    b0 = spark.createDataFrame(
-        [(1, "s", f"{p1} {p2}")], ["doc_id", "source", "text"]
-    )
-    # batch 1: one clone doc (all paragraphs seen) + one novel doc
-    b1 = spark.createDataFrame(
-        [(2, "s", p1), (3, "s", " ".join(f"c{i}" for i in range(8)))],
-        ["doc_id", "source", "text"],
-    )
-    paradedup_apply(b0, 0, table)
-    paradedup_apply(b1, 1, table)
-
-    def state():
-        docs = sorted(
-            (r.doc_id, r.paras_kept, r.rebuilt)
-            for r in read_versioned(spark, table, "pb").collect()
-        )
-        seen = sorted(
-            (r.ph, r.pb)
-            for r in read_versioned(spark, f"{table}__seen", "pb").collect()
-        )
-        return docs, seen
-
-    before = state()
-    # doc 2 is fully duplicated, doc 3 fully novel
-    assert [(d, k) for d, k, _ in before[0]] == [(1, 2), (2, 0), (3, 1)]
-    paradedup_apply(b1, 1, table)  # replay
-    assert state() == before
 
 
 # ---------------------------------------------------------------------------

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 import pyspark.sql.functions as F
 
 from sortify_spark.all_queries import REGISTRY
@@ -73,98 +71,6 @@ def test_email_ingest_deterministic(spark):
     assert all("<" not in r["extracted_text"] for r in a)
 
 
-def test_count_threshold_trigger(spark, tmp_path):
-    """ST2: callback fires when the streamed doc count crosses N."""
-    from sortify_spark.streaming.pipeline import count_threshold_trigger
-    from sortify_spark.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents").limit(25)
-    inp = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    docs.select("doc_id", "text", "lang", "source", "n_chars").write.parquet(inp)
-    fired = []
-    q = count_threshold_trigger(spark, inp, ckpt, threshold=10, on_threshold=fired.append)
-    q.awaitTermination(120)
-    assert fired and fired[0] >= 10
-
-
-def test_count_threshold_trigger_restart_safe(spark, tmp_path):
-    """A restart over the same checkpoint must not re-count already
-    committed batches (batch_id-keyed persisted counter)."""
-    from sortify_spark.streaming.pipeline import count_threshold_trigger
-    from sortify_spark.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents").limit(8)
-    inp = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    docs.select("doc_id", "text", "lang", "source", "n_chars").write.parquet(inp)
-    fired = []
-    q = count_threshold_trigger(spark, inp, ckpt, threshold=10, on_threshold=fired.append)
-    q.awaitTermination(120)
-    assert not fired  # 8 < 10, counter persisted at 8
-    # restart: no new files — the drained source must not re-fire or
-    # re-count; the persisted count survives
-    q2 = count_threshold_trigger(spark, inp, ckpt, threshold=10, on_threshold=fired.append)
-    q2.awaitTermination(120)
-    assert not fired
-    import json as _json
-
-    state = _json.load(open(ckpt + "/counter_state.json"))
-    assert state["count"] == 8
-
-
-def test_streaming_exact_dedup_matches_batch(spark, tmp_path):
-    """Single-batch availableNow run must equal batch drop_exact_duplicates."""
-    from sortify_spark.dedup import drop_exact_duplicates
-    from sortify_spark.streaming.pipeline import streaming_exact_dedup
-    from sortify_spark.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents").limit(60)
-    # inject exact duplicates with higher ids
-    dupes = docs.limit(10).withColumn(
-        "doc_id", F.col("doc_id") + 1_000_000
-    )
-    full = docs.unionByName(dupes)
-    inp = str(tmp_path / "in")
-    full.select("doc_id", "text", "lang", "source", "n_chars").write.parquet(inp)
-    q = streaming_exact_dedup(
-        spark, inp, str(tmp_path / "ckpt"), out_table="sded1"
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["fp"], r["doc_id"])
-        for r in spark.sql("SELECT * FROM sded1").collect()
-    }
-    want_ids = {r["doc_id"] for r in drop_exact_duplicates(full).collect()}
-    assert {d for _, d in got} == want_ids
-    assert len(got) == len(want_ids)
-
-
-@pytest.mark.slow
-def test_streaming_dedup_state_across_batches(spark, tmp_path):
-    """With one file per trigger, a fingerprint seen in batch 1 must be
-    suppressed in batch 2 — state outlives the microbatch."""
-    from sortify_spark.streaming.pipeline import streaming_exact_dedup
-
-    inp = str(tmp_path / "in")
-    rows1 = [(1, "alpha beta gamma", "en", "s", 16)]
-    rows2 = [(2, "alpha beta gamma", "en", "s", 16),
-             (3, "totally new content", "en", "s", 19)]
-    cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    spark.createDataFrame(rows1, cols).coalesce(1).write.mode("append").parquet(inp)
-    spark.createDataFrame(rows2, cols).coalesce(1).write.mode("append").parquet(inp)
-    q = streaming_exact_dedup(
-        spark, inp, str(tmp_path / "ckpt"), out_table="sded2",
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(180)
-    got = sorted(
-        r["doc_id"] for r in spark.sql("SELECT * FROM sded2").collect()
-    )
-    # doc 1 or 2 wins its fp depending on file order, but never both
-    assert len(got) == 2 and 3 in got
-
-
 def test_decontamination_flags_planted_overlap(spark):
     """A train doc sharing a 5-word run with a bench doc is flagged;
     disjoint docs are not."""
@@ -206,103 +112,6 @@ def test_approx_percentiles_close_to_exact(spark):
     assert set(exact) == set(approx)
     for k in exact:
         assert abs(exact[k] - approx[k]) <= max(0.05 * abs(exact[k]), 1e-6)
-
-
-def test_streaming_sessionize_matches_batch(spark, tmp_path):
-    """Streaming sessionization (stateful, event-time timeout) must equal
-    the batch user_sessions windows: closed sessions emit with the batch,
-    open sessions emit once the watermark passes last_event + gap."""
-    from sortify_spark.streaming.pipeline import streaming_sessionize
-    from sortify_spark.tables import load_table
-
-    events = (
-        load_table(spark, SF_DIR, "events")
-        .filter(F.col("user_id") < 10)
-        .select("event_id", "user_id", "ts")
-    )
-    inp = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    events.coalesce(1).write.parquet(inp)
-
-    # Two sentinel far-future files: with one file per trigger, the
-    # watermark advances after each in-run batch, so by the last batch it
-    # has passed every real session's (last_event + gap) timeout and the
-    # open sessions flush — all within ONE availableNow run.
-    for days, eid in ((10, 999_998), (20, 999_999)):
-        far = events.agg(F.max("ts").alias("m")).select(
-            F.lit(eid).alias("event_id"),
-            F.lit(9_999).alias("user_id"),
-            (F.col("m") + F.expr(f"INTERVAL {days} DAYS")).alias("ts"),
-        )
-        far.coalesce(1).write.mode("append").parquet(inp)
-
-    q = streaming_sessionize(
-        spark, inp, ckpt, gap_min=30, out_table="sess_out",
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(300)
-
-    got = (
-        spark.sql("SELECT * FROM sess_out")
-        .filter(F.col("user_id") < 10)
-        .select("user_id", "n_events", "duration_us")
-        .collect()
-    )
-
-    # batch reference: same gap rule via lag/running-sum windows
-    from sortify_spark.queries_scale import q_user_sessions  # noqa: F401
-    from sortify_spark.queries import REGISTRY
-
-    want = (
-        REGISTRY["user_sessions"]
-        .fn(spark, SF_DIR)
-        .filter(F.col("user_id") < 10)
-        .select("user_id", "n_events", "duration_us")
-        .collect()
-    )
-    key = lambda r: (r["user_id"], r["n_events"], r["duration_us"])  # noqa: E731
-    assert sorted(map(key, got)) == sorted(map(key, want))
-
-
-def test_count_threshold_trigger_live_incremental(spark, tmp_path):
-    """ST2 under a LIVE trigger: files fed while the query runs; the
-    every-N callback fires only once the cumulative count crosses the
-    threshold, across micro-batches (the reference's auto-recluster
-    after N processed docs, document_tasks_service.py:448+)."""
-    import os
-    import time
-
-    from sortify_spark.streaming.pipeline import count_threshold_trigger
-    from sortify_spark.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    inp = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    docs.filter(F.col("doc_id") < 10).select(*cols).coalesce(1).write.mode(
-        "append"
-    ).parquet(inp)
-    fired = []
-    q = count_threshold_trigger(
-        spark, inp, ckpt, threshold=15, on_threshold=fired.append,
-        available_now=False,
-    )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline and not os.path.exists(
-            ckpt + "/counter_state.json"
-        ):
-            time.sleep(0.5)
-        assert not fired  # 10 < 15 after the first batch
-        docs.filter(
-            (F.col("doc_id") >= 10) & (F.col("doc_id") < 20)
-        ).select(*cols).coalesce(1).write.mode("append").parquet(inp)
-        deadline = time.time() + 90
-        while time.time() < deadline and not fired:
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    assert fired and fired[0] >= 15  # crossed on the second batch
 
 
 def test_semdedup_np_twin_matches(spark):

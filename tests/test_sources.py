@@ -936,7 +936,7 @@ def test_versioned_compact_diff_delete(spark):
         snap2 = rows_of(read_versioned(spark, path, "source"))
         m = read_manifest(path)
         assert files_in(m["partitions"]["a"]) > 1
-        v3 = compact(spark, path, "source", max_files_per_partition=1)
+        v3 = compact(spark, path, "source")
         assert v3 == 4
         m3 = read_manifest(path)
         assert all(files_in(rel) == 1 for rel in m3["partitions"].values())
@@ -1246,37 +1246,6 @@ def test_versioned_schema_evolution_and_as_of(spark):
         }
 
 
-def test_versioned_write_files_per_partition(spark):
-    """write_files_per_partition > 1 restores write parallelism for a
-    giant partition by key-hash salting: the commit produces up to that
-    many files per partition dir, and rows round-trip exactly."""
-    import glob
-
-    from sortify_spark.sources.versioned import (
-        read_manifest,
-        read_versioned,
-        upsert_versioned,
-    )
-
-    with tempfile.TemporaryDirectory() as tmp:
-        path = f"{tmp}/docs"
-        big = spark.createDataFrame(
-            [(i, "hot", i * 2) for i in range(400)],
-            "doc_id long, source string, n long",
-        ).repartition(8)
-        upsert_versioned(
-            big, path, ["doc_id"], "source", write_files_per_partition=4
-        )
-        rel = read_manifest(path)["partitions"]["hot"]
-        n_files = len(glob.glob(f"{path}/{rel}/*.parquet"))
-        assert 1 < n_files <= 4, n_files
-        got = {
-            (r["doc_id"], r["n"])
-            for r in read_versioned(spark, path, "source").collect()
-        }
-        assert got == {(i, i * 2) for i in range(400)}
-
-
 @pytest.mark.slow
 def test_versioned_model_based_random_ops(spark):
     """Model-based check of the versioned-store protocol: a seeded
@@ -1413,112 +1382,15 @@ def test_versioned_interrupt_after_commit_keeps_manifest(spark):
         assert not os.path.exists(f"{path}/_MANIFEST.v2")
 
 
-def test_fold_partitions_lsm_level_merge(spark):
-    """fold_partitions merges many small batch-keyed partitions into
-    one base partition atomically: rows identical, files touched drop
-    to one, old snapshots still time-travel, and a `keep` predicate
-    protects the hot tail from folding."""
-    from sortify_spark.sources.versioned import (
-        fold_partitions,
-        read_manifest,
-        read_versioned,
-        snapshot_files,
-        upsert_versioned,
-    )
-
-    with tempfile.TemporaryDirectory() as tmp:
-        path = f"{tmp}/side"
-        for b in range(5):
-            upsert_versioned(
-                spark.createDataFrame(
-                    [(b * 10 + i, f"x{b}", b) for i in range(3)],
-                    "id long, payload string, pb int",
-                ),
-                path, keys=["id"], partition_col="pb",
-            )
-        before = read_versioned(spark, path, "pb")
-        rows_before = {
-            (r["id"], r["payload"]) for r in before.collect()
-        }
-        assert len(snapshot_files(path)) == 5
-        v_prefold = read_manifest(path)["version"]
-        # keep the hot tail (pb >= 3), fold the rest into base -1
-        v = fold_partitions(
-            spark, path, "pb", -1, keep=lambda p: int(p) >= 3
-        )
-        assert v == v_prefold + 1
-        m = read_manifest(path)
-        assert set(m["partitions"]) == {"-1", "3", "4"}
-        after = read_versioned(spark, path, "pb")
-        assert {
-            (r["id"], r["payload"]) for r in after.collect()
-        } == rows_before
-        assert len(snapshot_files(path)) == 3
-        # folded rows carry the base partition value, typed
-        assert after.filter(F.col("pb") == -1).count() == 9
-        # pre-fold snapshot still readable with original partitioning
-        old = read_versioned(spark, path, "pb", version=v_prefold)
-        assert old.filter(F.col("pb") == 0).count() == 3
-        # full fold: everything into base; single file touched
-        assert fold_partitions(spark, path, "pb", -1) == v + 1
-        assert set(read_manifest(path)["partitions"]) == {"-1"}
-        assert len(snapshot_files(path)) == 1
-        assert {
-            (r["id"], r["payload"])
-            for r in read_versioned(spark, path, "pb").collect()
-        } == rows_before
-        # idempotent: single partition left -> nothing to fold
-        assert fold_partitions(spark, path, "pb", -1) is None
-
-
-def test_fold_partitions_respects_writer_protocol(spark):
-    """fold_partitions is a writer like any other: a pending
-    reservation by another writer makes it raise ConcurrentWriteError
-    before touching data, and a fold never disturbs retained history
-    (pre-fold snapshot still readable afterwards)."""
-    import json as _json
-    import os
-
-    from sortify_spark.sources.versioned import (
-        ConcurrentWriteError,
-        fold_partitions,
-        read_manifest,
-        read_versioned,
-        upsert_versioned,
-    )
-
-    with tempfile.TemporaryDirectory() as tmp:
-        path = f"{tmp}/t"
-        for b in range(3):
-            upsert_versioned(
-                spark.createDataFrame(
-                    [(b, "x", b)], "id long, payload string, pb int"
-                ),
-                path, keys=["id"], partition_col="pb",
-            )
-        v = read_manifest(path)["version"]
-        # another writer holds the next version
-        with open(f"{path}/_MANIFEST.v{v + 1}", "x") as fh:
-            _json.dump({"version": v + 1, "pending": True}, fh)
-        with pytest.raises(ConcurrentWriteError):
-            fold_partitions(spark, path, "pb", -1)
-        os.remove(f"{path}/_MANIFEST.v{v + 1}")
-        got = fold_partitions(spark, path, "pb", -1)
-        assert got == v + 1
-        old = read_versioned(spark, path, "pb", version=v)
-        assert old.filter(F.col("pb") == 0).count() == 1
-
-
 def test_compact_preserves_extras_and_amend_manifest(spark):
-    """compact() / fold_partitions() are layout-only COMMITS: every
-    manifest key beyond version/partitions (anchor extras like paired
-    versions, carry schemas, corpus stats) must carry forward verbatim.
+    """compact() is a layout-only COMMIT: every manifest key beyond
+    version/partitions (anchor extras like paired versions, carry
+    schemas, corpus stats) must carry forward verbatim.
     amend_manifest() is the paired metadata-only commit an anchor uses
     to re-pin after a layout operation."""
     from sortify_spark.sources.versioned import (
         amend_manifest,
         compact,
-        fold_partitions,
         read_manifest,
         read_versioned,
         upsert_versioned,
@@ -1564,70 +1436,68 @@ def test_compact_preserves_extras_and_amend_manifest(spark):
         assert m.get("partition_dtype") == "string"
         assert rows_of(read_versioned(spark, path, "source")) == snap
 
-        # fold_partitions carries extras forward too
-        v2 = fold_partitions(spark, path, "source", "a")
-        assert v2 == v + 1
-        m2 = read_manifest(path)
-        for k, want in extras.items():
-            assert m2.get(k) == want, k
-
         # amend_manifest: zero data written, same partition map, new
         # version, updated extras
         v3 = amend_manifest(path, {"postings_version": 9, "note": "x"})
-        assert v3 == v2 + 1
+        assert v3 == v + 1
         m3 = read_manifest(path)
         assert m3["version"] == v3
-        assert m3["partitions"] == m2["partitions"]
+        assert m3["partitions"] == m["partitions"]
         assert m3["postings_version"] == 9
         assert m3["note"] == "x"
         assert m3["carry"] == ["owner_id"]
         assert not os.path.isdir(os.path.join(path, f"v={v3}"))
-        # fold re-keyed everything to partition 'a'; the logical rows
-        # (key + payload) are untouched by fold AND by amend
-        assert {
-            (r["doc_id"], r["n"])
-            for r in read_versioned(spark, path, "source").collect()
-        } == {(d, n) for d, _, n in snap}
+        # the rows are untouched by compact AND by amend
+        assert rows_of(read_versioned(spark, path, "source")) == snap
 
 
 def test_layout_commits_stamp_fresh_committed_at(spark):
-    """Layout-only commits (fold / compact / amend) must NOT inherit
-    the prior version's committed_at: each commit stamps its own
-    timestamp so resolve_version_at stays monotonic and an as-of read
-    taken BEFORE the operation resolves to the pre-operation snapshot
-    — critical for fold_partitions, which re-keys the partition column
-    (ADVICE r10 medium)."""
+    """Layout-only commits (compact / amend) must NOT inherit the prior
+    version's committed_at: each commit stamps its own timestamp so
+    resolve_version_at stays monotonic and an as-of read taken BEFORE
+    the operation resolves to the pre-operation snapshot (ADVICE r10
+    medium)."""
     from sortify_spark.sources.versioned import (
         amend_manifest,
-        fold_partitions,
+        compact,
         read_manifest,
         read_versioned,
         resolve_version_at,
+        snapshot_files,
         upsert_versioned,
     )
 
     with tempfile.TemporaryDirectory() as tmp:
         path = f"{tmp}/side"
-        for b in range(3):
-            upsert_versioned(
-                spark.createDataFrame(
-                    [(b * 10 + i, b) for i in range(3)],
-                    "id long, pb int",
-                ),
-                path, keys=["id"], partition_col="pb",
-            )
+        # one file per row, so the compaction below has partitions to
+        # rewrite
+        spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+        try:
+            for b in range(3):
+                upsert_versioned(
+                    spark.createDataFrame(
+                        [(b * 10 + i, b) for i in range(3)],
+                        "id long, pb int",
+                    ),
+                    path, keys=["id"], partition_col="pb",
+                )
+        finally:
+            spark.conf.unset("spark.sql.files.maxRecordsPerFile")
         v_pre = read_manifest(path)["version"]
+        n_files_pre = len(snapshot_files(path))
         t_pre_op = time.time()
         time.sleep(0.02)
-        v_fold = fold_partitions(spark, path, "pb", -1)
-        assert v_fold == v_pre + 1
-        m_pre, m_fold = read_manifest(path, v_pre), read_manifest(path)
-        # fresh stamp, strictly after the pre-fold commit
-        assert m_fold["committed_at"] > m_pre["committed_at"]
-        assert m_fold["committed_at"] > t_pre_op
-        # an as-of read taken before the fold sees the ORIGINAL
-        # partition keys, not the re-keyed snapshot
+        v_compact = compact(spark, path, "pb")
+        assert v_compact == v_pre + 1
+        m_pre, m_compact = read_manifest(path, v_pre), read_manifest(path)
+        # fresh stamp, strictly after the pre-compaction commit
+        assert m_compact["committed_at"] > m_pre["committed_at"]
+        assert m_compact["committed_at"] > t_pre_op
+        # an as-of read taken before the compaction resolves to the
+        # ORIGINAL snapshot, fragmented files and all
         assert resolve_version_at(path, t_pre_op) == v_pre
+        assert len(snapshot_files(path, v_pre)) == n_files_pre
+        assert len(snapshot_files(path)) < n_files_pre
         old = read_versioned(spark, path, "pb", version=v_pre)
         assert old.filter(F.col("pb") == 0).count() == 3
         # amend_manifest: same contract
@@ -1635,8 +1505,8 @@ def test_layout_commits_stamp_fresh_committed_at(spark):
         time.sleep(0.02)
         v_amend = amend_manifest(path, {"note": "x"})
         m_amend = read_manifest(path)
-        assert m_amend["committed_at"] > m_fold["committed_at"]
-        assert resolve_version_at(path, t_pre_amend) == v_fold
+        assert m_amend["committed_at"] > m_compact["committed_at"]
+        assert resolve_version_at(path, t_pre_amend) == v_compact
         assert resolve_version_at(path, time.time() + 1) == v_amend
 
 
