@@ -268,10 +268,11 @@ FROM {q}_final"""
     "e2e_search_batched",
     _batched_hybrid_oracle(),
     note="E2E BATCHED serving (VERDICT r8 #2): three queries through "
-    "facade.semantic_search_many('hybrid') — every query's stage-1 "
-    "candidates in ONE frame, stage 2 one semi-joined chunk scan "
-    "scored per (query, candidate) pair, per-query tier dedup + "
-    "backfill (fusion.two_stage_hybrid_many).  The oracle replays "
+    "facade.semantic_search_many('hybrid') — served on the driver "
+    "from the snapshots below the gate; above it every query's "
+    "stage-1 candidates gather in ONE frame and stage 2 is one "
+    "semi-joined chunk scan scored per (query, candidate) pair "
+    "(fusion.two_stage_hybrid_many).  The oracle replays "
     "ingest, per-query embedding, and both stages from raw text per "
     "batch member — the batched plan must be bit-identical per query "
     "to the single-query pipeline (the md5 expression encoder and "

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from sortify_spark.functions.vectors import cosine, cosine_given_norms, dot, l2_norm
 
 DEFAULT_TOP_K = 10
-DEFAULT_THRESHOLD = 0.5
 
 
 def score_vectors(

@@ -1,10 +1,11 @@
-"""Driver-resident serving of single-query search.
+"""Driver-resident serving of search, single and batched.
 
 The reference answers every search in-process against a resident
 Chroma collection (``vector_db_service.py:18-20,73-76``).  A Spark plan
 per search spends its time scheduling ~7 jobs over a corpus that fits in
 the driver many times over, so below a size gate the facade serves
-``semantic_search`` from numpy copies of the committed artifacts:
+``semantic_search`` and ``semantic_search_many`` from numpy copies of
+the committed artifacts:
 
 * the served vectors table (per vtype: ids, owners, float64 matrix),
   one Arrow ``toPandas``;
@@ -30,8 +31,8 @@ plans' exactly:
   (score desc, STRING id asc).
 
 Snapshots whose estimated resident size is above
-:data:`SNAPSHOT_MAX_BYTES` are not loaded; those requests, pinned
-versions and batched serving stay on Spark.
+:data:`SNAPSHOT_MAX_BYTES` are not loaded; those requests and pinned
+versions stay on Spark.
 """
 
 from __future__ import annotations
@@ -84,6 +85,12 @@ SCHEMAS = {
     "traditional_merge": SCORED_SCHEMA,
     "rrf_fuse": "id string, rank_summary int, rank_chunks int, rrf_score double",
     "two_stage_hybrid": "id string, score double, tier int",
+}
+#: ``semantic_search_many``'s schema on both backends, by fusion.
+BATCH_SCHEMA = "query_id string, id string, score double, rnk int"
+BATCH_SCHEMAS = {
+    "two_stage_hybrid": "query_id string, id string, score double, "
+    "tier int, rnk int",
 }
 
 _DECIMAL = Context(prec=400)

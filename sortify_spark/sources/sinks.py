@@ -14,8 +14,6 @@ replacement (SURVEY.md §4).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -54,74 +52,6 @@ def append_rows(
     if parts:
         writer = writer.partitionBy(*parts)
     writer.parquet(path)
-
-
-def _merge_plan(
-    existing: DataFrame,
-    updates: DataFrame,
-    keys: Sequence[str],
-    partition_cols: Sequence[str] = (),
-) -> DataFrame:
-    """The upsert's read side: rows of the AFFECTED partitions that keep
-    their old value, unioned with the updates.
-
-    Both joins broadcast the (small) update side: the partition
-    restriction is a broadcast semi-join that prunes to the touched
-    partitions, and the key overwrite is a broadcast anti-join — the
-    existing table itself never shuffles (asserted by
-    tests/test_sources.py::test_upsert_plan_broadcasts)."""
-    if partition_cols:
-        parts = updates.select(*partition_cols).distinct()
-        existing = existing.join(
-            F.broadcast(parts), list(partition_cols), "left_semi"
-        )
-    keep = existing.join(
-        F.broadcast(updates.select(*keys).distinct()), list(keys), "left_anti"
-    )
-    return keep.unionByName(updates.select(*keep.columns))
-
-
-def upsert_partitioned(
-    updates: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    partition_cols: Sequence[str] = (),
-) -> None:
-    """M5/S10 at rest: keyed upsert onto a partitioned parquet table —
-    the persisted form of the reference's in-place mutations
-    (``clustering_service.py:888-958`` ``update_many``,
-    ``vector_db_service.py:263-323`` delete-by-id; with Delta this is a
-    single MERGE statement).
-
-    Plain parquet has no MERGE, so: rewrite ONLY the partitions that
-    contain updated keys (dynamic partition overwrite), replacing
-    matched keys with their new rows and carrying every other row
-    through unchanged.  Untouched partitions are never read or written —
-    at 100 TB the cost scales with the update's partition footprint, not
-    the table.  Not atomic across partitions (parquet commit semantics);
-    Delta/Iceberg is the transactional upgrade path.
-    """
-    spark = updates.sparkSession
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        merged = updates
-    else:
-        merged = _merge_plan(
-            spark.read.parquet(path), updates, keys, partition_cols
-        )
-        # Materialize before overwriting the files the plan reads from.
-        merged = merged.localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        writer = merged.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def write_bucketed(

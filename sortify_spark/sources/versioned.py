@@ -1,14 +1,13 @@
 """Versioned parquet tables: atomic multi-partition upserts without a
-lakehouse dependency (the documented upgrade for ``upsert_partitioned``'s
-non-atomicity — SCALE.md "known trade-offs").
+lakehouse dependency (plain parquet overwrites are not atomic across
+partitions — SCALE.md "known trade-offs").
 
 Delta/Iceberg solve this with a transaction log; the same core idea fits
 in one small protocol over plain parquet:
 
 * data lives in immutable version directories ``v=N/<part>=<val>/``;
   an upsert writes ONLY its affected partitions into a NEW version dir
-  (cost scales with the update's partition footprint, like
-  ``upsert_partitioned``);
+  (cost scales with the update's partition footprint);
 * a JSON **manifest** maps each partition value to the version dir that
   last rewrote it; the manifest is swapped atomically
   (``os.replace``), so readers see the old snapshot or the new one,
@@ -43,8 +42,7 @@ never readable as a snapshot.
 
 At 100 TB the manifest would list files instead of partition dirs and
 live on the object store with put-if-absent commits — the protocol is
-the same; this module keeps it at partition granularity, which is
-already exactly the granularity ``upsert_partitioned`` rewrites.
+the same; this module keeps it at partition granularity.
 
 Reference anchor: the reference's in-place ``update_many`` mutations
 (``clustering_service.py:888-958``) assume Mongo's document atomicity;

@@ -2,18 +2,23 @@
 plans it stands in for: the same rows, scores, order, schema and IVF
 escalation trace for every strategy, dense mode and owner scope, on a
 fresh engine and after each kind of mutation.  The Spark side is forced
-by shutting the snapshot gate (``SNAPSHOT_MAX_BYTES = 0``)."""
+by shutting the snapshot gate (``SNAPSHOT_MAX_BYTES = 0``).  A served
+batch (``semantic_search_many``) must equal the served single-search
+loop in the same matrix."""
 
 from __future__ import annotations
+
+import time
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType
 
 from sortify_spark import facade
 from sortify_spark.search import index as ix
-from sortify_spark.search import lexical, serving
+from sortify_spark.search import knn, lexical, serving
 from tests.conftest import SF_DIR
 
 STRATEGIES = (
@@ -28,6 +33,7 @@ STRATEGIES = (
 #: The Spark path of these ends in a per-document groupBy: no order.
 UNORDERED = ("summary_only", "chunks_only")
 QUERY = "data pipeline quality and join performance"
+BATCH = {"q1": QUERY, "q2": "vector index build and search serving"}
 DOCS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
 )
@@ -40,8 +46,33 @@ def _spark_only(monkeypatch):
         raise AssertionError("served search planned a Spark search")
 
     monkeypatch.setattr(facade, "brute_force_topk", boom)
+    monkeypatch.setattr(knn, "brute_force_topk_many", boom)
     monkeypatch.setattr(lexical, "probe_lexical_index", boom)
+    monkeypatch.setattr(lexical, "probe_lexical_index_many", boom)
     monkeypatch.setattr(ix, "probe_ivf_index", boom)
+    monkeypatch.setattr(ix, "probe_ivf_index_many", boom)
+
+
+def _jobs_run(spark, fn):
+    """``fn()`` and the ids of the Spark jobs it ran.  A marker job run
+    after it shows that the (asynchronous) status listener has seen
+    every earlier job."""
+    sc = spark.sparkContext
+    key, group = "spark.jobGroup.id", f"counted-{time.monotonic_ns()}"
+    prev = sc.getLocalProperty(key)
+    try:
+        sc.setLocalProperty(key, group)
+        out = fn()
+        sc.setLocalProperty(key, f"{group}-marker")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty(key, prev)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(f"{group}-marker"):
+        assert time.monotonic() < deadline, "status listener fell behind"
+        time.sleep(0.05)
+    return out, tracker.getJobIdsForGroup(group)
 
 
 def _search(eng, strategy, cfg, owner, query=QUERY):
@@ -65,6 +96,42 @@ def _both(eng, strategy, cfg, owner, query=QUERY):
     return served, on_spark
 
 
+def _served_batch(eng, strategy, cfg, owner, served):
+    """A served batch over ``BATCH`` — its schema, rows in ``rnk``
+    order, and the Spark jobs that building its frame ran — beside the
+    served single-search loop's schema and rows in the batch's form;
+    ``served`` is the served single search of ``QUERY``."""
+    with pytest.MonkeyPatch.context() as mp:
+        _spark_only(mp)
+        df, jobs = _jobs_run(
+            eng.spark,
+            lambda: eng.semantic_search_many(BATCH, strategy, cfg, owner),
+        )
+        rows = sorted(df.collect(), key=lambda r: (r["query_id"], r["rnk"]))
+        got = [(f.name, f.dataType) for f in df.schema], list(map(tuple, rows))
+        loop = [served, _search(eng, strategy, cfg, owner, BATCH["q2"])]
+    schema = served[0]
+    names = [n for n, _ in schema]
+    rows = []
+    for qid, (_, hits, _) in zip(BATCH, loop):
+        for rnk, hit in enumerate(hits, 1):
+            r = dict(zip(names, hit))
+            tier = (r["tier"],) if "tier" in r else ()
+            score = r["rrf_score"] if "rrf_score" in r else r["score"]
+            rows.append((qid, r["id"], score, *tier, rnk))
+    want = (
+        [("query_id", StringType())]
+        + [
+            ("score" if n == "rrf_score" else n, t)
+            for n, t in schema
+            if n in ("id", "score", "rrf_score", "tier")
+        ]
+        + [("rnk", IntegerType())],
+        rows,
+    )
+    return got, want, jobs
+
+
 def _assert_parity(eng, owner, state, traces):
     cfgs = {
         "exact": facade.SearchConfig(top_k=5),
@@ -81,6 +148,10 @@ def _assert_parity(eng, owner, state, traces):
                 assert served == on_spark, case
                 assert served[1], case  # every case returns rows
                 traces.append(served[2])
+                batch, loop, jobs = _served_batch(eng, st, cfg, o, served)
+                assert batch == loop, case
+                # warm snapshots: building the frame ran no Spark job
+                assert not jobs, (case, jobs)
 
 
 def test_served_search_matches_spark_path(spark, tmp_path):
@@ -239,4 +310,4 @@ def test_query_frames_bit_identical_through_arrow(spark):
     }
     assert got == want
     assert eng._query_df(QUERY).first()["embedding"] == want["a"]
-    assert eng._query_vec(QUERY).tolist() == want["a"]
+    assert eng._query_vecs(queries)["a"].tolist() == want["a"]

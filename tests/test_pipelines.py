@@ -22,6 +22,17 @@ def docs(spark):
     return load_table(spark, SF_DIR, "documents")
 
 
+@pytest.fixture(params=["served", "spark"])
+def snapshot_gate(request, monkeypatch):
+    """Runs a facade search test on both sides of the snapshot gate:
+    served on the driver (the default) and on Spark (gate shut)."""
+    if request.param == "spark":
+        from sortify_spark.search import serving
+
+        monkeypatch.setattr(serving, "SNAPSHOT_MAX_BYTES", 0)
+    return request.param
+
+
 def test_ingest_vectorize_shape(spark, docs):
     vecs = ingest_vectorize(docs, chunk_size=128, overlap=32, dim=16)
     total_docs = docs.count()
@@ -823,7 +834,9 @@ def test_lexical_pd_buckets_recorded_and_honored(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_facade_batched_serving_matches_per_query(spark, tmp_path):
+def test_facade_batched_serving_matches_per_query(
+    spark, tmp_path, snapshot_gate
+):
     """semantic_search_many (ONE plan per leg for N queries) returns,
     per query, the SAME rows as the semantic_search loop — across the
     lexical, dense, and fused strategies (VERDICT r8 next #2)."""
@@ -904,7 +917,7 @@ def test_facade_batched_serving_matches_per_query(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_ivf_batched_probe_matches_single(spark, tmp_path):
+def test_ivf_batched_probe_matches_single(spark, tmp_path, snapshot_gate):
     """probe_ivf_index_many (N queries, ONE union-of-buckets plan)
     returns per query exactly the single probe's ranked list — same
     probed buckets (same rounded centroid ranking), same round-6
@@ -1249,7 +1262,9 @@ def test_owner_scoped_search_every_strategy(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_owner_scoped_batched_matches_per_query(spark, tmp_path):
+def test_owner_scoped_batched_matches_per_query(
+    spark, tmp_path, snapshot_gate
+):
     """semantic_search_many(owner_id=...) parity: per-query rows match
     the single-query loop for every batched strategy (round-6 for the
     lexical legs, the documented batched contract)."""
@@ -1775,7 +1790,7 @@ def test_facade_mutation_storage_clean(spark, tmp_path):
 
 @pytest.mark.slow
 def test_owner_scoped_ivf_batched_matches_single_composed(
-    spark, tmp_path
+    spark, tmp_path, snapshot_gate
 ):
     """cfg.ann='ivf' owner-scoped serving uses the COMPOSED
     filtered-IVF default on BOTH paths (occupancy-aware bucket choice

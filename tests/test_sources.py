@@ -236,56 +236,6 @@ def test_append_rows_layout(spark):
         )[1][:200]
 
 
-def test_upsert_partitioned_roundtrip(spark, tmp_path):
-    """write → cluster → write-back → re-read: updated keys take the new
-    clustering_status, untouched partitions stay byte-identical rows."""
-    from sortify_spark.sources.sinks import upsert_partitioned
-
-    path = str(tmp_path / "docs_table")
-    base = spark.createDataFrame(
-        [
-            (i, f"text {i}", i % 3, "pending")
-            for i in range(30)
-        ],
-        "doc_id long, text string, p_owner_bucket int, clustering_status string",
-    )
-    upsert_partitioned(base, path, keys=["doc_id"], partition_cols=["p_owner_bucket"])
-
-    # cluster write-back touches only bucket 1 docs
-    updates = spark.createDataFrame(
-        [(i, f"text {i}", 1, "clustered") for i in range(1, 30, 3)],
-        "doc_id long, text string, p_owner_bucket int, clustering_status string",
-    )
-    upsert_partitioned(updates, path, keys=["doc_id"], partition_cols=["p_owner_bucket"])
-
-    got = {r["doc_id"]: r for r in spark.read.parquet(path).collect()}
-    assert len(got) == 30
-    for i in range(30):
-        want = "clustered" if i % 3 == 1 else "pending"
-        assert got[i]["clustering_status"] == want, i
-        assert got[i]["text"] == f"text {i}"
-
-
-def test_upsert_plan_broadcasts(spark, tmp_path):
-    """The merge plan must broadcast the update side (semi on partitions,
-    anti on keys) — the existing table never shuffles."""
-    from sortify_spark.sources.sinks import _merge_plan
-
-    existing = spark.range(1000).selectExpr(
-        "id AS doc_id", "CAST(id % 7 AS INT) AS p_owner_bucket", "'pending' AS s"
-    )
-    updates = spark.range(10).selectExpr(
-        "id AS doc_id", "CAST(1 AS INT) AS p_owner_bucket", "'clustered' AS s"
-    )
-    plan = _merge_plan(
-        existing, updates, keys=["doc_id"], partition_cols=["p_owner_bucket"]
-    )
-    explained = plan._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in explained
-    assert "LeftSemi" in explained and "LeftAnti" in explained
-    assert "SortMergeJoin" not in explained
-
-
 def test_read_corpus_formats_roundtrip(spark, tmp_path):
     """CSV / JSONL / parquet corpus drops all land on the same canonical
     schema with identical rows; malformed records are quarantined, not
