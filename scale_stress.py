@@ -1525,7 +1525,7 @@ def main() -> None:
                 eng.rebuild_lexical_index()
                 build_sec = round(time.time() - t0, 2)
                 path = eng.lexical_index_path()
-                m = read_manifest(f"{path}/terms")
+                m = read_manifest(f"{path}/postings")
                 pool = (
                     "data quality spark merge dup pipeline training "
                     "analytics model corpus document search index "

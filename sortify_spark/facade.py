@@ -291,10 +291,11 @@ class SortifyEngine:
         #: Driver-resident serving snapshots (``search/serving``): one
         #: slot per artifact (``"vectors"``, ``"lexical"``,
         #: ``"ivf_<vtype>"``) holding ``(key, estimated_bytes,
-        #: snapshot)``.  The key is what a request already resolves —
-        #: the vectors generation, the lexical anchor version, the IVF
-        #: assign version — so no mutation maintains a snapshot and a
-        #: stale one can never serve; a new key replaces the slot whole.
+        #: snapshot, manifest)``.  The key is what a request already
+        #: resolves — the vectors generation, the lexical anchor
+        #: version, the IVF assign version — so a stale snapshot can
+        #: never serve: a new key refreshes the slot from the appended
+        #: segments and tombstones, or replaces it whole.
         self._snapshots: dict[str, tuple] = {}
         #: Bumped wherever ``self.vectors`` is reassigned; its row
         #: count is kept when a mutation materializes it anyway.
@@ -561,7 +562,7 @@ class SortifyEngine:
             from sortify_spark.sources.versioned import read_manifest
 
             path = self.lexical_index_path()
-            anchor = read_manifest(f"{path}/terms")
+            anchor = read_manifest(f"{path}/postings")
             if (
                 self._lex_dirty
                 or anchor["version"] == 0
@@ -612,7 +613,7 @@ class SortifyEngine:
             # (r12 scale stress layout A/B), so small buckets write
             # one file and the split resumes as buckets outgrow a row
             # group.  The floor is pinned in the manifest for the
-            # artifact's whole lifecycle (upserts, compact re-pins).
+            # artifact's whole lifecycle (merges keep it).
             layout_col="owner_id" if self.owner_col else None,
             layout_min_file_rows="auto",
         )
@@ -624,19 +625,24 @@ class SortifyEngine:
         self, docs: DataFrame, rebuild_over: float = 0.5
     ) -> dict:
         """The reference's upload path end-to-end (S1 + S9 +
-        ``vector_db_service.py:73-76``): vectorize NEW documents with
-        the engine's pipeline, append them to the served vectors table,
-        and keep any BUILT persisted IVF artifacts current — via
-        incremental :func:`search.index.upsert_ivf_index` (FAISS-add
-        against the stored quantizer, only touched bucket partitions
-        rewrite) while the index has grown less than ``rebuild_over``
-        relative to its quantizer's training size (the assign
-        manifest's ``built_rows``), and via a full
-        :meth:`rebuild_ivf_index` re-train past that drift budget.
-        Returns ``{vtype: ("upsert"|"rebuild", version)}`` for the
-        indexes maintained."""
-        from sortify_spark.search.index import upsert_ivf_index
-        from sortify_spark.sources.versioned import read_manifest
+        ``vector_db_service.py:73-76``): vectorize the documents with the
+        engine's pipeline, put them in the served documents and vectors
+        tables (a re-sent ``doc_id`` REPLACES its document and vectors),
+        and keep every BUILT persisted artifact current.
+
+        A batch whose vectors fit the snapshot gate
+        (``serving.vectors_bytes`` ≤ ``serving.SNAPSHOT_MAX_BYTES``) is
+        collected once and committed as appends written on the driver,
+        so the index maintenance runs no Spark job: the BM25 index by
+        :func:`search.lexical.upsert_lexical_index`, each IVF index by
+        :func:`search.index.upsert_ivf_index` (FAISS-add against the
+        stored quantizer) while it has grown less than ``rebuild_over``
+        relative to its quantizer's training size (the assign manifest's
+        ``built_rows``), and by a full :meth:`rebuild_ivf_index` re-train
+        past that drift budget.  A larger batch rebuilds each artifact
+        over the grown corpus instead.  Returns ``{artifact:
+        ("upsert"|"rebuild", version)}`` for the indexes maintained."""
+        from sortify_spark.sources.versioned import live_rows, read_manifest
 
         build = (
             ingest_vectorize_expr
@@ -650,15 +656,32 @@ class SortifyEngine:
             overlap=32,
             dim=self.dim,
         ).persist()
-        self.documents = self.documents.unionByName(docs)
-        # swap-then-release (ADVICE r9): materialize the grown frame
-        # BEFORE unpersisting the old one it builds on, so repeated
-        # mutations don't accumulate cached lineages in executor storage
-        old_vectors = self.vectors
-        self.vectors = self.vectors.unionByName(new_vecs).persist()
-        self._vectors_n = self.vectors.count()
-        self._vectors_gen += 1
-        old_vectors.unpersist()
+        driver = (
+            serving.vectors_bytes(new_vecs.count(), self.dim)
+            <= serving.SNAPSHOT_MAX_BYTES
+        )
+        if driver:
+            lex_rows = self._lex_docs(docs).toPandas()
+            doc_ids = self.spark.createDataFrame(
+                pd.DataFrame({"document_id": lex_rows["doc_id"].astype(str)}),
+                "document_id string",
+            )
+        else:
+            doc_ids = docs.select(F.col("doc_id").cast("string").alias("document_id"))
+        gen = self._vectors_gen
+        dropped = self._swap_served(doc_ids, docs, new_vecs)
+        vec_rows = (
+            new_vecs.select("vector_id", *serving.VECTOR_COLS).toPandas()
+            if driver
+            else None
+        )
+        # the batch frame's cache served its consumers (the grown
+        # vectors table is independently materialized)
+        new_vecs.unpersist()
+        if driver:
+            self._refresh_vectors_snapshot(
+                gen, lex_rows["doc_id"].astype(str), vec_rows
+            )
         out: dict = {}
         if not self._lex_built:
             self._lex_dirty = True  # adoption must not trust n_docs alone
@@ -668,48 +691,97 @@ class SortifyEngine:
         if self._lex_built:
             from sortify_spark.search.lexical import upsert_lexical_index
 
-            # incremental posting/df/stats maintenance — add AND
-            # replace are exact (search/lexical contract), so the
-            # lexical artifact never needs a drift-budget rebuild
+            # add AND replace are exact appends (search/lexical
+            # contract): no drift-budget rebuild
             out["lexical"] = (
-                "upsert",
-                upsert_lexical_index(
-                    self._lex_docs(docs),
-                    self.lexical_index_path(),
-                ),
+                ("upsert", upsert_lexical_index(lex_rows, self.lexical_index_path()))
+                if driver
+                else ("rebuild", self.rebuild_lexical_index())
             )
         for vtype in sorted(self._ivf_built):
+            from sortify_spark.search.index import upsert_ivf_index
+
+            if not driver:
+                out[vtype] = ("rebuild", self.rebuild_ivf_index(vtype))
+                continue
+            adds = vec_rows[vec_rows["vtype"] == vtype].rename(
+                columns={"vector_id": "vec_id"}
+            )[["vec_id", "embedding", "owner_id"]]
+            gone = dropped.get(vtype, [])
+            if not len(adds) and not gone:
+                continue
             path = self.ivf_index_path(vtype)
             m = read_manifest(f"{path}/assign")
-            adds = new_vecs.filter(F.col("vtype") == vtype).select(
-                F.col("vector_id").alias("vec_id"), "embedding", "owner_id"
-            )
-            n_add = adds.count()
-            if n_add == 0:
-                continue
             built = int(m.get("built_rows") or 0)
-            from sortify_spark.sources.versioned import read_versioned
-
-            n_index = read_versioned(
-                self.spark, f"{path}/assign", "bucket"
-            ).count()
             # cumulative drift vs the quantizer's training size —
             # repeated small adds eventually trip the re-train
-            grown = (
-                ((n_index + n_add) / built - 1.0)
-                if built
-                else float("inf")
-            )
+            n_after = live_rows(f"{path}/assign", m) - len(gone) + len(adds)
+            grown = (n_after / built - 1.0) if built else float("inf")
             if grown > rebuild_over:
                 out[vtype] = ("rebuild", self.rebuild_ivf_index(vtype))
             else:
-                out[vtype] = ("upsert", upsert_ivf_index(adds, path))
-        # the batch frame's cache served its consumers (the grown
-        # vectors table is independently materialized above)
-        new_vecs.unpersist()
+                out[vtype] = (
+                    "upsert", upsert_ivf_index(adds, path, delete_ids=gone)
+                )
         # cached results predate the upload
         self.result_cache.clear()
         return out
+
+    def _swap_served(
+        self, doc_ids: DataFrame, docs: DataFrame | None = None,
+        new_vecs: DataFrame | None = None,
+    ) -> dict:
+        """Drop the documents ``doc_ids`` (a ``document_id`` string frame)
+        from the served documents and vectors tables and append ``docs``
+        / ``new_vecs``; returns ``{vtype: [vector_id]}`` of the dropped
+        vectors (one collect).  The grown vectors table is materialized
+        BEFORE the frame it builds on is unpersisted (swap-then-release,
+        ADVICE r9), so repeated mutations don't accumulate cached
+        lineages in executor storage."""
+        ids = F.broadcast(doc_ids)
+        dropped: dict = {}
+        for r in (
+            self.vectors.join(ids, "document_id", "left_semi")
+            .select("vtype", "vector_id")
+            .collect()
+        ):
+            dropped.setdefault(r["vtype"], []).append(r["vector_id"])
+        old_vectors = self.vectors
+        kept = old_vectors.join(ids, "document_id", "left_anti")
+        self.vectors = (
+            kept if new_vecs is None else kept.unionByName(new_vecs)
+        ).persist()
+        self._vectors_n = self.vectors.count()
+        self._vectors_gen += 1
+        old_vectors.unpersist()
+        kept_docs = self.documents.join(
+            F.broadcast(doc_ids.select(F.col("document_id").cast("long").alias("doc_id"))),
+            "doc_id",
+            "left_anti",
+        )
+        self.documents = kept_docs if docs is None else kept_docs.unionByName(docs)
+        return dropped
+
+    def _refresh_vectors_snapshot(self, gen: int, drop_docs, new_rows) -> None:
+        """Move a vectors snapshot held at generation ``gen`` to the
+        current one: drop the documents ``drop_docs`` and append
+        ``new_rows`` (collected ``serving.VECTOR_COLS`` rows, or None)."""
+        held = self._snapshots.get("vectors")
+        if held is None or held[0] != gen or held[2] is None:
+            return
+        snap = serving.refresh_vectors(
+            held[2], drop_docs,
+            new_rows if new_rows is not None
+            else pd.DataFrame(columns=serving.VECTOR_COLS),
+            self.dim,
+        )
+        nbytes = serving.vectors_bytes(self._vectors_n, self.dim)
+        self._snapshots["vectors"] = (
+            self._vectors_gen,
+            nbytes if snap is not None else math.inf,
+            snap if nbytes <= serving.SNAPSHOT_MAX_BYTES else None,
+            None,
+        )
 
     def _ivf_index(self, vtype: str) -> str:
         """Ensure the artifact exists (first use builds version 1);
@@ -722,15 +794,12 @@ class SortifyEngine:
         ``ann='ivf'`` probe (while ``vtype`` was not in ``_ivf_built``)
         were never upserted into it, so a bare adoption would leave
         deleted docs probe-able and added docs unsearchable.  The drift
-        check is the assign table's exact row count vs one served-
-        vectors count; any mismatch — or a mutation recorded in
+        check is the assign manifest's exact live row count vs one
+        served-vectors count; any mismatch — or a mutation recorded in
         ``_ivf_dirty`` (a balanced add+delete passes the count check)
         — rebuilds."""
         if vtype not in self._ivf_built:
-            from sortify_spark.sources.versioned import (
-                read_manifest,
-                read_versioned,
-            )
+            from sortify_spark.sources.versioned import live_rows, read_manifest
 
             path = self.ivf_index_path(vtype)
             manifest = read_manifest(f"{path}/assign")
@@ -741,8 +810,7 @@ class SortifyEngine:
                 # an artifact without the owner_id carry cannot serve
                 # owner-filtered probes — rebuild on adoption
                 or "owner_id" not in (manifest.get("carry") or [])
-                or read_versioned(self.spark, f"{path}/assign", "bucket")
-                .count()
+                or live_rows(f"{path}/assign", manifest)
                 != self.vectors.filter(F.col("vtype") == vtype).count()
             ):
                 self.rebuild_ivf_index(vtype)
@@ -1140,34 +1208,56 @@ class SortifyEngine:
 
         return dense, lexical, chunks
 
-    def _snapshot(self, name: str, key, nbytes, load):
-        """The driver-resident snapshot of one artifact at ``key``:
-        loaded on first use and replaced whole when the key moves.
-        None when its estimated resident size (``nbytes()``) is over
+    def _snapshot(self, name: str, key, meta, nbytes, load, refresh=None):
+        """The driver-resident snapshot of one artifact at ``key`` (the
+        committed manifest ``meta``).  A snapshot held at another key is
+        moved by ``refresh(snap, held_meta)`` when that commit only
+        appended segments and tombstones, else replaced whole by
+        ``load()`` on first use.  None when its resident size
+        (``nbytes(snap)``, an estimate before a load) is over
         ``serving.SNAPSHOT_MAX_BYTES`` or ``load()`` finds rows it
         cannot serve exactly — the request then stays on Spark."""
         held = self._snapshots.get(name)
         if held is None or held[0] != key:
-            held = self._snapshots[name] = (key, nbytes(), None)
+            snap = None
+            if held is not None and held[2] is not None and refresh is not None:
+                snap = refresh(held[2], held[3])
+            size = nbytes(snap)
+            held = self._snapshots[name] = (
+                key, size, snap if size <= serving.SNAPSHOT_MAX_BYTES else None,
+                meta,
+            )
         if held[1] > serving.SNAPSHOT_MAX_BYTES:
             return None
         if held[2] is None:
             snap = load()
             held = self._snapshots[name] = (
-                key, held[1] if snap is not None else math.inf, snap
+                key, held[1] if snap is not None else math.inf, snap, meta
             )
         return held[2]
+
+    def _rekey_snapshot(self, name: str, old_key, new_key, meta) -> None:
+        """A snapshot held at ``old_key`` serves ``new_key`` unchanged (a
+        merge commit: same rows, new files)."""
+        held = self._snapshots.get(name)
+        if held is not None and held[0] == old_key:
+            self._snapshots[name] = (new_key, held[1], held[2], meta)
 
     def _lexical_snapshot(self):
         from sortify_spark.sources.versioned import read_manifest
 
         path = self._lexical_index()
-        anchor = read_manifest(f"{path}/terms")
+        anchor = read_manifest(f"{path}/postings")
         return self._snapshot(
             "lexical",
-            (anchor["version"], anchor.get("postings_version")),
-            lambda: serving.lexical_bytes(path, anchor),
+            anchor["version"],
+            anchor,
+            lambda snap: (
+                snap.nbytes() if snap is not None
+                else serving.lexical_bytes(path, anchor)
+            ),
             lambda: serving.load_lexical(path, anchor),
+            lambda snap, held: serving.refresh_lexical(snap, held, path, anchor),
         )
 
     def _ivf_snapshot(self, vtype: str):
@@ -1178,12 +1268,18 @@ class SortifyEngine:
         return self._snapshot(
             f"ivf_{vtype}",
             (m["version"], m.get("centroid_version")),
-            lambda: serving.ivf_bytes(path, m, self.dim),
+            m,
+            lambda snap: (
+                serving.vectors_bytes(len(snap.rows.key) + len(snap.cents.key), self.dim)
+                if snap is not None
+                else serving.ivf_bytes(path, m, self.dim)
+            ),
             lambda: serving.load_ivf(path, m, self.dim),
+            lambda snap, held: serving.refresh_ivf(snap, held, path, m, self.dim),
         )
 
     def _vectors_snapshot(self):
-        def nbytes():
+        def nbytes(_snap):
             if self._vectors_n is None:
                 self._vectors_n = self.vectors.count()
             return serving.vectors_bytes(self._vectors_n, self.dim)
@@ -1191,6 +1287,7 @@ class SortifyEngine:
         return self._snapshot(
             "vectors",
             self._vectors_gen,
+            None,
             nbytes,
             lambda: serving.load_vectors(self.vectors, self.dim),
         )
@@ -1397,22 +1494,23 @@ class SortifyEngine:
         tables swap to the survivors (with Delta this is a real
         ``DELETE``), and — the reference's contract that a deleted
         document is UNFINDABLE, VERDICT r8 next #1 — every BUILT
-        persisted artifact is maintained in place: the BM25 lexical
-        index via :func:`search.lexical.delete_from_lexical_index`
-        (postings/doclen removed, df/n_docs/sum_dl decremented by exact
-        deltas) and each IVF index via
-        :func:`search.index.delete_from_ivf_index` (keyed bucket
-        delete), so ``keyword``/``hybrid_lexical``/``ivf`` searches
-        stop returning the doc WITHOUT a rebuild.  Returns the
-        surviving vectors frame (also the new ``self.vectors``).
+        persisted artifact gets a tombstone commit written on the
+        driver (no Spark job): the BM25 lexical index via
+        :func:`search.lexical.delete_from_lexical_index` (n_docs/sum_dl
+        decremented by exact deltas) and each IVF index via
+        :func:`search.index.delete_from_ivf_index`, so
+        ``keyword``/``hybrid_lexical``/``ivf`` searches stop returning
+        the doc WITHOUT a rebuild.  Returns the surviving vectors frame
+        (also the new ``self.vectors``).
 
         One call accepts at most ``_DELETE_BATCH_CAP`` ids.  This is
         the ENGINE's bound, not the reference's: the reference's
         batch-delete endpoint (``BatchDeleteRequest``,
         ``apis/v1/documents.py:619``) accepts an unbounded id list and
         loops it row-at-a-time server-side.  Here each deletion batch
-        becomes a driver-local relation embedded in four artifact
-        plans, so it must stay metadata-sized — callers with a larger
+        becomes a driver-local relation embedded in the served tables'
+        plans and a tombstone list in each artifact's manifest, so it
+        must stay metadata-sized — callers with a larger
         deletion set use :meth:`delete_vectors_batched`, which loops
         bounded batches internally and matches the reference's
         unbounded-list contract."""
@@ -1422,13 +1520,13 @@ class SortifyEngine:
         # the retained ``self.vectors``/``self.documents`` frames, so
         # the ContextCleaner can never reclaim it for the life of the
         # engine; a LocalRelation has no cached blocks and broadcasts
-        # identically into the per-artifact anti-joins.
+        # identically into the served tables' anti-joins.
         cap = _DELETE_BATCH_CAP
         if isinstance(doc_ids, DataFrame):
             # limit(cap+1) bounds the driver transfer even when the
             # caller hands over a huge frame; the cap itself is checked
             # below so a too-large batch fails loudly instead of
-            # embedding a multi-million-row LocalRelation in four plans.
+            # embedding a multi-million-row LocalRelation in the plans.
             vals = sorted(
                 r["document_id"]
                 for r in doc_ids.select(
@@ -1443,8 +1541,8 @@ class SortifyEngine:
         if len(vals) > cap:
             raise ValueError(
                 f"delete_vectors: deletion batch exceeds {cap} ids — "
-                "each batch embeds a driver-local relation in four "
-                "artifact plans, so it must stay metadata-sized; use "
+                "each batch embeds a driver-local relation in the served "
+                "tables' plans, so it must stay metadata-sized; use "
                 "delete_vectors_batched for larger deletion sets "
                 "(the reference's batch-delete accepts unbounded id "
                 "lists, apis/v1/documents.py:619 — the batched helper "
@@ -1456,40 +1554,27 @@ class SortifyEngine:
         if not self._lex_built:
             self._lex_dirty = True  # adoption must not trust n_docs alone
         self._ivf_dirty.update({"summary", "chunk"} - self._ivf_built)
+        gen = self._vectors_gen
+        dropped = self._swap_served(ids)
+        self._refresh_vectors_snapshot(gen, vals, None)
         if self._lex_built:
             from sortify_spark.search.lexical import (
                 delete_from_lexical_index,
             )
 
-            delete_from_lexical_index(
-                ids.select(F.col("document_id").cast("long").alias("doc_id")),
-                self.lexical_index_path(),
-            )
+            doc_ids = []
+            for v in vals:
+                try:
+                    doc_ids.append(int(v))
+                except ValueError:
+                    pass  # not a lexical doc id: nothing indexed under it
+            delete_from_lexical_index(doc_ids, self.lexical_index_path())
         for vtype in sorted(self._ivf_built):
             from sortify_spark.search.index import delete_from_ivf_index
 
-            gone = (
-                self.vectors.filter(F.col("vtype") == vtype)
-                .join(F.broadcast(ids), "document_id", "left_semi")
-                .select(F.col("vector_id").alias("vec_id"))
+            delete_from_ivf_index(
+                dropped.get(vtype, []), self.ivf_index_path(vtype)
             )
-            delete_from_ivf_index(gone, self.ivf_index_path(vtype))
-        # swap-then-release (ADVICE r9): materialize survivors before
-        # unpersisting the frame they filter from
-        old_vectors = self.vectors
-        self.vectors = self.vectors.join(
-            F.broadcast(ids), "document_id", "left_anti"
-        ).persist()
-        self._vectors_n = self.vectors.count()
-        self._vectors_gen += 1
-        old_vectors.unpersist()
-        self.documents = self.documents.join(
-            F.broadcast(
-                ids.select(F.col("document_id").cast("long").alias("doc_id"))
-            ),
-            "doc_id",
-            "left_anti",
-        )
         # a cached result may hold a deleted document
         self.result_cache.clear()
         return self.vectors
@@ -1505,8 +1590,8 @@ class SortifyEngine:
         plan embeds more than ``batch_size`` (default
         ``_DELETE_BATCH_CAP``) driver-local rows.  Every per-batch
         invariant is :meth:`delete_vectors`'s own — artifacts
-        maintained in place (probe file counts stay flat under the
-        keyed-delete discipline), deleted docs unfindable immediately
+        maintained by tombstone commits (no data file written),
+        deleted docs unfindable immediately
         after their batch, swap-then-release on the served frames,
         adoption dirty-flags idempotent across batches (set-union per
         batch ≡ one union at the end) — so the loop needs no epilogue
@@ -1571,154 +1656,91 @@ class SortifyEngine:
         return self.vectors
 
     def maintain_indexes(self, keep_last: int = 2) -> dict:
-        """OPTIMIZE + VACUUM for every BUILT persisted search artifact
-        — the single maintenance entrypoint a serving deployment
-        schedules (the lakehouse OPTIMIZE/VACUUM pair applied to the
+        """MERGE + VACUUM for every BUILT persisted search artifact —
+        the single maintenance entrypoint a serving deployment schedules
+        (the LSM segment merge and the lakehouse VACUUM applied to the
         BM25 and IVF artifacts).
 
-        ``compact`` consolidates any partition fragmented past one file
-        — a structural no-op under the keyed-upsert discipline (every
-        upsert merge-rewrites touched partitions into one file;
-        measured across 20 keyed upserts, r10 scale stress) but kept
-        here so artifacts written by OTHER writers heal too.
-        Compaction is layout-only (manifest extras carry forward), but
-        it BUMPS the compacted table's version — so before vacuuming,
-        any anchor that pins a paired table by version is re-pinned
-        onto the compacted (row-identical) version via a metadata-only
-        ``amend_manifest`` commit.  Only then does ``vacuum`` reclaim
-        version dirs older than ``keep_last`` committed versions:
-        current snapshots and the (re-pinned) anchor-paired manifests
-        survive, so probe results are hash-stable across a maintenance
-        pass even at ``keep_last=1``.  Run only when no reader holds a
-        snapshot older than the horizon — Delta's VACUUM contract.
-        Returns per-table ``{compacted: bool, vacuumed: n_versions}``."""
+        :func:`sources.versioned.merge_versioned` folds each table's
+        appended segments and tombstones into one new base — on the
+        driver with pyarrow when the artifact's snapshot estimate is
+        under ``serving.SNAPSHOT_MAX_BYTES``, else through Spark as a
+        build writes it.  A merge keeps the rows, so the BM25 anchor's
+        merge commit also re-pins the merged doclen version, and a
+        driver snapshot held at the pre-merge version is re-keyed to
+        the merged one instead of reloaded.  Then ``vacuum`` reclaims
+        version dirs older than ``keep_last`` committed versions: the
+        current snapshots survive, so probe results are hash-stable
+        across a maintenance pass even at ``keep_last=1``.  Run only
+        when no reader holds a snapshot older than the horizon —
+        Delta's VACUUM contract.  Returns per-table ``{merged: bool,
+        vacuumed: n_versions}``."""
         from sortify_spark.sources.versioned import (
             amend_manifest,
-            compact,
+            merge_versioned,
             read_manifest,
             vacuum,
         )
 
+        def spark_if_large(nbytes: int):
+            return None if nbytes <= serving.SNAPSHOT_MAX_BYTES else self.spark
+
         out: dict = {}
-        groups: list[list[tuple[str, str, str]]] = []
+
+        def finish(path: str, label: str, merged) -> None:
+            out[label] = {
+                "merged": merged is not None,
+                "vacuumed": len(vacuum(path, keep_last=keep_last)),
+            }
+
         if self._lex_built:
             lex = self.lexical_index_path()
-            groups.append(
-                [
-                    (f"{lex}/postings", "pt", "lex/postings"),
-                    (f"{lex}/doclen", "pd", "lex/doclen"),
-                    (f"{lex}/terms", "part", "lex/terms"),
-                ]
-            )
+            anchor = read_manifest(f"{lex}/postings")
+            spark = spark_if_large(serving.lexical_bytes(lex, anchor))
+            pin: dict = {}
+            dv = None
+            if anchor.get("doclen_version") == read_manifest(f"{lex}/doclen")["version"]:
+                dv = merge_versioned(f"{lex}/doclen", "pd", spark)
+                if dv is not None:
+                    pin["doclen_version"] = dv
+                finish(f"{lex}/doclen", "lex/doclen", dv)
+            else:
+                # a doclen commit after the anchor's pin (a crash between
+                # the two commits): its rows are not the index's, so the
+                # table is neither merged nor vacuumed — the next
+                # mutation re-bases it on the pinned version
+                warnings.warn(
+                    f"maintain_indexes: anchor pin doclen_version="
+                    f"{anchor.get('doclen_version')} is not the current "
+                    "doclen version; skipping its merge and vacuum",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
+                out["lex/doclen"] = {"merged": False, "vacuumed": 0, "stale_pin": True}
+            pv = merge_versioned(f"{lex}/postings", "pt", spark, extra=pin)
+            if pv is None and pin:
+                pv = amend_manifest(f"{lex}/postings", pin)
+            if pv is not None:
+                self._rekey_snapshot(
+                    "lexical", anchor["version"], pv,
+                    read_manifest(f"{lex}/postings"),
+                )
+            finish(f"{lex}/postings", "lex/postings", pv)
         for vtype in sorted(self._ivf_built):
             ivf = self.ivf_index_path(vtype)
-            groups.append(
-                [
-                    (f"{ivf}/assign", "bucket", f"ivf_{vtype}/assign"),
-                    (f"{ivf}/centroids", "part", f"ivf_{vtype}/centroids"),
-                ]
+            m = read_manifest(f"{ivf}/assign")
+            v = merge_versioned(
+                f"{ivf}/assign", "bucket",
+                spark_if_large(serving.ivf_bytes(ivf, m, self.dim)),
             )
-        _PIN_KEYS = {
-            "postings": "postings_version",
-            "doclen": "doclen_version",
-            "centroids": "centroid_version",
-        }
-        for tables in groups:
-            # Pre-compaction snapshot: the paired tables' CURRENT
-            # versions and the anchor's pins, read before any rewrite.
-            # The re-pin below is only valid when the anchor's pin
-            # equals the paired table's pre-compaction version — i.e.
-            # the pin points at exactly the rows compaction preserved.
-            pre_manifests = {
-                label: read_manifest(path) for path, _, label in tables
-            }
-            pre_versions = {
-                label: m["version"] for label, m in pre_manifests.items()
-            }
-            anchor_path = None
-            for path, _, label in tables:
-                if label.split("/", 1)[1] in ("terms", "assign"):
-                    anchor_path = path
-            anchor_manifest = (
-                read_manifest(anchor_path) if anchor_path else {}
-            )
-            compacted = {
-                label: compact(self.spark, path, pcol)
-                for path, pcol, label in tables
-            }
-            # re-pin anchors BEFORE any vacuum in this group: a real
-            # compaction of a paired table moved its current version
-            # past the anchor's pin, and vacuum would reclaim the
-            # pinned retained manifest at small keep_last.  If the pin
-            # is STALE (a crash landed between the paired commit and
-            # the anchor commit, so pin != pre-compaction current),
-            # re-pinning would silently move probes onto rows the
-            # anchor's n_docs/sum_dl no longer describe — skip both
-            # the re-pin and that table's vacuum and surface a
-            # warning; the loud FileNotFoundError on a reclaimed pin
-            # is strictly better than a silent stat mismatch.
-            repin: dict = {}
-            skip_vacuum: set = set()
-            for path, _, label in tables:
-                sub = label.split("/", 1)[1]
-                pin_key = _PIN_KEYS.get(sub)
-                if pin_key is None:
-                    continue
-                pinned = anchor_manifest.get(pin_key)
-                if pinned is None:
-                    # No pin recorded: nothing references an old
-                    # version, so vacuum cannot strand a reader.
-                    continue
-                if pinned == pre_versions[label]:
-                    if compacted[label] is not None:
-                        repin[pin_key] = compacted[label]
-                else:
-                    # Stale pin (crash between the paired commit and
-                    # the anchor commit).  Checked even when nothing
-                    # compacted: vacuum reclaims ANY manifest at or
-                    # below the horizon, pinned or not, so a stale pin
-                    # must suppress vacuum of its table regardless of
-                    # whether this pass rewrote files.
-                    warnings.warn(
-                        f"maintain_indexes: anchor pin {pin_key}="
-                        f"{pinned} != pre-compaction version "
-                        f"{pre_versions[label]} of {label}; skipping "
-                        "re-pin and vacuum of that table (stale pin — "
-                        "rebuild the index to reconcile)",
-                        RuntimeWarning,
-                        stacklevel=2,
-                    )
-                    skip_vacuum.add(label)
-            if repin and anchor_path is not None:
-                amend_manifest(anchor_path, repin)
-            def _compact_kind(path, label):
-                # compact() returns a version for BOTH a file rewrite
-                # and a metadata-only roll re-pin (r13) — distinguish
-                # them for the report: an amend leaves the partition
-                # map byte-identical, a rewrite repoints it (r13
-                # review: "compacted": True for a pin would read as a
-                # phantom file rewrite to maintenance monitoring)
-                if compacted[label] is None:
-                    return {"compacted": False, "repinned": False}
-                rewrote = (
-                    read_manifest(path)["partitions"]
-                    != pre_manifests[label]["partitions"]
+            if v is not None:
+                cv = m.get("centroid_version")
+                self._rekey_snapshot(
+                    f"ivf_{vtype}", (m["version"], cv), (v, cv),
+                    read_manifest(f"{ivf}/assign"),
                 )
-                return {"compacted": rewrote, "repinned": not rewrote}
-
-            for path, _, label in tables:
-                if label in skip_vacuum:
-                    out[label] = {
-                        **_compact_kind(path, label),
-                        "vacuumed": 0,
-                        "stale_pin": True,
-                    }
-                    continue
-                removed = vacuum(path, keep_last=keep_last)
-                out[label] = {
-                    **_compact_kind(path, label),
-                    "vacuumed": len(removed),
-                }
+            finish(f"{ivf}/assign", f"ivf_{vtype}/assign", v)
+            finish(f"{ivf}/centroids", f"ivf_{vtype}/centroids", None)
         return out
 
     # -- analytics ---------------------------------------------------------

@@ -12,9 +12,13 @@ index a durable artifact with the lifecycle a serving system needs
   (so a probe is partition pruning) and the centroid table beside it.
   Rebuilds commit new versions; readers switch atomically; old
   snapshots remain time-travelable until vacuumed.
+* :func:`upsert_ivf_index` / :func:`delete_from_ivf_index` — FAISS
+  ``add`` / ``remove_ids`` as appends on the driver (no Spark job): an
+  add is one segment of assign rows, a replace or delete a tombstone.
 * :func:`probe_ivf_index` — rank the stored centroids against the
-  query, read ONLY the probed buckets' partitions, exact cosine rerank
-  inside.  No rebuild, no full scan.
+  query, read ONLY the probed buckets' partitions (and the small
+  segment files), exact cosine rerank inside.  No rebuild, no full
+  scan.
 
 Scale shape: the build pays n × nlist BLAS scoring once; each probe
 reads nprobe/nlist of the data.  At 100 TB the assignment table is the
@@ -96,8 +100,8 @@ def build_ivf_index(
     ``pre_filter`` prunes FILES via parquet footer stats instead of
     row-filtering whole buckets (the 100 TB multi-tenant cost story;
     VERDICT r10 #3).  The layout is recorded in the manifest and
-    re-applied by every upsert/delete/compact, so it survives the
-    artifact's lifecycle.
+    re-applied by every merge, so it survives the artifact's
+    lifecycle.
     """
     from sortify_spark.sources.versioned import overwrite_versioned
 
@@ -179,57 +183,46 @@ def build_ivf_index(
 
 
 def upsert_ivf_index(
-    vectors: DataFrame,
+    vectors,
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     exact_assign: bool = False,
+    delete_ids=(),
 ) -> int:
     """Incremental ADD / REPLACE against the STORED coarse quantizer —
     FAISS IVF ``add`` semantics: incoming vectors are assigned to their
     nearest EXISTING centroid (the quantizer does not move; re-train by
-    :func:`build_ivf_index`) and committed keyed ``vec_id`` into the
-    bucket-partitioned assign table, touching only the buckets the
-    batch lands in.  Returns the committed assign version.
+    :func:`build_ivf_index`) and committed as ONE appended segment of
+    assign rows.  Returns the committed assign version.
 
-    A REPLACED id whose new embedding lands in a DIFFERENT bucket is
-    first removed from its old bucket — located with one column-pruned
-    ``(vec_id, bucket)`` scan of the assign table — via a keyed delete,
-    then the new rows commit.  That is two versions, not one: the
-    in-between snapshot (and a crash between the commits) misses the
-    moving ids but can never DUPLICATE them, and the next upsert or
-    rebuild heals the gap — the derived-artifact trade the reference's
-    delete-then-readd vector refresh makes too
-    (``vector_db_service.py:73-76``).  The paired ``centroid_version``
-    is carried through every commit so probes keep resolving the
-    quantizer that assigned the rows.
+    ``vectors`` is a Spark or pandas frame of (id, embedding, carry
+    columns).  The assignment runs on the driver with the build's
+    kernel (``knn.nearest_centroid_fn`` over the stored centroids, read
+    with pyarrow), so the add plans no Spark job; ``exact_assign``
+    assigns with the rounded expression twin on Spark instead.
 
-    Scale: assignment is the same broadcast/BLAS kernel as the build
-    (batch × nlist); the moved-id scan reads two columns of the index
-    (column-pruned, no shuffle); the commit rewrites only affected
-    bucket partitions.  Growth stats: each build records ``built_rows``
-    in the assign manifest, so callers can rebuild when
-    rows-now / built_rows exceeds a drift budget."""
+    A REPLACED ``vec_id`` is a tombstone plus its new row in the same
+    commit, whichever bucket it lands in, so no snapshot ever misses or
+    duplicates it; ``delete_ids`` tombstones further ids in that commit
+    (a replaced document's chunks the new text no longer has).  The
+    paired ``centroid_version``, ``built_rows`` (the drift-budget
+    denominator) and ``carry`` carry through every commit."""
+    import numpy as np
+
     from sortify_spark.sources.versioned import (
-        delete_versioned,
+        append_versioned,
         read_manifest,
         read_versioned,
-        upsert_versioned,
+        read_versioned_pandas,
     )
 
-    spark = vectors.sparkSession
     manifest = read_manifest(f"{path}/assign")
     if manifest["version"] == 0:
         raise FileNotFoundError(
             f"no IVF index at {path} — upsert_ivf_index maintains an "
             "EXISTING index (FAISS `add`); run build_ivf_index first"
         )
-    cents = read_versioned(
-        spark,
-        f"{path}/centroids",
-        "part",
-        version=manifest.get("centroid_version"),
-    ).select("bucket", "centroid")
     carry = tuple(manifest.get("carry") or ())
     missing = [c for c in carry if c not in vectors.columns]
     if missing:
@@ -237,104 +230,74 @@ def upsert_ivf_index(
             f"index at {path} carries assign metadata {list(carry)}; "
             f"the upsert batch is missing columns {missing}"
         )
-    base = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("embedding"),
-        *[F.col(c) for c in carry],
-    )
-    assign = (
-        knn.assign_nearest_centroid
-        if exact_assign
-        else knn.assign_nearest_centroid_np
-    )
-    assigned = (
-        assign(base.select("vec_id", "embedding"), cents)
-        .withColumnRenamed("label", "bucket")
-        .join(base, "vec_id")
-        .select("vec_id", "embedding", *carry, "bucket")
-    )
-    assigned = assigned.localCheckpoint(eager=True)
-    # ids already indexed under a DIFFERENT bucket: delete before the
-    # keyed upsert (the upsert's anti-join is (bucket, vec_id) — it
-    # cannot see the old bucket's row)
-    old = read_versioned(spark, f"{path}/assign", "bucket").select(
-        "vec_id", F.col("bucket").alias("old_bucket")
-    )
-    moved = (
-        assigned.select("vec_id", "bucket")
-        .join(old, "vec_id")
-        .filter(F.col("bucket") != F.col("old_bucket"))
-        .select("vec_id", F.col("old_bucket").alias("bucket"))
-    )
-    pair = {"centroid_version": manifest.get("centroid_version")}
-    if manifest.get("built_rows") is not None:
-        # the drift-budget denominator must survive incremental commits
-        # (review r9: dropping it made the next add_documents see
-        # built=0 -> grown=inf -> a spurious full re-train every other
-        # add); it still records the QUANTIZER's training size
-        pair["built_rows"] = manifest["built_rows"]
-    pair["carry"] = list(carry)
-    if not moved.isEmpty():
-        delete_versioned(
-            moved, f"{path}/assign", keys=["vec_id"],
-            partition_col="bucket", extra=pair,
+    cols = [id_col, vec_col, *carry]
+    if exact_assign:
+        if not isinstance(vectors, DataFrame):
+            raise ValueError("exact_assign assigns on Spark: pass a Spark frame")
+        base = vectors.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).cast("array<double>").alias("embedding"),
+            *[F.col(c) for c in carry],
         )
-    return upsert_versioned(
-        assigned, f"{path}/assign", keys=["vec_id"],
-        partition_col="bucket", extra=pair,
+        cents = read_versioned(
+            vectors.sparkSession, f"{path}/centroids", "part",
+            version=manifest.get("centroid_version"),
+        )
+        rows = (
+            knn.assign_nearest_centroid(base.select("vec_id", "embedding"), cents)
+            .withColumnRenamed("label", "bucket")
+            .join(base, "vec_id")
+            .toPandas()
+        )
+    else:
+        rows = (
+            vectors.select(*cols).toPandas()
+            if isinstance(vectors, DataFrame)
+            else vectors[cols]
+        ).rename(columns={id_col: "vec_id", vec_col: "embedding"})
+        cents = read_versioned_pandas(
+            f"{path}/centroids", "part", version=manifest.get("centroid_version")
+        )
+        nearest = knn.nearest_centroid_fn(cents["bucket"], cents["centroid"])
+        rows = rows.assign(
+            bucket=nearest(rows["embedding"]) if len(rows) else [],
+            embedding=[np.asarray(e, dtype=np.float64) for e in rows["embedding"]],
+        )
+    return append_versioned(
+        rows, f"{path}/assign", "bucket", key="vec_id",
+        delete=[*rows["vec_id"], *delete_ids],
     )
 
 
 def delete_from_ivf_index(
-    ids: DataFrame,
+    ids,
     path: str,
     id_col: str = "vec_id",
 ) -> int:
     """Keyed DELETE against the stored index — FAISS ``remove_ids`` /
     the reference's delete-by-id (``vector_db_service.py:263-323``)
-    applied to the persisted artifact (VERDICT r8 next #1: the facade's
-    ``delete_vectors`` previously rewrote only the served table,
-    leaving deleted ids probe-able until a full rebuild).
+    applied to the persisted artifact: one commit of tombstones, no data
+    written, no Spark job.
 
-    ``ids`` is a one-column frame of vector ids; ids not in the index
-    are ignored (idempotent).  Located with the same column-pruned
-    ``(vec_id, bucket)`` scan as the upsert's moved-id pass, removed
-    via one keyed delete that rewrites only the touched bucket
-    partitions.  The paired ``centroid_version`` and ``built_rows``
-    carry through so probes keep resolving the assigning quantizer and
-    drift-budget rebuild decisions keep their denominator.  Returns the
-    committed assign version (current version when nothing matched)."""
-    from sortify_spark.sources.versioned import (
-        delete_versioned,
-        read_manifest,
-        read_versioned,
-    )
+    ``ids`` is a Spark or pandas frame with an ``id_col`` column, or a
+    list of vector ids; ids not in the index are ignored (idempotent).
+    The paired ``centroid_version`` and ``built_rows`` carry through so
+    probes keep resolving the assigning quantizer and drift-budget
+    rebuild decisions keep their denominator.  Returns the committed
+    assign version (current version when nothing matched)."""
+    from sortify_spark.sources.versioned import append_versioned, read_manifest
 
-    spark = ids.sparkSession
-    manifest = read_manifest(f"{path}/assign")
-    if manifest["version"] == 0:
+    if read_manifest(f"{path}/assign")["version"] == 0:
         raise FileNotFoundError(
             f"no IVF index at {path} — delete_from_ivf_index maintains "
             "an EXISTING index; run build_ivf_index first"
         )
-    gone = (
-        read_versioned(spark, f"{path}/assign", "bucket")
-        .select("vec_id", "bucket")
-        .join(
-            F.broadcast(ids.select(F.col(id_col).alias("vec_id"))),
-            "vec_id",
-            "left_semi",
-        )
-    )
-    if gone.isEmpty():
-        return int(manifest["version"])
-    extra = {"centroid_version": manifest.get("centroid_version")}
-    if manifest.get("built_rows") is not None:
-        extra["built_rows"] = manifest["built_rows"]
-    extra["carry"] = list(manifest.get("carry") or ())
-    return delete_versioned(
-        gone, f"{path}/assign", keys=["vec_id"],
-        partition_col="bucket", extra=extra,
+    if isinstance(ids, DataFrame):
+        ids = [r[0] for r in ids.select(id_col).collect()]
+    elif not isinstance(ids, list):
+        ids = ids[id_col].tolist()
+    return append_versioned(
+        None, f"{path}/assign", "bucket", key="vec_id", delete=ids
     )
 
 
@@ -390,27 +353,16 @@ def ivf_tenant_occupancy(
     facade does exactly this, keyed by the assign version so an
     upsert that grows a tenant into a new bucket can never be missed
     through a stale cache)."""
-    from sortify_spark.sources.versioned import (
-        _read_partition_dirs,
-        read_manifest,
-    )
+    from sortify_spark.sources.versioned import read_manifest, scan_versioned
 
-    manifest = read_manifest(f"{path}/assign", version)
-    if not manifest["partitions"]:
+    rows = scan_versioned(
+        spark, f"{path}/assign", "bucket",
+        read_manifest(f"{path}/assign", version), pre_filter=pre_filter,
+    )
+    if rows is None:
         return []
     return sorted(
-        int(r["bucket"])
-        for r in _read_partition_dirs(
-            spark,
-            f"{path}/assign",
-            "bucket",
-            list(manifest["partitions"].values()),
-            dtype=manifest.get("partition_dtype"),
-            pre_filter=pre_filter,
-        )
-        .select("bucket")
-        .distinct()
-        .collect()
+        int(r["bucket"]) for r in rows.select("bucket").distinct().collect()
     )
 
 
@@ -431,23 +383,16 @@ def ivf_occupancy_all(
     a per-tenant loop would collect in total); the facade's
     ``warm_ivf_occupancy`` feeds it straight into the version-keyed
     cache."""
-    from sortify_spark.sources.versioned import (
-        _read_partition_dirs,
-        read_manifest,
-    )
+    from sortify_spark.sources.versioned import read_manifest, scan_versioned
 
-    manifest = read_manifest(f"{path}/assign", version)
-    if not manifest["partitions"]:
+    rows = scan_versioned(
+        spark, f"{path}/assign", "bucket",
+        read_manifest(f"{path}/assign", version),
+    )
+    if rows is None:
         return {}
     rows = (
-        _read_partition_dirs(
-            spark,
-            f"{path}/assign",
-            "bucket",
-            list(manifest["partitions"].values()),
-            dtype=manifest.get("partition_dtype"),
-        )
-        .select(F.col(owner_col).cast("string").alias("__o"), "bucket")
+        rows.select(F.col(owner_col).cast("string").alias("__o"), "bucket")
         .distinct()
         .collect()
     )
@@ -539,55 +484,35 @@ def probe_ivf_index(
     the tenant's own occupied count, so it can never read more than
     the exact filtered scan.  The escalation schedule starts at the
     floored width and still widens past it while candidates < k."""
-    from sortify_spark.sources.versioned import (
-        _read_partition_dirs,
-        read_manifest,
-    )
+    from sortify_spark.sources.versioned import read_manifest, scan_versioned
 
     _set_probe_escalation(None)
     manifest = read_manifest(f"{path}/assign", version)
 
     def _read_rels(bucket_list, filtered=False):
-        # pre_filter goes INTO the scan (pushed to parquet footer
+        # pre_filter goes INTO the scans (pushed to parquet footer
         # stats — a layout_col table then prunes whole files), never
         # onto the returned frame: the partition-restore projection is
         # nondeterministic and blocks predicate pushdown above it
-        rels = [
-            manifest["partitions"][str(b)]
-            for b in bucket_list
-            if str(b) in manifest["partitions"]
-        ]
-        if not rels:
-            # Every requested bucket is absent from the manifest — a
-            # delete can empty a bucket the centroids table still
-            # ranks, and the delta-sliced escalation reads can then
-            # land entirely on such buckets (the r11 cumulative reads
-            # masked this).  A zero-path parquet read raises; return
-            # a zero-row frame with the index's own schema instead.
-            if not manifest["partitions"]:
-                raise FileNotFoundError(
-                    f"IVF index at {path} has no assign partitions "
-                    "(every row deleted) — rebuild before probing"
-                )
-            first_rel = [
-                manifest["partitions"][v]
-                for v in sorted(manifest["partitions"])[:1]
-            ]
-            return _read_partition_dirs(
-                spark,
-                f"{path}/assign",
-                "bucket",
-                first_rel,
-                dtype=manifest.get("partition_dtype"),
-            ).filter(F.lit(False))
-        return _read_partition_dirs(
-            spark,
-            f"{path}/assign",
-            "bucket",
-            rels,
-            dtype=manifest.get("partition_dtype"),
+        rows = scan_versioned(
+            spark, f"{path}/assign", "bucket", manifest, values=bucket_list,
             pre_filter=pre_filter if filtered else None,
         )
+        if rows is None:
+            # Every requested bucket is absent from the snapshot — a
+            # delete can empty a bucket the centroids table still
+            # ranks, and the delta-sliced escalation reads can then
+            # land entirely on such buckets.  A zero-path parquet read
+            # raises; return a zero-row frame with the index's own
+            # schema instead.
+            rows = scan_versioned(spark, f"{path}/assign", "bucket", manifest)
+            if rows is None:
+                raise FileNotFoundError(
+                    f"IVF index at {path} has no assign rows "
+                    "(every row deleted) — rebuild before probing"
+                )
+            rows = rows.filter(F.lit(False))
+        return rows
 
     escalate = pre_filter is not None and min_candidates is not None
     occupied = None
@@ -602,9 +527,7 @@ def probe_ivf_index(
             # ≤ nlist rows
             occupied = {
                 r["bucket"]
-                for r in _read_rels(
-                    [b for b in manifest["partitions"]], filtered=True
-                )
+                for r in _read_rels(None, filtered=True)
                 .select("bucket")
                 .distinct()
                 .collect()
@@ -681,10 +604,8 @@ def probe_ivf_index(
         probed = _read_rels(ranked[:chosen], filtered=True)
     else:
         # occupancy-aware ranking with a tenant owning zero vectors:
-        # zero rows, but with the index's own schema (read one
-        # partition's footer, keep no rows)
-        first = sorted(manifest["partitions"])[:1]
-        probed = _read_rels(first).filter(F.lit(False))
+        # zero rows, but with the index's own schema
+        probed = _read_rels([]).filter(F.lit(False))
     return knn.brute_force_topk(probed, query, k=k)
 
 
@@ -747,10 +668,7 @@ def probe_ivf_index_many(
     from pyspark.sql.window import Window
 
     from sortify_spark.functions.vectors import cosine, l2_norm
-    from sortify_spark.sources.versioned import (
-        _read_partition_dirs,
-        read_manifest,
-    )
+    from sortify_spark.sources.versioned import read_manifest, scan_versioned
 
     manifest = read_manifest(f"{path}/assign", version)
     cents = __read(
@@ -761,32 +679,16 @@ def probe_ivf_index_many(
     def _occupancy_scan(bucket_subset=None):
         # column-pruned, filter-pushed: reads bucket + the filter's
         # carry columns only, never embeddings; output ≤ nlist rows.
-        # ``bucket_subset`` restricts the scan to those buckets'
-        # partition dirs (the occupied set, when known) — counts for
-        # buckets the ranking already excluded are never needed.
-        rels = (
-            list(manifest["partitions"].values())
-            if bucket_subset is None
-            else [
-                manifest["partitions"][str(b)]
-                for b in bucket_subset
-                if str(b) in manifest["partitions"]
-            ]
+        # ``bucket_subset`` restricts the scan to those buckets (the
+        # occupied set, when known) — counts for buckets the ranking
+        # already excluded are never needed.
+        rows = scan_versioned(
+            spark, f"{path}/assign", "bucket", manifest,
+            values=bucket_subset, pre_filter=pre_filter,
         )
-        if not rels:
+        if rows is None:
             return spark.createDataFrame([], "bucket long, __c long")
-        return (
-            _read_partition_dirs(
-                spark,
-                f"{path}/assign",
-                "bucket",
-                rels,
-                dtype=manifest.get("partition_dtype"),
-                pre_filter=pre_filter,
-            )
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("__c"))
-        )
+        return rows.groupBy("bucket").agg(F.count(F.lit(1)).alias("__c"))
 
     occupied = None
     if filter_buckets and pre_filter is not None:
@@ -896,27 +798,18 @@ def probe_ivf_index_many(
     buckets = sorted(
         {int(r["bucket"]) for r in qb.select("bucket").distinct().collect()}
     )
-    rels = [
-        manifest["partitions"][str(b)]
-        for b in buckets
-        if str(b) in manifest["partitions"]
-    ]
-    if not rels:
+    # filtered ANN (see probe_ivf_index): the filter rides the SCAN
+    # nodes (pushed to parquet stats; the partition-restore projection
+    # is nondeterministic and would block pushdown above it), so a
+    # layout_col index prunes files before the norm fold
+    probed = scan_versioned(
+        spark, f"{path}/assign", "bucket", manifest, values=buckets,
+        pre_filter=pre_filter,
+    )
+    if probed is None:
         return spark.createDataFrame(
             [], "query_id string, vec_id string, score double, rnk int"
         )
-    # filtered ANN (see probe_ivf_index): the filter rides the SCAN
-    # node (pushed to parquet stats; the partition-restore projection
-    # is nondeterministic and would block pushdown above it), so a
-    # layout_col index prunes files before the norm fold
-    probed = _read_partition_dirs(
-        spark,
-        f"{path}/assign",
-        "bucket",
-        rels,
-        dtype=manifest.get("partition_dtype"),
-        pre_filter=pre_filter,
-    )
     probed = probed.withColumn("__vn", l2_norm("embedding"))
     from sortify_spark.functions.vectors import cosine_given_norms
 

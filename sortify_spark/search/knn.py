@@ -212,6 +212,30 @@ def assign_nearest_centroid(
     )
 
 
+def nearest_centroid_fn(buckets, centroids):
+    """The nearest-centroid kernel of :func:`assign_nearest_centroid_np`
+    as a function of a sequence of vectors → their bucket ids: cosine
+    argmax by one BLAS product against the unit centroids, ties to the
+    lowest bucket id.  The Spark assignment and the driver-side IVF add
+    (``search.index.upsert_ivf_index``) both call it."""
+    import numpy as np
+
+    order = np.argsort(np.asarray(buckets, dtype=np.int64), kind="stable")
+    ids = np.asarray(buckets, dtype=np.int64)[order]
+    C = np.array([centroids[i] for i in order], dtype=np.float64)
+    cn = np.linalg.norm(C, axis=1)
+    cn[cn == 0] = 1.0
+    Cu = (C / cn[:, None]).T  # dim × nlist, ready for X @ Cu
+
+    def nearest(vectors) -> np.ndarray:
+        X = np.array(list(vectors), dtype=np.float64)
+        xn = np.linalg.norm(X, axis=1)
+        xn[xn == 0] = 1.0
+        return ids[((X / xn[:, None]) @ Cu).argmax(axis=1)]
+
+    return nearest
+
+
 def assign_nearest_centroid_np(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -228,27 +252,19 @@ def assign_nearest_centroid_np(
     contract as the expression twin (crossJoin + ``max_by`` over
     :func:`functions.vectors.cosine`), which this kernel vectorizes.
     The centroid collect is nlist rows — index metadata, not data."""
-    import numpy as np
     import pandas as pd
 
     rows = centroids.select("bucket", "centroid").collect()
-    rows.sort(key=lambda r: r["bucket"])
-    buckets = np.array([r["bucket"] for r in rows], dtype=np.int64)
-    C = np.array([r["centroid"] for r in rows], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1)
-    cn[cn == 0] = 1.0
-    Cu = (C / cn[:, None]).T  # dim × nlist, ready for X @ Cu
+    nearest = nearest_centroid_fn(
+        [r["bucket"] for r in rows], [r["centroid"] for r in rows]
+    )
 
     def fn(it):
         for pdf in it:
             if not len(pdf):
                 continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            xn = np.linalg.norm(X, axis=1)
-            xn[xn == 0] = 1.0
-            idx = ((X / xn[:, None]) @ Cu).argmax(axis=1)
             yield pd.DataFrame(
-                {id_col: pdf[id_col].values, out_col: buckets[idx]}
+                {id_col: pdf[id_col].values, out_col: nearest(pdf[vec_col])}
             )
 
     id_type = vectors.schema[id_col].dataType.simpleString()

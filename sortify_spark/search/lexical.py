@@ -9,41 +9,39 @@ lifecycle the dense side already has — the Chroma-persistent-collection
 analog (reference ``vector_db_service.py:18-20,73-76``) applied to the
 keyword half this engine added beyond the reference:
 
-* :func:`build_lexical_index` — full-snapshot build of three versioned
-  tables under ``<path>/``:
+* :func:`build_lexical_index` — full-snapshot build (on Spark) of two
+  versioned tables under ``<path>/``:
 
   - ``postings`` (term, doc_id, tf, dl) partitioned by
     ``pt = hash(term) % pt_buckets`` — a probe for a bounded query
     term set is PARTITION PRUNING (reads ≤ |terms| buckets of the
-    index, never the corpus);
-  - ``doclen`` (doc_id, dl) partitioned by a doc-id hash — the
-    forward table upserts use to locate replaced docs' old lengths;
-  - ``terms`` (term, df) — vocabulary-sized, the COMMIT ANCHOR: its
-    manifest records the paired ``postings_version`` /
-    ``doclen_version`` plus the exact integer corpus stats
-    (``n_docs``, ``sum_dl``), so a probe always resolves the three
-    tables AS ONE BUILD'S SNAPSHOT (same pairing discipline as the
-    IVF assign→centroid manifest, ``search/index.py:89-94``).
+    index, never the corpus).  It is the COMMIT ANCHOR: its manifest
+    records the exact integer corpus stats (``n_docs``, ``sum_dl``)
+    and the paired ``doclen_version``, so a probe resolves one
+    commit's snapshot (same pairing discipline as the IVF
+    assign→centroid manifest);
+  - ``doclen`` (doc_id, dl, fp) partitioned by a doc-id hash — the
+    forward table mutations read a replaced or deleted doc's length
+    from.
 
-* :func:`upsert_lexical_index` — incremental ADD / REPLACE with exact
-  df maintenance: a replaced doc's stale postings are located with one
-  column-pruned (pt, term, doc_id) scan of the postings table (the
-  same shape as IVF's moved-id scan), deleted where the new text no
-  longer contains the term, and per-term df / n_docs / sum_dl adjust
-  by exact integer deltas.  Terms whose df drops to zero are kept at
-  df = 0 rather than deleted — they have no postings so they can never
-  score, and keeping them makes the terms maintenance ONE atomic
-  commit instead of a delete + upsert pair.
+* :func:`upsert_lexical_index` / :func:`delete_from_lexical_index` —
+  ADD / REPLACE / DELETE as appends (:func:`sources.versioned.
+  append_versioned`, written on the driver, no Spark job): an add
+  commits one doclen segment and one postings segment for the batch,
+  a replaced or deleted id is a tombstone in the same commits, and
+  n_docs / sum_dl move by exact integer deltas (the old ``dl`` read
+  from the doclen rows).  Cost grows with the batch, not the corpus.
 
 * :func:`probe_lexical_index` — BM25 top-k through the stored index:
-  query terms hash to their posting buckets (partition-pruned via the
-  manifest), per-term df comes from the vocabulary table, (N, avgdl)
-  from the anchor manifest's integers, and the score is the EXACT
-  rounded expression of :func:`bm25_scored` (same ``_score_expr``
-  text, same term-order addition sequence), so a probe is
-  bit-identical to the full-scan ``bm25_scored`` for the same corpus —
-  the property the driver row ``bm25_index_probe`` hash-checks against
-  a pure-SQL replay.
+  query terms hash to their posting buckets (computed on the driver,
+  :func:`term_bucket`), ``df`` is the count of the term's live posting
+  rows in the same scan (before any owner filter), (N, avgdl) come
+  from the anchor's integers, and the score is the EXACT rounded
+  expression of :func:`bm25_scored` (same ``_score_expr`` text, same
+  term-order addition sequence), so a probe is bit-identical to the
+  full-scan ``bm25_scored`` for the same corpus — the property the
+  driver row ``bm25_index_probe`` hash-checks against a pure-SQL
+  replay.
 
 * :func:`bm25_scored` — the index-free reference ranking: stats and
   scores recomputed from the corpus in two scans.  The BM25 formula
@@ -51,17 +49,14 @@ keyword half this engine added beyond the reference:
   here once; the probes, the registry rows and the tests all read it
   from this module.
 
-Crash consistency: commits run postings → doclen → terms(anchor).  A
-crash between them leaves the anchor pointing at the PREVIOUS paired
-snapshot — probes never observe a half-committed build; the next
-upsert's keyed merges heal the orphaned newer versions (the
-derived-artifact trade documented on ``upsert_ivf_index``).
+Crash consistency: commits run doclen → postings (anchor).  A crash
+between them leaves the anchor pinning the PREVIOUS doclen snapshot —
+probes never observe a half-committed mutation, and the next mutation
+appends to the pinned doclen snapshot, dropping the orphaned commit.
 
 Scale shape: the build is one tokenize + one (doc, term) aggregate of
-the corpus; each probe reads |query terms| bucket partitions of the
-postings table plus the tiny vocabulary/anchor tables — never the
-corpus.  At 100 TB the postings table is the searchable corpus
-representation itself, exactly how it is written here.
+the corpus; each probe reads |query terms| bucket partitions plus the
+small segment files — never the corpus.
 """
 
 from __future__ import annotations
@@ -190,7 +185,6 @@ def _tokenized(
     pt_buckets: int,
     pd_buckets: int = DEFAULT_PD_BUCKETS,
     carry_cols: tuple[str, ...] = (),
-    materialize_base: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """(postings, doclen) frames for one batch — the SAME whitespace
     tokenizer as :func:`bm25_scored` (split on single spaces,
@@ -203,11 +197,10 @@ def _tokenized(
     functionally dependent on ``doc_id``, so they join the posting
     group-by keys for free.
 
-    ``materialize_base``: eagerly checkpoint the tokenized (doc_id,
-    dl, w) frame so the postings aggregate and the doclen fingerprint
-    run ONE corpus tokenize pass instead of one each (guide §6
-    one-scan; the full build opts in — an upsert batch is small enough
-    that the extra materialization is pure overhead)."""
+    The tokenized (doc_id, dl, w) frame is checkpointed, so the
+    postings aggregate and the doclen fingerprint run ONE corpus
+    tokenize pass instead of one each (guide §6 one-scan).
+    :func:`_tokenize_rows` is the driver twin mutations use."""
     w = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
     base = docs.select(
         F.col(id_col).alias("doc_id"),
@@ -215,8 +208,7 @@ def _tokenized(
         F.size(w).alias("dl"),
         w.alias("w"),
     )
-    if materialize_base:
-        base = base.localCheckpoint(eager=True)
+    base = base.localCheckpoint(eager=True)
     postings = (
         base.select(
             "doc_id", *carry_cols, "dl", F.explode("w").alias("term")
@@ -244,6 +236,108 @@ def doc_fp(tokens_col) -> "F.Column":
     )
 
 
+# -- driver twins of the build's hashing and tokenizing ------------------------
+
+_P1, _P2, _P3 = 11400714785074694791, 14029467366897019727, 1609587929392839161
+_P4, _P5 = 9650029242287828579, 2870177450012600261
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _lane(acc: int, word: int) -> int:
+    return _rotl((acc + word * _P2) & _M64, 31) * _P1 & _M64
+
+
+def xxhash64(data: bytes, seed: int = 42) -> int:
+    """Spark's ``xxhash64`` of a string (XXH64 over its UTF-8 bytes,
+    seed 42) as a signed 64-bit int — the hash :func:`_pt` places rows
+    with, so the driver computes the same bucket without a job."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed & _M64,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                word = int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little")
+                v[j] = _lane(v[j], word)
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _lane(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        word = int.from_bytes(data[i : i + 8], "little")
+        h = (_rotl(h ^ _lane(0, word), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        word = int.from_bytes(data[i : i + 4], "little")
+        h = (_rotl(h ^ (word * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h = _rotl(h ^ (data[i] * _P5 & _M64), 11) * _P1 & _M64
+        i += 1
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def term_bucket(value: str, buckets: int) -> int:
+    """:func:`_pt` on the driver: ``pmod(abs(xxhash64(value)), buckets)``
+    (``abs`` of the minimum long stays negative, as in Spark)."""
+    h = xxhash64(value.encode("utf-8"))
+    return (h if h == -(1 << 63) else abs(h)) % buckets
+
+
+def _tokenize_rows(
+    pdf, id_col: str, text_col: str, carry: tuple[str, ...],
+    pt_buckets: int, pd_buckets: int,
+):
+    """(postings, doclen) pandas frames of a batch: the driver twin of
+    :func:`_tokenized` — the same tokens (split on single spaces, drop
+    empties; a null text has a null ``dl`` and no postings), the same
+    fingerprint and the same bucket hashes."""
+    import hashlib
+    from collections import Counter
+
+    import pandas as pd
+
+    post: list = []
+    dlen: list = []
+    for row in pdf[[id_col, text_col, *carry]].itertuples(index=False):
+        doc, text, *meta = row
+        toks = [t for t in text.split(" ") if t] if isinstance(text, str) else None
+        dl = None if toks is None else len(toks)
+        fp = None if toks is None else hashlib.md5(
+            " ".join(toks).encode("utf-8")
+        ).hexdigest()
+        dlen.append((doc, dl, fp, term_bucket(str(doc), pd_buckets)))
+        for term, tf in Counter(toks or ()).items():
+            post.append((doc, *meta, dl, term, tf, term_bucket(term, pt_buckets)))
+    return (
+        pd.DataFrame(post, columns=["doc_id", *carry, "dl", "term", "tf", "pt"]),
+        pd.DataFrame(dlen, columns=["doc_id", "dl", "fp", "pd"]),
+    )
+
+
+def _driver_rows(frame, cols: list[str]):
+    """A Spark or pandas frame's ``cols`` as pandas (one collect)."""
+    if isinstance(frame, DataFrame):
+        return frame.select(*cols).toPandas()
+    return frame[cols]
+
+
+# -- the artifact ------------------------------------------------------------
+
+
 def build_lexical_index(
     docs: DataFrame,
     path: str,
@@ -256,77 +350,60 @@ def build_lexical_index(
     layout_files: int = 4,
     layout_min_file_rows=None,
 ) -> int:
-    """Full-snapshot build; returns the committed ANCHOR (terms-table)
+    """Full-snapshot build; returns the committed ANCHOR (postings)
     version.  Input ids must be unique (the upload pipeline's exact
     dedup guarantees this upstream); empty/whitespace-only docs count
     toward N and sum_dl with dl = 0 — matching ``bm25_scored``'s stats
     over every document.
 
     ``carry_cols`` (e.g. ``("owner_id",)``) ride each posting row and
-    are recorded in the anchor, so incremental upserts keep carrying
-    them and probes can ``pre_filter`` on them (tenant isolation).
+    are recorded in the anchor, so mutations keep carrying them and
+    probes can filter on them (tenant isolation).
 
     ``layout_col`` (one of ``carry_cols``): secondary range-split
     layout inside each postings term-bucket — ~``layout_files`` files
-    per bucket, each covering a tight range of the layout column, so
-    an owner-scoped probe prunes files via parquet stats instead of
-    row-filtering whole buckets (VERDICT r10 #3); recorded in the
-    postings manifest and re-applied by upserts/deletes/compaction.
+    per bucket, each covering a tight range of the layout column;
+    recorded in the postings manifest and kept by merges.
 
     ``layout_min_file_rows``: the bucket-size crossover guard for the
-    postings layout — same contract as ``build_ivf_index``'s
-    (VERDICT r11 #3 / r12 #2): an int floors the intended per-file
-    rows; ``"auto"`` derives the floor from the posting rows' own
-    width (≈ one parquet row group) so tiny term buckets write one
-    file instead of ``layout_files`` footer-read-dominated shards."""
-    from sortify_spark.sources.versioned import overwrite_versioned
-
-    postings, doclen = _tokenized(
-        docs, id_col, text_col, pt_buckets, pd_buckets, carry_cols,
-        materialize_base=True,
-    )
-    # the consumers below (stats, terms, writes) re-evaluate the
-    # tokenize+aggregate otherwise — one materialization each, blocks
-    # freed by the context cleaner.  Both frames derive from the SAME
-    # checkpointed tokenize pass (materialize_base) and are independent
-    # of each other, so their materializations overlap from a 2-thread
-    # pool (guide §2.6) instead of running back-to-back.
+    postings layout — same contract as ``build_ivf_index``'s: an int
+    floors the intended per-file rows; ``"auto"`` derives the floor
+    from the posting rows' own width (≈ one parquet row group)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as ckpool:
-        f_post = ckpool.submit(postings.localCheckpoint, True)
-        f_dlen = ckpool.submit(doclen.localCheckpoint, True)
-        postings, doclen = f_post.result(), f_dlen.result()
-    terms = (
-        postings.groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("df"))
-        .withColumn("part", F.lit(0))
-    )
+    from sortify_spark.sources.versioned import overwrite_versioned
+
     if layout_col is not None and layout_col not in carry_cols:
         raise ValueError(
             f"layout_col {layout_col!r} must be carried in the "
             "posting rows (add it to carry_cols)"
         )
+    postings, doclen = _tokenized(
+        docs, id_col, text_col, pt_buckets, pd_buckets, carry_cols
+    )
+    # the consumers below (stats, writes) re-evaluate the
+    # tokenize+aggregate otherwise — one materialization each, blocks
+    # freed by the context cleaner; both derive from the same
+    # checkpointed tokenize pass and overlap from a 2-thread pool
+    with ThreadPoolExecutor(max_workers=2) as ckpool:
+        f_post = ckpool.submit(postings.localCheckpoint, True)
+        f_dlen = ckpool.submit(doclen.localCheckpoint, True)
+        postings, doclen = f_post.result(), f_dlen.result()
     if layout_min_file_rows == "auto":
         from sortify_spark.sources.versioned import derive_layout_floor
 
-        # postings are already checkpointed — one cheap first()
         layout_min_file_rows = (
             derive_layout_floor(postings.sparkSession, postings.first())
             if layout_col is not None
             else None
         )
-    # The corpus stats aggregate and the postings/doclen table writes
-    # are three INDEPENDENT jobs over the two checkpointed frames —
-    # submit them from a small thread pool so each job's straggler tail
-    # back-fills with the next job's tasks instead of idling the
-    # executors (guide §2.6; measured 2.7 → 1.6 s on the sf0.1 build).
-    # Failure semantics are unchanged: the anchor (terms) manifest —
-    # the only entry point probes read — commits strictly AFTER all
-    # three succeed, so a failed leg leaves no visible artifact, same
-    # as the sequential form.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # The stats aggregate, the doclen write and the postings write are
+    # independent jobs over the two checkpointed frames — submitted
+    # from a small pool so each job's straggler tail back-fills with
+    # the next job's tasks (guide §2.6).  The anchor (postings)
+    # manifest takes the stats and the doclen version at its commit
+    # point, after all three succeed, so a failed leg leaves no
+    # visible artifact.
     with ThreadPoolExecutor(max_workers=3) as pool:
         f_stats = pool.submit(
             lambda: doclen.agg(
@@ -334,75 +411,95 @@ def build_lexical_index(
                 F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
             ).first()
         )
-        f_pv = pool.submit(
-            overwrite_versioned,
+        f_dv = pool.submit(
+            overwrite_versioned, doclen, f"{path}/doclen", partition_col="pd"
+        )
+
+        def anchor() -> dict:
+            stats = f_stats.result()
+            return {
+                "doclen_version": f_dv.result(),
+                "n_docs": int(stats["n"]),
+                "sum_dl": int(stats["s"]),
+                # both hash fan-outs are BUILD-TIME placement decisions
+                # — recorded so mutations hash new rows into the
+                # partitions the build chose, even if the module
+                # defaults change between releases (ADVICE r8)
+                "pt_buckets": pt_buckets,
+                "pd_buckets": pd_buckets,
+                # posting-row metadata schema — mutations must keep
+                # carrying these or a probe's filter would see nulls
+                "carry": list(carry_cols),
+            }
+
+        return overwrite_versioned(
             postings,
             f"{path}/postings",
             partition_col="pt",
+            extra=anchor,
             layout_col=layout_col,
             layout_files=layout_files if layout_col is not None else None,
             layout_min_file_rows=layout_min_file_rows,
         )
-        f_dv = pool.submit(
-            overwrite_versioned, doclen, f"{path}/doclen", partition_col="pd"
+
+
+def _anchor(path: str, what: str) -> dict:
+    from sortify_spark.sources.versioned import read_manifest
+
+    anchor = read_manifest(f"{path}/postings")
+    if anchor["version"] == 0:
+        raise FileNotFoundError(
+            f"no lexical index at {path} — {what} maintains an EXISTING "
+            "index; run build_lexical_index first"
         )
-        stats, pv, dv = f_stats.result(), f_pv.result(), f_dv.result()
-    return overwrite_versioned(
-        terms,
-        f"{path}/terms",
-        partition_col="part",
-        extra={
-            "postings_version": pv,
-            "doclen_version": dv,
-            "n_docs": int(stats["n"]),
-            "sum_dl": int(stats["s"]),
-            "pt_buckets": pt_buckets,
-            # both hash fan-outs are BUILD-TIME placement decisions —
-            # recorded in the anchor so later upserts/deletes hash new
-            # rows into the partitions the build chose, even if the
-            # module defaults change between releases (ADVICE r8: an
-            # unrecorded pd fan-out would let a replaced doc's old
-            # doclen row survive in an untouched partition)
-            "pd_buckets": pd_buckets,
-            # posting-row metadata schema — upserts must keep carrying
-            # these or a probe's pre_filter would see nulls on new rows
-            "carry": list(carry_cols),
-        },
+    return anchor
+
+
+def _old_lengths(path: str, anchor: dict, ids) -> tuple[list, int]:
+    """The indexed ids among ``ids`` and the sum of their ``dl``, from
+    the doclen snapshot the anchor pins (driver read, no job)."""
+    from sortify_spark.sources.versioned import read_versioned_pandas
+
+    old = read_versioned_pandas(
+        f"{path}/doclen", "pd", version=anchor.get("doclen_version"),
+        columns=["doc_id", "dl"], where=("doc_id", set(ids)),
+    )
+    return old["doc_id"].tolist(), int(old["dl"].fillna(0).sum())
+
+
+def _commit(path: str, anchor: dict, post, dlen, gone: list, extra: dict) -> int:
+    """doclen then postings (the anchor, the commit point): one append
+    each, ``gone`` tombstoned in both."""
+    from sortify_spark.sources.versioned import append_versioned
+
+    dv = append_versioned(
+        dlen, f"{path}/doclen", "pd", key="doc_id", delete=gone,
+        base_version=anchor.get("doclen_version"),
+    )
+    return append_versioned(
+        post, f"{path}/postings", "pt", key="doc_id", delete=gone,
+        extra={"doclen_version": dv, **extra},
     )
 
 
 def upsert_lexical_index(
-    docs: DataFrame,
+    docs,
     path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> int:
     """Incremental ADD / REPLACE against the stored index; returns the
-    committed anchor version.
+    committed anchor version.  ``docs`` is a Spark or pandas frame of
+    (id, text, carry columns).
 
-    New ids append; re-sent ids REPLACE their previous text: stale
-    postings (terms the new text no longer contains) are located with
-    one column-pruned scan of the postings table restricted to the
-    batch's ids and deleted, same-key rows overwrite via the keyed
-    upsert, and df / n_docs / sum_dl adjust by exact integer deltas —
-    so the post-upsert index is value-identical to a fresh build over
-    the replaced corpus (hash-checked by ``bm25_index_probe``)."""
-    from sortify_spark.sources.versioned import (
-        delete_versioned,
-        read_manifest,
-        read_versioned,
-        upsert_versioned,
-    )
-
-    spark = docs.sparkSession
-    anchor = read_manifest(f"{path}/terms")
-    if anchor["version"] == 0:
-        raise FileNotFoundError(
-            f"no lexical index at {path} — upsert_lexical_index maintains "
-            "an EXISTING index; run build_lexical_index first"
-        )
-    pt_buckets = int(anchor["pt_buckets"])
-    pd_buckets = int(anchor.get("pd_buckets", DEFAULT_PD_BUCKETS))
+    New ids append; re-sent ids REPLACE their previous text: the batch
+    is one postings segment and one doclen segment (tokenized on the
+    driver exactly as the build tokenizes), each replaced id a
+    tombstone in the same commit, and n_docs / sum_dl move by exact
+    integer deltas — so the post-upsert index is value-identical to a
+    fresh build over the replaced corpus (hash-checked by
+    ``bm25_index_probe``)."""
+    anchor = _anchor(path, "upsert_lexical_index")
     carry = tuple(anchor.get("carry") or ())
     missing = [c for c in carry if c not in docs.columns]
     if missing:
@@ -410,196 +507,74 @@ def upsert_lexical_index(
             f"index at {path} carries posting metadata {list(carry)}; "
             f"the upsert batch is missing columns {missing}"
         )
-    bpost, bdoclen = _tokenized(
-        docs, id_col, text_col, pt_buckets, pd_buckets, carry
+    post, dlen = _tokenize_rows(
+        _driver_rows(docs, [id_col, text_col, *carry]), id_col, text_col, carry,
+        int(anchor["pt_buckets"]), int(anchor["pd_buckets"]),
     )
-    bpost = bpost.localCheckpoint(eager=True)
-    bdoclen = bdoclen.localCheckpoint(eager=True)
-    ids = bdoclen.select("doc_id").distinct()
-
-    # replaced ids' old lengths (forward table) and old posting keys
-    # (column-pruned inverted scan — the IVF moved-id shape)
-    old_len = read_versioned(
-        spark, f"{path}/doclen", "pd", version=anchor.get("doclen_version")
-    ).join(F.broadcast(ids), "doc_id", "left_semi")
-    repl = old_len.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
-    ).first()
-    oldp = (
-        read_versioned(
-            spark,
-            f"{path}/postings",
-            "pt",
-            version=anchor.get("postings_version"),
-        )
-        .select("pt", "term", "doc_id")
-        .join(F.broadcast(ids), "doc_id", "left_semi")
-        .localCheckpoint(eager=True)  # read twice: stale keys + df deltas
-    )
-    stale = oldp.join(
-        bpost.select("term", "doc_id"), ["term", "doc_id"], "left_anti"
-    )
-    if not stale.isEmpty():
-        delete_versioned(
-            stale,
-            f"{path}/postings",
-            keys=["term", "doc_id"],
-            partition_col="pt",
-        )
-    pv = upsert_versioned(
-        bpost, f"{path}/postings", keys=["term", "doc_id"], partition_col="pt"
-    )
-    dv = upsert_versioned(
-        bdoclen, f"{path}/doclen", keys=["doc_id"], partition_col="pd"
-    )
-
-    # exact per-term df delta = docs gained - docs lost (a replaced doc
-    # that keeps a term contributes to both sides and cancels)
-    plus = bpost.groupBy("term").agg(F.count(F.lit(1)).alias("p"))
-    minus = oldp.groupBy("term").agg(F.count(F.lit(1)).alias("m"))
-    delta = plus.join(minus, "term", "full_outer").select(
-        "term",
-        (F.coalesce("p", F.lit(0)) - F.coalesce("m", F.lit(0))).alias("d"),
-    ).filter(F.col("d") != 0)
-    old_terms = read_versioned(spark, f"{path}/terms", "part").select(
-        "term", "df"
-    )
-    changed = (
-        delta.join(old_terms, "term", "left")
-        .select(
-            "term",
-            (F.coalesce("df", F.lit(0)) + F.col("d")).cast("long").alias("df"),
-        )
-        .withColumn("part", F.lit(0))
-    )
-    batch = bdoclen.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
-    ).first()
-    return upsert_versioned(
-        changed,
-        f"{path}/terms",
-        keys=["term"],
-        partition_col="part",
-        extra={
-            "postings_version": pv,
-            "doclen_version": dv,
-            "n_docs": int(anchor["n_docs"]) + int(batch["n"]) - int(repl["n"]),
-            "sum_dl": int(anchor["sum_dl"]) + int(batch["s"]) - int(repl["s"]),
-            "pt_buckets": pt_buckets,
-            "pd_buckets": pd_buckets,
-            "carry": list(carry),
+    gone, gone_dl = _old_lengths(path, anchor, dlen["doc_id"])
+    return _commit(
+        path, anchor, post, dlen, gone,
+        {
+            "n_docs": int(anchor["n_docs"]) + len(dlen) - len(gone),
+            "sum_dl": int(anchor["sum_dl"])
+            + int(dlen["dl"].fillna(0).sum()) - gone_dl,
         },
     )
 
 
 def delete_from_lexical_index(
-    ids: DataFrame,
+    ids,
     path: str,
     id_col: str = "doc_id",
 ) -> int:
     """Keyed DELETE against the stored index — the S10 contract
     (reference ``vector_db_service.py:263-323``: a deleted document is
-    unfindable) applied to the BM25 artifact (VERDICT r8 missing #1):
-    the deleted docs' postings and doclen rows are removed, per-term df
-    decrements by the exact count of postings lost, and n_docs/sum_dl
+    unfindable) applied to the BM25 artifact: the deleted docs' postings
+    and doclen rows are tombstoned (no data written), and n_docs/sum_dl
     shrink by the deleted docs' exact contribution — so a post-delete
     probe is value-identical to a from-scratch rebuild over the shrunk
     corpus (hash-checked by ``bm25_index_probe``'s delete step).
 
-    ``ids`` is a one-column frame of doc ids (``id_col``); ids not in
-    the index are ignored (idempotent — re-running a delete is a
-    no-op commit).  Returns the committed anchor version.  Terms whose
-    df reaches 0 stay at df = 0 with no postings (the upsert path's
-    contract) so the terms maintenance is one atomic keyed commit.
-
-    Scale shape: ONE column-pruned (pt, term, doc_id) scan of the
-    postings table semi-joined with the broadcast delete list locates
-    every row to remove (the IVF moved-id shape); only the touched
-    pt/pd partitions rewrite; everything downstream is sized by the
-    DELETED docs' postings, never the corpus."""
-    from sortify_spark.sources.versioned import (
-        delete_versioned,
-        read_manifest,
-        read_versioned,
-        upsert_versioned,
-    )
-
-    spark = ids.sparkSession
-    anchor = read_manifest(f"{path}/terms")
-    if anchor["version"] == 0:
-        raise FileNotFoundError(
-            f"no lexical index at {path} — delete_from_lexical_index "
-            "maintains an EXISTING index; run build_lexical_index first"
-        )
-    pt_buckets = int(anchor["pt_buckets"])
-    pd_buckets = int(anchor.get("pd_buckets", DEFAULT_PD_BUCKETS))
-    ids = ids.select(F.col(id_col).alias("doc_id")).distinct()
-
-    # the deleted docs' forward rows: exact n_docs/sum_dl deltas + the
-    # doclen partitions to rewrite (read twice → one materialization)
-    old_len = (
-        read_versioned(
-            spark, f"{path}/doclen", "pd", version=anchor.get("doclen_version")
-        )
-        .join(F.broadcast(ids), "doc_id", "left_semi")
-        .localCheckpoint(eager=True)
-    )
-    gone = old_len.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
-    ).first()
-    if int(gone["n"]) == 0:
+    ``ids`` is a Spark or pandas frame with an ``id_col`` column, or a
+    list of ids; ids not in the index are ignored (idempotent — re-running
+    a delete commits nothing).  Returns the committed anchor version."""
+    anchor = _anchor(path, "delete_from_lexical_index")
+    if not isinstance(ids, list):
+        ids = _driver_rows(ids, [id_col])[id_col].tolist()
+    gone, gone_dl = _old_lengths(path, anchor, ids)
+    if not gone:
         return int(anchor["version"])  # nothing indexed under these ids
-    oldp = (
-        read_versioned(
-            spark,
-            f"{path}/postings",
-            "pt",
-            version=anchor.get("postings_version"),
-        )
-        .select("pt", "term", "doc_id")
-        .join(F.broadcast(ids), "doc_id", "left_semi")
-        .localCheckpoint(eager=True)  # read twice: delete keys + df deltas
-    )
-    pv = anchor.get("postings_version")
-    if not oldp.isEmpty():  # all-empty-text docs have no postings
-        pv = delete_versioned(
-            oldp, f"{path}/postings", keys=["term", "doc_id"],
-            partition_col="pt",
-        )
-    dv = delete_versioned(
-        old_len.select("pd", "doc_id"), f"{path}/doclen", keys=["doc_id"],
-        partition_col="pd",
-    )
-    old_terms = read_versioned(spark, f"{path}/terms", "part").select(
-        "term", "df"
-    )
-    changed = (
-        oldp.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("m"))
-        .join(old_terms, "term", "left")
-        .select(
-            "term",
-            (F.coalesce("df", F.lit(0)) - F.col("m")).cast("long").alias("df"),
-        )
-        .withColumn("part", F.lit(0))
-    )
-    return upsert_versioned(
-        changed,
-        f"{path}/terms",
-        keys=["term"],
-        partition_col="part",
-        extra={
-            "postings_version": pv,
-            "doclen_version": dv,
-            "n_docs": int(anchor["n_docs"]) - int(gone["n"]),
-            "sum_dl": int(anchor["sum_dl"]) - int(gone["s"]),
-            "pt_buckets": pt_buckets,
-            "pd_buckets": pd_buckets,
-            "carry": list(anchor.get("carry") or ()),
+    return _commit(
+        path, anchor, None, None, gone,
+        {
+            "n_docs": int(anchor["n_docs"]) - len(gone),
+            "sum_dl": int(anchor["sum_dl"]) - gone_dl,
         },
+    )
+
+
+def _probed(spark, path, anchor, terms, pre_filter):
+    """The live posting rows of ``terms`` (their buckets only) and the
+    filtered rows to score; None when nothing can match."""
+    from sortify_spark.sources.versioned import scan_versioned
+
+    pt_buckets = int(anchor["pt_buckets"])
+    live = scan_versioned(
+        spark, f"{path}/postings", "pt", anchor,
+        values={term_bucket(t, pt_buckets) for t in terms},
+    )
+    if live is None:
+        return None, None
+    live = live.filter(F.col("term").isin(sorted(set(terms))))
+    # filtered probe: the tenant predicate restricts the candidates
+    # after df is counted — scores stay GLOBAL-corpus BM25
+    return live, live if pre_filter is None else live.filter(pre_filter)
+
+
+def _avgdl(anchor: dict) -> str:
+    return (
+        f"ROUND(CAST(CAST({int(anchor['sum_dl'])} AS DECIMAL(38,12)) AS DOUBLE)"
+        f" / {int(anchor['n_docs'])}, 12)"
     )
 
 
@@ -614,81 +589,39 @@ def probe_lexical_index(
     """BM25 top-k through the stored index: (doc_id, matched_terms,
     bm25) — bit-identical scores to :func:`bm25_scored` over
     the indexed corpus, reading only the query terms' posting buckets.
+    Plans no Spark job before its result frame.
 
-    ``version`` pins a historical ANCHOR snapshot (time travel); its
-    paired postings snapshot comes from the anchor manifest, so the
-    pair is always the one a single commit wrote.
+    ``version`` pins a historical ANCHOR (postings) snapshot — time
+    travel, its segments and tombstones included.
 
-    ``pre_filter``: a Column over the postings' build-time
-    ``carry_cols`` metadata (e.g. ``F.col('owner_id') == 'u1'``) —
-    evaluated on the probed posting rows BEFORE ranking, so the top-k
-    is the best k among the filtered docs (tenant isolation, the
-    Chroma where-filter analog the reference pushes into every scan,
-    ``vector_db_service.py:199-221``).  Scores stay GLOBAL-corpus BM25
-    (N/avgdl/df from the anchor) — the filter restricts candidates,
-    it does not re-statistic the sub-corpus, matching the reference's
-    filter-then-rank semantics."""
-    from sortify_spark.sources.versioned import (
-        _read_partition_dirs,
-        read_manifest,
-        read_versioned,
-    )
+    ``df`` per term is the count of the term's live posting rows in the
+    probe's own scan, before ``pre_filter``: a Column over the
+    postings' build-time ``carry_cols`` metadata (e.g.
+    ``F.col('owner_id') == 'u1'``) evaluated on the probed rows BEFORE
+    ranking, so the top-k is the best k among the filtered docs (tenant
+    isolation, the Chroma where-filter analog the reference pushes into
+    every scan, ``vector_db_service.py:199-221``).  Scores stay
+    GLOBAL-corpus BM25 — the filter restricts candidates, it does not
+    re-statistic the sub-corpus."""
+    from sortify_spark.sources.versioned import read_manifest
 
     if not terms:
         raise ValueError("probe_lexical_index requires at least one term")
-    anchor = read_manifest(f"{path}/terms", version)
+    anchor = read_manifest(f"{path}/postings", version)
     if anchor["version"] == 0:
         raise FileNotFoundError(f"no lexical index at {path}")
-    n_docs = int(anchor["n_docs"])
-    sum_dl = int(anchor["sum_dl"])
-    pt_buckets = int(anchor["pt_buckets"])
-
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
-    # same hash expression as the build — the probe's bucket choice is
-    # the writer's placement by construction
-    pts = {
-        int(r["pt"])
-        for r in tdf.select(
-            _pt(F.col("term"), pt_buckets).alias("pt")
-        ).collect()
-    }
-    # per-term df from the vocabulary table (≤ |terms| rows collect —
-    # the IVF probe's centroid-rank shape); absent terms score 0 via
-    # df = 0 + tf = 0, matching bm25_scored
-    vocab = read_versioned(
-        spark, f"{path}/terms", "part", version=anchor["version"]
-    )
-    df_by_term = {
-        r["term"]: int(r["df"])
-        for r in vocab.join(F.broadcast(tdf), "term", "left_semi").collect()
-    }
-
-    pmanifest = read_manifest(
-        f"{path}/postings", anchor.get("postings_version")
-    )
-    rels = [
-        pmanifest["partitions"][str(b)]
-        for b in sorted(pts)
-        if str(b) in pmanifest["partitions"]
-    ]
-    if not rels:
+    live, probed = _probed(spark, path, anchor, terms, pre_filter)
+    if live is None:
         return spark.createDataFrame(
             [], "doc_id long, matched_terms int, bm25 double"
         )
-    # filtered probe: the pre_filter rides the SCAN node (pushed to
-    # parquet footer stats — a layout_col postings table prunes files;
-    # filtering the returned frame would sit above the nondeterministic
-    # partition-restore projection and never push down), before the
-    # pivot — never touching the corpus
-    probed = _read_partition_dirs(
-        spark,
-        f"{path}/postings",
-        "pt",
-        rels,
-        dtype=pmanifest.get("partition_dtype"),
-        pre_filter=pre_filter,
-    ).join(F.broadcast(tdf), "term", "left_semi")
-
+    # absent terms score 0 via df = 0 + tf = 0, matching bm25_scored
+    dfs = live.agg(
+        *[
+            F.count(F.when(F.col("term") == F.lit(t), 1)).alias(f"df{i}")
+            for i, t in enumerate(terms)
+        ]
+    )
     # pivot per-term tf to the tf{i} columns of bm25_scored's frame,
     # then apply the IDENTICAL score expressions (same text, same
     # term-order addition sequence → same IEEE op sequence)
@@ -699,16 +632,14 @@ def probe_lexical_index(
         ).alias(f"tf{i}")
         for i, t in enumerate(terms)
     ]
-    per_doc = probed.groupBy("doc_id").agg(F.max("dl").alias("dl"), *aggs)
-    avgdl = (
-        f"ROUND(CAST(CAST({sum_dl} AS DECIMAL(38,12)) AS DOUBLE)"
-        f" / {n_docs}, 12)"
+    scored = (
+        probed.groupBy("doc_id")
+        .agg(F.max("dl").alias("dl"), *aggs)
+        .crossJoin(F.broadcast(dfs))
+        .withColumn("n", F.lit(int(anchor["n_docs"])))
+        .withColumn("avgdl", F.expr(_avgdl(anchor)))
     )
-    scored = per_doc.withColumn("n", F.lit(n_docs)).withColumn(
-        "avgdl", F.expr(avgdl)
-    )
-    for i, t in enumerate(terms):
-        scored = scored.withColumn(f"df{i}", F.lit(df_by_term.get(t, 0)))
+    for i in range(len(terms)):
         scored = scored.withColumn(f"__s{i}", F.expr(_score_expr(i)))
     matched = " + ".join(
         f"CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END" for i in range(len(terms))
@@ -734,11 +665,12 @@ def probe_lexical_index_many(
 ) -> DataFrame:
     """BATCHED serving: top-k for MANY queries in ONE plan —
     (query_id, doc_id, matched_terms, bm25, rnk) — the lexical twin of
-    the batched ANN probe (``knn_batch_queries`` / the scale-stress
-    64-query IVF stage).  One bucket-pruned postings scan covers the
-    UNION of every query's term buckets; per-(query, doc) scores
-    aggregate with a generic per-term score expression and a per-query
-    rank window.
+    the batched ANN probe.  One bucket-pruned postings scan covers the
+    UNION of every query's term buckets; per-term df is counted in that
+    scan (before ``pre_filter``, as in :func:`probe_lexical_index`);
+    per-(query, doc) scores aggregate with a generic per-term score
+    expression and a per-query rank window.  Plans no Spark job before
+    its result frame.
 
     Contract difference vs :func:`probe_lexical_index`: the per-doc
     score sums per-term contributions in AGGREGATION order, so the
@@ -746,84 +678,43 @@ def probe_lexical_index_many(
     fixed term-order sum (ranking ties still break on doc_id).  Use
     the single-query probe where bit-exact oracle parity matters; use
     this for throughput."""
-    from sortify_spark.sources.versioned import (
-        _read_partition_dirs,
-        read_manifest,
-        read_versioned,
-    )
+    from pyspark.sql.window import Window
+
+    from sortify_spark.sources.versioned import read_manifest
 
     if not queries or any(not t for t in queries.values()):
         raise ValueError("every query needs at least one term")
-    anchor = read_manifest(f"{path}/terms", version)
+    anchor = read_manifest(f"{path}/postings", version)
     if anchor["version"] == 0:
         raise FileNotFoundError(f"no lexical index at {path}")
-    n_docs = int(anchor["n_docs"])
-    sum_dl = int(anchor["sum_dl"])
-    pt_buckets = int(anchor["pt_buckets"])
     qt = F.broadcast(
         spark.createDataFrame(
             [(q, t) for q, ts in queries.items() for t in dict.fromkeys(ts)],
             "query_id string, term string",
         )
     )
-    pts = {
-        int(r["pt"])
-        for r in qt.select(
-            _pt(F.col("term"), pt_buckets).alias("pt")
-        ).distinct().collect()
-    }
-    pmanifest = read_manifest(
-        f"{path}/postings", anchor.get("postings_version")
-    )
-    rels = [
-        pmanifest["partitions"][str(b)]
-        for b in sorted(pts)
-        if str(b) in pmanifest["partitions"]
-    ]
-    if not rels:
+    all_terms = tuple({t for ts in queries.values() for t in ts})
+    live, probed = _probed(spark, path, anchor, all_terms, pre_filter)
+    if live is None:
         return spark.createDataFrame(
             [],
             "query_id string, doc_id long, matched_terms int, "
             "bm25 double, rnk int",
         )
-    vocab = F.broadcast(
-        read_versioned(
-            spark, f"{path}/terms", "part", version=anchor["version"]
-        ).select("term", "df")
-    )
-    # filtered batched probe (see probe_lexical_index): candidates
-    # restricted inside the pruned buckets via a scan-level filter
-    # (pushed to parquet stats), global-corpus scoring
-    probed = _read_partition_dirs(
-        spark,
-        f"{path}/postings",
-        "pt",
-        rels,
-        dtype=pmanifest.get("partition_dtype"),
-        pre_filter=pre_filter,
-    )
-    avgdl = (
-        f"ROUND(CAST(CAST({sum_dl} AS DECIMAL(38,12)) AS DOUBLE)"
-        f" / {n_docs}, 12)"
-    )
+    dfs = live.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    n_docs = int(anchor["n_docs"])
     k1p1, one_b = BM25_K1 + 1.0, 1.0 - BM25_B
     score = (
         f"ROUND(ROUND((CAST({n_docs} - df AS DOUBLE) + 0.5)"
         f" / (CAST(df AS DOUBLE) + 0.5), 12)"
         f" * ((CAST(tf AS DOUBLE) * {k1p1})"
         f" / (CAST(tf AS DOUBLE) + {BM25_K1} * ({one_b}"
-        f" + {BM25_B} * (CAST(dl AS DOUBLE) / {avgdl})))), 9)"
+        f" + {BM25_B} * (CAST(dl AS DOUBLE) / {_avgdl(anchor)})))), 9)"
     )
-    from pyspark.sql.window import Window
-
     per = (
         probed.join(qt, "term")
-        .join(vocab, "term")
-        .select(
-            "query_id",
-            "doc_id",
-            F.expr(score).alias("s"),
-        )
+        .join(F.broadcast(dfs), "term")
+        .select("query_id", "doc_id", F.expr(score).alias("s"))
         .groupBy("query_id", "doc_id")
         .agg(
             F.count(F.lit(1)).cast("int").alias("matched_terms"),

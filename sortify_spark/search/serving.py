@@ -9,13 +9,18 @@ the committed artifacts:
 
 * the served vectors table (per vtype: ids, owners, float64 matrix),
   one Arrow ``toPandas``;
-* the BM25 postings, the vocabulary ``df`` and the anchor's
-  ``n_docs``/``sum_dl`` at the versions the anchor manifest names;
+* the BM25 postings (``df`` is a term's span of them) and the anchor's
+  ``n_docs``/``sum_dl``;
 * the IVF assign rows and the centroids at the manifest's
   ``centroid_version``.
 
 The artifact tables are read on the driver from their committed files
-(``versioned.read_versioned_pandas``), so a reload plans no Spark job.
+(``versioned.read_versioned_pandas``), so a load plans no Spark job.
+A commit that only appends segments and tombstones to a held snapshot
+refreshes it (:func:`refresh_lexical`, :func:`refresh_ivf`): the new
+segment rows are read and the tombstoned rows dropped.  The vectors
+snapshot is refreshed by the mutation itself (:func:`refresh_vectors`
+with the rows it already collected).
 
 Every kernel here replays its Spark operator's arithmetic and order
 step by step, so the served rows, scores and tie order equal the Spark
@@ -53,9 +58,10 @@ from sortify_spark.search.index import (
 )
 from sortify_spark.search.lexical import BM25_B, BM25_K1
 from sortify_spark.sources.versioned import (
+    live_rows,
+    read_appended,
     read_manifest,
     read_versioned_pandas,
-    snapshot_files,
 )
 
 #: Largest estimated resident size (bytes) of one artifact's snapshot
@@ -202,6 +208,40 @@ class Vectors:
             return np.arange(len(self.key))
         return np.flatnonzero(_owned(self.owner, owner))
 
+    def take(self, idx: np.ndarray) -> "Vectors":
+        """The rows ``idx`` (indices or a mask)."""
+        return Vectors(
+            key=self.key[idx],
+            owner=None if self.owner is None else self.owner[idx],
+            emb_t=self.emb_t[:, idx],
+            norm=self.norm[idx],
+            bucket=None if self.bucket is None else self.bucket[idx],
+        )
+
+    def concat(self, other: "Vectors") -> "Vectors":
+        """These rows followed by ``other``'s (norms are per row, so
+        they concatenate)."""
+
+        def cat(a, b):
+            return None if a is None else np.concatenate([a, b])
+
+        return Vectors(
+            key=cat(self.key, other.key),
+            owner=None
+            if self.owner is None
+            else pd.Categorical(
+                cat(np.asarray(self.owner, object), np.asarray(other.owner, object))
+            ),
+            emb_t=np.concatenate([self.emb_t, other.emb_t], axis=1),
+            norm=cat(self.norm, other.norm),
+            bucket=cat(self.bucket, other.bucket),
+        )
+
+    def refreshed(self, drop: np.ndarray, new: "Vectors | None") -> "Vectors":
+        """Without the rows ``drop`` masks, plus ``new``."""
+        kept = self.take(~drop)
+        return kept if new is None else kept.concat(new)
+
 
 @dataclass(frozen=True)
 class Ivf:
@@ -213,18 +253,26 @@ class Ivf:
 
 @dataclass(frozen=True)
 class Lexical:
-    """BM25 statistics and the postings sorted by term: the postings of
-    ``term`` are the rows ``span[term][0]:span[term][1]`` of ``doc``,
-    ``tf``, ``dl`` and ``owner``."""
+    """BM25 statistics and the live postings sorted by term: the postings
+    of ``term`` are the rows ``span[term][0]:span[term][1]`` of ``doc``,
+    ``tf``, ``dl`` and ``owner`` (so its ``df`` is the span's length);
+    ``rows`` keeps them as a frame for refreshes."""
 
     n_docs: int
     sum_dl: int
-    df: dict
     span: dict
     doc: np.ndarray
     tf: np.ndarray
     dl: np.ndarray
     owner: pd.Categorical | None
+    rows: pd.DataFrame
+
+    def df(self, term: str) -> int:
+        start, end = self.span.get(term, (0, 0))
+        return end - start
+
+    def nbytes(self) -> int:
+        return len(self.rows) * POSTING_BYTES + len(self.span) * TERM_BYTES
 
 
 def _owned(owners: pd.Categorical | None, owner: str) -> np.ndarray:
@@ -239,42 +287,43 @@ def _owned(owners: pd.Categorical | None, owner: str) -> np.ndarray:
 
 
 # Gate estimates: the resident size a snapshot will take, from the
-# vectors table's row count or the committed files' parquet footers
-# (read without a Spark job), before anything is loaded.
-
-
-def _n_rows(path: str, version: int | None) -> int:
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.read_metadata(f).num_rows for f in snapshot_files(path, version)
-    )
+# manifests' live row counts (read without a Spark job), before anything
+# is loaded.
 
 
 def vectors_bytes(n_rows: int, dim: int) -> int:
     return n_rows * (dim * 8 + VECTOR_ROW_BYTES)
 
 
+def _postings(path: str, anchor: dict, columns: list[str]) -> pd.DataFrame:
+    try:
+        return read_versioned_pandas(
+            f"{path}/postings", "pt", columns=columns, manifest=anchor
+        )
+    except FileNotFoundError:  # every document deleted: nothing can match
+        return pd.DataFrame(columns=columns)
+
+
 def lexical_bytes(path: str, anchor: dict) -> int:
-    postings = _n_rows(f"{path}/postings", anchor.get("postings_version"))
-    terms = _n_rows(f"{path}/terms", anchor["version"])
-    return postings * POSTING_BYTES + terms * TERM_BYTES
+    postings = live_rows(f"{path}/postings", anchor) * POSTING_BYTES
+    if postings > SNAPSHOT_MAX_BYTES:
+        return postings  # over the gate: no need to count the vocabulary
+    terms = _postings(path, anchor, ["term"])["term"].nunique()
+    return postings + terms * TERM_BYTES
 
 
 def ivf_bytes(path: str, manifest: dict, dim: int) -> int:
+    cents = read_manifest(f"{path}/centroids", manifest.get("centroid_version"))
     return vectors_bytes(
-        _n_rows(f"{path}/assign", manifest["version"])
-        + _n_rows(f"{path}/centroids", manifest.get("centroid_version")),
+        live_rows(f"{path}/assign", manifest)
+        + live_rows(f"{path}/centroids", cents),
         dim,
     )
 
 
-def load_vectors(vectors: DataFrame, dim: int) -> dict | None:
-    """``{vtype: Vectors}`` of the served vectors table (one Arrow
-    collect); None when some vector is unservable."""
-    pdf = vectors.select(
-        "vtype", "document_id", "owner_id", "embedding"
-    ).toPandas()
+def vectors_of(pdf: pd.DataFrame, dim: int) -> dict | None:
+    """``{vtype: Vectors}`` of served vectors-table rows; None when some
+    vector is unservable."""
     out = {
         vtype: Vectors.of(pdf[pdf["vtype"] == vtype], "document_id", dim)
         for vtype in ("summary", "chunk")
@@ -282,15 +331,40 @@ def load_vectors(vectors: DataFrame, dim: int) -> dict | None:
     return None if any(v is None for v in out.values()) else out
 
 
+#: The served vectors table's columns a snapshot reads.
+VECTOR_COLS = ["vtype", "document_id", "owner_id", "embedding"]
+
+
+def load_vectors(vectors: DataFrame, dim: int) -> dict | None:
+    """:func:`vectors_of` the served vectors table (one Arrow collect)."""
+    return vectors_of(vectors.select(*VECTOR_COLS).toPandas(), dim)
+
+
+def refresh_vectors(held: dict, drop_docs, new: pd.DataFrame, dim: int) -> dict | None:
+    """``held`` without the rows of the documents ``drop_docs``, plus the
+    ``new`` vectors-table rows; None when a new vector is unservable."""
+    fresh = vectors_of(new, dim)
+    if fresh is None:
+        return None
+    drop = list(drop_docs)
+    return {
+        vtype: v.refreshed(np.isin(v.key, drop), fresh[vtype])
+        for vtype, v in held.items()
+    }
+
+
+def _ivf_cols(manifest: dict) -> list[str]:
+    carry = [c for c in ("owner_id",) if c in (manifest.get("carry") or ())]
+    return ["vec_id", *carry, "bucket", "embedding"]
+
+
 def load_ivf(path: str, manifest: dict, dim: int) -> Ivf | None:
     """The IVF assign rows and their paired centroids at ``manifest``."""
-    carry = [c for c in ("owner_id",) if c in (manifest.get("carry") or ())]
     assign = read_versioned_pandas(
-        f"{path}/assign", "bucket", version=manifest["version"]
+        f"{path}/assign", "bucket", columns=_ivf_cols(manifest),
+        manifest=manifest,
     )
-    rows = Vectors.of(
-        assign[["vec_id", *carry, "bucket", "embedding"]], "vec_id", dim
-    )
+    rows = Vectors.of(assign, "vec_id", dim)
     cents = read_versioned_pandas(
         f"{path}/centroids", "part", version=manifest.get("centroid_version")
     ).rename(columns={"centroid": "embedding"})
@@ -300,36 +374,69 @@ def load_ivf(path: str, manifest: dict, dim: int) -> Ivf | None:
     return Ivf(rows=rows, cents=cent)
 
 
-def load_lexical(path: str, anchor: dict) -> Lexical:
-    """The BM25 postings, vocabulary df and corpus stats at ``anchor``."""
-    cols = ["term", "doc_id", "tf", "dl"]
-    if "owner_id" in (anchor.get("carry") or ()):
-        cols.append("owner_id")
-    pver = anchor.get("postings_version")
-    if read_manifest(f"{path}/postings", pver)["partitions"]:
-        pdf = read_versioned_pandas(f"{path}/postings", "pt", version=pver)[
-            cols
-        ]
-    else:  # every document deleted: nothing can match
-        pdf = pd.DataFrame(columns=cols)
-    vocab = read_versioned_pandas(
-        f"{path}/terms", "part", version=anchor["version"]
+def refresh_ivf(
+    ivf: Ivf, held: dict, path: str, manifest: dict, dim: int
+) -> Ivf | None:
+    """``ivf`` (the snapshot of ``held``) moved to ``manifest`` when that
+    commit only appended segments and tombstones; None otherwise."""
+    if manifest.get("centroid_version") != held.get("centroid_version"):
+        return None
+    delta = read_appended(
+        f"{path}/assign", "bucket", held, manifest, _ivf_cols(manifest)
     )
-    pdf = pdf.sort_values("term", kind="stable")
-    terms, start = np.unique(pdf["term"].to_numpy(dtype=object), return_index=True)
-    ends = [*start[1:].tolist(), len(pdf)]
+    if delta is None:
+        return None
+    new, hidden = delta
+    fresh = None if new is None else Vectors.of(new, "vec_id", dim)
+    if new is not None and fresh is None:
+        return None
+    rows = ivf.rows.refreshed(np.isin(ivf.rows.key, list(hidden)), fresh)
+    return Ivf(rows=rows, cents=ivf.cents)
+
+
+def _lexical_cols(anchor: dict) -> list[str]:
+    owner = ["owner_id"] if "owner_id" in (anchor.get("carry") or ()) else []
+    return ["term", "doc_id", "tf", "dl", *owner]
+
+
+def _lexical(rows: pd.DataFrame, anchor: dict) -> Lexical:
+    rows = rows.sort_values("term", kind="stable", ignore_index=True)
+    terms, start = np.unique(rows["term"].to_numpy(dtype=object), return_index=True)
+    ends = [*start[1:].tolist(), len(rows)]
     return Lexical(
         n_docs=int(anchor["n_docs"]),
         sum_dl=int(anchor["sum_dl"]),
-        df=dict(zip(vocab["term"], vocab["df"].astype(int).tolist())),
         span=dict(zip(terms.tolist(), zip(start.tolist(), ends))),
-        doc=pdf["doc_id"].to_numpy(dtype=np.int64),
-        tf=pdf["tf"].to_numpy(dtype=np.int64),
-        dl=pdf["dl"].to_numpy(dtype=np.int64),
+        doc=rows["doc_id"].to_numpy(dtype=np.int64),
+        tf=rows["tf"].to_numpy(dtype=np.int64),
+        dl=rows["dl"].to_numpy(dtype=np.int64),
         owner=(
-            pd.Categorical(pdf["owner_id"]) if "owner_id" in pdf else None
+            pd.Categorical(rows["owner_id"]) if "owner_id" in rows else None
         ),
+        rows=rows,
     )
+
+
+def load_lexical(path: str, anchor: dict) -> Lexical:
+    """The live BM25 postings and corpus stats at ``anchor``."""
+    return _lexical(_postings(path, anchor, _lexical_cols(anchor)), anchor)
+
+
+def refresh_lexical(
+    lex: Lexical, held: dict, path: str, anchor: dict
+) -> Lexical | None:
+    """``lex`` (the snapshot of ``held``) moved to ``anchor`` when that
+    commit only appended segments and tombstones; None otherwise."""
+    delta = read_appended(
+        f"{path}/postings", "pt", held, anchor, _lexical_cols(anchor)
+    )
+    if delta is None:
+        return None
+    new, hidden = delta
+    rows = lex.rows[~lex.rows["doc_id"].isin(list(hidden))]
+    if new is not None and len(new):
+        rows = pd.concat([rows, new], ignore_index=True)
+    return _lexical(rows, anchor)
 
 
 # -- kernels ---------------------------------------------------------------------
@@ -448,7 +555,7 @@ def bm25_topk(
         spark_round(
             (float(lex.n_docs - df) + 0.5) / (float(df) + 0.5), 12
         )
-        for df in (lex.df.get(t, 0) for t in terms)
+        for df in (lex.df(t) for t in terms)
     ]
 
     def per_term(i: int, rows) -> np.ndarray:

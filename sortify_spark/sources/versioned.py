@@ -1,29 +1,37 @@
-"""Versioned parquet tables: atomic multi-partition upserts without a
-lakehouse dependency (plain parquet overwrites are not atomic across
-partitions — SCALE.md "known trade-offs").
+"""Versioned parquet tables: atomic commits of base partitions, appended
+segments and tombstones, without a lakehouse dependency (plain parquet
+overwrites are not atomic across partitions).
 
 Delta/Iceberg solve this with a transaction log; the same core idea fits
 in one small protocol over plain parquet:
 
-* data lives in immutable version directories ``v=N/<part>=<val>/``;
-  an upsert writes ONLY its affected partitions into a NEW version dir
-  (cost scales with the update's partition footprint);
-* a JSON **manifest** maps each partition value to the version dir that
-  last rewrote it; the manifest is swapped atomically
+* data lives in immutable version directories ``v=N/``.  A table's
+  snapshot is its **base** (partition dirs ``v=N/<part>=<val>/``, written
+  by a build, a merge or a keyed partition rewrite) plus an ordered list
+  of **segment** files (``v=N/segment.parquet``, one per append, the
+  partition value a data column) and **tombstones**;
+* a tombstone is a ``(key, seq)`` pair: it hides the rows with that key
+  in the base and in segments committed before ``seq``, never rows of
+  the same commit or later ones — so a keyed replace is ONE commit (a
+  tombstone plus the new rows, :func:`append_versioned`) and a delete
+  writes no data at all.  Appends cost the batch, not the table;
+  :func:`merge_versioned` folds segments and tombstones into a new base;
+* a JSON **manifest** lists the base partition dirs, the segment files,
+  the tombstones and the live row count; it is swapped atomically
   (``os.replace``), so readers see the old snapshot or the new one,
   never a half-written mix — this is the commit point;
 * every committed manifest is retained as ``_MANIFEST.v<N>`` (with its
   commit timestamp) → snapshot reads by version or AS-OF timestamp
   (time travel) and O(1) RESTORE-style rollback for free;
-* **schema evolution, add/remove columns**: upserts align both sides
-  to the union of their columns (typed nulls fill the gaps) and
-  snapshot reads merge parquet schemas across version dirs, so older
-  untouched partitions keep their written files and surface nulls for
-  columns that postdate them — Delta's default evolution contract
+* **schema evolution, add/remove columns**: partition rewrites align
+  both sides to the union of their columns (typed nulls fill the gaps)
+  and snapshot reads merge parquet schemas across version dirs, so
+  older untouched partitions keep their written files and surface nulls
+  for columns that postdate them — Delta's default evolution contract
   (type changes of an existing column are not supported).
 
 A writer crash before the manifest swap leaves an orphan ``v=N`` dir
-that no reader can observe; re-running the upsert is safe (next version
+that no reader can observe; re-running the write is safe (next version
 number).  The protocol is **single-writer** (like a Delta table without
 a locking service) and REFUSES a second concurrent writer loudly —
 **before any data is written**: a writer first RESERVES its target
@@ -31,18 +39,18 @@ version by ``O_EXCL``-creating ``_MANIFEST.v(N+1)`` as a pending
 placeholder, so two writers that both read version N race on the
 reservation and the loser raises :class:`ConcurrentWriteError` before
 it has touched a single data file.  (Checking only at commit time
-would let the loser's ``mode("overwrite")`` data write clobber the
-winner's already-committed ``v=N+1`` dirs — a silent lost update worse
-than no check.)  After the data write the placeholder is atomically
-filled with the real manifest, then ``_MANIFEST`` swaps — the swap is
-the commit point.  This is exactly Delta's put-if-absent commit on the
-log object, at manifest granularity.  Concurrent readers are always
-consistent because they resolve one manifest; a pending placeholder is
-never readable as a snapshot.
+would let the loser's data write clobber the winner's already-committed
+``v=N+1`` dir — a silent lost update worse than no check.)  After the
+data write the placeholder is atomically filled with the real manifest,
+then ``_MANIFEST`` swaps — the swap is the commit point.  This is
+exactly Delta's put-if-absent commit on the log object, at manifest
+granularity.  Concurrent readers are always consistent because they
+resolve one manifest; a pending placeholder is never readable as a
+snapshot.
 
-At 100 TB the manifest would list files instead of partition dirs and
-live on the object store with put-if-absent commits — the protocol is
-the same; this module keeps it at partition granularity.
+The manifest lists files (segments) as well as partition dirs, so at
+100 TB it would live on the object store with put-if-absent commits —
+the protocol is the same.
 
 Reference anchor: the reference's in-place ``update_many`` mutations
 (``clustering_service.py:888-958``) assume Mongo's document atomicity;
@@ -60,6 +68,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _MANIFEST = "_MANIFEST"
 
@@ -191,6 +200,7 @@ def _read_partition_dirs(
     rels: Sequence[str],
     dtype: str | None = None,
     pre_filter=None,
+    schema: str | None = None,
 ) -> DataFrame:
     """ONE multi-path parquet scan over partition dirs, with the
     partition value restored from the directory name
@@ -222,8 +232,12 @@ def _read_partition_dirs(
     never reaches the parquet scan (no PushedFilters, no row-group or
     file pruning via footer stats).  Passing it here puts it on the
     scan node, so a ``layout_col`` table prunes whole files for
-    tenant-scoped probes."""
-    df = spark.read.option("mergeSchema", "true").parquet(
+    tenant-scoped probes.
+
+    ``schema`` (the manifest-recorded schema JSON of the data files)
+    skips inference: Spark infers a parquet schema with a job, so a
+    read with the recorded schema plans no job at all."""
+    df = _reader(spark, schema).parquet(
         *[os.path.join(path, rel) for rel in rels]
     )
     if pre_filter is not None:
@@ -236,6 +250,113 @@ def _read_partition_dirs(
     if dtype and dtype != "string":
         value = value.cast(dtype)
     return df.withColumn(partition_col, value)
+
+
+def _reader(spark: SparkSession, schema: str | None, *extra):
+    """A parquet reader: the recorded ``schema`` JSON plus ``extra``
+    fields when there is one, else schema-merging inference."""
+    if schema is None:
+        return spark.read.option("mergeSchema", "true")
+    st = T.StructType.fromJson(json.loads(schema))
+    for field in extra:
+        st = st.add(field)
+    return spark.read.schema(st)
+
+
+#: A recorded ``partition_dtype`` → its Spark type and arrow alias
+#: (segment files store the partition value as a data column).
+_PARTITION_TYPES = {
+    "tinyint": (T.ByteType, "int8"),
+    "smallint": (T.ShortType, "int16"),
+    "int": (T.IntegerType, "int32"),
+    "bigint": (T.LongType, "int64"),
+    "string": (T.StringType, "string"),
+}
+
+#: Segment files carry their commit's version in this column, so one
+#: scan over every segment can apply each tombstone to the older rows
+#: only.  Base rows read as sequence 0.
+_SEQ = "_seq"
+
+
+def _segments(manifest: dict) -> list[dict]:
+    return manifest.get("segments") or []
+
+
+def _tombstones(manifest: dict) -> dict:
+    """``{key: seq}`` of a manifest's tombstones (the latest per key)."""
+    out: dict = {}
+    for key, seq in manifest.get("tombstones") or ():
+        out[key] = max(seq, out.get(key, 0))
+    return out
+
+
+def scan_versioned(
+    spark: SparkSession,
+    path: str,
+    partition_col: str,
+    manifest: dict,
+    values=None,
+    pre_filter=None,
+) -> DataFrame | None:
+    """The live rows of one committed snapshot as ONE Spark plan: the
+    base partition dirs (only those of ``values`` when given — partition
+    pruning) and every segment file (filtered to ``values``), minus the
+    rows their tombstones hide.  ``pre_filter`` rides both scans (see
+    :func:`_read_partition_dirs`).  None when the snapshot has no file
+    to read for ``values``.  Plans no job: the tombstones become one
+    filter expression over the key and the segment sequence."""
+    parts = manifest["partitions"]
+    keep = None if values is None else {str(v) for v in values}
+    rels = [
+        rel for v, rel in sorted(parts.items()) if keep is None or v in keep
+    ]
+    frames = []
+    if rels:
+        frames.append(
+            _read_partition_dirs(
+                spark, path, partition_col, rels,
+                dtype=manifest.get("partition_dtype"),
+                pre_filter=pre_filter,
+                schema=manifest.get("schema"),
+            )
+        )
+    segs = _segments(manifest)
+    if segs:
+        ptype = _PARTITION_TYPES.get(
+            manifest.get("partition_dtype"), (T.LongType,)
+        )[0]
+        df = _reader(
+            spark,
+            manifest.get("schema"),
+            T.StructField(partition_col, ptype()),
+            T.StructField(_SEQ, T.LongType()),
+        ).parquet(*[os.path.join(path, s["file"]) for s in segs])
+        if keep is not None:
+            df = df.filter(F.col(partition_col).cast("string").isin(sorted(keep)))
+        if pre_filter is not None:
+            df = df.filter(pre_filter)
+        frames.append(df)
+    if not frames:
+        return None
+    out = frames[0]
+    for df in frames[1:]:
+        out = out.unionByName(df, allowMissingColumns=True)
+    tomb = _tombstones(manifest)
+    if tomb:
+        by_seq: dict = {}
+        for key, seq in tomb.items():
+            by_seq.setdefault(seq, []).append(key)
+        seq_col = (
+            F.coalesce(F.col(_SEQ), F.lit(0)) if segs else F.lit(0)
+        )
+        hidden = F.lit(False)
+        for seq, keys in sorted(by_seq.items()):
+            hidden = hidden | (
+                F.col(manifest["key"]).isin(sorted(keys)) & (seq_col < seq)
+            )
+        out = out.filter(~hidden)
+    return out.drop(_SEQ) if segs else out
 
 
 def resolve_version_at(path: str, ts: float) -> int:
@@ -276,10 +397,11 @@ def read_versioned(
     version: int | None = None,
     as_of: float | None = None,
 ) -> DataFrame:
-    """Snapshot read: resolve ONE manifest, scan every partition's
-    current directory in a single multi-path read with the partition
-    value restored.  ``version`` pins a historical snapshot (time
-    travel); ``as_of`` pins by commit timestamp instead (Delta's
+    """Snapshot read: resolve ONE manifest and scan its live rows — every
+    base partition dir in a single multi-path read with the partition
+    value restored, plus the segment files, minus tombstoned rows
+    (:func:`scan_versioned`).  ``version`` pins a historical snapshot
+    (time travel); ``as_of`` pins by commit timestamp instead (Delta's
     ``timestampAsOf`` — resolved to the highest retained version
     committed at or before it)."""
     if as_of is not None:
@@ -287,10 +409,6 @@ def read_versioned(
             raise ValueError("pass version OR as_of, not both")
         version = resolve_version_at(path, as_of)
     manifest = read_manifest(path, version)
-    parts = manifest["partitions"]
-    if not parts:
-        raise FileNotFoundError(f"versioned table at {path} is empty")
-    rels = [rel for _, rel in sorted(parts.items())]
     if version is not None:
         # A pinned (time-travel) read may resolve a retained manifest
         # whose data dirs vacuum has already reclaimed — fail loudly
@@ -300,8 +418,8 @@ def read_versioned(
         gone = sorted(
             {
                 rel.split("/", 1)[0]
-                for rel in rels
-                if not os.path.isdir(os.path.join(path, rel))
+                for rel in _data_rels(manifest)
+                if not os.path.exists(os.path.join(path, rel))
             }
         )
         if gone:
@@ -310,10 +428,28 @@ def read_versioned(
                 f"version dirs {gone}; the snapshot is no longer "
                 "readable (vacuum horizon passed it)"
             )
-    return _read_partition_dirs(
-        spark, path, partition_col, rels,
-        dtype=manifest.get("partition_dtype"),
-    )
+    df = scan_versioned(spark, path, partition_col, manifest)
+    if df is None:
+        raise FileNotFoundError(f"versioned table at {path} is empty")
+    return df
+
+
+def _data_rels(manifest: dict) -> list[str]:
+    """Every base partition dir and segment file a manifest references."""
+    return [
+        *manifest["partitions"].values(),
+        *(s["file"] for s in _segments(manifest)),
+    ]
+
+
+def _require_unsegmented(manifest: dict, path: str) -> None:
+    """Partition rewrites merge against base dirs only: segments and
+    tombstones must be merged into the base first."""
+    if _segments(manifest) or manifest.get("tombstones"):
+        raise ValueError(
+            f"{path} holds appended segments or tombstones; "
+            "merge_versioned it before a partition rewrite"
+        )
 
 
 def upsert_versioned(
@@ -336,6 +472,7 @@ def upsert_versioned(
     manifest swap, atomically across ALL partitions."""
     spark = updates.sparkSession
     manifest = read_manifest(path)
+    _require_unsegmented(manifest, path)
     new_version = manifest["version"] + 1
     # Reserve BEFORE the data write: a losing concurrent writer must
     # fail while it still owns zero files, or its overwrite of the
@@ -648,7 +785,10 @@ def overwrite_versioned(
 
     ``extra`` merges additional metadata keys into the manifest (e.g.
     the paired centroid-table version a probe must read — snapshot
-    cross-references belong in the commit they describe).
+    cross-references belong in the commit they describe); a callable
+    is called after the data write, so a build can commit metadata it
+    computes concurrently with the write.  The manifest records the
+    written row count (``rows``, from the parquet footers).
 
     ``layout_col`` (with ``layout_files``) applies the secondary
     sub-partition layout of :func:`_apply_layout` and records both in
@@ -683,6 +823,12 @@ def overwrite_versioned(
             },
             "partition_dtype": dtype,
         }
+        new_manifest["rows"] = _file_rows(
+            path, _partition_files(path, new_manifest)
+        )
+        new_manifest["schema"] = T.StructType(
+            [f for f in df.schema.fields if f.name != partition_col]
+        ).json()
         if layout_col is not None:
             new_manifest["layout_col"] = layout_col
             if layout_files is not None:
@@ -696,6 +842,8 @@ def overwrite_versioned(
                 # re-pin can never pin a sub-row-group roll later in
                 # the artifact's life (ADVICE r12)
                 new_manifest["layout_floor"] = int(layout_min_file_rows)
+        if callable(extra):
+            extra = extra()
         if extra:
             new_manifest.update(extra)
         _commit_manifest(path, new_manifest)
@@ -716,6 +864,7 @@ def delete_versioned(
     of the manifest.  Untouched partitions are never read."""
     spark = deletes.sparkSession
     manifest = read_manifest(path)
+    _require_unsegmented(manifest, path)
     new_version = manifest["version"] + 1
     with _reserved(path, new_version):  # before any data write
         affected = [
@@ -1037,44 +1186,345 @@ def _partition_files(path: str, manifest: dict):
                 yield value, os.path.join(pdir, f)
 
 
+def _file_rows(path: str, files) -> int:
+    """Rows in ``(value, file)`` pairs, from the parquet footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for _, f in files)
+
+
+def live_rows(path: str, manifest: dict) -> int:
+    """The live row count of a snapshot without a Spark job: the
+    manifest's ``rows``, kept exact by every commit; footers for a
+    manifest written before the count was recorded."""
+    if "rows" in manifest:
+        return int(manifest["rows"])
+    return _file_rows(path, _partition_files(path, manifest)) + sum(
+        int(s["rows"]) for s in _segments(manifest)
+    )
+
+
+def _partition_type(manifest: dict):
+    """The arrow type of a manifest's recorded ``partition_dtype``."""
+    import pyarrow as pa
+
+    types = _PARTITION_TYPES.get(manifest.get("partition_dtype"))
+    return None if types is None else pa.type_for_alias(types[1])
+
+
+def _live_table(
+    path: str,
+    partition_col: str,
+    manifest: dict,
+    columns: Sequence[str] | None = None,
+    base: bool = True,
+    segments: list[dict] | None = None,
+    where: tuple | None = None,
+):
+    """The live rows of ``manifest`` read with pyarrow on the driver (no
+    Spark job): base files (when ``base``) with the partition value
+    restored from the manifest, plus ``segments`` (default: all of the
+    manifest's), minus tombstoned rows.  ``columns`` prunes the read;
+    ``where=(col, values)`` keeps the rows whose ``col`` is in
+    ``values``.  None when there is no file to read."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    key = manifest.get("key")
+    need = None
+    if columns is not None:
+        need = {
+            *columns, _SEQ, *([key] if key else []), *([where[0]] if where else [])
+        }
+    ptype = _partition_type(manifest)
+
+    def read(f):
+        pf = pq.ParquetFile(f)
+        names = pf.schema_arrow.names
+        return pf.read(
+            columns=None if need is None else [c for c in names if c in need]
+        )
+
+    tables = []
+    if base:
+        for value, f in _partition_files(path, manifest):
+            t = read(f)
+            if ptype is not None and pa.types.is_integer(ptype):
+                value = int(value)
+            t = t.append_column(
+                partition_col, pa.array([value] * t.num_rows, ptype)
+            )
+            tables.append(
+                t.append_column(_SEQ, pa.array([0] * t.num_rows, pa.int64()))
+            )
+    for seg in _segments(manifest) if segments is None else segments:
+        tables.append(read(os.path.join(path, seg["file"])))
+    if not tables:
+        return None
+    t = pa.concat_tables(
+        [x.replace_schema_metadata(None) for x in tables],
+        promote_options="default",
+    )
+    if where is not None:
+        col, values = where
+        t = t.filter(pc.is_in(t[col], value_set=pa.array(list(values), t[col].type)))
+    tomb = _tombstones(manifest)
+    if tomb and t.num_rows:
+        tkeys = pa.array(list(tomb), t[key].type)
+        seqs = pc.take(
+            pa.array(list(tomb.values()), pa.int64()),
+            pc.index_in(t[key], value_set=tkeys),
+        )
+        t = t.filter(pc.invert(pc.fill_null(pc.less(t[_SEQ], seqs), False)))
+    t = t.drop_columns([_SEQ])
+    if columns is not None:
+        t = t.select(list(columns))
+    return t
+
+
 def read_versioned_pandas(
     path: str,
     partition_col: str,
     version: int | None = None,
+    columns: Sequence[str] | None = None,
+    where: tuple | None = None,
+    manifest: dict | None = None,
 ) -> "pandas.DataFrame":
-    """Driver-side snapshot read of a SMALL table: the data files of one
-    manifest's partition dirs read with pyarrow into a pandas frame — no
-    Spark job.  Same rows and columns as :func:`read_versioned`: schemas
-    merge across files (a column a file predates reads null), and the
-    partition value comes back from the manifest with its recorded
-    integral type."""
+    """Driver-side snapshot read of a SMALL table: the live rows of one
+    manifest (base files, segments, tombstones applied) read with
+    pyarrow into a pandas frame — no Spark job.  Same rows and columns
+    as :func:`read_versioned`: schemas merge across files (a column a
+    file predates reads null), and the partition value comes back from
+    the manifest with its recorded integral type.  ``columns`` and
+    ``where=(col, values)`` prune the read (see :func:`_live_table`)."""
+    if manifest is None:
+        manifest = read_manifest(path, version)
+    t = _live_table(path, partition_col, manifest, columns, where=where)
+    if t is None:
+        raise FileNotFoundError(f"versioned table at {path} is empty")
+    return t.to_pandas()
+
+
+def appended(old: dict, new: dict) -> tuple[list[dict], dict] | None:
+    """``(segments, tombstones)`` that ``new`` adds to ``old`` when ``new``
+    only appends segments and tombstones to ``old``'s snapshot (same
+    base, ``old``'s segments a prefix, ``old``'s tombstones kept); None
+    otherwise.  Every added tombstone is newer than every row of
+    ``old``, so ``new``'s snapshot is ``old``'s minus the added
+    tombstones' keys plus the added segments' live rows."""
+    if new["partitions"] != old["partitions"]:
+        return None
+    held = _segments(old)
+    if _segments(new)[: len(held)] != held:
+        return None
+    t_old, t_new = _tombstones(old), _tombstones(new)
+    if any(t_new.get(k, -1) < s for k, s in t_old.items()):
+        return None
+    added = {k: s for k, s in t_new.items() if t_old.get(k) != s}
+    return _segments(new)[len(held):], added
+
+
+def read_appended(
+    path: str,
+    partition_col: str,
+    old: dict,
+    new: dict,
+    columns: Sequence[str] | None = None,
+):
+    """``(rows, hidden_keys)`` for refreshing a driver copy of ``old``'s
+    snapshot to ``new``'s (see :func:`appended`): the live rows of the
+    appended segments as pandas, and the keys whose held rows the new
+    tombstones hide.  None when ``new`` is not an append to ``old``."""
+    delta = appended(old, new)
+    if delta is None:
+        return None
+    segs, added = delta
+    t = _live_table(path, partition_col, new, columns, base=False, segments=segs)
+    return (None if t is None else t.to_pandas()), set(added)
+
+
+def append_versioned(
+    rows,
+    path: str,
+    partition_col: str,
+    key: str,
+    delete: Sequence = (),
+    extra: dict | None = None,
+    base_version: int | None = None,
+) -> int:
+    """One commit that appends ``rows`` (a pandas frame, or None) as one
+    segment file written with pyarrow on the driver, and tombstones the
+    live rows whose ``key`` is in ``delete`` — rows of this commit are
+    never hidden, so a keyed replace is one commit.  Returns the
+    committed version; no commit (the current version) when there is
+    nothing to write and no ``extra``.  Cost: the batch plus one
+    column-pruned read of the key column (keys that match no live row
+    get no tombstone, so the manifest's ``rows`` stays exact).
+
+    ``base_version`` appends to that committed snapshot instead of the
+    current one (a paired table re-based on the snapshot its anchor
+    pins, so an orphaned commit after it is dropped).  Segments are
+    cast to the table's stored schema, so Spark reads base and
+    segments as one table."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    manifest = read_manifest(path, version)
-    integral = manifest.get("partition_dtype") in (
-        "tinyint", "smallint", "int", "bigint",
+    current = read_manifest(path)
+    if current["version"] == 0:
+        raise FileNotFoundError(f"no versioned table at {path} to append to")
+    base = (
+        current
+        if base_version in (None, current["version"])
+        else read_manifest(path, base_version)
     )
-    tables = []
-    for value, f in _partition_files(path, manifest):
-        t = pq.read_table(f)
-        tables.append(
-            t.append_column(
-                partition_col,
-                pa.array([int(value) if integral else value] * t.num_rows),
-            )
+    hidden = 0
+    hide: list = []
+    if len(delete):
+        live = _live_table(
+            path, partition_col, base, [key], where=(key, set(delete))
         )
-    if not tables:
-        raise FileNotFoundError(f"versioned table at {path} is empty")
-    return pa.concat_tables(tables, promote_options="default").to_pandas()
+        if live is not None:
+            hidden = live.num_rows
+            hide = sorted(set(live[key].to_pylist()))
+    n_new = 0 if rows is None else len(rows)
+    if not n_new and not hide and not extra and base is current:
+        return int(current["version"])
+    new_version = current["version"] + 1
+    with _reserved(path, new_version):
+        m = {
+            k: v for k, v in base.items() if k not in ("version", "committed_at")
+        }
+        m.update(version=new_version, key=key)
+        segs = list(_segments(base))
+        if n_new:
+            ref = next(
+                (
+                    pq.read_schema(os.path.join(path, r))
+                    for r in (
+                        *(s["file"] for s in reversed(segs)),
+                        *(f for _, f in _partition_files(path, base)),
+                    )
+                ),
+                None,
+            )
+            schema = None
+            if ref is not None:
+                ptype = _partition_type(base)
+                if ptype is None and partition_col in ref.names:
+                    ptype = ref.field(partition_col).type
+                schema = pa.schema(
+                    [
+                        *(f for f in ref.remove_metadata()
+                          if f.name not in (partition_col, _SEQ)),
+                        pa.field(partition_col, ptype or pa.int64()),
+                    ]
+                )
+            table = pa.Table.from_pandas(
+                rows if schema is None else rows[schema.names],
+                schema=schema,
+                preserve_index=False,
+            ).append_column(_SEQ, pa.array([new_version] * n_new, pa.int64()))
+            rel = f"v={new_version}/segment.parquet"
+            os.makedirs(os.path.join(path, f"v={new_version}"), exist_ok=True)
+            pq.write_table(table, os.path.join(path, rel))
+            segs.append({"file": rel, "seq": new_version, "rows": n_new})
+        m["segments"] = segs
+        tomb = _tombstones(base)
+        tomb.update({k: new_version for k in hide})
+        m["tombstones"] = [[k, s] for k, s in tomb.items()]
+        m["rows"] = live_rows(path, base) + n_new - hidden
+        if extra:
+            m.update(extra)
+        _commit_manifest(path, m)
+    return new_version
+
+
+def merge_versioned(
+    path: str,
+    partition_col: str,
+    spark: SparkSession | None = None,
+    extra: dict | None = None,
+) -> int | None:
+    """Fold a table's segments and tombstones into ONE new base (the
+    LSM/Lucene segment merge); returns the committed version, or None
+    when there is nothing to merge.  The rows are unchanged, so a
+    reader of the new version sees what a reader of the old one saw.
+
+    Without ``spark`` the live rows are read and written with pyarrow
+    on the driver — one file per partition (split every
+    ``layout_roll`` rows, sorted by ``layout_col``, when the table has
+    a layout).  With ``spark`` the live snapshot is rewritten through
+    :func:`overwrite_versioned` with the table's recorded layout, as a
+    build writes it.  Either way the manifest's other keys carry
+    forward, updated by ``extra``."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    m = read_manifest(path)
+    if not _segments(m) and not m.get("tombstones"):
+        return None
+    structural = (
+        "version", "partitions", "segments", "tombstones", "rows",
+        "committed_at",
+    )
+    carry = {k: v for k, v in m.items() if k not in structural}
+    carry.update(extra or {})
+    if spark is not None:
+        for k in ("partition_dtype", "layout_col", "layout_files",
+                  "layout_roll", "layout_floor"):
+            carry.pop(k, None)
+        return overwrite_versioned(
+            read_versioned(spark, path, partition_col),
+            path,
+            partition_col,
+            extra=carry,
+            layout_col=m.get("layout_col"),
+            layout_files=m.get("layout_files"),
+            layout_min_file_rows=m.get("layout_floor"),
+        )
+    t = _live_table(path, partition_col, m)
+    new_version = m["version"] + 1
+    with _reserved(path, new_version):
+        parts = {}
+        lay, roll = m.get("layout_col"), m.get("layout_roll")
+        values = [] if t is None else sorted(pc.unique(t[partition_col]).to_pylist())
+        for value in values:
+            rows = t.filter(pc.equal(t[partition_col], value)).drop_columns(
+                [partition_col]
+            )
+            if lay is not None:
+                rows = rows.sort_by(lay)
+            rel = f"v={new_version}/{partition_col}={value}"
+            os.makedirs(os.path.join(path, rel))
+            step = int(roll) if roll else max(1, rows.num_rows)
+            for i, at in enumerate(range(0, rows.num_rows, step)):
+                pq.write_table(
+                    rows.slice(at, step),
+                    os.path.join(path, rel, f"part-{i:05d}.parquet"),
+                )
+            parts[str(value)] = rel
+        _commit_manifest(
+            path,
+            {
+                **carry,
+                "version": new_version,
+                "partitions": parts,
+                "rows": 0 if t is None else t.num_rows,
+            },
+        )
+    return new_version
 
 
 def snapshot_files(path: str, version: int | None = None) -> list[str]:
     """The data files a snapshot's readers touch (the CURRENT one by
-    default) — one entry per file across the manifest's partition dirs.
-    A cheap read-cost proxy for compaction decisions and tests (files
-    touched before vs after a compaction)."""
-    return [f for _, f in _partition_files(path, read_manifest(path, version))]
+    default) — one entry per file across the manifest's partition dirs
+    and segments.  A cheap read-cost proxy for compaction decisions and
+    tests (files touched before vs after a compaction)."""
+    manifest = read_manifest(path, version)
+    return [f for _, f in _partition_files(path, manifest)] + [
+        os.path.join(path, s["file"]) for s in _segments(manifest)
+    ]
 
 
 def diff(
@@ -1097,10 +1547,19 @@ def diff(
     proportional to the *changed* partition footprint, not table size.
     The changed partitions then full-outer-join on (partition, keys) —
     one co-partitioned shuffle — and rows classify by null-side and a
-    null-safe struct comparison of the non-key columns.
+    null-safe struct comparison of the non-key columns.  A snapshot
+    with segments or tombstones has no per-partition dir to compare,
+    so its whole live snapshot is classified against the other's.
     """
     m_to = read_manifest(path, v_to) if v_to is not None else read_manifest(path)
     m_from = read_manifest(path, v_from)
+    join_keys = [partition_col, *[k for k in keys if k != partition_col]]
+    if any(_segments(m) or m.get("tombstones") for m in (m_from, m_to)):
+        return classify_changes(
+            read_versioned(spark, path, partition_col, version=v_from),
+            read_versioned(spark, path, partition_col, version=m_to["version"]),
+            join_keys,
+        )
     changed = sorted(
         set(m_from["partitions"].items()) ^ set(m_to["partitions"].items())
     )
@@ -1125,7 +1584,6 @@ def diff(
         return tmpl.withColumn(
             "_change_type", F.lit("insert")
         ).limit(0)
-    join_keys = [partition_col, *[k for k in keys if k != partition_col]]
     return classify_changes(old, new, join_keys)
 
 
@@ -1223,8 +1681,9 @@ def rollback(path: str, version: int) -> int:
         "version": current["version"] + 1,
         "partitions": dict(manifest["partitions"]),
     }
-    if "partition_dtype" in manifest:
-        new_manifest["partition_dtype"] = manifest["partition_dtype"]
+    for k in ("partition_dtype", "schema", "key", "segments", "tombstones", "rows"):
+        if k in manifest:
+            new_manifest[k] = manifest[k]
     _commit_manifest(path, new_manifest)
     return new_manifest["version"]
 
@@ -1235,9 +1694,10 @@ def amend_manifest(path: str, updates: dict) -> int:
     dirs — zero data written) with ``updates`` merged into the extra
     keys.  This is how an anchor re-pins a paired table after a
     layout-only operation bumped the paired version (e.g.
-    ``maintain_indexes`` compacts the postings table, then amends the
-    terms anchor's ``postings_version`` — the rows behind both versions
-    are identical, so probe results are unchanged).  Goes through the
+    ``maintain_indexes`` merges the doclen table and, when the postings
+    anchor has nothing to merge, amends its ``doclen_version`` — the
+    rows behind both versions are identical, so probe results are
+    unchanged).  Goes through the
     same reserve → commit protocol as data writes, so it is atomic and
     safe against concurrent writers."""
     manifest = read_manifest(path)
@@ -1262,9 +1722,7 @@ def vacuum(path: str, keep_last: int = 2) -> list[int]:
     import shutil
 
     manifest = read_manifest(path)
-    live = {
-        rel.split("/", 1)[0] for rel in manifest["partitions"].values()
-    }
+    live = {rel.split("/", 1)[0] for rel in _data_rels(manifest)}
     horizon = manifest["version"] - keep_last
     removed = []
     for entry in os.listdir(path):

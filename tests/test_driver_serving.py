@@ -154,6 +154,90 @@ def _assert_parity(eng, owner, state, traces):
                 assert not jobs, (case, jobs)
 
 
+def _counting_jobs(mp, spark, module, names, seen):
+    """Wrap ``module.names`` so each call records the Spark jobs it ran."""
+    for name in names:
+        real = getattr(module, name)
+
+        def wrapped(*a, _real=real, _name=name, **k):
+            out, jobs = _jobs_run(spark, lambda: _real(*a, **k))
+            seen.setdefault(_name, []).extend(jobs)
+            return out
+
+        mp.setattr(module, name, wrapped)
+
+
+def _vector_rows(snap):
+    return {
+        vtype: sorted(
+            zip(
+                v.key.tolist(),
+                np.asarray(v.owner, dtype=object).tolist(),
+                map(tuple, v.emb_t.T.tolist()),
+                v.norm.tolist(),
+            )
+        )
+        for vtype, v in snap.items()
+    }
+
+
+def _assert_fresh(eng, tmp_path, owner, state, assign_before, added):
+    """The mutated artifacts against fresh ones over the same corpus:
+    BM25 probes (rows and scores, unscoped and owner-scoped) equal a
+    fresh build's; each IVF index holds the pre-mutation assign rows
+    minus the dropped vectors plus the added ones assigned to the stored
+    centroids by the Spark kernel; the refreshed vectors snapshot equals
+    a fresh load of the served vectors table."""
+    from sortify_spark.sources.versioned import read_versioned
+
+    spark = eng.spark
+    ref = str(tmp_path / f"fresh_{state}")
+    lexical.build_lexical_index(
+        eng._lex_docs(eng.documents), ref, carry_cols=("owner_id",)
+    )
+    for terms in (tuple(QUERY.split()), ("pipeline", "skew", "plans")):
+        for flt in (None, F.col("owner_id") == owner):
+            got, want = (
+                [
+                    tuple(r)
+                    for r in lexical.probe_lexical_index(
+                        spark, p, terms, k=20, pre_filter=flt
+                    ).collect()
+                ]
+                for p in (eng.lexical_index_path(), ref)
+            )
+            assert got == want and got, (state, terms)
+    for vtype in ("summary", "chunk"):
+        path = eng.ivf_index_path(vtype)
+        vecs = eng.vectors.filter(F.col("vtype") == vtype)
+        live = {r["vector_id"] for r in vecs.select("vector_id").collect()}
+        want = {k: v for k, v in assign_before[vtype].items() if k in live}
+        new = vecs.filter(F.col("vector_id").isin(sorted(added))).select(
+            F.col("vector_id").alias("vec_id"),
+            F.col("embedding").cast("array<double>").alias("embedding"),
+            "owner_id",
+        )
+        cents = read_versioned(spark, f"{path}/centroids", "part")
+        owners = {r["vec_id"]: r["owner_id"] for r in new.collect()}
+        for r in knn.assign_nearest_centroid_np(new, cents).collect():
+            want[r["vec_id"]] = (r["label"], owners[r["vec_id"]])
+        assert _assign_rows(spark, path) == want, (state, vtype)
+    held = eng._snapshots["vectors"]
+    assert held[0] == eng._vectors_gen
+    assert _vector_rows(held[2]) == _vector_rows(
+        serving.load_vectors(eng.vectors, eng.dim)
+    ), state
+
+
+def _assign_rows(spark, path):
+    from sortify_spark.sources.versioned import read_versioned
+
+    return {
+        r["vec_id"]: (r["bucket"], r["owner_id"])
+        for r in read_versioned(spark, f"{path}/assign", "bucket").collect()
+    }
+
+
 def test_served_search_matches_spark_path(spark, tmp_path):
     # no search, mutation or maintenance call may write session conf
     conf_before = dict(spark.conf.getAll)
@@ -166,31 +250,93 @@ def test_served_search_matches_spark_path(spark, tmp_path):
     ).first()["source"]
     traces: list = []
     _assert_parity(eng, owner, "fresh", traces)
+    # the Spark probes plan no job before their result frame
+    terms = tuple(QUERY.split())
+    for probe in (
+        lambda: lexical.probe_lexical_index(
+            spark, eng.lexical_index_path(), terms,
+            pre_filter=F.col("owner_id") == owner,
+        ),
+        lambda: lexical.probe_lexical_index_many(
+            spark, eng.lexical_index_path(), {"a": terms, "b": ("skew",)},
+        ),
+    ):
+        assert not _jobs_run(spark, probe)[1]
+    # a pinned pre-mutation snapshot keeps serving its rows
+    pinned = facade.SearchConfig(
+        top_k=5, lex_version=eng._snapshots["lexical"][0],
+        ivf_version=eng._snapshots["ivf_summary"][0][0], ann="ivf",
+    )
+    before_pinned = {
+        st: eng.semantic_search(QUERY, st, pinned).collect()
+        for st in ("keyword", "summary_only")
+    }
 
     texts = (
         "data pipeline quality checks for join performance",
         "join performance of a data pipeline under skew",
         "quality of data and pipeline join plans",
     )
+    replaced = eng.documents.orderBy("doc_id").first()["doc_id"]
     new = spark.createDataFrame(
         [
             (950_001 + i, t, "en", owner if i < 2 else "elsewhere", len(t))
             for i, t in enumerate(texts)
-        ],
+        ]
+        # a re-sent id replaces its document
+        + [(replaced, "skew plans replaced a whole document", "en", owner, 36)],
         DOCS_SCHEMA,
     )
-    eng.add_documents(new)
+    assign = {v: _assign_rows(spark, eng.ivf_index_path(v)) for v in ("summary", "chunk")}
+    seen: dict = {}
+    with pytest.MonkeyPatch.context() as mp:
+        _counting_jobs(mp, spark, lexical, ["upsert_lexical_index"], seen)
+        _counting_jobs(mp, spark, ix, ["upsert_ivf_index"], seen)
+        eng.add_documents(new)
+    # the index maintenance inside a warm add ran no Spark job
+    assert set(seen) == {"upsert_lexical_index", "upsert_ivf_index"}
+    assert not any(seen.values()), seen
+    added = {
+        r["vector_id"]
+        for r in eng.vectors.filter(
+            F.col("document_id").isin([str(i) for i in (replaced, *range(950_001, 950_004))])
+        ).collect()
+    }
+    _assert_fresh(eng, tmp_path, owner, "added", assign, added)
+    # the first search after an append refreshes, never reloads
+    with pytest.MonkeyPatch.context() as mp:
+        for name in ("load_lexical", "load_ivf"):
+            mp.setattr(serving, name, lambda *_a: pytest.fail("reloaded"))
+        assert eng._lexical_snapshot() is not None
+        assert eng._ivf_snapshot("summary") is not None
+    assert eng.semantic_search(QUERY, "keyword").collect()
     _assert_parity(eng, owner, "added", traces)
 
     top = eng.semantic_search(QUERY, "summary_only").collect()
     doomed = sorted({top[0]["id"], "950002"})
-    eng.delete_vectors(doomed)
+    assign = {v: _assign_rows(spark, eng.ivf_index_path(v)) for v in ("summary", "chunk")}
+    seen.clear()
+    with pytest.MonkeyPatch.context() as mp:
+        _counting_jobs(mp, spark, lexical, ["delete_from_lexical_index"], seen)
+        _counting_jobs(mp, spark, ix, ["delete_from_ivf_index"], seen)
+        eng.delete_vectors(doomed)
+    assert set(seen) == {"delete_from_lexical_index", "delete_from_ivf_index"}
+    assert not any(seen.values()), seen
     for st in STRATEGIES:
         ids = {r[0] for r in eng.semantic_search(QUERY, st).collect()}
         assert not ids & set(doomed), st
+    _assert_fresh(eng, tmp_path, owner, "deleted", assign, set())
+    for st, rows in before_pinned.items():
+        assert eng.semantic_search(QUERY, st, pinned).collect() == rows, st
     _assert_parity(eng, owner, "deleted", traces)
 
-    eng.maintain_indexes(keep_last=1)
+    assign = {v: _assign_rows(spark, eng.ivf_index_path(v)) for v in ("summary", "chunk")}
+    # below the gate the merges run on the driver: no Spark job
+    assert not _jobs_run(spark, lambda: eng.maintain_indexes(keep_last=1))[1]
+    _assert_fresh(eng, tmp_path, owner, "maintained", assign, set())
+    # vacuum reclaimed the pinned snapshot
+    with pytest.raises(FileNotFoundError):
+        eng.semantic_search(QUERY, "keyword", pinned).collect()
     _assert_parity(eng, owner, "maintained", traces)
     # the escalation traces compared above include escalated probes
     assert any(t not in (None, "unset") and t["levels"] for t in traces)
@@ -311,3 +457,22 @@ def test_query_frames_bit_identical_through_arrow(spark):
     assert got == want
     assert eng._query_df(QUERY).first()["embedding"] == want["a"]
     assert eng._query_vecs(queries)["a"].tolist() == want["a"]
+
+
+def test_term_bucket_matches_spark_hash(spark):
+    """``lexical.term_bucket`` (the driver's bucket of a term or doc id)
+    equals the build's Spark ``pmod(abs(xxhash64(x)), n)`` on random
+    strings of every length class (XXH64's 32-byte stripes, 8- and
+    4-byte words and tail bytes), including multi-byte UTF-8."""
+    rng = np.random.default_rng(3)
+    alphabet = list("abcxyz019 _-") + ["é", "ß", "中", "😀"]
+    words = ["", "7", "950001"] + [
+        "".join(rng.choice(alphabet, int(n)))
+        for n in rng.integers(1, 90, 3000)
+    ]
+    df = spark.createDataFrame(pd.DataFrame({"w": words}), "w string")
+    got = df.select("w", lexical._pt(F.col("w"), 32).alias("pt")).collect()
+    bad = [
+        (r["w"], r["pt"]) for r in got if lexical.term_bucket(r["w"], 32) != r["pt"]
+    ]
+    assert len(got) == len(words) and not bad, bad[:5]

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
@@ -566,7 +567,7 @@ def test_facade_lexical_index_serving_and_pinning(spark, tmp_path):
         for r in eng.semantic_search(q, "keyword").collect()
     }
     path = eng.lexical_index_path()
-    assert read_manifest(f"{path}/terms")["version"] == 1
+    assert read_manifest(f"{path}/postings")["version"] == 1
     scan = set(bm25_keyword_reference(eng.documents, q, k=10))
     assert idx == scan and idx
     hyb = eng.semantic_search(q, "hybrid_lexical").collect()
@@ -577,7 +578,7 @@ def test_facade_lexical_index_serving_and_pinning(spark, tmp_path):
     )
     out = eng.add_documents(new)
     assert out["lexical"][0] == "upsert"
-    assert read_manifest(f"{path}/terms")["version"] > 1
+    assert read_manifest(f"{path}/postings")["version"] > 1
     latest = {
         r["id"] for r in eng.semantic_search(q, "keyword").collect()
     }
@@ -630,10 +631,10 @@ def test_lexical_batched_probe_matches_single(spark, tmp_path):
 def test_lexical_build_anchor_consistent_with_tables(spark, tmp_path):
     """build_lexical_index overlaps the stats aggregate and the
     postings/doclen writes in a thread pool (guide §2.6); the anchor
-    it commits LAST must still be internally consistent — its
+    (the postings manifest) must still be internally consistent — its
     n_docs/sum_dl equal a recount of the committed doclen snapshot and
-    of the raw corpus, and its postings_version/doclen_version resolve
-    to readable snapshots."""
+    of the raw corpus, and its doclen_version resolves to a readable
+    snapshot."""
     from pyspark.sql import functions as F
 
     from sortify_spark.search.lexical import build_lexical_index
@@ -642,7 +643,7 @@ def test_lexical_build_anchor_consistent_with_tables(spark, tmp_path):
     docs = load_table(spark, SF_DIR, "documents").limit(300)
     path = str(tmp_path / "lex")
     ver = build_lexical_index(docs, path)
-    anchor = read_manifest(f"{path}/terms", ver)
+    anchor = read_manifest(f"{path}/postings", ver)
     dl = read_versioned(
         spark, f"{path}/doclen", "pd", version=anchor["doclen_version"]
     )
@@ -656,9 +657,7 @@ def test_lexical_build_anchor_consistent_with_tables(spark, tmp_path):
         ).alias("dl")
     ).agg(F.sum("dl")).first()[0]
     assert int(anchor["sum_dl"]) == int(got["s"]) == int(corpus_dl)
-    post = read_versioned(
-        spark, f"{path}/postings", "pt", version=anchor["postings_version"]
-    )
+    post = read_versioned(spark, f"{path}/postings", "pt", version=ver)
     # every doc with at least one token has posting rows
     assert post.select("doc_id").distinct().count() == (
         docs.filter(
@@ -675,9 +674,8 @@ def test_facade_delete_maintains_lexical_and_ivf(spark, tmp_path):
     """S10 on the persisted artifacts (VERDICT r8 next #1): deleting a
     document removes it from keyword/hybrid_lexical AND ivf serving
     WITHOUT a rebuild — the lexical anchor's stats shrink by exact
-    deltas and untouched posting partitions keep their original
-    version dirs (proof the delete was keyed maintenance, not a
-    full-snapshot replace)."""
+    deltas and every posting partition keeps its original version dir
+    (the delete is a tombstone commit, not a rewrite)."""
     from sortify_spark.facade import SearchConfig, SortifyEngine
     from sortify_spark.sources.versioned import read_manifest
 
@@ -696,23 +694,14 @@ def test_facade_delete_maintains_lexical_and_ivf(spark, tmp_path):
     assert before_kw and before_ivf
     victim = before_kw[0]
     lex_path = eng.lexical_index_path()
-    a1 = read_manifest(f"{lex_path}/terms")
+    a1 = read_manifest(f"{lex_path}/postings")
     eng.delete_vectors([victim])
-    a2 = read_manifest(f"{lex_path}/terms")
+    a2 = read_manifest(f"{lex_path}/postings")
     assert a2["n_docs"] == a1["n_docs"] - 1
     assert a2["sum_dl"] < a1["sum_dl"]
-    # keyed maintenance, not a rebuild: some posting partition still
-    # points at a pre-delete version dir
-    p2 = read_manifest(
-        f"{lex_path}/postings", a2.get("postings_version")
-    )["partitions"]
-    old_vdirs = {
-        rel.split("/", 1)[0]
-        for rel in read_manifest(
-            f"{lex_path}/postings", a1.get("postings_version")
-        )["partitions"].values()
-    }
-    assert any(rel.split("/", 1)[0] in old_vdirs for rel in p2.values())
+    # a tombstone commit, not a rewrite: the partitions are untouched
+    assert a2["partitions"] == a1["partitions"]
+    assert [int(victim), a2["version"]] in a2["tombstones"]
     after_kw = [r["id"] for r in eng.semantic_search(q, "keyword").collect()]
     assert victim not in after_kw
     after_hyb = [
@@ -813,13 +802,13 @@ def test_lexical_pd_buckets_recorded_and_honored(spark, tmp_path):
     docs = load_table(spark, SF_DIR, "documents").limit(50)
     path = str(tmp_path / "lex")
     build_lexical_index(docs, path, pd_buckets=4)
-    anchor = read_manifest(f"{path}/terms")
+    anchor = read_manifest(f"{path}/postings")
     assert anchor["pd_buckets"] == 4
     repl = docs.filter(F.col("doc_id") < 5).withColumn(
         "text", F.concat(F.col("text"), F.lit(" replaced tail"))
     )
     upsert_lexical_index(repl, path)
-    a2 = read_manifest(f"{path}/terms")
+    a2 = read_manifest(f"{path}/postings")
     assert a2["pd_buckets"] == 4
     assert a2["n_docs"] == anchor["n_docs"]  # pure replace
     dupes = (
@@ -982,75 +971,87 @@ def test_ivf_batched_probe_matches_single(spark, tmp_path, snapshot_gate):
 
 @pytest.mark.slow
 def test_lexical_upsert_heals_orphaned_partial_commit(spark, tmp_path):
-    """Crash INSIDE upsert_lexical_index (postings + doclen committed,
-    terms ANCHOR not): probes keep serving the pre-crash snapshot, and
-    RE-RUNNING the upsert for the affected doc (what an anchor-pinned
-    drift check issues — review r9) heals
-    the artifact to value-identity with a from-scratch rebuild; the
-    orphaned newer versions are absorbed by the keyed merges."""
+    """Crash INSIDE upsert_lexical_index (the doclen segment committed,
+    the postings ANCHOR not): probes keep serving the pre-crash
+    snapshot, and RE-RUNNING the upsert for the affected doc heals the
+    artifact to value-identity with a from-scratch rebuild — the re-run
+    appends to the doclen snapshot the anchor pins, dropping the
+    orphaned commit.  A failure between a commit's reservation and its
+    manifest swap leaves the previous snapshot readable and the table
+    writable."""
     from sortify_spark.search.lexical import (
-        _tokenized,
+        _tokenize_rows,
         build_lexical_index,
         probe_lexical_index,
         upsert_lexical_index,
     )
-    from sortify_spark.sources.versioned import (
-        read_manifest,
-        upsert_versioned,
-    )
+    from sortify_spark.sources import versioned
 
     docs = load_table(spark, SF_DIR, "documents").limit(100)
     path = str(tmp_path / "lex")
     build_lexical_index(docs.filter(F.col("doc_id") != 7), path)
-    a1 = read_manifest(f"{path}/terms")
-    # simulate the crash: commit doc 7's postings + doclen rows exactly
-    # as upsert_lexical_index would, but never the anchor
-    bpost, bdoclen = _tokenized(
-        docs.filter(F.col("doc_id") == 7), "doc_id", "text",
+    a1 = versioned.read_manifest(f"{path}/postings")
+    seven = docs.filter(F.col("doc_id") == 7)
+    # simulate the crash: commit doc 7's doclen segment exactly as
+    # upsert_lexical_index would, but never the anchor
+    _, dlen = _tokenize_rows(
+        seven.select("doc_id", "text").toPandas(), "doc_id", "text", (),
         int(a1["pt_buckets"]), int(a1["pd_buckets"]),
     )
-    upsert_versioned(
-        bpost, f"{path}/postings", keys=["term", "doc_id"],
-        partition_col="pt",
-    )
-    upsert_versioned(
-        bdoclen, f"{path}/doclen", keys=["doc_id"], partition_col="pd"
-    )
+    versioned.append_versioned(dlen, f"{path}/doclen", "pd", key="doc_id")
     terms = ("dup", "spark", "merge")
+
+    def probe(p):
+        return [
+            (r["doc_id"], r["matched_terms"], r["bm25"])
+            for r in probe_lexical_index(spark, p, terms, k=50).collect()
+        ]
+
     # the anchor still pins the pre-crash pair: doc 7 invisible
-    pre = probe_lexical_index(spark, path, terms, k=50).collect()
-    assert all(r["doc_id"] != 7 for r in pre)
+    pre = probe(path)
+    assert all(d != 7 for d, _, _ in pre)
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash between reservation and swap")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(versioned, "_commit_manifest", crash)
+        with pytest.raises(RuntimeError, match="crash"):
+            upsert_lexical_index(seven, path)
+    assert versioned.read_manifest(f"{path}/postings") == a1
+    assert probe(path) == pre
     # the heal: re-run the upsert for the drifted doc
-    upsert_lexical_index(docs.filter(F.col("doc_id") == 7), path)
+    upsert_lexical_index(seven, path)
     ref = str(tmp_path / "ref")
     build_lexical_index(docs, ref)
-    got = [
-        (r["doc_id"], r["matched_terms"], r["bm25"])
-        for r in probe_lexical_index(spark, path, terms, k=50).collect()
-    ]
-    want = [
-        (r["doc_id"], r["matched_terms"], r["bm25"])
-        for r in probe_lexical_index(spark, ref, terms, k=50).collect()
-    ]
-    assert got == want
+    assert probe(path) == probe(ref)
+    anchor = versioned.read_manifest(f"{path}/postings")
+    doclen = versioned.read_versioned_pandas(
+        f"{path}/doclen", "pd", version=anchor["doclen_version"]
+    )
+    assert doclen["doc_id"].is_unique and 7 in set(doclen["doc_id"])
+    assert anchor["n_docs"] == len(doclen)
 
 
 @pytest.mark.slow
 def test_lexical_artifact_vacuum_preserves_current_probe(spark, tmp_path):
     """Vacuum on the lexical artifact's tables reclaims superseded
     version dirs without touching the CURRENT anchored snapshot: after
-    several upserts, vacuuming all three tables leaves the probe
-    value-identical, while a probe PINNED to a vacuumed anchor fails
-    loudly (the versioned store's vacuumed-snapshot contract applied
-    to the BM25 artifact lifecycle).  Note upserts rewrite whole pt/pd
-    partitions (1 file each), so the artifact never needs file-level
-    compaction — vacuum is its only maintenance."""
+    several upserts and a merge of the segments into a new base,
+    vacuuming both tables leaves the probe value-identical, while a
+    probe PINNED to a vacuumed anchor fails loudly (the versioned
+    store's vacuumed-snapshot contract applied to the BM25 artifact
+    lifecycle)."""
     from sortify_spark.search.lexical import (
         build_lexical_index,
         probe_lexical_index,
         upsert_lexical_index,
     )
-    from sortify_spark.sources.versioned import vacuum
+    from sortify_spark.sources.versioned import (
+        merge_versioned,
+        read_manifest,
+        vacuum,
+    )
 
     docs = load_table(spark, SF_DIR, "documents").limit(120)
     path = str(tmp_path / "lex")
@@ -1067,8 +1068,12 @@ def test_lexical_artifact_vacuum_preserves_current_probe(spark, tmp_path):
         (r["doc_id"], r["matched_terms"], r["bm25"])
         for r in probe_lexical_index(spark, path, terms, k=30).collect()
     ]
+    dv = merge_versioned(f"{path}/doclen", "pd")
+    merge_versioned(f"{path}/postings", "pt", extra={"doclen_version": dv})
+    merged = read_manifest(f"{path}/postings")
+    assert not merged.get("segments") and not merged.get("tombstones")
     removed = []
-    for sub in ("postings", "doclen", "terms"):
+    for sub in ("postings", "doclen"):
         removed += vacuum(f"{path}/{sub}", keep_last=0)
     assert removed  # superseded version dirs actually reclaimed
     after = [
@@ -1415,9 +1420,9 @@ def test_owner_scoped_artifacts_survive_mutations(spark, tmp_path):
 @pytest.mark.slow
 def test_facade_maintain_indexes(spark, tmp_path):
     """One maintenance entrypoint for the persisted artifacts: after a
-    few mutations, maintain_indexes() vacuums old version dirs while
-    every probe result stays identical (compact is a structural no-op
-    under the keyed-upsert discipline)."""
+    few mutations, maintain_indexes() merges every appended segment and
+    tombstone into a new base and vacuums old version dirs while every
+    probe result stays identical."""
     import glob
 
     from sortify_spark.facade import SearchConfig, SortifyEngine
@@ -1473,7 +1478,7 @@ def test_facade_maintain_indexes(spark, tmp_path):
         return sum(
             len(glob.glob(f"{p}/v=*"))
             for p in (
-                f"{lex}/postings", f"{lex}/doclen", f"{lex}/terms",
+                f"{lex}/postings", f"{lex}/doclen",
                 f"{ivf}/assign", f"{ivf}/centroids",
             )
         )
@@ -1481,25 +1486,29 @@ def test_facade_maintain_indexes(spark, tmp_path):
     before_probe = probes()
     before_dirs = dirs()
     out = eng.maintain_indexes(keep_last=1)
-    assert set(out) >= {"lex/postings", "lex/terms", "ivf_summary/assign"}
-    assert not any(v["compacted"] for v in out.values()), (
-        "keyed upserts keep partitions at one file — compact must be "
-        "a structural no-op"
+    assert set(out) >= {"lex/postings", "lex/doclen", "ivf_summary/assign"}
+    assert all(
+        out[t]["merged"]
+        for t in ("lex/postings", "lex/doclen", "ivf_summary/assign")
     )
     assert sum(v["vacuumed"] for v in out.values()) > 0
     assert dirs() < before_dirs
+    assert probes() == before_probe
+    # nothing left to merge: a second pass commits nothing
+    again = eng.maintain_indexes(keep_last=1)
+    assert not any(v["merged"] for v in again.values())
     assert probes() == before_probe
 
 
 @pytest.mark.slow
 def test_facade_maintain_indexes_real_compaction(spark, tmp_path):
-    """maintain_indexes with genuinely fragmented artifact partitions
-    (another writer splitting files via maxRecordsPerFile): compaction
-    must preserve the anchor's manifest extras (n_docs / pt_buckets /
-    carry survive the layout-only commit) and re-pin the terms anchor
-    onto the compacted postings/doclen versions BEFORE vacuum, so a
-    keep_last=1 pass never strands the pinned retained manifests —
-    keyword probes are hash-stable and alive across the pass."""
+    """maintain_indexes on an artifact written fragmented (another
+    writer splitting files via maxRecordsPerFile) and then mutated: the
+    merge must preserve the anchor's manifest extras (n_docs /
+    pt_buckets / carry survive the merge commit) and re-pin the anchor
+    onto the merged doclen version BEFORE vacuum, so a keep_last=1 pass
+    never strands the pinned manifest — keyword probes are hash-stable
+    and alive across the pass."""
     from sortify_spark.facade import SortifyEngine
     from sortify_spark.sources.versioned import read_manifest
 
@@ -1510,15 +1519,12 @@ def test_facade_maintain_indexes_real_compaction(spark, tmp_path):
     owner = eng.documents.select("source").orderBy("source").first()[
         "source"
     ]
-    # build the lexical artifact with fragmentation forced: every
-    # partition's single write task splits into many small files —
-    # exactly the foreign-writer layout compact() exists to heal
     spark.conf.set("spark.sql.files.maxRecordsPerFile", "5")
     try:
         eng.semantic_search("data pipeline", "keyword", owner_id=owner)
     finally:
         spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-    # one mutation so vacuum has an old version to reclaim
+    # one mutation so there is a segment to merge and a version to vacuum
     eng.add_documents(
         spark.createDataFrame(
             [(930_000, "compaction probe document about data pipeline",
@@ -1538,50 +1544,40 @@ def test_facade_maintain_indexes_real_compaction(spark, tmp_path):
 
     lex = eng.lexical_index_path()
     before = kw_probe()
-    anchor_before = read_manifest(f"{lex}/terms")
+    anchor_before = read_manifest(f"{lex}/postings")
     out = eng.maintain_indexes(keep_last=1)
-    assert any(
-        v["compacted"] for k, v in out.items() if k.startswith("lex/")
-    ), "fragmented partitions must trigger a real compaction"
-    anchor = read_manifest(f"{lex}/terms")
-    # extras survived the layout-only commits…
-    for key in ("n_docs", "sum_dl", "pt_buckets", "pd_buckets", "carry"):
+    assert out["lex/postings"]["merged"] and out["lex/doclen"]["merged"]
+    anchor = read_manifest(f"{lex}/postings")
+    for key in ("n_docs", "sum_dl", "pt_buckets", "pd_buckets", "carry",
+                "layout_col"):
         assert anchor.get(key) == anchor_before.get(key), key
-    # …and the anchor re-pinned onto the CURRENT paired versions so
-    # the keep_last=1 vacuum could not strand them
-    assert (
-        anchor["postings_version"]
-        == read_manifest(f"{lex}/postings")["version"]
-    )
+    assert not anchor.get("segments") and not anchor.get("tombstones")
     assert (
         anchor["doclen_version"]
         == read_manifest(f"{lex}/doclen")["version"]
     )
-    # the probe still runs (no FileNotFoundError / KeyError) and is
-    # value-identical across the maintenance pass
     assert kw_probe() == before
-    # a second pass is now a structural no-op
     out2 = eng.maintain_indexes(keep_last=1)
-    assert not any(v["compacted"] for v in out2.values())
+    assert not any(v["merged"] for v in out2.values())
     assert kw_probe() == before
 
 
 @pytest.mark.slow
 def test_facade_maintain_indexes_stale_pin_skips_repin(spark, tmp_path):
-    """If the terms anchor's pin does NOT equal the paired table's
-    pre-compaction version (a crash landed between the postings commit
-    and the anchor commit), maintain_indexes must NOT silently re-pin
-    the anchor onto the compacted version — that would move probes
-    onto rows the anchor's n_docs/sum_dl no longer describe, and the
-    vacuum would reclaim the genuinely-pinned manifest.  It skips the
-    re-pin AND that table's vacuum and surfaces a RuntimeWarning
-    (ADVICE r10 low)."""
+    """If the doclen table holds a commit after the one the anchor pins
+    (a crash landed between the doclen commit and the anchor commit),
+    maintain_indexes must neither merge that orphan into the doclen base
+    nor re-pin the anchor onto it, and must not vacuum the pinned
+    manifest: it skips the doclen table and warns.  The next mutation
+    re-bases doclen on the pinned version."""
     import warnings as _warnings
 
     from sortify_spark.facade import SortifyEngine
+    from sortify_spark.search.lexical import _tokenize_rows
     from sortify_spark.sources.versioned import (
-        amend_manifest,
+        append_versioned,
         read_manifest,
+        read_versioned_pandas,
     )
 
     eng = SortifyEngine(
@@ -1591,100 +1587,42 @@ def test_facade_maintain_indexes_stale_pin_skips_repin(spark, tmp_path):
     owner = eng.documents.select("source").orderBy("source").first()[
         "source"
     ]
-    # fragmented build so maintain_indexes performs a REAL compaction
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "5")
-    try:
-        eng.semantic_search("data pipeline", "keyword", owner_id=owner)
-    finally:
-        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-    lex = eng.lexical_index_path()
-    # simulate the crash: anchor pin diverges from postings' current
-    stale = read_manifest(f"{lex}/terms")["postings_version"] + 100
-    amend_manifest(f"{lex}/terms", {"postings_version": stale})
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        out = eng.maintain_indexes(keep_last=1)
-    assert any(
-        "stale pin" in str(w.message)
-        and "postings_version" in str(w.message)
-        for w in caught
-    ), [str(w.message) for w in caught]
-    # postings: compacted but NOT vacuumed, flagged
-    assert out["lex/postings"]["compacted"] is True
-    assert out["lex/postings"]["stale_pin"] is True
-    assert out["lex/postings"]["vacuumed"] == 0
-    # the anchor's stale pin was NOT silently moved
-    assert read_manifest(f"{lex}/terms")["postings_version"] == stale
-    # the correctly-pinned paired table (doclen) re-pinned normally
-    assert (
-        read_manifest(f"{lex}/terms")["doclen_version"]
-        == read_manifest(f"{lex}/doclen")["version"]
-    )
-
-
-@pytest.mark.slow
-def test_facade_maintain_indexes_stale_pin_no_compaction(spark, tmp_path):
-    """The stale-pin guard must engage even when NOTHING compacts
-    (r11 review finding): vacuum reclaims ANY manifest at or below the
-    horizon regardless of pins, so a stale anchor pin on an
-    un-fragmented table (the common keyed-upsert steady state, where
-    compact() is a structural no-op) would still lose its pinned
-    manifest to vacuum.  maintain_indexes must skip that table's
-    vacuum and warn — compaction or not."""
-    import glob
-    import warnings as _warnings
-
-    from sortify_spark.facade import SortifyEngine
-    from sortify_spark.sources.versioned import (
-        amend_manifest,
-        read_manifest,
-    )
-
-    eng = SortifyEngine(
-        spark, SF_DIR, dim=16, embed="expr", doc_limit=60,
-        index_root=str(tmp_path), owner_col="source",
-    )
-    owner = eng.documents.select("source").orderBy("source").first()[
-        "source"
-    ]
-    # plain build + a mutation to accrue versions; no fragmentation,
-    # so compact() will be a structural no-op on every table
     eng.semantic_search("data pipeline", "keyword", owner_id=owner)
-    eng.add_documents(
-        spark.createDataFrame(
-            [(950_000, "stale pin uncompacted probe data pipeline",
-              "en", owner, 40)],
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long",
-        )
-    )
     lex = eng.lexical_index_path()
-    # pin the anchor one version BACK (a crash between the postings
-    # commit and the anchor commit leaves exactly this state) — the
-    # stale pinned manifest must survive maintenance
-    cur = read_manifest(f"{lex}/postings")["version"]
-    stale = cur - 1
-    assert stale >= 1
-    amend_manifest(f"{lex}/terms", {"postings_version": stale})
-    pinned_manifest = f"{lex}/postings/_MANIFEST.v{stale}"
-    assert os.path.exists(pinned_manifest)
+    anchor = read_manifest(f"{lex}/postings")
+    pinned = anchor["doclen_version"]
+    _, orphan = _tokenize_rows(
+        pd.DataFrame({"doc_id": [960_000], "text": ["orphan doc"]}),
+        "doc_id", "text", (), anchor["pt_buckets"], anchor["pd_buckets"],
+    )
+    append_versioned(orphan, f"{lex}/doclen", "pd", key="doc_id")
+    before = eng.semantic_search("data pipeline", "keyword").collect()
     with _warnings.catch_warnings(record=True) as caught:
         _warnings.simplefilter("always")
         out = eng.maintain_indexes(keep_last=0)
     assert any(
-        "stale pin" in str(w.message)
-        and "postings_version" in str(w.message)
-        for w in caught
+        "doclen_version" in str(w.message) for w in caught
     ), [str(w.message) for w in caught]
-    assert out["lex/postings"]["stale_pin"] is True
-    assert out["lex/postings"]["compacted"] is False
-    assert out["lex/postings"]["vacuumed"] == 0
-    # the pinned manifest is still there — a keyword probe resolving
-    # the anchor's pin keeps working instead of FileNotFoundError
-    assert os.path.exists(pinned_manifest)
-    # un-pinned tables vacuumed normally at keep_last=0
-    assert sum(v["vacuumed"] for v in out.values()) > 0
-    assert glob.glob(f"{lex}/doclen/v=*")
+    assert out["lex/doclen"] == {"merged": False, "vacuumed": 0, "stale_pin": True}
+    assert read_manifest(f"{lex}/postings")["doclen_version"] == pinned
+    assert os.path.exists(f"{lex}/doclen/_MANIFEST.v{pinned}")
+    assert eng.semantic_search("data pipeline", "keyword").collect() == before
+    # the next mutation appends to the pinned snapshot: the orphan goes
+    eng.add_documents(
+        spark.createDataFrame(
+            [(960_001, "stale pin heal data pipeline", "en", owner, 30)],
+            "doc_id long, text string, lang string, source string, "
+            "n_chars long",
+        )
+    )
+    healed = read_manifest(f"{lex}/postings")
+    ids = set(
+        read_versioned_pandas(
+            f"{lex}/doclen", "pd", version=healed["doclen_version"]
+        )["doc_id"]
+    )
+    assert 960_001 in ids and 960_000 not in ids
+    assert healed["n_docs"] == len(ids)
 
 
 def test_facade_delete_vectors_batch_cap(spark, tmp_path):

@@ -1111,6 +1111,28 @@ def test_versioned_partition_dtype_round_trip(spark):
         assert got == {
             ("update_preimage", 2), ("update_postimage", 2)
         }
+        # an appended segment (a replace plus an insert in one commit)
+        # keeps the type, and diff sees its rows
+        import pandas as pd
+
+        from sortify_spark.sources.versioned import append_versioned
+
+        v3 = append_versioned(
+            pd.DataFrame(
+                {"id": [3, 4], "band_idx": [7, 0], "band_key": [301, 400]}
+            ),
+            path, "band_idx", key="id", delete=[3],
+        )
+        out3 = read_versioned(spark, path, "band_idx")
+        assert dict(out3.dtypes)["band_idx"] == "int"
+        assert {(r["id"], r["band_key"]) for r in out3.collect()} == {
+            (1, 100), (2, 201), (3, 301), (4, 400)
+        }
+        cdc3 = diff(spark, path, "band_idx", ["id"], 2, v3)
+        assert dict(cdc3.dtypes)["band_idx"] == "int"
+        assert {(r["_change_type"], r["id"]) for r in cdc3.collect()} == {
+            ("update_preimage", 3), ("update_postimage", 3), ("insert", 4)
+        }
 
 
 def test_versioned_schema_evolution_and_as_of(spark):
